@@ -4,7 +4,6 @@
 # Usage:
 #   scripts/bench.sh                          # full tree, sf0.1, 32 cpus
 #   SPARK_GRAFT_QUERIES=q_adamic_adar scripts/bench.sh   # subset profiling
-#   SPARK_GRAFT_COALESCE=off scripts/bench.sh            # r16 envelope
 # Requires `sbt compile` to have populated target/scala-2.13/classes.
 set -euo pipefail
 cd "$(dirname "$0")/.."

@@ -31,21 +31,16 @@ object Bench {
       //
       // r17 (VERDICT r16 #3): the blunt disable bought determinism at a
       // measured 316→606 s full-tree cost (every tiny stage runs 32
-      // reducers). The envelope is now a knob so the alternatives are
-      // measurable under the EXACT harness: "off" = hard disable (r16
-      // behavior); "pinned" = coalescing ON but every input pinned to a
-      // constant (parallelismFirst=false so the target is the pinned
-      // advisory size, never totalBytes/defaultParallelism; min size
-      // pinned too) — task counts then depend only on the plan and the
+      // reducers), so the committed envelope is "pinned" instead:
+      // coalescing ON but every input pinned to a constant
+      // (parallelismFirst=false so the target is the pinned advisory
+      // size, never totalBytes/defaultParallelism; min size pinned too)
+      // — task counts then depend only on the plan and the
       // deterministic map-output sizes, not on machine parallelism.
-      // The driver never sets this; the default IS the committed
-      // envelope. See PERF.md round-17 for the A/B that chose it.
-      .config("spark.sql.adaptive.coalescePartitions.enabled",
-        if (sys.env.getOrElse("SPARK_GRAFT_COALESCE", "pinned") == "off")
-          "false" else "true")
+      // See PERF.md round-17 for the A/B that chose it.
+      .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
       .config("spark.sql.adaptive.coalescePartitions.parallelismFirst", "false")
-      .config("spark.sql.adaptive.advisoryPartitionSizeInBytes",
-        sys.env.getOrElse("SPARK_GRAFT_ADVISORY", "1m"))
+      .config("spark.sql.adaptive.advisoryPartitionSizeInBytes", "1m")
       .config("spark.sql.adaptive.coalescePartitions.minPartitionSize", "1m")
       // The LAST nondeterminism source under "pinned": AQE merges on the
       // map-output sizes MapStatus reports = bytes as written, and lz4
@@ -57,13 +52,8 @@ object Bench {
       // merge boundaries a pure function of plan + data. Bench-envelope
       // only (sf0.1 shuffles are page-cache-resident; a real cluster
       // keeps compression on), and telemetry shuf_mb reads uncompressed
-      // from r17 on — see BASELINE.md caveat (f). Gated on the SAME knob
-      // (r18, ADVICE r17): COALESCE=off exists to reproduce the r16
-      // envelope, and r16 ran with compression ON — an unconditional
-      // disable would make "off" a third envelope matching no record.
-      .config("spark.shuffle.compress",
-        if (sys.env.getOrElse("SPARK_GRAFT_COALESCE", "pinned") == "off")
-          "true" else "false")
+      // from r17 on — see BASELINE.md caveat (f).
+      .config("spark.shuffle.compress", "false")
       // Residual ±1-stage task fuzz, root-caused r17 and deliberately
       // ACCEPTED: a handful of multi-consumer plans (q_modularity,
       // q_bradley_terry, q_raking) occasionally run one extra 32-task
@@ -236,8 +226,8 @@ object Bench {
     catch { case e: Throwable => System.err.println(
       s"[bench] WARNING: cannot write $metricsOut: ${e.getMessage}") }
     // Compact telemetry for the SLOW queries only (wall >= 4 s — the
-    // anomaly band; normally ~5 entries) printed to stdout so it survives
-    // inside the driver's 2000-char tail next to the timings it explains.
+    // anomaly band; normally ~5 entries) printed to stdout next to the
+    // timings it explains.
     val slow = finalResults.filter(_._2 >= 4.0).sortBy(_._2).map { case (n, w, s) =>
       "\"" + n + "\":" + s.json(w)
     }.mkString("{", ",", "}")
@@ -257,12 +247,9 @@ object Bench {
       val errs = errors.map("\"" + _ + "\"").mkString("[", ",", "]")
       s"""{"metric":"total","value":${r3(total)},"unit":"sec","queries":$qJson,"sf":"$sfDir"$extra,"errors":$errs}"""
     }
-    // Slowest-LAST order: the driver keeps only the last ~2000 chars of
-    // stdout, so the end of this line is what survives. Alphabetical order
-    // truncated whichever queries sort early — exactly the ones needed to
-    // attribute a total regression. Ascending-by-time puts the expensive
-    // queries at the end of the map, inside the surviving tail (the short
-    // total line below is ~110 chars and still prints last).
+    // Slowest-LAST order: ascending-by-time puts the expensive queries,
+    // the ones needed to attribute a total regression, at the end of the
+    // map, where a reader of the stdout tail sees them.
     println(line(finalResults.map(t => (t._1, t._2)).sortBy(_._2), ""))
     // Telemetry line between timings and total: slow-query metrics + the
     // suite-wide aggregate, so an unreproducible driver wall number is

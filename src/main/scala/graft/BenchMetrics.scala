@@ -112,11 +112,11 @@ object BenchMetrics {
       tasks: Long, failed: Long = 0L, retried: Long = 0L,
       stageRetries: Long = 0L, evicted: Long = 0L) {
     private def mb(b: Long): Long = b >> 20
-    /** Compact JSON object (no spaces — these lines fight for the
-      * driver's 2000-char stdout tail). Times in seconds (3dp), sizes
-      * in whole MiB. The re-execution discriminators (failed/retried/
-      * stage_retry/evict) print only when nonzero: they are zero on
-      * every healthy run and the tail budget is real. */
+    /** Compact JSON object (no spaces — it repeats once per query in
+      * the telemetry line and the metrics file). Times in seconds (3dp),
+      * sizes in whole MiB. The re-execution discriminators (failed/
+      * retried/stage_retry/evict) print only when nonzero: they are zero
+      * on every healthy run. */
     def json(wallSec: Double): String = {
       def r3(v: Double): String =
         String.format(java.util.Locale.ROOT, "%.3f", Double.box(v))

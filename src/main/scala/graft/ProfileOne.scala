@@ -11,7 +11,8 @@ import org.apache.spark.sql.SparkSession
   * vs the dead gaps (driver-only work: planning, codegen, DAG submission,
   * broadcast collects between jobs). Mirrors Bench's exact envelope
   * (pinned coalescing, uncompressed shuffle) so numbers are comparable.
-  * Usage: ProfileOne <queryName ...>; env SPARK_GRAFT_{SF_DIR,CPUS,REPS}.
+  * Each query runs twice: a cold rep, then a warm one.
+  * Usage: ProfileOne <queryName ...>; env SPARK_GRAFT_{SF_DIR,CPUS}.
   */
 object ProfileOne {
   private final class JobSpans extends SparkListener {
@@ -47,7 +48,7 @@ object ProfileOne {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val reps = sys.env.getOrElse("SPARK_GRAFT_REPS", "2").toInt
+    val reps = 2
     val spark = SparkSession.builder()
       .master(s"local[$cpus]")
       .config("spark.sql.shuffle.partitions", cpus)

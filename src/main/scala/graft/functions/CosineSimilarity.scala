@@ -1,10 +1,11 @@
 package graft.functions
 
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression}
 import org.apache.spark.sql.catalyst.util.ArrayData
+import org.apache.spark.sql.graftbridge.GraftSqlBridge.{column, expression}
 import org.apache.spark.sql.types._
 
 /** Cosine similarity between two float/double array columns as a native
@@ -102,13 +103,7 @@ case class CosineSimilarity(left: Expression, right: Expression)
 }
 
 object CosineSimilarity {
-  /** Register `cosine_similarity(a, b) -> double` for expr()/SQL use. */
-  def register(spark: SparkSession): Unit =
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "cosine_similarity",
-      exprs => {
-        require(exprs.length == 2,
-          s"cosine_similarity expects 2 arguments, got ${exprs.length}")
-        CosineSimilarity(exprs.head, exprs(1))
-      }, "built-in")
+  /** `cosine_similarity(a, b) -> double` as a typed column. */
+  def of(a: Column, b: Column): Column =
+    column(CosineSimilarity(expression(a), expression(b)))
 }

@@ -1,10 +1,11 @@
 package graft.functions
 
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression}
 import org.apache.spark.sql.catalyst.util.ArrayData
+import org.apache.spark.sql.graftbridge.GraftSqlBridge.{column, expression}
 import org.apache.spark.sql.types._
 
 /** The house exact-decimal pair dot as a native Catalyst expression:
@@ -131,12 +132,7 @@ case class DecimalDot9(left: Expression, right: Expression)
 }
 
 object DecimalDot9 {
-  def register(spark: SparkSession): Unit =
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "decimal_dot9",
-      exprs => {
-        require(exprs.length == 2,
-          s"decimal_dot9 expects 2 arguments, got ${exprs.length}")
-        DecimalDot9(exprs.head, exprs(1))
-      }, "built-in")
+  /** `decimal_dot9(a, b) -> double` as a typed column. */
+  def of(a: Column, b: Column): Column =
+    column(DecimalDot9(expression(a), expression(b)))
 }

@@ -1,6 +1,6 @@
 package graft.functions
 
-import org.apache.spark.sql.{Encoder, Encoders, SparkSession}
+import org.apache.spark.sql.{Column, Encoder, Encoders}
 import org.apache.spark.sql.expressions.Aggregator
 import org.apache.spark.sql.functions.udaf
 
@@ -37,7 +37,6 @@ object GeoMean extends Aggregator[Double, GeoMeanBuf, Double] {
   override def bufferEncoder: Encoder[GeoMeanBuf] = Encoders.product
   override def outputEncoder: Encoder[Double] = Encoders.scalaDouble
 
-  /** Register as SQL/expr-callable `geomean(double)`. */
-  def register(spark: SparkSession): Unit =
-    spark.udf.register("geomean", udaf(GeoMean))
+  /** `geomean(double) -> double` as a typed column. */
+  def of(c: Column): Column = udaf(GeoMean).withName("geomean").apply(c)
 }

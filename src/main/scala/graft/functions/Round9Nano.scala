@@ -1,8 +1,9 @@
 package graft.functions
 
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
+import org.apache.spark.sql.graftbridge.GraftSqlBridge.{column, expression}
 import org.apache.spark.sql.types._
 
 /** The house integer nano-unit snap — `CAST(round(round(v, 9) * 1e9, 0)
@@ -29,8 +30,9 @@ import org.apache.spark.sql.types._
   *    composition RETURNS N (their own "the second round snaps its ×1e9
   *    image onto the exact integer" comment, made precise).
   *  - Fast path: y = |v|·1e9 in double arithmetic differs from |s|·1e9
-  *    by ≤ ~2.3e-16·y + one ulp of the product. When y + 0.5 is farther
-  *    than eps = 2.3e-16·y + 1e-12 from every integer, |s|·1e9 and y
+  *    by ≤ ~2.3e-16·y, and forming g = y + 0.5 rounds once more (half
+  *    an ulp of g, ~1.1e-16·y): ~3.3e-16·y worst case. When g is farther
+  *    than eps = 4.5e-16·y + 1e-12 from every integer, |s|·1e9 and y
   *    land strictly on the same side of the HALF_UP boundary, so
   *    floor(y + 0.5) = HALF_UP(|s|·1e9, 0) = |N| (HALF_UP is symmetric:
   *    negate for v < 0). Any value inside the eps band — including every
@@ -97,7 +99,7 @@ object Round9Nano {
     if (y < 1e13) { // NaN fails this too -> slow
       val g = y + 0.5
       val c = Math.floor(g)
-      val eps = 2.3e-16 * y + 1e-12
+      val eps = 4.5e-16 * y + 1e-12
       if (g - c > eps && (c + 1.0) - g > eps) {
         val n = c.toLong
         return if (v < 0.0) -n else n
@@ -106,12 +108,6 @@ object Round9Nano {
     slow(v)
   }
 
-  def register(spark: SparkSession): Unit =
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "round9_nano",
-      exprs => {
-        require(exprs.length == 1,
-          s"round9_nano expects 1 argument, got ${exprs.length}")
-        Round9Nano(exprs.head)
-      }, "built-in")
+  /** `round9_nano(double) -> bigint` as a typed column. */
+  def of(v: Column): Column = column(Round9Nano(expression(v)))
 }

@@ -1,9 +1,10 @@
 package graft.functions
 
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression, XxHash64Function}
 import org.apache.spark.sql.catalyst.util.ArrayData
+import org.apache.spark.sql.graftbridge.GraftSqlBridge.{column, expression}
 import org.apache.spark.sql.types.{ArrayType, DataType, LongType, StringType}
 import org.apache.spark.unsafe.types.UTF8String
 
@@ -95,14 +96,8 @@ object SimHash64 {
   def hashToken(s: UTF8String): Long =
     XxHash64Function.hash(s, StringType, 42L)
 
-  /** Register `simhash64(array<string>) -> bigint` for use via expr()/SQL. */
-  def register(spark: SparkSession): Unit =
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "simhash64", exprs => {
-        require(exprs.length == 1,
-          s"simhash64 expects 1 argument, got ${exprs.length}")
-        SimHash64(exprs.head)
-      }, "built-in")
+  /** `simhash64(array<string>) -> bigint` as a typed column. */
+  def of(tokens: Column): Column = column(SimHash64(expression(tokens)))
 
   /** Hamming distance between two fingerprints (driver/test-side helper). */
   def hamming(a: Long, b: Long): Int = java.lang.Long.bitCount(a ^ b)

@@ -1,10 +1,11 @@
 package graft.functions
 
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression}
 import org.apache.spark.sql.catalyst.util.ArrayData
+import org.apache.spark.sql.graftbridge.GraftSqlBridge.{column, expression}
 import org.apache.spark.sql.types._
 
 /** Intersection cardinality of two SORTED `array<bigint>` columns as a
@@ -82,13 +83,7 @@ case class SortedIntersectSize(left: Expression, right: Expression)
 }
 
 object SortedIntersectSize {
-  /** Register `sorted_intersect_size(a, b) -> int` for expr()/SQL use. */
-  def register(spark: SparkSession): Unit =
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "sorted_intersect_size",
-      exprs => {
-        require(exprs.length == 2,
-          s"sorted_intersect_size expects 2 arguments, got ${exprs.length}")
-        SortedIntersectSize(exprs.head, exprs(1))
-      }, "built-in")
+  /** `sorted_intersect_size(a, b) -> int` as a typed column. */
+  def of(a: Column, b: Column): Column =
+    column(SortedIntersectSize(expression(a), expression(b)))
 }

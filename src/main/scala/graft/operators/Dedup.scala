@@ -1,6 +1,6 @@
 package graft.operators
 
-import graft.functions.{SimHash64, TextFunctions}
+import graft.functions.{SimHash64, SortedIntersectSize, TextFunctions}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -35,13 +35,6 @@ object Dedup {
   def jaccardPairs(docs: DataFrame, threshold: Double): DataFrame = {
     val spark = docs.sparkSession
     import spark.implicits._
-    // per-pair kernel: the codegen'd O(a+b) merge walk over sorted
-    // xxhash64'd token sets (the q_prefix_join / q_minhash_md5 idiom),
-    // NOT array_intersect over string arrays — the interpreted string
-    // intersect measured 8.9 s vs ~1 s for this shape once the noop-sink
-    // bench stopped letting count() skip the pair join. Hash-set Jaccard
-    // equals string-set Jaccard collision-free (~2^-64, documented).
-    graft.functions.SortedIntersectSize.register(spark)
     // EXPLICIT-count repartition materializes the token-set chain before
     // the non-equi self-join (else it recomputes per PAIR, SURVEY
     // §7.4.10) AND spreads the single-row-group scan across cores — AQE
@@ -66,8 +59,14 @@ object Dedup {
     a.join(b, $"id1" < $"id2" &&
         $"s1" * threshold <= $"s2" + 1e-9 &&
         $"s2" * threshold <= $"s1" + 1e-9)
+      // per-pair kernel: the codegen'd O(a+b) merge walk over sorted
+      // xxhash64'd token sets (the q_prefix_join / q_minhash_md5 idiom),
+      // NOT array_intersect over string arrays — the interpreted string
+      // intersect measured 8.9 s vs ~1 s for this shape once the noop-sink
+      // bench stopped letting count() skip the pair join. Hash-set Jaccard
+      // equals string-set Jaccard collision-free (~2^-64, documented).
       .withColumn("li",
-        expr("sorted_intersect_size(t1, t2)").cast("double"))
+        SortedIntersectSize.of($"t1", $"t2").cast("double"))
       .withColumn("j", $"li" / ($"s1" + $"s2" - $"li"))
       .filter($"j" >= threshold)
       .select($"id1", $"id2", round($"j", 6).as("j"))
@@ -79,10 +78,9 @@ object Dedup {
   def simhashGroups(docs: DataFrame): DataFrame = {
     val spark = docs.sparkSession
     import spark.implicits._
-    SimHash64.register(spark)
     docs.select($"doc_id", $"text")
       .withColumn("toks", TextFunctions.tokenSet($"text"))
-      .withColumn("fp", expr("simhash64(toks)"))
+      .withColumn("fp", SimHash64.of($"toks"))
   }
 
   /** MinHash-LSH near-dup pairs at Jaccard distance ≤ `maxDistance`,
@@ -110,7 +108,6 @@ object Dedup {
       numTables: Int = 4): DataFrame = {
     val spark = docs.sparkSession
     import spark.implicits._
-    graft.functions.SortedIntersectSize.register(spark)
     // repartition materializes the tokenize/hash/sort chain ONCE — base
     // fans out to both sides of the bucket join plus two verify rejoins,
     // which would otherwise recompute it four times (SURVEY §7.4.10)
@@ -150,7 +147,7 @@ object Dedup {
         Seq("id1"))
       .join(toks.select($"doc_id".as("id2"), $"t".as("t2"), $"sz".as("s2")),
         Seq("id2"))
-      .withColumn("li", expr("sorted_intersect_size(t1, t2)").cast("double"))
+      .withColumn("li", SortedIntersectSize.of($"t1", $"t2").cast("double"))
       .withColumn("jaccard_dist",
         round(lit(1.0) - $"li" / ($"s1" + $"s2" - $"li"), 6))
       .filter($"jaccard_dist" <= maxDistance)

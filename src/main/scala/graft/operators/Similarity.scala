@@ -1,6 +1,6 @@
 package graft.operators
 
-import graft.functions.VectorFunctions
+import graft.functions.{CosineSimilarity, VectorFunctions}
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -26,13 +26,12 @@ object Similarity {
       : DataFrame = {
     val spark = embeddings.sparkSession
     import spark.implicits._
+    val q = queries.select($"vec_id".as("qid"), $"embedding".as("qv"))
     // codegen'd native expression; bit-identical to VectorFunctions.cosineSim
     // (asserted in CosineSpec) but ~BLAS-loop-shaped in generated code
-    graft.functions.CosineSimilarity.register(spark)
-    val q = queries.select($"vec_id".as("qid"), $"embedding".as("qv"))
     val pairs = embeddings.join(broadcast(q), $"vec_id" =!= $"qid")
       .withColumn("sim",
-        round(expr("cosine_similarity(qv, embedding)"), 6))
+        round(CosineSimilarity.of($"qv", $"embedding"), 6))
     val w = Window.partitionBy($"qid").orderBy($"sim".desc, $"vec_id".asc)
     pairs.withColumn("rank", row_number().over(w))
       .filter($"rank" <= k)
@@ -108,13 +107,12 @@ object Similarity {
     // fixture is one parquet row-group = one scan task; AQE would
     // coalesce an unpinned repartition of the small vector rows).
     // Measured r7 under the noop-sink bench: 86 → ~2 s at sf0.1.
-    graft.functions.CosineSimilarity.register(spark)
     val a = embeddings.select($"vec_id".as("id1"), $"embedding".as("v1"))
       .repartition(graft.Tables.shufflePartitions(spark), $"id1")
     val b = embeddings.select($"vec_id".as("id2"), $"embedding".as("v2"))
     a.join(b, $"id1" < $"id2")
       .withColumn("sim",
-        round(expr("cosine_similarity(v1, v2)"), 6))
+        round(CosineSimilarity.of($"v1", $"v2"), 6))
       .filter($"sim" >= threshold)
       .select($"id1", $"id2", $"sim")
   }
@@ -295,7 +293,6 @@ object Similarity {
       : DataFrame = {
     val spark = embeddings.sparkSession
     import spark.implicits._
-    graft.functions.CosineSimilarity.register(spark)
     val cand = annLshCandidates(embeddings, queries, radius, numTables,
         bucketLength)
       .select($"qid", $"vec_id")
@@ -304,7 +301,7 @@ object Similarity {
         Seq("qid"))
       .join(embeddings.select($"vec_id", $"embedding"), Seq("vec_id"))
       .withColumn("sim",
-        round(expr("cosine_similarity(qv, embedding)"), 6))
+        round(CosineSimilarity.of($"qv", $"embedding"), 6))
     val w = Window.partitionBy($"qid").orderBy($"sim".desc, $"vec_id".asc)
     scored.withColumn("rank", row_number().over(w))
       .filter($"rank" <= k)

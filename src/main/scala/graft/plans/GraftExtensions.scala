@@ -1,38 +1,21 @@
 package graft.plans
 
-import graft.functions.{CosineSimilarity, SimHash64}
+import graft.functions.{CosineSimilarity, Native}
 import org.apache.spark.sql.SparkSessionExtensions
-import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.expressions._
 import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
 import org.apache.spark.sql.catalyst.rules.Rule
 import org.apache.spark.sql.types.{ArrayType, DoubleType, FloatType}
 
-/** Session-extension entry point: installs graft's native expressions into
-  * the function registry at session build time (`.withExtensions(new
-  * GraftExtensions)`) and adds a custom optimizer rule — the same
-  * `SparkSessionExtensions` mechanism a packaged deployment of this engine
-  * would ship, instead of per-query `register()` calls.
+/** Session-extension entry point: injects every native expression of the
+  * one [[Native]] table into the function registry at session build time
+  * (`.withExtensions(new GraftExtensions)`) and adds a custom optimizer
+  * rule and planner strategy — the `SparkSessionExtensions` mechanism a
+  * packaged deployment of this engine would ship.
   */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
   override def apply(e: SparkSessionExtensions): Unit = {
-    e.injectFunction((
-      new FunctionIdentifier("simhash64"),
-      new ExpressionInfo(classOf[SimHash64].getName, "simhash64"),
-      (exprs: Seq[Expression]) => {
-        require(exprs.length == 1,
-          s"simhash64 expects 1 argument, got ${exprs.length}")
-        SimHash64(exprs.head)
-      }))
-    e.injectFunction((
-      new FunctionIdentifier("cosine_similarity"),
-      new ExpressionInfo(classOf[CosineSimilarity].getName,
-        "cosine_similarity"),
-      (exprs: Seq[Expression]) => {
-        require(exprs.length == 2,
-          s"cosine_similarity expects 2 arguments, got ${exprs.length}")
-        CosineSimilarity(exprs.head, exprs(1))
-      }))
+    Native.functions.foreach(e.injectFunction)
     e.injectOptimizerRule(_ => SelfCosineRule)
     e.injectPlannerStrategy(_ => AsOfJoinStrategy)
   }

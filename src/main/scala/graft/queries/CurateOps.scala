@@ -1,7 +1,7 @@
 package graft.queries
 
 import graft.Tables
-import graft.functions.TextFunctions
+import graft.functions.{CosineSimilarity, SortedIntersectSize, TextFunctions}
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -41,7 +41,6 @@ object CurateOps extends QueryPack {
   private[queries] def prefixPairs(spark: SparkSession, sfDir: String,
       subsetMod: Int, num: Int, den: Int): DataFrame = {
     import spark.implicits._
-    graft.functions.SortedIntersectSize.register(spark)
     // tokenSet is the shared dedup-family tokenizer; the outer
     // array_distinct guards the (~2^-64 per token pair) case of two
     // DISTINCT tokens colliding under xxhash64 — sizes and intersections
@@ -71,7 +70,7 @@ object CurateOps extends QueryPack {
     cand
       .join(sh.select($"doc_id".as("id1"), $"t".as("t1"), $"sz".as("s1")), "id1")
       .join(sh.select($"doc_id".as("id2"), $"t".as("t2"), $"sz".as("s2")), "id2")
-      .withColumn("li", expr("sorted_intersect_size(t1, t2)").cast("double"))
+      .withColumn("li", SortedIntersectSize.of($"t1", $"t2").cast("double"))
       .withColumn("j", $"li" / ($"s1" + $"s2" - $"li"))
       .filter($"j" >= lit(num.toDouble / den))
       .select($"id1", $"id2", $"j",
@@ -576,7 +575,6 @@ object CurateOps extends QueryPack {
     * summed decimals cast once to double. */
   def qFellegiSunter(spark: SparkSession, sfDir: String): DataFrame = {
     import spark.implicits._
-    graft.functions.SortedIntersectSize.register(spark)
     val dec9 = DecimalType(18, 9)
     val d = Tables.df(spark, sfDir, "documents")
       .select($"doc_id", $"lang", $"source", $"n_chars",
@@ -596,7 +594,7 @@ object CurateOps extends QueryPack {
         $"n_chars".as("nc2"), $"head12".as("h2"), $"mh".as("mh2"),
         $"t".as("t2"), $"sz".as("s2")), Seq("blk"))
       .filter($"id1" < $"id2")
-      .withColumn("li", expr("sorted_intersect_size(t1, t2)").cast("double"))
+      .withColumn("li", SortedIntersectSize.of($"t1", $"t2").cast("double"))
       .select(
         ($"src1" === $"src2").as("f1"),
         (abs($"nc1" - $"nc2") <= 10).as("f2"),
@@ -903,7 +901,6 @@ object CurateOps extends QueryPack {
     * the whole output hash-checks against DuckDB. */
   def qSemdedup(spark: SparkSession, sfDir: String): DataFrame = {
     import spark.implicits._
-    graft.functions.CosineSimilarity.register(spark)
     val asg = kmeansAssign(spark, sfDir)
     val emb = Tables.df(spark, sfDir, "embeddings")
     val v = emb.select($"vec_id", $"embedding").join(asg, "vec_id")
@@ -912,7 +909,7 @@ object CurateOps extends QueryPack {
     val b = v.select($"cid", $"vec_id".as("id2"), $"embedding".as("v2"))
     val pairs = a.join(b, "cid")
       .filter($"id1" < $"id2")
-      .withColumn("sim", round(expr("cosine_similarity(v1, v2)"), 6))
+      .withColumn("sim", round(CosineSimilarity.of($"v1", $"v2"), 6))
       // τ = 0.4: the fixture embeddings are near-isotropic (max pairwise
       // cosine ≈ 0.6), so the production-typical 0.9x thresholds match
       // nothing; 0.4 yields a real pair graph (59 pairs / sf0.01) while

@@ -1,6 +1,7 @@
 package graft.queries
 
 import graft.Tables
+import graft.functions.CosineSimilarity
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -609,13 +610,12 @@ object ServeOps extends QueryPack {
     import spark.implicits._
     q.join(broadcast(q.select($"qid".as("pid"), $"qv".as("pv"))),
         $"pid" < $"qid")
-      .select($"qid", round(expr("cosine_similarity(qv, pv)"), 6).as("cs"))
+      .select($"qid", round(CosineSimilarity.of($"qv", $"pv"), 6).as("cs"))
       .groupBy($"qid").agg(max($"cs").as("best_exact"))
   }
 
   def qSemcacheLsh(spark: SparkSession, sfDir: String): DataFrame = {
     import spark.implicits._
-    graft.functions.CosineSimilarity.register(spark)
     val q = Tables.df(spark, sfDir, "embeddings")
       .filter($"vec_id" % 50 === 0)
       .select($"vec_id".as("qid"), $"embedding".as("qv"))
@@ -633,7 +633,7 @@ object ServeOps extends QueryPack {
     val bestLsh = cand
       .join(q, "qid")
       .join(q.select($"qid".as("pid"), $"qv".as("pv")), "pid")
-      .select($"qid", round(expr("cosine_similarity(qv, pv)"), 6).as("cs"))
+      .select($"qid", round(CosineSimilarity.of($"qv", $"pv"), 6).as("cs"))
       .groupBy($"qid").agg(max($"cs").as("best_lsh"))
     semcacheReport(q, bestExact, bestLsh)
   }
@@ -728,13 +728,12 @@ object ServeOps extends QueryPack {
           "pid"))
       .reduce(_ unionAll _)
       .join(broadcast(q), "qid")
-      .select($"qid", round(expr("cosine_similarity(qv, pv)"), 6).as("cs"))
+      .select($"qid", round(CosineSimilarity.of($"qv", $"pv"), 6).as("cs"))
       .groupBy($"qid").agg(max($"cs").as("best_lsh"))
   }
 
   def qSemcacheServed(spark: SparkSession, sfDir: String): DataFrame = {
     import spark.implicits._
-    graft.functions.CosineSimilarity.register(spark)
     val pre = sfPrefix("graft_sc_q", sfDir)
     // build once per (application, fixture) — see buildOnce
     buildOnce(spark, sfDir, pre) {
@@ -803,7 +802,6 @@ object ServeOps extends QueryPack {
     * itself; the base side stays the bucketed-table scan. */
   def qSemcacheDelta(spark: SparkSession, sfDir: String): DataFrame = {
     import spark.implicits._
-    graft.functions.CosineSimilarity.register(spark)
     val pre = scSplit(spark, sfDir)
     val delta = spark.table(s"${pre}_delta")
     // delta keys computed at READ time through the one srpKeys home
@@ -829,7 +827,6 @@ object ServeOps extends QueryPack {
     * under one key home), so it shares that oracle. */
   def qSemcacheCompact(spark: SparkSession, sfDir: String): DataFrame = {
     import spark.implicits._
-    graft.functions.CosineSimilarity.register(spark)
     val n = Tables.shufflePartitions(spark)
     val pre = scSplit(spark, sfDir)
     val delta = spark.table(s"${pre}_delta")

@@ -1,7 +1,7 @@
 package graft.queries
 
 import graft.Tables
-import graft.functions.TextFunctions
+import graft.functions.{SortedIntersectSize, TextFunctions}
 import graft.operators.Dedup
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
@@ -176,7 +176,6 @@ object TextOps extends QueryPack {
   private[queries] def minhashMd5Verify(spark: SparkSession, sfDir: String,
       c: DataFrame): DataFrame = {
     import spark.implicits._
-    graft.functions.SortedIntersectSize.register(spark)
     val docs = Tables.df(spark, sfDir, "documents")
       .filter($"doc_id" % 5 === 0)
     val s = docs.select($"doc_id", TextFunctions.tokenSet($"text").as("ts"))
@@ -187,7 +186,7 @@ object TextOps extends QueryPack {
         "id1")
       .join(s.select($"doc_id".as("id2"), $"th".as("t2"), $"sz".as("s2")),
         "id2")
-      .withColumn("li", expr("sorted_intersect_size(t1, t2)").cast("double"))
+      .withColumn("li", SortedIntersectSize.of($"t1", $"t2").cast("double"))
       .withColumn("j", $"li" / ($"s1" + $"s2" - $"li"))
       .filter($"j" >= 0.2)
       .select($"id1", $"id2", round($"j", 6).as("j"))
@@ -587,7 +586,6 @@ object TextOps extends QueryPack {
   private def bigramPairs(spark: SparkSession, sfDir: String,
       threshold: Double): DataFrame = {
     import spark.implicits._
-    graft.functions.SortedIntersectSize.register(spark)
     val docs = Tables.df(spark, sfDir, "documents")
       .filter($"doc_id" % 10 === 0)
     val sh = docs.select($"doc_id",
@@ -603,7 +601,7 @@ object TextOps extends QueryPack {
     a.join(b, $"id1" < $"id2"
         && $"s1" * threshold <= $"s2" + 1e-9
         && $"s2" * threshold <= $"s1" + 1e-9)
-      .withColumn("li", expr("sorted_intersect_size(t1, t2)").cast("double"))
+      .withColumn("li", SortedIntersectSize.of($"t1", $"t2").cast("double"))
       .withColumn("j", $"li" / ($"s1" + $"s2" - $"li"))
       .filter($"j" >= threshold)
       .select($"id1", $"id2", $"j")

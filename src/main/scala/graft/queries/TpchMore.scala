@@ -173,10 +173,9 @@ object TpchMore extends QueryPack {
   /** Custom typed Aggregator (geometric mean) — the UDAF extension API. */
   def qCustomUdaf(spark: SparkSession, sfDir: String): DataFrame = {
     import spark.implicits._
-    GeoMean.register(spark)
     Tables.df(spark, sfDir, "lineitem")
       .groupBy($"l_returnflag")
-      .agg(round(expr("geomean(l_extendedprice)"), 4).as("geo_price"),
+      .agg(round(GeoMean.of($"l_extendedprice"), 4).as("geo_price"),
         count(lit(1)).as("n"))
       .orderBy($"l_returnflag")
   }

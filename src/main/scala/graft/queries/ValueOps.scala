@@ -1,6 +1,7 @@
 package graft.queries
 
 import graft.Tables
+import graft.functions.CosineSimilarity
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -28,7 +29,6 @@ object ValueOps extends QueryPack {
   private[graft] def knnShapleyPerQuery(spark: SparkSession, sfDir: String)
       : DataFrame = {
     import spark.implicits._
-    graft.functions.CosineSimilarity.register(spark)
     val emb = Tables.df(spark, sfDir, "embeddings")
     val q = emb.filter($"vec_id" % 100 === 0)
       .select($"vec_id".as("qid"), $"embedding".as("qv"),
@@ -38,7 +38,7 @@ object ValueOps extends QueryPack {
     val wOrd = Window.partitionBy($"qid").orderBy($"rk")
     val ranked = emb.join(broadcast(q), $"vec_id" =!= $"qid")
       .withColumn("sim",
-        round(expr("cosine_similarity(qv, embedding)"), 6))
+        round(CosineSimilarity.of($"qv", $"embedding"), 6))
       .withColumn("rk", row_number().over(wRank))
       .withColumn("m", ($"label" === $"truth").cast("long"))
       .select($"qid", $"vec_id", $"label", $"rk", $"m")

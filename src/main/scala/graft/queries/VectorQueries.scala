@@ -1,6 +1,7 @@
 package graft.queries
 
 import graft.Tables
+import graft.functions.{CosineSimilarity, Round9Nano}
 import graft.operators.{Multimodal, Similarity}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
@@ -33,7 +34,6 @@ object VectorQueries extends QueryPack {
     * hit counts. */
   def qSemcache(spark: SparkSession, sfDir: String): DataFrame = {
     import spark.implicits._
-    graft.functions.CosineSimilarity.register(spark)
     val q = Tables.df(spark, sfDir, "embeddings")
       .filter($"vec_id" % 25 === 0)
       .select($"vec_id".as("qid"), $"embedding".as("qv"))
@@ -41,7 +41,7 @@ object VectorQueries extends QueryPack {
         broadcast(q.select($"qid".as("pid"), $"qv".as("pv"))),
         $"pid" < $"qid")
       .select($"qid",
-        round(expr("cosine_similarity(qv, pv)"), 6).as("cs"))
+        round(CosineSimilarity.of($"qv", $"pv"), 6).as("cs"))
       .groupBy($"qid").agg(max($"cs").as("best"))
     val taus = Seq("0.70", "0.80", "0.90", "0.95").toDF("tau_s")
       .select($"tau_s".cast("double").as("tau"))
@@ -242,7 +242,6 @@ object VectorQueries extends QueryPack {
       assignedParts: Seq[DataFrame]): DataFrame = {
     val spark = queries.sparkSession
     import spark.implicits._
-    graft.functions.CosineSimilarity.register(spark)
     val wProbe = Window.partitionBy($"qid")
       .orderBy($"d2".asc, $"cell".asc)
     val probes0 = queries
@@ -258,7 +257,7 @@ object VectorQueries extends QueryPack {
       .reduce(_ unionAll _)
       .filter($"vec_id" =!= $"qid")
       .withColumn("sim",
-        round(expr("cosine_similarity(qv, embedding)"), 6))
+        round(CosineSimilarity.of($"qv", $"embedding"), 6))
     val wTop = Window.partitionBy($"qid")
       .orderBy($"sim".desc, $"vec_id".asc)
     cand.withColumn("rank", row_number().over(wTop))
@@ -615,18 +614,17 @@ object VectorQueries extends QueryPack {
   private[graft] def matryoshkaPairs(spark: SparkSession, sfDir: String)
       : DataFrame = {
     import spark.implicits._
-    graft.functions.CosineSimilarity.register(spark)
     val emb = Tables.df(spark, sfDir, "embeddings")
     val q = emb.filter($"vec_id" % 100 === 0)
       .select($"vec_id".as("qid"), $"embedding".as("qv"))
     emb.join(broadcast(q), $"vec_id" =!= $"qid")
       .select($"qid", $"vec_id",
-        round(expr("cosine_similarity(qv, embedding)"), 6).as("sim64"),
-        round(expr(
-          "cosine_similarity(slice(qv, 1, 16), slice(embedding, 1, 16))"),
+        round(CosineSimilarity.of($"qv", $"embedding"), 6).as("sim64"),
+        round(CosineSimilarity.of(
+          slice($"qv", 1, 16), slice($"embedding", 1, 16)),
           6).as("sim16"),
-        round(expr(
-          "cosine_similarity(slice(qv, 1, 32), slice(embedding, 1, 32))"),
+        round(CosineSimilarity.of(
+          slice($"qv", 1, 32), slice($"embedding", 1, 32)),
           6).as("sim32"))
   }
 
@@ -714,10 +712,9 @@ object VectorQueries extends QueryPack {
     // Double.toString+BigDecimal parses per term, which were the
     // measured bulk of every key build (~26 run core-s of
     // q_xmodal_retrieval_ann's term stage at sf0.1, ×4096 terms/vector)
-    graft.functions.Round9Nano.register(spark)
     val terms = dims.join(broadcast(planes), "d")
       .select($"vec_id", expr("i div 8").as("tbl"), $"i",
-        expr("round9_nano(x * r)").as("term"))
+        Round9Nano.of($"x" * $"r").as("term"))
     val bits = terms.groupBy($"vec_id", $"tbl", $"i")
       .agg((sum($"term") > 0).as("bit"))
     bits.groupBy($"vec_id", $"tbl")
@@ -771,7 +768,6 @@ object VectorQueries extends QueryPack {
   private[graft] def annMd5Pairs(spark: SparkSession, sfDir: String)
       : DataFrame = {
     import spark.implicits._
-    graft.functions.CosineSimilarity.register(spark)
     val emb = Tables.df(spark, sfDir, "embeddings")
       .filter($"vec_id" % 2 === 0)
     val keys = annMd5Keys(spark, sfDir)
@@ -786,7 +782,7 @@ object VectorQueries extends QueryPack {
     cand.join(emb.select($"vec_id".as("id1"), $"embedding".as("e1")), "id1")
       .join(emb.select($"vec_id".as("id2"), $"embedding".as("e2")), "id2")
       .select($"id1", $"id2",
-        round(expr("cosine_similarity(e1, e2)"), 6).as("sim"))
+        round(CosineSimilarity.of($"e1", $"e2"), 6).as("sim"))
       .filter($"sim" >= 0.25)
   }
 
@@ -1047,7 +1043,6 @@ object VectorQueries extends QueryPack {
     * recall-tested (AnnConsumersSpec), not just documented. */
   def qHardNegatives(spark: SparkSession, sfDir: String): DataFrame = {
     import spark.implicits._
-    graft.functions.CosineSimilarity.register(spark)
     val s = Tables.df(spark, sfDir, "embeddings")
       .filter($"vec_id" % 4 === 0)
     val a = s.select($"vec_id".as("aid"), $"embedding".as("av"),
@@ -1057,7 +1052,7 @@ object VectorQueries extends QueryPack {
     val pairs = a.join(broadcast(b), $"aid" =!= $"bid")
       .select($"aid", $"bid",
         ($"alab" === $"blab").as("same"),
-        round(expr("cosine_similarity(av, bv)"), 6).as("sim"))
+        round(CosineSimilarity.of($"av", $"bv"), 6).as("sim"))
     hardNegStages(spark, s, pairs)
   }
 
@@ -1074,7 +1069,6 @@ object VectorQueries extends QueryPack {
   def hardNegativesAnn(spark: SparkSession, sfDir: String,
       radius: Double = 1.5, numTables: Int = 8): DataFrame = {
     import spark.implicits._
-    graft.functions.CosineSimilarity.register(spark)
     val s = Tables.df(spark, sfDir, "embeddings")
       .filter($"vec_id" % 4 === 0)
     val cand = Similarity.annLshCandidates(s, s, radius, numTables)
@@ -1086,7 +1080,7 @@ object VectorQueries extends QueryPack {
         $"label".as("blab")), Seq("bid"))
       .select($"aid", $"bid",
         ($"alab" === $"blab").as("same"),
-        round(expr("cosine_similarity(av, bv)"), 6).as("sim"))
+        round(CosineSimilarity.of($"av", $"bv"), 6).as("sim"))
     hardNegStages(spark, s, pairs)
   }
 

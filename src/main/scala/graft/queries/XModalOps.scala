@@ -1,6 +1,7 @@
 package graft.queries
 
 import graft.Tables
+import graft.functions.DecimalDot9
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -244,9 +245,9 @@ object XModalOps extends QueryPack {
     // bit-identical by construction (DecimalDot9Spec replays the HOF),
     // and the per-candidate lambda/boxing cost disappears from the only
     // pair-grain stage these queries have
-    graft.functions.DecimalDot9.register(pairs.sparkSession)
     pairs.withColumn("cs",
-      expr("round(decimal_dot9(qv, mv) / (qn * mn), 6)"))
+      round(DecimalDot9.of(col("qv"), col("mv")) /
+        (col("qn") * col("mn")), 6))
   }
 
   def qXmodalRetrieval(spark: SparkSession, sfDir: String): DataFrame = {

@@ -1,5 +1,6 @@
 package graft.streaming
 
+import graft.functions.{CosineSimilarity, DecimalDot9}
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.DecimalType
@@ -538,10 +539,9 @@ object Streams {
   def semcacheStream(stream: DataFrame, cacheSnap: DataFrame): DataFrame = {
     val spark = stream.sparkSession
     import spark.implicits._
-    graft.functions.CosineSimilarity.register(spark)
     stream
       .join(broadcast(cacheSnap), expr("pid < qid"))
-      .select($"qid", round(expr("cosine_similarity(qv, pv)"), 6).as("cs"))
+      .select($"qid", round(CosineSimilarity.of($"qv", $"pv"), 6).as("cs"))
       .groupBy($"qid").agg(max($"cs").as("best"))
   }
 
@@ -663,14 +663,13 @@ object Streams {
       media: DataFrame): DataFrame = {
     val spark = stream.sparkSession
     import spark.implicits._
-    graft.functions.DecimalDot9.register(spark)
     val q = stream.withColumn("qn",
       expr(graft.queries.XModalOps.qNormSql))
     srpProbeRows(q, Seq("qn"))
       .join(postings, "bkey")
       .join(media, "doc_id")
       .select($"qid", struct(
-        (-expr("round(decimal_dot9(qv, mv) / (qn * mn), 6)")).as("ns"),
+        (-round(DecimalDot9.of($"qv", $"mv") / ($"qn" * $"mn"), 6)).as("ns"),
         $"doc_id").as("c"))
       .groupBy($"qid")
       .agg(collect_set($"c").as("cands"))
@@ -716,7 +715,6 @@ object Streams {
       cells: DataFrame): DataFrame = {
     val spark = stream.sparkSession
     import spark.implicits._
-    graft.functions.CosineSimilarity.register(spark)
     // the frozen 8-row centroid snapshot as ONE broadcast row — a
     // stream-static crossJoin of a 1-row relation, the tempSampleStream
     // freeze discipline
@@ -739,7 +737,7 @@ object Streams {
       .join(cells, "cell")
       .filter($"vec_id" =!= $"qid")
       .select($"qid",
-        struct((-round(expr("cosine_similarity(qv, embedding)"), 6))
+        struct((-round(CosineSimilarity.of($"qv", $"embedding"), 6))
             .as("ns"), $"vec_id").as("c"))
       .groupBy($"qid")
       .agg(expr("slice(array_sort(collect_list(c)), 1, 10)").as("top"))

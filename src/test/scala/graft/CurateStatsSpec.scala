@@ -13,7 +13,7 @@ class CurateStatsSpec extends SparkSpec {
 
   test("prefix-filtered join finds exactly the brute-force pair set") {
     // brute-force reference over the same subset and token representation
-    graft.functions.SortedIntersectSize.register(spark)
+    graft.functions.Native.install(spark)
     val sh = Tables.df(spark, sf, "documents")
       .filter($"doc_id" % 5 === 0)
       .select($"doc_id",

@@ -1,6 +1,6 @@
 package graft
 
-import graft.functions.{CosineSimilarity, VectorFunctions}
+import graft.functions.{Native, VectorFunctions}
 import graft.operators.{AsOf, Skew}
 import org.apache.spark.sql.functions._
 
@@ -8,7 +8,7 @@ class CustomOpsSpec extends SparkSpec {
 
   test("codegen cosine expression is bit-identical to the HOF composition") {
     import spark.implicits._
-    CosineSimilarity.register(spark)
+    Native.install(spark)
     val emb = Tables.df(spark, sf, "embeddings").limit(100)
     val a = emb.select($"vec_id".as("ida"), $"embedding".as("va"))
     val b = emb.select($"vec_id".as("idb"), $"embedding".as("vb"))
@@ -26,7 +26,7 @@ class CustomOpsSpec extends SparkSpec {
 
   test("cosine expression handles length mismatch and zero vectors as null") {
     import spark.implicits._
-    CosineSimilarity.register(spark)
+    Native.install(spark)
     val df = Seq(
       (Array(1.0f, 2.0f), Array(1.0f, 2.0f, 3.0f)),
       (Array(0.0f, 0.0f), Array(1.0f, 2.0f))
@@ -36,7 +36,7 @@ class CustomOpsSpec extends SparkSpec {
 
   test("simhash codegen path agrees with interpreted eval") {
     import spark.implicits._
-    graft.functions.SimHash64.register(spark)
+    Native.install(spark)
     val docs = Tables.df(spark, sf, "documents").limit(50)
       .select($"doc_id", split(lower($"text"), " ").as("toks"))
     def fps(mode: String): Map[Long, Long] = {
@@ -51,6 +51,22 @@ class CustomOpsSpec extends SparkSpec {
       }
     }
     assert(fps("CODEGEN_ONLY") === fps("NO_CODEGEN"))
+  }
+
+  test("Native.install is idempotent per session registry and reaches " +
+      "a newSession()") {
+    val names = Native.functions.map(_._1.funcName) :+ "geomean"
+    Native.install(spark)
+    assert(Native.install(spark).isEmpty,
+      "a second install on the same session must replace nothing")
+    // a newSession starts from the built-in registry: keyed on the
+    // session's own registry, install must register everything again
+    val fresh = spark.newSession()
+    assert(Native.install(fresh).toSet === names.toSet)
+    for (s <- Seq(spark, fresh); n <- names)
+      assert(s.catalog.functionExists(n), s"$n does not resolve")
+    assert(fresh.sql("SELECT cosine_similarity(array(3.0D, 4.0D), " +
+      "array(3.0D, 4.0D))").head().getDouble(0) === 1.0)
   }
 
   test("as-of join picks the latest strictly-prior right row per key") {

@@ -21,7 +21,7 @@ class DecimalDot9Spec extends SparkSpec {
   test("native decimal_dot9 equals the HOF kernel EXACTLY on every " +
       "fixture embedding pair (float arrays)") {
     import spark.implicits._
-    graft.functions.DecimalDot9.register(spark)
+    graft.functions.Native.install(spark)
     val emb = Tables.df(spark, sf, "embeddings")
     val pairs = emb.filter($"vec_id" % 20 === 0)
       .select($"vec_id".as("i"), $"embedding".as("a"))
@@ -40,7 +40,7 @@ class DecimalDot9Spec extends SparkSpec {
   test("native decimal_dot9 handles integer arrays (the media-histogram " +
       "path) and nulls/length mismatches like the HOF") {
     import spark.implicits._
-    graft.functions.DecimalDot9.register(spark)
+    graft.functions.Native.install(spark)
     val df = Seq(
       (Array(1L, 2L, 3L), Array(0.5, 0.25, -1.0)),
       (Array(0L, 0L, 0L), Array(1.0, 1.0, 1.0))
@@ -58,7 +58,7 @@ class DecimalDot9Spec extends SparkSpec {
   test("a NULL element nulls the whole dot — matching the HOF — in both " +
       "the interpreted and codegen paths") {
     import spark.implicits._
-    graft.functions.DecimalDot9.register(spark)
+    graft.functions.Native.install(spark)
     // containsNull arrays via array() over a conditional element
     val df = spark.range(0, 4)
       .select($"id",

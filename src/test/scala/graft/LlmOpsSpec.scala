@@ -19,7 +19,6 @@ class LlmOpsSpec extends SparkSpec {
 
   test("simhash: identical docs share fingerprints, near-dups are close") {
     import spark.implicits._
-    SimHash64.register(spark)
     val docs = Seq(
       (1L, "the quick brown fox jumps over the lazy dog near the river bank today"),
       (2L, "the quick brown fox jumps over the lazy dog near the river bank today"),
@@ -165,7 +164,7 @@ class LlmOpsSpec extends SparkSpec {
     assert(byId.values.forall(_.length == 16), "fixed width")
     assert(byId.values.forall(v => math.abs(v.sum - 1f) < 1e-6), "normalized")
     // similar payloads are cosine-closer than dissimilar ones
-    graft.functions.CosineSimilarity.register(spark)
+    graft.functions.Native.install(spark)
     val sims = thumbs.toDF().as("a")
       .crossJoin(thumbs.toDF().as("b"))
       .filter($"a.doc_id" === 1 && $"b.doc_id" =!= 1)

@@ -1,5 +1,6 @@
 package graft
 
+import graft.functions.Native
 import graft.plans.{GraftExtensions, SelfCosineRule}
 import graft.queries.{Joins, Relational, TpchMore}
 import org.apache.spark.sql.SparkSessionExtensions
@@ -122,7 +123,7 @@ class PlanAuditSpec extends SparkSpec {
 
   test("SelfCosineRule folds cosine(x,x) to a guard + constant") {
     import spark.implicits._
-    graft.functions.CosineSimilarity.register(spark)
+    graft.functions.Native.install(spark)
     val prev = spark.experimental.extraOptimizations
     try {
       spark.experimental.extraOptimizations = prev :+ SelfCosineRule
@@ -357,7 +358,15 @@ class PlanAuditSpec extends SparkSpec {
   }
 
   test("GraftExtensions installs functions and the rule without error") {
-    val e = new SparkSessionExtensions
+    val injected = scala.collection.mutable.ArrayBuffer.empty[String]
+    val e = new SparkSessionExtensions {
+      override def injectFunction(f: FunctionDescription): Unit = {
+        injected += f._1.funcName
+        super.injectFunction(f)
+      }
+    }
     new GraftExtensions().apply(e)   // would throw on malformed injection
+    assert(injected.toSeq === Native.functions.map(_._1.funcName),
+      "GraftExtensions must inject exactly the Native table")
   }
 }

@@ -97,7 +97,7 @@ class R17bOpsSpec extends SparkSpec {
     assert(row.getAs[Double]("anisotropy_gap") ===
       rnd(raw - row.getAs[Double]("mean_cos_centered"), 6))
     // brute-force pair-join replay at fixture scale
-    graft.functions.CosineSimilarity.register(spark)
+    graft.functions.Native.install(spark)
     val e = Tables.df(spark, sf, "embeddings")
       .select($"vec_id", $"embedding")
     val brute = e.as("a").join(e.as("b"),

@@ -103,7 +103,7 @@ class R20OpsSpec extends SparkSpec {
     val q = XModalOps.retrievalQueries(spark, sf).localCheckpoint()
     // the batch rule, independently re-derived: probe the SAME tables,
     // rank with the SAME kernel, keep the true pair's rank
-    graft.functions.DecimalDot9.register(spark)
+    graft.functions.Native.install(spark)
     val qkeys = VectorQueries.srpKeys(
       q.select($"qid".as("vec_id"), $"qv".as("embedding")))
     val probes = VectorQueries.srpProbes(qkeys)

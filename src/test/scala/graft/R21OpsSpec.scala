@@ -155,7 +155,7 @@ class R21OpsSpec extends SparkSpec {
           org.apache.spark.sql.catalyst.TableIdentifier(t))
           .location.toString))
       def walk(f: java.io.File): Seq[String] =
-        if (f.isDirectory) f.listFiles().toSeq.flatMap(walk)
+        if (f.isDirectory) Option(f.listFiles()).toSeq.flatten.flatMap(walk)
         else Seq(f.getPath)
       walk(loc).sorted
     }

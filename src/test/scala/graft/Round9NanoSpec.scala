@@ -1,6 +1,6 @@
 package graft
 
-import graft.functions.Round9Nano
+import graft.functions.{Native, Round9Nano}
 import org.apache.spark.sql.functions._
 
 /** r22: the fused nano-unit snap must be BIT-IDENTICAL to the two-round
@@ -45,6 +45,24 @@ class Round9NanoSpec extends SparkSpec {
       assert(Round9Nano.compute(v) === reference(v), s"grid at v=$v")
       checked += 1
     }
+    // HALF_UP boundaries at high magnitude, y = |v|·1e9 in [1e4, 1e13):
+    // the double nearest each decimal tie (n + 0.5)·1e-9 and its three
+    // ulp neighbours either side, both signs — where the product and the
+    // +0.5 rounding error (~3.3e-16·y together) can land the fast path on
+    // the wrong side of the boundary, the band its guard must send slow
+    for (exp <- 4 to 12; _ <- 1 to 2000) {
+      val n = (math.pow(10.0, exp) * (1.0 + rnd.nextDouble() * 9.0)).toLong
+      var v = new java.math.BigDecimal(n).add(new java.math.BigDecimal("0.5"))
+        .movePointLeft(9).doubleValue()
+      for (_ <- 1 to 3) v = Math.nextDown(v)
+      for (_ <- 0 to 6) {
+        for (s <- Seq(v, -v)) {
+          assert(Round9Nano.compute(s) === reference(s), s"boundary at v=$s")
+          checked += 1
+        }
+        v = Math.nextUp(v)
+      }
+    }
     for (v <- Seq(0.0, -0.0, Double.MinPositiveValue,
         -Double.MinPositiveValue, 1e15, -1e15, 9.9e12, 1.01e13)) {
       assert(Round9Nano.compute(v) === reference(v), s"edge at v=$v")
@@ -56,13 +74,25 @@ class Round9NanoSpec extends SparkSpec {
   test("SQL expression (codegen path) equals the unfused SQL on random " +
       "doubles") {
     import spark.implicits._
-    Round9Nano.register(spark)
+    Native.install(spark)
     val df = spark.range(0, 200000).select(
       ((rand(7) * 2 - 1) * pow(lit(10.0), (rand(11) * 16 - 12)))
         .as("v"))
       .select($"v", expr("round9_nano(v)").as("fast"),
         expr("CAST(round(round(v, 9) * 1e9, 0) AS BIGINT)").as("slow"))
     assert(df.filter($"fast" =!= $"slow").count() === 0)
+  }
+
+  test("non-finite input returns the non-ANSI double-to-long cast image") {
+    import spark.implicits._
+    val inputs = Seq(Double.NaN, Double.PositiveInfinity,
+      Double.NegativeInfinity)
+    val image = Seq(0L, Long.MaxValue, Long.MinValue)
+    assert(inputs.map(Round9Nano.compute) === image)
+    assert(inputs.map(reference) === image)
+    // the column path agrees and raises nothing
+    assert(inputs.toDF("v").select(Round9Nano.of($"v")).as[Long]
+      .collect().toSeq === image)
   }
 
   test("srpKeys over the fixture is term-identical to the unfused " +
