@@ -419,14 +419,12 @@ object Corpus2Ops extends QueryPack {
     * tokenizers. Returns the table-name prefix. */
   private[graft] def bpeArtifacts(spark: SparkSession, sfDir: String)
       : String = {
-    val pre = ServeOps.sfPrefix("graft_bpe", sfDir)
-    // r21 (ADVICE r20): routed through the ONE ServeOps.buildOnce memo —
-    // same (applicationId | verbatim sfDir | pre) key as before (the
-    // String.hashCode-collision note lives on buildOnce), but the
-    // training loop now runs inside a lazy cell OUTSIDE the CHM bin
-    // lock, so a concurrent same-bin caller no longer blocks on seconds
-    // of Spark jobs and re-entry cannot IllegalStateException.
-    ServeOps.buildOnce(spark, sfDir, pre) {
+    // r21 (ADVICE r20): routed through the ONE ServeOps.buildOnce memo
+    // (the key and String.hashCode-collision notes live there): the
+    // training loop runs inside a lazy cell OUTSIDE the CHM bin lock,
+    // so a concurrent same-bin caller never blocks on seconds of Spark
+    // jobs and re-entry cannot IllegalStateException.
+    ServeOps.buildOnce(spark, sfDir, "graft_bpe") { pre =>
       import spark.implicits._
       val (outs, finalState, nt) = bpeTrainRounds(spark, sfDir)
       val n = Tables.shufflePartitions(spark)
@@ -438,7 +436,6 @@ object Corpus2Ops extends QueryPack {
       graft.sources.Sources.writeBucketed(nt, s"${pre}_tot",
         1, "n_tokens")
     }
-    pre
   }
 
   /** The 6-round merge-train loop — per-round report rows + the FINAL

@@ -251,26 +251,23 @@ object CurateOps extends QueryPack {
     * (both mod 10) and q_dedup_savings (mod 7) each paid it. A
     * production pipeline computes the dedup manifest ONCE, writes it,
     * and every consumer reads the artifact; this mirrors that shape —
-    * first use per (sfDir, mod) per JVM writes a parquet manifest under
+    * the first use per (application, fixture, mod) — the
+    * [[ServeOps.buildOnce]] memo — writes a parquet manifest under
     * java.io.tmpdir (PID-scoped, so no cross-process staleness or
     * clashes), later uses read it. Parquet-backed, so it survives
     * `spark.catalog.clearCache()` and the bench's between-query
     * unpersist sweep, unlike a cached/localCheckpointed plan. Row
     * order is NOT part of the artifact's contract — consumers apply
     * their own final sort. */
-  private val manifestPaths =
-    new java.util.concurrent.ConcurrentHashMap[String, String]
   private def sharedManifest(spark: SparkSession, sfDir: String,
       mod: Int): DataFrame = {
-    val path = manifestPaths.computeIfAbsent(s"$sfDir#$mod", _ => {
-      val p = s"${System.getProperty("java.io.tmpdir")}/graft_manifest_" +
-        s"${ProcessHandle.current().pid()}_${mod}_" +
-        sfDir.replaceAll("[^A-Za-z0-9.]", "_")
-      canonicalManifest(spark, sfDir, mod)
-        .write.mode("overwrite").parquet(p)
-      p
-    })
-    spark.read.parquet(path)
+    val p = s"${System.getProperty("java.io.tmpdir")}/graft_manifest_" +
+      s"${ProcessHandle.current().pid()}_${mod}_" +
+      sfDir.replaceAll("[^A-Za-z0-9.]", "_")
+    ServeOps.buildOnce(spark, sfDir, s"graft_manifest_$mod") { _ =>
+      canonicalManifest(spark, sfDir, mod).write.mode("overwrite").parquet(p)
+    }
+    spark.read.parquet(p)
   }
 
   /** The survivorship manifest over the doc_id%`mod` subset — the plan
@@ -800,25 +797,23 @@ object CurateOps extends QueryPack {
     * to be re-derived by each of its four consumers — q_kmeans,
     * q_silhouette, q_semdedup, q_coreset — at ~9.8 s combined. Same
     * compute-once/read-many shape as the survivorship manifest
-    * ([[sharedManifest]]): first use per (sfDir) per JVM writes the n×k
-    * point×centroid distance relation (vec_id, cid, dist DECIMAL(30,9))
-    * to a PID-scoped parquet under java.io.tmpdir; later uses read the
+    * ([[sharedManifest]]): the first use per (application, fixture)
+    * writes the n×k point×centroid distance relation (vec_id, cid, dist
+    * DECIMAL(30,9)) to a PID-scoped parquet under java.io.tmpdir; later
+    * uses read the
     * artifact. Parquet-backed so it survives `clearCache()` and the
     * bench's between-query unpersist sweep. The relation is n×k rows —
     * thin at any corpus scale — and fully deterministic, so every
     * consumer's oracle hash is unchanged. */
-  private val kmeansDistPaths =
-    new java.util.concurrent.ConcurrentHashMap[String, String]
   private def kmeansFinalDistsShared(spark: SparkSession, sfDir: String)
       : DataFrame = {
-    val path = kmeansDistPaths.computeIfAbsent(sfDir, _ => {
-      val p = s"${System.getProperty("java.io.tmpdir")}/graft_kmdist_" +
-        s"${ProcessHandle.current().pid()}_" +
-        sfDir.replaceAll("[^A-Za-z0-9.]", "_")
+    val p = s"${System.getProperty("java.io.tmpdir")}/graft_kmdist_" +
+      s"${ProcessHandle.current().pid()}_" +
+      sfDir.replaceAll("[^A-Za-z0-9.]", "_")
+    ServeOps.buildOnce(spark, sfDir, "graft_kmdist") { _ =>
       kmeansFinalDists(spark, sfDir).write.mode("overwrite").parquet(p)
-      p
-    })
-    spark.read.parquet(path)
+    }
+    spark.read.parquet(p)
   }
 
   private def kmeansAssign(spark: SparkSession, sfDir: String): DataFrame = {

@@ -961,7 +961,11 @@ object GraphOps extends QueryPack {
         |FROM g""".stripMargin,
 
     // same degree joins, same 5-value k spine, exact integer counts,
-    // each ratio divides once and rounds once
+    // each ratio divides once and rounds once. `deg` is filtered per k
+    // (dk) BEFORE the edge joins, and the (u, k) side is aggregated to
+    // (k, v) first: the aggregate keeps DuckDB from joining dk to itself
+    // on k alone (|dk|²/5 rows) — the old e × deg × deg × ks form spilled
+    // >20 GB at sf0.1
     "q_rich_club" ->
       """WITH pairs AS (
         |  SELECT DISTINCT o_custkey * 2 AS u, l_suppkey * 2 + 1 AS v
@@ -976,14 +980,15 @@ object GraphOps extends QueryPack {
         |  FROM deg CROSS JOIN ks GROUP BY k),
         |etot AS (SELECT count(*) AS m2_tot FROM e),
         |ntot AS (SELECT count(*) AS n_tot FROM deg),
+        |dk AS (SELECT k, node FROM deg CROSS JOIN ks WHERE d > k),
+        |eu AS (
+        |  SELECT du.k, e.v, count(*) AS c
+        |  FROM e JOIN dk du ON du.node = e.u
+        |  GROUP BY du.k, e.v),
         |ek AS (
-        |  SELECT k, count(*) AS m2
-        |  FROM e
-        |  JOIN deg du ON du.node = e.u
-        |  JOIN deg dv ON dv.node = e.v
-        |  CROSS JOIN ks
-        |  WHERE du.d > k AND dv.d > k
-        |  GROUP BY k)
+        |  SELECT eu.k, CAST(sum(eu.c) AS BIGINT) AS m2
+        |  FROM eu JOIN dk dv ON dv.node = eu.v AND dv.k = eu.k
+        |  GROUP BY eu.k)
         |SELECT s.k, s.n_nodes,
         |  CAST(coalesce(ek.m2, 0) / 2 AS BIGINT) AS m_edges,
         |  CASE WHEN s.n_nodes > 1

@@ -4,103 +4,44 @@ import graft.Tables
 import graft.functions.CosineSimilarity
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import scala.jdk.CollectionConverters._
 
 /** Persisted-index serving ops (r18, VERDICT r17 #1): the build-once /
   * serve-cold half of the ANN story. Every earlier ANN chain
   * ([[VectorQueries.qAnnLsh]]/qAnnMd5/qAnnKnn) rebuilds its SRP index
   * inside the measured query — correct for an eval, not how a 100 TB
-  * vector service runs. Here the index is a pair of BUCKETED TABLES:
-  *
-  *  - `postings(bkey, vec_id)`, bucketed by the combined probe key
-  *    `bkey = tbl·256 + bk` (injective: bk ∈ [0,256), tbl ∈ [0,8)) — the
-  *    scan itself exposes HashPartitioning(bkey), so the probe join
-  *    consumes the layout with NO exchange on the (large) index side;
-  *    only the query fan-out (|Q|·8·9 probe rows) ever shuffles.
-  *  - `vectors(vec_id, embedding)`, bucketed by vec_id — the exact-verify
-  *    join reads full vectors for bucket-collision candidates only, again
-  *    exchange-free on the stored side.
-  *
-  * At 100 TB both tables are written once (one shuffle each) and every
-  * query batch — and every restart — reuses the layout: the serving plan
-  * shuffles O(candidates), never O(corpus). Cross-JVM cold serving is
-  * proven by [[graft.sources.AnnIndexProbe]] (the MetastoreProbe pattern:
-  * build JVM exits, serve JVM reopens the derby-backed catalog and must
-  * reproduce the in-plan result exactly — AnnServedSpec).
+  * vector service runs. Here the index is the pair of bucketed tables
+  * [[SrpIndex]] writes and probes (the IVF family keeps its own cell
+  * table): at 100 TB both tables are written once (one shuffle each)
+  * and every query batch — and every restart — reuses the layout: the
+  * serving plan shuffles O(candidates), never O(corpus). Cross-JVM cold
+  * serving is proven by [[graft.sources.AnnIndexProbe]] (the
+  * MetastoreProbe pattern: build JVM exits, serve JVM reopens the
+  * derby-backed catalog and must reproduce the in-plan result exactly —
+  * AnnServedSpec).
   */
 object ServeOps extends QueryPack {
 
-  /** Write the two index tables for `sfDir`'s %2 corpus under the given
-    * table-name prefix. The SRP keys come from [[VectorQueries.srpKeys]]
-    * — the ONE hyperplane home, so build-time and query-time hashes
-    * cannot drift. */
-  private[graft] def buildAnnIndex(spark: SparkSession, sfDir: String,
-      prefix: String): Unit = {
+  /** The radius search's SRP input: the %2 corpus (vec_id, embedding). */
+  private[graft] def annCorpus(spark: SparkSession, sfDir: String): DataFrame = {
     import spark.implicits._
-    val n = Tables.shufflePartitions(spark)
-    val postings = VectorQueries.annMd5Keys(spark, sfDir)
-      .select(($"tbl" * 256 + $"bk").as("bkey"), $"vec_id")
-    graft.sources.Sources.writeBucketed(postings, s"${prefix}_postings",
-      n, "bkey")
-    val vectors = Tables.df(spark, sfDir, "embeddings")
+    Tables.df(spark, sfDir, "embeddings")
       .filter($"vec_id" % 2 === 0)
       .select($"vec_id", $"embedding")
-    graft.sources.Sources.writeBucketed(vectors, s"${prefix}_vectors",
-      n, "vec_id")
   }
 
   /** Serve the radius search (the q_ann_lsh contract: Hamming-1
     * multiprobe candidates, exact euclidean ≤ 1.5) for fresh `queries`
-    * (qid, qv) against a persisted index. The query side is keyed FRESH
-    * through [[VectorQueries.srpKeys]] — the cold-query shape: a serving
-    * process never has precomputed keys for arriving queries, only the
-    * stored postings. Scale: probe fan-out multiplies only the query
-    * side (×72); candidates meet the postings in a bkey equi-join that
-    * is exchange-free on the index side (plan-audited, AnnServedSpec);
-    * the verify join is exchange-free on the vectors side; the bounded
-    * query set broadcasts into the distance kernel. */
-  private[graft] def serveAnn(queries: DataFrame, postings: DataFrame,
-      vectors: DataFrame): DataFrame =
-    serveAnnSplit(queries, Seq(postings), Seq(vectors))
-
-  /** Join-distributed serve (r20): a lambda read must probe base ∪
-    * delta, but a union BELOW the join destroys the bucketed layout's
-    * output partitioning — the executed q_ann_delta plan re-shuffled
-    * the WHOLE base index on every delta read (measured:
-    * ShuffleExchange directly over UnionExec on both the postings and
-    * vectors sides — at 100 TB, a full-index shuffle per query batch).
-    * Equi-joins distribute over UNION ALL, so the split form joins each
-    * part separately and unions the JOIN RESULTS: the base part keeps
-    * consuming its bucketed scan Exchange-free, and only the delta part
-    * (small by definition) plus the probe fan-out ever shuffle — the
-    * posture the delta ops' scaladocs promised, now true in the plan
-    * (R20OpsSpec audits the executed plan). Row-identical to the
-    * union-below form: same join keys, same rows, and the base/delta
-    * vec_id sets are disjoint halves. */
-  private[graft] def serveAnnSplit(queries: DataFrame,
-      postingsParts: Seq[DataFrame], vectorParts: Seq[DataFrame])
-      : DataFrame = {
-    val spark = queries.sparkSession
-    import spark.implicits._
-    val qkeys = VectorQueries.srpKeys(
-      queries.select($"qid".as("vec_id"), $"qv".as("embedding")))
-    val probes0 = VectorQueries.srpProbes(qkeys)
-      .select($"vec_id".as("qid"), ($"tbl" * 256 + $"bk").as("bkey"))
-    // a multi-part read consumes the probe fan-out once PER PART —
-    // checkpoint the (|Q|·72-row) relation so the query-side keying is
-    // not recomputed per part; single-part plans stay untouched
-    val probes =
-      if (postingsParts.size > 1) probes0.localCheckpoint() else probes0
-    val cand0 = postingsParts.map(p => probes.join(p, "bkey"))
-      .reduce(_ unionAll _)
-      .filter($"qid" =!= $"vec_id")
-      .select($"qid", $"vec_id").distinct()
-    val cand =
-      if (vectorParts.size > 1) cand0.localCheckpoint() else cand0
-    vectorParts.map(v =>
-        cand.join(v.select($"vec_id", $"embedding".as("ev")), "vec_id"))
-      .reduce(_ unionAll _)
-      .join(broadcast(queries), "qid")
-      .select($"qid", $"vec_id",
+    * (qid, qv) from the index `parts` through the one
+    * [[SrpIndex.probe]] chain — the cold-query shape: a serving process
+    * never has precomputed keys for arriving queries, only the stored
+    * postings. The bounded query set broadcasts into the distance
+    * kernel. */
+  private[graft] def annRadius(queries: DataFrame, parts: SrpIndex.Parts)
+      : DataFrame =
+    SrpIndex.probe(queries, parts, keep = col("qid") =!= col("vec_id"),
+        vcols = Seq(col("vec_id"), col("embedding").as("ev")))
+      .select(col("qid"), col("vec_id"),
         expr("""round(sqrt(CAST(aggregate(
           zip_with(qv, ev, (a, b) ->
             CAST(round((CAST(a AS DOUBLE) - CAST(b AS DOUBLE)) *
@@ -109,20 +50,9 @@ object ServeOps extends QueryPack {
           CAST(0 AS DECIMAL(28,9)),
           (acc, t) -> CAST(acc + t AS DECIMAL(28,9))) AS DOUBLE)), 6)""")
           .as("dist"))
-      .filter($"dist" <= 1.5)
-      .orderBy($"qid", $"vec_id")
-  }
+      .filter(col("dist") <= 1.5)
+      .orderBy(col("qid"), col("vec_id"))
 
-  // ---- q_ann_served --------------------------------------------------------
-  /** The persisted-index serving chain end-to-end: pay the bucketed index
-    * WRITE inside the measured time (the q_pagerank_bucketed honesty —
-    * PERF.md records whether one query amortizes it; a cluster writes
-    * once and serves forever), then answer the %100 query decile's
-    * radius search by probing the TABLES, never the in-plan key
-    * relation. Row-identical to [[VectorQueries.qAnnLsh]] by
-    * construction (same hyperplanes, same probe rule, same exact
-    * verify), so it shares that oracle verbatim — the persisted layout
-    * is pure physical design, invisible in the answer. */
   /** SF- and process-scoped table prefix: two sessions verifying
     * DIFFERENT fixtures must not clobber each other's index tables (the
     * writeBucketed path derives from the table name, so a shared name
@@ -152,7 +82,7 @@ object ServeOps extends QueryPack {
   // directories if its sfDir hash happened to equal this tag).
   private val sweepName = java.util.regex.Pattern.compile(
     "^graft_graft_[a-z0-9_]+_" + jvmTag +
-      "_(c_)?(postings|vectors|cells|centers|media|vocab|traj|tot|delta)$")
+      "_(c_)?(postings|vectors|cells|centers|vocab|traj|tot|delta)$")
   locally {
     def del(f: java.io.File): Unit = {
       // never FOLLOW a symlink (ADVICE r19): a link inside a swept dir
@@ -180,12 +110,12 @@ object ServeOps extends QueryPack {
   // MD5 can still collide in principle, but not for the structured
   // sibling paths (…/sf0.001 vs …/sf0.01) that defeat String.hashCode's
   // weak mixing in practice; test-suite fixture tags ride the same digest.
-  private[graft] def sfPrefix(base: String, sfDir: String): String = {
-    val md = java.security.MessageDigest.getInstance("MD5")
-      .digest(sfDir.getBytes("UTF-8"))
-    val hex = md.take(4).map(b => f"${b & 0xff}%02x").mkString
-    base + "_" + hex + "_" + jvmTag
-  }
+  private[graft] def sfPrefix(base: String, sfDir: String): String =
+    base + "_" + md5Hex(sfDir).take(8) + "_" + jvmTag
+
+  private def md5Hex(s: String): String =
+    java.security.MessageDigest.getInstance("MD5")
+      .digest(s.getBytes("UTF-8")).map(b => f"${b & 0xff}%02x").mkString
 
   /** Build-once-per-(application, fixture) memo for the persisted index
     * layouts (r21, VERDICT r20 #1 — the [[Corpus2Ops.bpeArtifacts]]
@@ -198,14 +128,17 @@ object ServeOps extends QueryPack {
     * every time on a frozen fixture. The FIRST caller in a JVM pays the
     * build (the q_ann_served honesty: any single-pass or cold-JVM run
     * still shows the build cost); later callers read the tables. Keyed
-    * on the VERBATIM sfDir (the bpeArtifacts collision note) plus
-    * applicationId, and the value is a lazy cell so the heavy build runs
+    * on applicationId, the VERBATIM sfDir (the bpeArtifacts collision
+    * note), the prefix, and a [[fixtureFingerprint]] — a fixture
+    * rewritten in place within one JVM builds again instead of serving
+    * a stale index. The value is a lazy cell so the heavy build runs
     * OUTSIDE the CHM bin lock (ADVICE r20: computeIfAbsent's mapping
     * function must stay cheap — a same-bin key would otherwise block on
     * seconds of Spark jobs, and re-entry would throw). Tables carry the
     * per-JVM [[jvmTag]], so a fresh process can never read a previous
     * run's artifacts — every invocation computes from the parquet
-    * inputs.
+    * inputs. `body` receives the table prefix `sfPrefix(base, sfDir)`,
+    * which is also returned.
     *
     * Failure caveat (ADVICE r21): if a body throws after partially
     * writing its family's tables (postings written, vectors not), the
@@ -219,19 +152,51 @@ object ServeOps extends QueryPack {
   private val buildMemo =
     new java.util.concurrent.ConcurrentHashMap[String, Once]()
   private[graft] def buildOnce(spark: SparkSession, sfDir: String,
-      pre: String)(body: => Unit): Unit =
-    buildMemo.computeIfAbsent(
-      spark.sparkContext.applicationId + "|" + sfDir + "|" + pre,
-      _ => new Once(() => body)).force
+      base: String)(body: String => Unit): String = {
+    val pre = sfPrefix(base, sfDir)
+    buildMemo.computeIfAbsent(Seq(spark.sparkContext.applicationId, sfDir,
+        pre, fixtureFingerprint(sfDir)).mkString("|"),
+      _ => new Once(() => body(pre))).force
+    pre
+  }
 
+  /** MD5 of the sorted (relative path, length, lastModified) of every
+    * regular file under `sfDir`; empty when `sfDir` is not a local
+    * directory. */
+  private def fixtureFingerprint(sfDir: String): String = {
+    val root = java.nio.file.Paths.get(sfDir)
+    if (!java.nio.file.Files.isDirectory(root)) ""
+    else {
+      val files = java.nio.file.Files.walk(root,
+        java.nio.file.FileVisitOption.FOLLOW_LINKS)
+      try md5Hex(files.iterator().asScala
+        .filter(java.nio.file.Files.isRegularFile(_))
+        .map { f =>
+          val attrs = java.nio.file.Files.readAttributes(f,
+            classOf[java.nio.file.attribute.BasicFileAttributes])
+          s"${root.relativize(f)}\t${attrs.size}\t" +
+            attrs.lastModifiedTime.toMillis
+        }.toSeq.sorted.mkString("\n"))
+      finally files.close()
+    }
+  }
+
+  // ---- q_ann_served --------------------------------------------------------
+  /** The persisted-index serving chain end-to-end: pay the bucketed index
+    * WRITE inside the measured time (the q_pagerank_bucketed honesty —
+    * PERF.md records whether one query amortizes it; a cluster writes
+    * once and serves forever), then answer the %100 query decile's
+    * radius search by probing the TABLES, never the in-plan key
+    * relation. Row-identical to [[VectorQueries.qAnnLsh]] by
+    * construction (same hyperplanes, same probe rule, same exact
+    * verify), so it shares that oracle verbatim — the persisted layout
+    * is pure physical design, invisible in the answer. */
   def qAnnServed(spark: SparkSession, sfDir: String): DataFrame = {
-    val pre = sfPrefix("graft_ann_q", sfDir)
     // build once per (application, fixture) — see buildOnce; the serve
     // below probes the TABLES, the production read path
-    buildOnce(spark, sfDir, pre)(buildAnnIndex(spark, sfDir, pre))
-    val queries = queryDecile(spark, sfDir)
-    serveAnn(queries, spark.table(s"${pre}_postings"),
-      spark.table(s"${pre}_vectors"))
+    val pre = buildOnce(spark, sfDir, "graft_ann_q")(
+      SrpIndex.write(annCorpus(spark, sfDir), _))
+    annRadius(queryDecile(spark, sfDir), SrpIndex.stored(spark, pre))
   }
 
   // ---- q_ann_delta ---------------------------------------------------------
@@ -241,97 +206,43 @@ object ServeOps extends QueryPack {
     * rebuilds (new vectors must be searchable before the nightly
     * bucketed rewrite). The base half (vec_id % 4 = 0) is built and
     * persisted exactly like [[qAnnServed]]; the delta half (the other
-    * %2 vectors) is keyed IN-PLAN through the same [[VectorQueries
-    * .srpKeys]] hyperplanes and unioned under the probe join. Because
-    * key computation has one home, base ∪ delta ≡ the full index, so
-    * the answer is row-identical to q_ann_lsh — same oracle, one more
-    * physical layout proven invisible in the result. Scale: the delta
-    * is small by definition (it compacts away at the next build); the
-    * base side stays the Exchange-free bucketed scan, the delta side
-    * shuffles only itself. */
+    * %2 vectors) is keyed at READ time through the same
+    * [[VectorQueries.srpKeys]] hyperplanes ([[SrpIndex.withDelta]]).
+    * Because key computation has one home, base ∪ delta ≡ the full
+    * index, so the answer is row-identical to q_ann_lsh — same oracle,
+    * one more physical layout proven invisible in the result. Scale:
+    * the delta is small by definition (it compacts away at the next
+    * build); the base side stays the Exchange-free bucketed scan, the
+    * delta side shuffles only itself. */
   /** Build the SPLIT layout once per (application, fixture) under the
     * family's ONE shared prefix (r21 — memoized via [[buildOnce]];
     * through r20 qAnnDelta, qAnnCompact, and qCompactAdvisor each
     * rebuilt this identical layout under separate prefixes): the %4
-    * base half persisted as bucketed `<pre>_postings`/`<pre>_vectors`
-    * tables, and the rest of the %2 corpus persisted as the plain
-    * `<pre>_delta` table — the in-flight delta buffer a production
-    * service accumulates between rebuilds (vectors are STORED at
-    * ingest; only their index keys wait for read/compact time, and
-    * consumers still compute those through the one srpKeys home).
-    * Returns the prefix. */
-  private[graft] def annSplit(spark: SparkSession, sfDir: String): String = {
-    val pre = sfPrefix("graft_ann_s", sfDir)
-    buildOnce(spark, sfDir, pre) {
-      import spark.implicits._
-      val base = Tables.df(spark, sfDir, "embeddings")
-        .filter($"vec_id" % 4 === 0)
-        .select($"vec_id", $"embedding")
-      val n = Tables.shufflePartitions(spark)
-      graft.sources.Sources.writeBucketed(
-        VectorQueries.srpKeys(base)
-          .select(($"tbl" * 256 + $"bk").as("bkey"), $"vec_id"),
-        s"${pre}_postings", n, "bkey")
-      graft.sources.Sources.writeBucketed(base, s"${pre}_vectors",
-        n, "vec_id")
-      graft.sources.Sources.writeTable(
-        Tables.df(spark, sfDir, "embeddings")
-          .filter($"vec_id" % 2 === 0 && $"vec_id" % 4 =!= 0)
-          .select($"vec_id", $"embedding"),
-        s"${pre}_delta")
-    }
-    pre
-  }
+    * base half as the bucketed index, the rest of the %2 corpus as the
+    * `<pre>_delta` buffer ([[SrpIndex.write]]). Returns the prefix. */
+  private[graft] def annSplit(spark: SparkSession, sfDir: String): String =
+    buildOnce(spark, sfDir, "graft_ann_s")(SrpIndex.write(
+      annCorpus(spark, sfDir), _, split = Some(col("vec_id") % 4 === 0)))
 
-  def qAnnDelta(spark: SparkSession, sfDir: String): DataFrame = {
-    import spark.implicits._
-    val pre = annSplit(spark, sfDir)
-    val delta = spark.table(s"${pre}_delta")
-    // the delta's keys are computed at READ time through the one srpKeys
-    // home — the lambda-read cost a serving process actually pays
-    val deltaPostings = VectorQueries.srpKeys(delta)
-      .select(($"tbl" * 256 + $"bk").as("bkey"), $"vec_id")
-    val queries = queryDecile(spark, sfDir)
-    // join-distributed parts (see serveAnnSplit): the base tables stay
-    // Exchange-free bucketed scans; only the delta shuffles
-    serveAnnSplit(queries,
-      Seq(spark.table(s"${pre}_postings"), deltaPostings),
-      Seq(spark.table(s"${pre}_vectors"), delta))
-  }
+  def qAnnDelta(spark: SparkSession, sfDir: String): DataFrame =
+    annRadius(queryDecile(spark, sfDir),
+      SrpIndex.withDelta(spark, annSplit(spark, sfDir)))
 
   // ---- q_ann_compact -------------------------------------------------------
   /** The COMPACTION EXECUTOR (VERDICT r18 #7): [[qAnnDelta]] proves the
     * base∪delta read; AnnServedSpec proves compaction INVARIANCE; this
     * is the op that actually PERFORMS the nightly rewrite, measured:
     * build the split layout, then rewrite stored-postings ∪ delta into
-    * a fresh bucketed base — the keys are READ from the table, never
-    * rehashed (compaction is pure I/O + one bucket shuffle per table,
-    * no srpKeys CPU pass — what makes it affordable at 100 TB, the
-    * reshard_plan → executor gap closed for the vector index) — and
-    * serve the %100 radius search from the COMPACTED tables only.
-    * Row-identical to q_ann_lsh (base∪delta ≡ full index under the one
-    * srpKeys home, and the rewrite is a set-preserving union), so it
-    * shares that oracle: two physical layouts and a rewrite between
-    * them, all invisible in the answer. */
+    * a fresh bucketed base ([[SrpIndex.compact]] — the reshard_plan →
+    * executor gap closed for the vector index) and serve the %100
+    * radius search from the COMPACTED tables only. Row-identical to
+    * q_ann_lsh (base∪delta ≡ full index under the one srpKeys home, and
+    * the rewrite is a set-preserving union), so it shares that oracle:
+    * two physical layouts and a rewrite between them, all invisible in
+    * the answer. */
   def qAnnCompact(spark: SparkSession, sfDir: String): DataFrame = {
-    import spark.implicits._
-    val n = Tables.shufflePartitions(spark)
-    val pre = annSplit(spark, sfDir)
-    val delta = spark.table(s"${pre}_delta")
-    val deltaPostings = VectorQueries.srpKeys(delta)
-      .select(($"tbl" * 256 + $"bk").as("bkey"), $"vec_id")
-    // the nightly rewrite — PERFORMED per execution (it is the measured
-    // op): stored keys ∪ delta keys → fresh bucketed base; no
-    // recomputation on the stored side
-    graft.sources.Sources.writeBucketed(
-      spark.table(s"${pre}_postings").unionAll(deltaPostings),
-      s"${pre}_c_postings", n, "bkey")
-    graft.sources.Sources.writeBucketed(
-      spark.table(s"${pre}_vectors").unionAll(delta),
-      s"${pre}_c_vectors", n, "vec_id")
-    val queries = queryDecile(spark, sfDir)
-    serveAnn(queries, spark.table(s"${pre}_c_postings"),
-      spark.table(s"${pre}_c_vectors"))
+    val parts = SrpIndex.compact(spark, annSplit(spark, sfDir))
+    annRadius(queryDecile(spark, sfDir), parts)
   }
 
   // ---- q_ivf_served --------------------------------------------------------
@@ -348,10 +259,8 @@ object ServeOps extends QueryPack {
     * once, each query batch scans ~2/8 of the corpus partition-locally,
     * and the centroid table is an 8-row broadcast forever. */
   def qIvfServed(spark: SparkSession, sfDir: String): DataFrame = {
-    import spark.implicits._
-    val pre = sfPrefix("graft_ivf_q", sfDir)
     // build once per (application, fixture) — see buildOnce
-    buildOnce(spark, sfDir, pre) {
+    val pre = buildOnce(spark, sfDir, "graft_ivf_q") { pre =>
       val emb = Tables.df(spark, sfDir, "embeddings")
       val centers = VectorQueries.ivfCenters(emb).localCheckpoint()
       graft.sources.Sources.writeBucketed(
@@ -386,9 +295,8 @@ object ServeOps extends QueryPack {
     * `<pre>_delta` vector buffer; consumers assign the delta in-plan
     * against the stored centroids at read time. Shared by [[qIvfDelta]],
     * [[qIvfCompact]], and [[qCompactAdvisor]]. Returns the prefix. */
-  private[graft] def ivfSplit(spark: SparkSession, sfDir: String): String = {
-    val pre = sfPrefix("graft_ivf_s", sfDir)
-    buildOnce(spark, sfDir, pre) {
+  private[graft] def ivfSplit(spark: SparkSession, sfDir: String): String =
+    buildOnce(spark, sfDir, "graft_ivf_s") { pre =>
       import spark.implicits._
       val emb = Tables.df(spark, sfDir, "embeddings")
       val centers = VectorQueries.ivfCenters(emb).localCheckpoint()
@@ -401,8 +309,6 @@ object ServeOps extends QueryPack {
         emb.filter($"vec_id" % 2 =!= 0).select($"vec_id", $"embedding"),
         s"${pre}_delta")
     }
-    pre
-  }
 
   /** The %100 query-decile relation (qid, qv). */
   private def queryDecile(spark: SparkSession, sfDir: String): DataFrame = {
@@ -479,23 +385,16 @@ object ServeOps extends QueryPack {
     // 7.1 s of committed r20 wall for eight bounded counts). The delta
     // sizes read off the GRAIN exactly as before: count(delta buffer) ×
     // the family's structural rows-per-key constant.
-    def fam(name: String, base: DataFrame, delta: DataFrame,
+    def fam(name: String, pre: String, base: String,
         rowsPerKey: Int): DataFrame =
-      base.agg(count(lit(1)).as("base_rows")).crossJoin(
-        delta.agg((count(lit(1)) * rowsPerKey).as("delta_rows")))
+      spark.table(s"${pre}_$base").agg(count(lit(1)).as("base_rows"))
+        .crossJoin(spark.table(s"${pre}_delta")
+          .agg((count(lit(1)) * rowsPerKey).as("delta_rows")))
         .select(lit(name).as("family"), $"base_rows", $"delta_rows")
-    val annPre = annSplit(spark, sfDir)
-    val srp = fam("srp", spark.table(s"${annPre}_postings"),
-      spark.table(s"${annPre}_delta"), 8)
-    val ivfPre = ivfSplit(spark, sfDir)
-    val ivf = fam("ivf", spark.table(s"${ivfPre}_cells"),
-      spark.table(s"${ivfPre}_delta"), 1)
-    val xmPre = XModalOps.xmSplit(spark, sfDir)
-    val xm = fam("xm", spark.table(s"${xmPre}_postings"),
-      spark.table(s"${xmPre}_delta"), 8)
-    val scPre = scSplit(spark, sfDir)
-    val sc = fam("cache", spark.table(s"${scPre}_postings"),
-      spark.table(s"${scPre}_delta"), 8)
+    val srp = fam("srp", annSplit(spark, sfDir), "postings", 8)
+    val ivf = fam("ivf", ivfSplit(spark, sfDir), "cells", 1)
+    val xm = fam("xm", XModalOps.xmSplit(spark, sfDir), "postings", 8)
+    val sc = fam("cache", scSplit(spark, sfDir), "postings", 8)
     srp.unionAll(ivf).unionAll(xm).unionAll(sc)
       .select($"family", $"base_rows", $"delta_rows",
         round($"delta_rows".cast("double") / $"base_rows", 6)
@@ -683,167 +582,84 @@ object ServeOps extends QueryPack {
   /** The %50 query-stream relation (qid, qv), checkpointed — it feeds
     * the exact arm, the fresh-key arm, and the report spine. */
   private def semcacheStreamQ(spark: SparkSession, sfDir: String)
-      : DataFrame = {
+      : DataFrame =
+    semcacheCorpus(spark, sfDir)
+      .select(col("vec_id").as("qid"), col("embedding").as("qv"))
+      .localCheckpoint()
+
+  /** The cache's LSH arm against any index `parts`: the one
+    * [[SrpIndex.probe]] chain with the earlier-only candidate filter
+    * (pid < qid), best verified cosine per query. Shared by
+    * [[qSemcacheServed]] (tables), [[qSemcacheDelta]] (base ∪ delta),
+    * and [[qSemcacheCompact]] (compacted tables). */
+  private def semcacheBest(q: DataFrame, parts: SrpIndex.Parts): DataFrame =
+    SrpIndex.probe(q, parts, keep = col("vec_id") < col("qid"), as = "pid",
+        vcols = Seq(col("vec_id").as("pid"), col("embedding").as("pv")))
+      .select(col("qid"),
+        round(CosineSimilarity.of(col("qv"), col("pv")), 6).as("cs"))
+      .groupBy(col("qid")).agg(max(col("cs")).as("best_lsh"))
+
+  /** The per-τ cache report from the index `parts`. */
+  private def semcacheServe(spark: SparkSession, sfDir: String,
+      parts: SrpIndex.Parts): DataFrame = {
+    val q = semcacheStreamQ(spark, sfDir)
+    semcacheReport(q, semcacheBestExact(q), semcacheBest(q, parts))
+  }
+
+  /** The %50 query stream (vec_id, embedding) the cache indexes. */
+  private def semcacheCorpus(spark: SparkSession, sfDir: String): DataFrame = {
     import spark.implicits._
     Tables.df(spark, sfDir, "embeddings")
       .filter($"vec_id" % 50 === 0)
-      .select($"vec_id".as("qid"), $"embedding".as("qv"))
-      .localCheckpoint()
-  }
-
-  /** The cache's LSH arm against an arbitrary (bkey, vec_id) postings /
-    * (vec_id, embedding) vectors pair: fresh query keys through the one
-    * srpKeys home, Hamming-1 probes, earlier-only candidate filter,
-    * best verified cosine per query. ONE probe home (r20) shared by
-    * [[qSemcacheServed]] (tables), [[qSemcacheDelta]] (base ∪ delta),
-    * and [[qSemcacheCompact]] (compacted tables). */
-  private def semcacheBestLsh(q: DataFrame, postings: DataFrame,
-      vectors: DataFrame): DataFrame =
-    semcacheBestLshSplit(q, Seq(postings), Seq(vectors))
-
-  /** Join-distributed cache probe (r20 — the [[serveAnnSplit]]
-    * rationale): each postings/vectors part joins separately and the
-    * JOIN RESULTS union, so the snapshot tables stay Exchange-free
-    * bucketed scans under the delta read. Row-identical. */
-  private def semcacheBestLshSplit(q: DataFrame,
-      postingsParts: Seq[DataFrame], vectorParts: Seq[DataFrame])
-      : DataFrame = {
-    val spark = q.sparkSession
-    import spark.implicits._
-    val qkeys = VectorQueries.srpKeys(
-      q.select($"qid".as("vec_id"), $"qv".as("embedding")))
-    val probes0 = VectorQueries.srpProbes(qkeys)
-      .select($"vec_id".as("qid"), ($"tbl" * 256 + $"bk").as("bkey"))
-    // per-part consumption — see serveAnnSplit's checkpoint note
-    val probes =
-      if (postingsParts.size > 1) probes0.localCheckpoint() else probes0
-    val cand0 = postingsParts.map(p => probes.join(p, "bkey"))
-      .reduce(_ unionAll _)
-      .filter($"vec_id" < $"qid")
-      .select($"qid", $"vec_id".as("pid")).distinct()
-    val cand =
-      if (vectorParts.size > 1) cand0.localCheckpoint() else cand0
-    vectorParts.map(v =>
-        cand.join(v.select($"vec_id".as("pid"), $"embedding".as("pv")),
-          "pid"))
-      .reduce(_ unionAll _)
-      .join(broadcast(q), "qid")
-      .select($"qid", round(CosineSimilarity.of($"qv", $"pv"), 6).as("cs"))
-      .groupBy($"qid").agg(max($"cs").as("best_lsh"))
+      .select($"vec_id", $"embedding")
   }
 
   def qSemcacheServed(spark: SparkSession, sfDir: String): DataFrame = {
-    import spark.implicits._
-    val pre = sfPrefix("graft_sc_q", sfDir)
     // build once per (application, fixture) — see buildOnce
-    buildOnce(spark, sfDir, pre) {
-      val n = Tables.shufflePartitions(spark)
-      graft.sources.Sources.writeBucketed(
-        VectorQueries.annMd5Keys(spark, sfDir)
-          .filter($"vec_id" % 50 === 0)
-          .select(($"tbl" * 256 + $"bk").as("bkey"), $"vec_id"),
-        s"${pre}_postings", n, "bkey")
-      graft.sources.Sources.writeBucketed(
-        Tables.df(spark, sfDir, "embeddings")
-          .filter($"vec_id" % 50 === 0)
-          .select($"vec_id", $"embedding"),
-        s"${pre}_vectors", n, "vec_id")
-    }
-    val q = semcacheStreamQ(spark, sfDir)
-    semcacheReport(q, semcacheBestExact(q),
-      semcacheBestLsh(q, spark.table(s"${pre}_postings"),
-        spark.table(s"${pre}_vectors")))
+    val pre = buildOnce(spark, sfDir, "graft_sc_q")(
+      SrpIndex.write(semcacheCorpus(spark, sfDir), _))
+    semcacheServe(spark, sfDir, SrpIndex.stored(spark, pre))
   }
 
   // ---- q_semcache_delta ------------------------------------------------------
   /** Build the cache's SPLIT layout once per (application, fixture)
     * under the family's ONE shared prefix (r21 — memoized via
     * [[buildOnce]], the [[annSplit]] rationale): the %100 half of the
-    * %50 stream persisted as bucketed postings/vectors tables (the
-    * cache snapshot a serving fleet loaded at its last refresh), the
-    * other half persisted as the plain `<pre>_delta` buffer — the
-    * queries that arrived SINCE the snapshot; consumers key them
-    * in-plan through the same srpKeys home at read time. Shared by
+    * %50 stream as the bucketed snapshot a serving fleet loaded at its
+    * last refresh, the other half as the `<pre>_delta` buffer — the
+    * queries that arrived SINCE the snapshot; consumers key them at
+    * read time through the same srpKeys home. Shared by
     * [[qSemcacheDelta]], [[qSemcacheCompact]], and [[qCompactAdvisor]].
     * Returns the prefix. */
-  private[graft] def scSplit(spark: SparkSession, sfDir: String): String = {
-    val pre = sfPrefix("graft_sc_s", sfDir)
-    buildOnce(spark, sfDir, pre) {
-      import spark.implicits._
-      val n = Tables.shufflePartitions(spark)
-      val base = Tables.df(spark, sfDir, "embeddings")
-        .filter($"vec_id" % 100 === 0)
-        .select($"vec_id", $"embedding")
-      graft.sources.Sources.writeBucketed(
-        VectorQueries.srpKeys(base)
-          .select(($"tbl" * 256 + $"bk").as("bkey"), $"vec_id"),
-        s"${pre}_postings", n, "bkey")
-      graft.sources.Sources.writeBucketed(base, s"${pre}_vectors",
-        n, "vec_id")
-      graft.sources.Sources.writeTable(
-        Tables.df(spark, sfDir, "embeddings")
-          .filter($"vec_id" % 50 === 0 && $"vec_id" % 100 =!= 0)
-          .select($"vec_id", $"embedding"),
-        s"${pre}_delta")
-    }
-    pre
-  }
+  private[graft] def scSplit(spark: SparkSession, sfDir: String): String =
+    buildOnce(spark, sfDir, "graft_sc_s")(SrpIndex.write(
+      semcacheCorpus(spark, sfDir), _, split = Some(col("vec_id") % 100 === 0)))
 
   /** Cache freshness — the fourth persisted family's lambda read (r20:
     * SRP, IVF, and the media tower each gained the full
     * served→delta→compact triad by r19/r20; the cache index had serve
     * only): the LSH arm probes the persisted snapshot postings UNIONED
-    * with the in-flight delta's in-plan keys — new cache entries must
+    * with the in-flight delta's read-time keys — new cache entries must
     * be hittable before the nightly rewrite folds them in. Base ∪
     * delta ≡ the full %50 key set under the one srpKeys home and the
     * earlier-only filter is untouched, so the per-τ report is
     * row-identical to [[qSemcacheLsh]] — same oracle, the snapshot
     * boundary invisible in the answer. Scale: the delta keys only
     * itself; the base side stays the bucketed-table scan. */
-  def qSemcacheDelta(spark: SparkSession, sfDir: String): DataFrame = {
-    import spark.implicits._
-    val pre = scSplit(spark, sfDir)
-    val delta = spark.table(s"${pre}_delta")
-    // delta keys computed at READ time through the one srpKeys home
-    val deltaPostings = VectorQueries.srpKeys(delta)
-      .select(($"tbl" * 256 + $"bk").as("bkey"), $"vec_id")
-    val q = semcacheStreamQ(spark, sfDir)
-    // join-distributed parts (see semcacheBestLshSplit): the snapshot
-    // tables stay Exchange-free bucketed scans; only the delta shuffles
-    semcacheReport(q, semcacheBestExact(q),
-      semcacheBestLshSplit(q,
-        Seq(spark.table(s"${pre}_postings"), deltaPostings),
-        Seq(spark.table(s"${pre}_vectors"), delta)))
-  }
+  def qSemcacheDelta(spark: SparkSession, sfDir: String): DataFrame =
+    semcacheServe(spark, sfDir,
+      SrpIndex.withDelta(spark, scSplit(spark, sfDir)))
 
   // ---- q_semcache_compact ----------------------------------------------------
   /** The compaction executor for the cache index (r20 — the fourth
     * family's nightly rewrite, completing the triad everywhere): build
-    * the split layout, rewrite stored postings ∪ delta keys and stored
-    * vectors ∪ delta into fresh bucketed tables — stored keys READ from
-    * the table, never rehashed (pure I/O + one bucket shuffle per
-    * table) — then serve the per-τ report from the COMPACTED tables
-    * only. Row-identical to [[qSemcacheLsh]] (set-preserving union
-    * under one key home), so it shares that oracle. */
-  def qSemcacheCompact(spark: SparkSession, sfDir: String): DataFrame = {
-    import spark.implicits._
-    val n = Tables.shufflePartitions(spark)
-    val pre = scSplit(spark, sfDir)
-    val delta = spark.table(s"${pre}_delta")
-    val deltaPostings = VectorQueries.srpKeys(delta)
-      .select(($"tbl" * 256 + $"bk").as("bkey"), $"vec_id")
-    // the nightly rewrite — PERFORMED per execution (the measured op)
-    graft.sources.Sources.writeBucketed(
-      spark.table(s"${pre}_postings").unionAll(deltaPostings),
-      s"${pre}_c_postings", n, "bkey")
-    graft.sources.Sources.writeBucketed(
-      spark.table(s"${pre}_vectors").unionAll(delta),
-      s"${pre}_c_vectors", n, "vec_id")
-    val q = semcacheStreamQ(spark, sfDir)
-    semcacheReport(q, semcacheBestExact(q),
-      semcacheBestLsh(q, spark.table(s"${pre}_c_postings"),
-        spark.table(s"${pre}_c_vectors")))
-  }
+    * the split layout, perform the [[SrpIndex.compact]] rewrite, then
+    * serve the per-τ report from the COMPACTED tables only.
+    * Row-identical to [[qSemcacheLsh]] (set-preserving union under one
+    * key home), so it shares that oracle. */
+  def qSemcacheCompact(spark: SparkSession, sfDir: String): DataFrame =
+    semcacheServe(spark, sfDir,
+      SrpIndex.compact(spark, scSplit(spark, sfDir)))
 
   val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
     "q_ann_served" -> qAnnServed,

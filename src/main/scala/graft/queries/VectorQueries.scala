@@ -232,7 +232,7 @@ object VectorQueries extends QueryPack {
       assigned: DataFrame): DataFrame =
     ivfServeSplit(queries, centers, Seq(assigned))
 
-  /** Join-distributed IVF serve (r20 — the [[ServeOps.serveAnnSplit]]
+  /** Join-distributed IVF serve (r20 — the [[SrpIndex.probe]]
     * rationale for the cell table): a base∪delta union BELOW the cell
     * join re-shuffled the whole bucketed cell table on every delta
     * read; joining each part separately and unioning the JOIN RESULTS
@@ -250,7 +250,7 @@ object VectorQueries extends QueryPack {
       .withColumn("pr", row_number().over(wProbe))
       .filter($"pr" <= 2)
       .select($"qid", $"qv", $"cell")
-    // per-part consumption — see ServeOps.serveAnnSplit's checkpoint note
+    // per-part consumption — see SrpIndex.probe's checkpoint note
     val probes =
       if (assignedParts.size > 1) probes0.localCheckpoint() else probes0
     val cand = assignedParts.map(a => probes.join(a, "cell"))
@@ -726,10 +726,11 @@ object VectorQueries extends QueryPack {
     * (vec_id, tbl, bk) relation: each key row expands to itself plus
     * the 8 one-bit flips — (vec_id, tbl, bk) × 9. ONE probe-rule home
     * (r19, review finding): this rule previously lived in four in-plan
-    * copies (annMd5Pairs, serveAnn, the cross-modal pair, the
-    * semcache), where a fix to the fan-out in one place would have left
-    * the others' candidate sets silently different. Call sites rename
-    * vec_id / derive the combined bkey as their join needs.
+    * copies (annMd5Pairs, the served radius search, the cross-modal
+    * pair, the semcache), where a fix to the fan-out in one place would
+    * have left the others' candidate sets silently different. Call
+    * sites rename vec_id / derive the combined bkey
+    * ([[SrpIndex.bkey]]) as their join needs.
     * ([[graft.streaming.Streams.annServeStream]] keeps its per-row
     * expression twin by design — a streaming plan gets one stateful
     * operator — and its merge-law spec pins it to this rule.) */

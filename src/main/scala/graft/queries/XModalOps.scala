@@ -344,69 +344,36 @@ object XModalOps extends QueryPack {
   }
 
   // ---- q_xmodal_served -------------------------------------------------------
-  /** Write the persisted media-tower index for `sfDir` under `prefix`:
-    * `<prefix>_postings(bkey, doc_id)` bucketed by the combined probe
-    * key (the [[ServeOps.buildAnnIndex]] layout applied to the media
-    * keys), and `<prefix>_media(doc_id, mv, mn)` — dense media vectors
-    * WITH their hoisted norms — bucketed by doc_id for an exchange-free
-    * verify join. One key home ([[VectorQueries.srpKeys]] over the SAME
-    * dense vectors [[qXmodalRetrievalAnn]] keys in-plan) so the served
-    * and in-plan candidate sets are identical by construction. */
-  private[graft] def buildXmodalIndex(spark: SparkSession, sfDir: String,
-      prefix: String): Unit = {
-    import spark.implicits._
-    val n = Tables.shufflePartitions(spark)
-    val dense = mediaDense(spark, sfDir)
-      .localCheckpoint() // key arm + the vectors-table write
-    graft.sources.Sources.writeBucketed(
-      VectorQueries.srpKeys(
-          dense.select($"doc_id".as("vec_id"), $"mv".as("embedding")))
-        .select(($"tbl" * 256 + $"bk").as("bkey"), $"vec_id".as("doc_id")),
-      s"${prefix}_postings", n, "bkey")
-    graft.sources.Sources.writeBucketed(dense, s"${prefix}_media",
-      n, "doc_id")
-  }
+  /** The media tower's [[SrpIndex]] input: the dense (doc_id, mv, mn)
+    * vectors WITH their hoisted norms, keyed on `mv` — the SAME vectors
+    * [[qXmodalRetrievalAnn]] keys in-plan, so the served and in-plan
+    * candidate sets are identical by construction. Checkpointed: the
+    * key arm and the vector writes both read it. */
+  private[graft] def mediaCorpus(spark: SparkSession, sfDir: String): DataFrame =
+    mediaDense(spark, sfDir).localCheckpoint()
 
-  /** Serve the cross-modal retrieval eval from the persisted tables:
-    * fresh text queries are keyed through the one srpKeys home, probe
-    * their Hamming-1 buckets against the postings TABLE (exchange-free
-    * on the bucketed scan — the bkey equi-join consumes the layout),
-    * and the pair cosine reads candidate media vectors+norms from the
-    * media TABLE (exchange-free on doc_id). Only the query fan-out and
-    * the candidate set ever shuffle — O(candidates) at any corpus
-    * size. */
-  private[graft] def serveXmodal(q: DataFrame, postings: DataFrame,
-      media: DataFrame, docsrc: DataFrame): DataFrame =
-    serveXmodalSplit(q, Seq(postings), Seq(media), docsrc)
+  /** Serve the cross-modal retrieval eval for the fresh text queries `q`
+    * from the media index `parts` through the one [[SrpIndex.probe]]
+    * chain (no candidate filter: the true pair is a legal hit) — the
+    * pair cosine reads candidate media vectors+norms from the vectors
+    * parts, exchange-free on the bucketed doc_id layout. Only the query
+    * fan-out and the candidate set ever shuffle — O(candidates) at any
+    * corpus size. */
+  private[graft] def xmodalRetrieve(q: DataFrame, parts: SrpIndex.Parts,
+      docsrc: DataFrame): DataFrame =
+    annRetrievalReport(q,
+      xmodalCs(SrpIndex.probe(q, parts, id = "doc_id", as = "doc_id")),
+      docsrc)
 
-  /** Join-distributed media serve (r20 — the [[ServeOps.serveAnnSplit]]
-    * rationale for the graft_xm tables): a base∪delta union BELOW the
-    * probe/verify joins re-shuffled the whole bucketed base on every
-    * delta read; joining each part separately and unioning the JOIN
-    * RESULTS keeps the base tables Exchange-free while the delta joins
-    * only itself. Row-identical (equi-joins distribute over UNION
-    * ALL; base/delta doc_id sets are disjoint halves). */
-  private[graft] def serveXmodalSplit(q: DataFrame,
-      postingsParts: Seq[DataFrame], mediaParts: Seq[DataFrame],
-      docsrc: DataFrame): DataFrame = {
-    val spark = q.sparkSession
+  /** [[xmodalRetrieve]] over the %25 text queries of `sfDir`. */
+  private def xmodalServe(spark: SparkSession, sfDir: String,
+      parts: SrpIndex.Parts): DataFrame = {
     import spark.implicits._
-    val qkeys = VectorQueries.srpKeys(
-      q.select($"qid".as("vec_id"), $"qv".as("embedding")))
-    val probes0 = VectorQueries.srpProbes(qkeys)
-      .select($"vec_id".as("qid"), ($"tbl" * 256 + $"bk").as("bkey"))
-    // per-part consumption — see ServeOps.serveAnnSplit's checkpoint note
-    val probes =
-      if (postingsParts.size > 1) probes0.localCheckpoint() else probes0
-    val cand0 = postingsParts.map(p => probes.join(p, "bkey"))
-      .reduce(_ unionAll _)
-      .select($"qid", $"doc_id").distinct()
-    val cand =
-      if (mediaParts.size > 1) cand0.localCheckpoint() else cand0
-    val pairs = xmodalCs(
-      mediaParts.map(mp => cand.join(mp, "doc_id")).reduce(_ unionAll _)
-        .join(broadcast(q), "qid"))
-    annRetrievalReport(q, pairs, docsrc)
+    val docsrc = Tables.df(spark, sfDir, "documents")
+      .select($"doc_id", $"source")
+    val q = retrievalQueries(spark, sfDir)
+      .localCheckpoint() // key arm + verify arm + the miss spine
+    xmodalRetrieve(q, parts, docsrc)
   }
 
   /** The persisted-index cross-modal serving chain end-to-end (VERDICT
@@ -423,17 +390,10 @@ object XModalOps extends QueryPack {
     * is injective (bk ∈ [0,256), tbl ∈ [0,8)), so the candidate sets
     * cannot differ. */
   def qXmodalServed(spark: SparkSession, sfDir: String): DataFrame = {
-    import spark.implicits._
-    val pre = ServeOps.sfPrefix("graft_xm_q", sfDir)
     // build once per (application, fixture) — see ServeOps.buildOnce
-    ServeOps.buildOnce(spark, sfDir, pre)(
-      buildXmodalIndex(spark, sfDir, pre))
-    val docsrc = Tables.df(spark, sfDir, "documents")
-      .select($"doc_id", $"source")
-    val q = retrievalQueries(spark, sfDir)
-      .localCheckpoint() // key arm + verify arm + the miss spine
-    serveXmodal(q, spark.table(s"${pre}_postings"),
-      spark.table(s"${pre}_media"), docsrc)
+    val pre = ServeOps.buildOnce(spark, sfDir, "graft_xm_q")(
+      SrpIndex.write(mediaCorpus(spark, sfDir), _, "doc_id", "mv"))
+    xmodalServe(spark, sfDir, SrpIndex.stored(spark, pre))
   }
 
   // ---- q_xmodal_delta --------------------------------------------------------
@@ -443,114 +403,49 @@ object XModalOps extends QueryPack {
     * qXmodalCompact, and qCompactAdvisor each re-ran the mediaDense
     * histogram pass, the ~20 M-term-row srpKeys build, and both
     * bucketed writes under separate prefixes): the doc_id-even half of
-    * the dense media vectors persisted as bucketed `<pre>_postings` /
-    * `<pre>_media` tables, the odd half persisted as the plain
+    * the dense media vectors as the bucketed index, the odd half as the
     * `<pre>_delta` buffer — media vectors are computed at INGEST and
     * stored; only their index keys wait for read/compact time, computed
-    * through the one srpKeys home. One key home
-    * ([[VectorQueries.srpKeys]] is deterministic PER VECTOR — no corpus
-    * statistics anywhere in the hyperplanes) means keying the halves
-    * separately produces exactly the rows keying the whole corpus
-    * would, so base ∪ delta ≡ the full index by construction. Shared by
-    * [[qXmodalDelta]] (the lambda read), [[qXmodalCompact]] (the
-    * nightly rewrite), and [[ServeOps.qCompactAdvisor]]. Returns the
-    * prefix. */
-  private[graft] def xmSplit(spark: SparkSession, sfDir: String): String = {
-    val pre = ServeOps.sfPrefix("graft_xm_s", sfDir)
-    ServeOps.buildOnce(spark, sfDir, pre) {
-      import spark.implicits._
-      val n = Tables.shufflePartitions(spark)
-      val dense = mediaDense(spark, sfDir)
-        .localCheckpoint() // base key arm + base media write + delta write
-      val base = dense.filter($"doc_id" % 2 === 0)
-      graft.sources.Sources.writeBucketed(
-        VectorQueries.srpKeys(
-            base.select($"doc_id".as("vec_id"), $"mv".as("embedding")))
-          .select(($"tbl" * 256 + $"bk").as("bkey"),
-            $"vec_id".as("doc_id")),
-        s"${pre}_postings", n, "bkey")
-      graft.sources.Sources.writeBucketed(base, s"${pre}_media",
-        n, "doc_id")
-      graft.sources.Sources.writeTable(
-        dense.filter($"doc_id" % 2 =!= 0), s"${pre}_delta")
-    }
-    pre
-  }
-
-  /** The delta half's in-plan postings (bkey, doc_id) — the keys a
-    * serving process computes for vectors that arrived after the last
-    * index build, through the SAME srpKeys home the stored base used. */
-  private def xmodalDeltaPostings(delta: DataFrame): DataFrame = {
-    val spark = delta.sparkSession
-    import spark.implicits._
-    VectorQueries.srpKeys(
-        delta.select($"doc_id".as("vec_id"), $"mv".as("embedding")))
-      .select(($"tbl" * 256 + $"bk").as("bkey"), $"vec_id".as("doc_id"))
-  }
+    * through the one srpKeys home ([[VectorQueries.srpKeys]] is
+    * deterministic PER VECTOR — no corpus statistics anywhere in the
+    * hyperplanes — so base ∪ delta ≡ the full index by construction).
+    * Shared by [[qXmodalDelta]] (the lambda read), [[qXmodalCompact]]
+    * (the nightly rewrite), and [[ServeOps.qCompactAdvisor]]. Returns
+    * the prefix. */
+  private[graft] def xmSplit(spark: SparkSession, sfDir: String): String =
+    ServeOps.buildOnce(spark, sfDir, "graft_xm_s")(
+      SrpIndex.write(mediaCorpus(spark, sfDir), _, "doc_id", "mv",
+        split = Some(col("doc_id") % 2 === 0)))
 
   /** Media-tower index FRESHNESS — the lambda read for the THIRD
     * persisted index family (VERDICT r19 #1: SRP and IVF each have the
     * full served→delta→compact triad; the media tower had serve only):
     * answer the %25 retrieval eval against the persisted base tables
-    * UNIONED with the in-flight delta keyed in-plan, under the one
+    * plus the in-flight delta keyed at read time, under the one
     * srpKeys home. Base ∪ delta ≡ the full media index, so the answer
     * is row-identical to [[qXmodalRetrievalAnn]] — same oracle, one
     * more physical layout proven invisible in the result. Scale: the
     * delta is small by definition (it compacts away at the next
     * build) and shuffles only itself; the base side stays the
     * Exchange-free bucketed scans [[qXmodalServed]] proves. */
-  def qXmodalDelta(spark: SparkSession, sfDir: String): DataFrame = {
-    import spark.implicits._
-    val pre = xmSplit(spark, sfDir)
-    // the delta's keys are computed at READ time through the one
-    // srpKeys home — the lambda-read cost a serving process actually pays
-    val delta = spark.table(s"${pre}_delta")
-    val docsrc = Tables.df(spark, sfDir, "documents")
-      .select($"doc_id", $"source")
-    val q = retrievalQueries(spark, sfDir)
-      .localCheckpoint() // key arm + verify arm + the miss spine
-    // join-distributed parts (see serveXmodalSplit): the base tables
-    // stay Exchange-free bucketed scans; only the delta shuffles
-    serveXmodalSplit(q,
-      Seq(spark.table(s"${pre}_postings"), xmodalDeltaPostings(delta)),
-      Seq(spark.table(s"${pre}_media"), delta), docsrc)
-  }
+  def qXmodalDelta(spark: SparkSession, sfDir: String): DataFrame =
+    xmodalServe(spark, sfDir,
+      SrpIndex.withDelta(spark, xmSplit(spark, sfDir), "doc_id", "mv"))
 
   // ---- q_xmodal_compact ------------------------------------------------------
   /** The compaction executor for the media tower (r20 — completing the
     * served→delta→compact triad for the third index family, the top
-    * VERDICT r19 item): build the split layout, rewrite stored-postings
-    * ∪ delta-postings and stored-media ∪ delta-media into fresh bucketed
-    * base tables — the stored side's keys and vectors are READ from the
-    * tables, never re-derived (no srpKeys pass, no histogram pass:
-    * compaction is pure I/O + one bucket shuffle per table, exactly
-    * what makes a nightly media-index rewrite affordable at 100 TB) —
-    * then serve the %25 eval from the COMPACTED tables only.
-    * Row-identical to [[qXmodalRetrievalAnn]] (base ∪ delta ≡ the full
-    * index under the one srpKeys home, and the rewrite is a
-    * set-preserving union), so it shares that oracle: two physical
+    * VERDICT r19 item): build the split layout, perform the
+    * [[SrpIndex.compact]] rewrite — the stored side's keys and vectors
+    * are READ from the tables, never re-derived (no srpKeys pass, no
+    * histogram pass) — then serve the %25 eval from the COMPACTED
+    * tables only. Row-identical to [[qXmodalRetrievalAnn]] (base ∪
+    * delta ≡ the full index under the one srpKeys home, and the rewrite
+    * is a set-preserving union), so it shares that oracle: two physical
     * layouts and a rewrite between them, all invisible in the answer. */
-  def qXmodalCompact(spark: SparkSession, sfDir: String): DataFrame = {
-    import spark.implicits._
-    val n = Tables.shufflePartitions(spark)
-    val pre = xmSplit(spark, sfDir)
-    val delta = spark.table(s"${pre}_delta")
-    // the nightly rewrite — PERFORMED per execution (the measured op):
-    // stored keys/vectors ∪ delta → fresh bucketed base; no
-    // recomputation on the stored side
-    graft.sources.Sources.writeBucketed(
-      spark.table(s"${pre}_postings").unionAll(xmodalDeltaPostings(delta)),
-      s"${pre}_c_postings", n, "bkey")
-    graft.sources.Sources.writeBucketed(
-      spark.table(s"${pre}_media").unionAll(delta),
-      s"${pre}_c_media", n, "doc_id")
-    val docsrc = Tables.df(spark, sfDir, "documents")
-      .select($"doc_id", $"source")
-    val q = retrievalQueries(spark, sfDir)
-      .localCheckpoint() // key arm + verify arm + the miss spine
-    serveXmodal(q, spark.table(s"${pre}_c_postings"),
-      spark.table(s"${pre}_c_media"), docsrc)
-  }
+  def qXmodalCompact(spark: SparkSession, sfDir: String): DataFrame =
+    xmodalServe(spark, sfDir,
+      SrpIndex.compact(spark, xmSplit(spark, sfDir), "doc_id", "mv"))
 
   // ---- q_mauve_lite --------------------------------------------------------
   /** MAUVE-style embedding-space divergence between the doc_id-parity

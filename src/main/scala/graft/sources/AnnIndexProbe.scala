@@ -36,7 +36,8 @@ object AnnIndexProbe {
     try {
       mode match {
         case "build" =>
-          graft.queries.ServeOps.buildAnnIndex(spark, sfDir, "graft_ann_cold")
+          graft.queries.SrpIndex.write(
+            graft.queries.ServeOps.annCorpus(spark, sfDir), "graft_ann_cold")
           val n = spark.table("graft_ann_cold_postings").count()
           println(s"PROBE_OK build $n")
         case "serve" =>
@@ -46,19 +47,19 @@ object AnnIndexProbe {
           val queries = graft.Tables.df(spark, sfDir, "embeddings")
             .filter($"vec_id" % 100 === 0)
             .select($"vec_id".as("qid"), $"embedding".as("qv"))
-          val served = graft.queries.ServeOps.serveAnn(queries,
-            spark.table("graft_ann_cold_postings"),
-            spark.table("graft_ann_cold_vectors"))
+          val served = graft.queries.ServeOps.annRadius(queries,
+            graft.queries.SrpIndex.stored(spark, "graft_ann_cold"))
           served.coalesce(1).write.mode("overwrite")
             .parquet(s"$dir/served")
           println(s"PROBE_OK serve ${spark.read.parquet(s"$dir/served").count()}")
         // the same restart invariant for the MEDIA-tower index (r19):
-        // build JVM writes the cross-modal postings/media tables and
+        // build JVM writes the cross-modal postings/vectors tables and
         // dies; serve JVM reopens the catalog cold and must reproduce
         // the in-plan q_xmodal_retrieval_ann report exactly
         case "xbuild" =>
-          graft.queries.XModalOps.buildXmodalIndex(spark, sfDir,
-            "graft_xm_cold")
+          graft.queries.SrpIndex.write(
+            graft.queries.XModalOps.mediaCorpus(spark, sfDir),
+            "graft_xm_cold", "doc_id", "mv")
           val n = spark.table("graft_xm_cold_postings").count()
           println(s"PROBE_OK xbuild $n")
         case "xserve" =>
@@ -69,9 +70,8 @@ object AnnIndexProbe {
             .select($"doc_id", $"source")
           val q = graft.queries.XModalOps.retrievalQueries(spark, sfDir)
             .localCheckpoint()
-          val served = graft.queries.XModalOps.serveXmodal(q,
-            spark.table("graft_xm_cold_postings"),
-            spark.table("graft_xm_cold_media"), docsrc)
+          val served = graft.queries.XModalOps.xmodalRetrieve(q,
+            graft.queries.SrpIndex.stored(spark, "graft_xm_cold"), docsrc)
           served.coalesce(1).write.mode("overwrite")
             .parquet(s"$dir/xserved")
           println(

@@ -548,9 +548,9 @@ object Streams {
   /** Streaming twin of the persisted-index radius serve (r19, VERDICT
     * r18 #4 — completing the serving symmetry semcacheStream started):
     * arriving query micro-batches probe the PERSISTED bucketed SRP
-    * index ([[graft.queries.ServeOps.buildAnnIndex]]'s layout) through
-    * the same probe rule as the batch [[graft.queries.ServeOps
-    * .serveAnn]], against a FROZEN index snapshot (the tempSampleStream
+    * index ([[graft.queries.SrpIndex.write]]'s layout) through the
+    * same probe rule as the batch [[graft.queries.SrpIndex.probe]]
+    * chain, against a FROZEN index snapshot (the tempSampleStream
     * discipline: a serving process reads one index generation between
     * compactions, never per-event state).
     *
@@ -641,8 +641,8 @@ object Streams {
     * through the shared [[srpKeyRowExpr]] fold (one expression home
     * with the SRP twin), probe their Hamming-1 buckets against the
     * postings TABLE, score bucket-collision candidates with the native
-    * codegen'd DecimalDot9 cosine against the media TABLE's vectors and
-    * hoisted norms, and emit each found true pair's retrieval rank —
+    * codegen'd DecimalDot9 cosine against the vectors TABLE's media
+    * vectors and hoisted norms, and emit each found true pair's retrieval rank —
     * the (qid, rk) relation the per-source recall report aggregates
     * (that rollup is a downstream groupBy either way, exactly like the
     * sketch twins' estimation reads).

@@ -1,6 +1,6 @@
 package graft
 
-import graft.queries.{ServeOps, VectorQueries}
+import graft.queries.{ServeOps, SrpIndex, VectorQueries}
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
@@ -16,26 +16,15 @@ import org.apache.spark.sql.functions._
   */
 class AnnServedSpec extends SparkSpec {
 
-  import org.apache.spark.sql.execution.{ColumnarToRowExec, FileSourceScanExec,
-    FilterExec, InputAdapter, ProjectExec, SortExec, SparkPlan,
-    WholeStageCodegenExec}
+  import org.apache.spark.sql.execution.FileSourceScanExec
   import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
-
-  @annotation.tailrec
-  private def scanThroughTransparent(p: SparkPlan): Option[FileSourceScanExec] =
-    p match {
-      case s: FileSourceScanExec => Some(s)
-      case t @ (_: ProjectExec | _: FilterExec | _: SortExec |
-          _: ColumnarToRowExec | _: InputAdapter | _: WholeStageCodegenExec) =>
-        scanThroughTransparent(t.children.head)
-      case _ => None
-    }
+  import PlanShapes.scanThroughTransparent
 
   test("served radius search from the persisted index is row-identical " +
       "to the in-plan q_ann_lsh chain, and Exchange-free on both " +
       "bucketed index scans") {
     import spark.implicits._
-    ServeOps.buildAnnIndex(spark, sf, "graft_ann_t")
+    SrpIndex.write(ServeOps.annCorpus(spark, sf), "graft_ann_t")
     val queries = Tables.df(spark, sf, "embeddings")
       .filter($"vec_id" % 100 === 0)
       .select($"vec_id".as("qid"), $"embedding".as("qv"))
@@ -48,9 +37,8 @@ class AnnServedSpec extends SparkSpec {
       // collect — the property under test is the static scale shape
       spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
       spark.conf.set("spark.sql.adaptive.enabled", "false")
-      val served = ServeOps.serveAnn(queries,
-        spark.table("graft_ann_t_postings"),
-        spark.table("graft_ann_t_vectors"))
+      val served = ServeOps.annRadius(queries,
+        SrpIndex.stored(spark, "graft_ann_t"))
       val bucketedScans = served.queryExecution.executedPlan.collect {
         case s: FileSourceScanExec if s.relation.bucketSpec.isDefined => s
       }
@@ -169,9 +157,8 @@ class AnnServedSpec extends SparkSpec {
     val queries = Tables.df(spark, sf, "embeddings")
       .filter($"vec_id" % 100 === 0)
       .select($"vec_id".as("qid"), $"embedding".as("qv"))
-    val served = ServeOps.serveAnn(queries,
-      spark.table("graft_ann_c_postings"),
-      spark.table("graft_ann_c_vectors"))
+    val served = ServeOps.annRadius(queries,
+      SrpIndex.stored(spark, "graft_ann_c"))
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).toSeq
     val want = VectorQueries.qAnnLsh(spark, sf).collect().map(r =>
       (r.getLong(0), r.getLong(1), r.getDouble(2))).toSeq

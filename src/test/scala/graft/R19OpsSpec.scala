@@ -1,6 +1,7 @@
 package graft
 
-import graft.queries.{Corpus2Ops, ServeOps, VectorQueries, XModalOps}
+import graft.queries.{Corpus2Ops, ServeOps, SrpIndex, VectorQueries,
+  XModalOps}
 import org.apache.spark.sql.functions._
 
 /** Round-19 contracts: the persisted media-tower index (q_xmodal_served
@@ -12,26 +13,16 @@ import org.apache.spark.sql.functions._
   * and the payload column really is BinaryType). */
 class R19OpsSpec extends SparkSpec {
 
-  import org.apache.spark.sql.execution.{ColumnarToRowExec, FileSourceScanExec,
-    FilterExec, InputAdapter, ProjectExec, SortExec, SparkPlan,
-    WholeStageCodegenExec}
+  import org.apache.spark.sql.execution.FileSourceScanExec
   import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
-
-  @annotation.tailrec
-  private def scanThroughTransparent(p: SparkPlan): Option[FileSourceScanExec] =
-    p match {
-      case s: FileSourceScanExec => Some(s)
-      case t @ (_: ProjectExec | _: FilterExec | _: SortExec |
-          _: ColumnarToRowExec | _: InputAdapter | _: WholeStageCodegenExec) =>
-        scanThroughTransparent(t.children.head)
-      case _ => None
-    }
+  import PlanShapes.scanThroughTransparent
 
   test("q_xmodal_served: the persisted media-tower index serves " +
       "row-identically to the in-plan q_xmodal_retrieval_ann chain, " +
       "Exchange-free on both bucketed index scans") {
     import spark.implicits._
-    XModalOps.buildXmodalIndex(spark, sf, "graft_xm_t")
+    SrpIndex.write(XModalOps.mediaCorpus(spark, sf), "graft_xm_t",
+      "doc_id", "mv")
     val docsrc = Tables.df(spark, sf, "documents")
       .select($"doc_id", $"source")
     val q = XModalOps.retrievalQueries(spark, sf).localCheckpoint()
@@ -43,9 +34,8 @@ class R19OpsSpec extends SparkSpec {
       // what the planner does to fixture-sized tables)
       spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
       spark.conf.set("spark.sql.adaptive.enabled", "false")
-      val served = XModalOps.serveXmodal(q,
-        spark.table("graft_xm_t_postings"),
-        spark.table("graft_xm_t_media"), docsrc)
+      val served = XModalOps.xmodalRetrieve(q,
+        SrpIndex.stored(spark, "graft_xm_t"), docsrc)
       val bucketedScans = served.queryExecution.executedPlan.collect {
         case s: FileSourceScanExec if s.relation.bucketSpec.isDefined => s
       }
@@ -180,7 +170,7 @@ class R19OpsSpec extends SparkSpec {
     // tagged prefix (ADVICE r20): the per-JVM exit sweep reclaims the
     // fixture's tmpdir directories; an untagged literal lived forever
     val pre = ServeOps.sfPrefix("graft_ann_st", sf)
-    ServeOps.buildAnnIndex(spark, sf, pre)
+    SrpIndex.write(ServeOps.annCorpus(spark, sf), pre)
     val arriving = Tables.df(spark, sf, "embeddings")
       .filter($"vec_id" % 100 === 0)
       .select($"vec_id".as[Long], $"embedding".as[Array[Float]])

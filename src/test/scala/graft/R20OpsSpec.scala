@@ -1,6 +1,7 @@
 package graft
 
-import graft.queries.{Corpus2Ops, ServeOps, VectorQueries, XModalOps}
+import graft.queries.{Corpus2Ops, ServeOps, SrpIndex, VectorQueries,
+  XModalOps}
 import org.apache.spark.sql.functions._
 
 /** Round-20 contracts: the media-tower delta/compact triad completion
@@ -22,7 +23,7 @@ class R20OpsSpec extends SparkSpec {
     assert(got === want,
       "media base ∪ delta report differs from the full in-plan chain")
     val pre = ServeOps.sfPrefix("graft_xm_s", sf)
-    val baseN = spark.table(s"${pre}_media").count()
+    val baseN = spark.table(s"${pre}_vectors").count()
     val fullN = XModalOps.mediaDense(spark, sf).count()
     assert(baseN < fullN && baseN > 0,
       s"base media table holds $baseN of $fullN — the delta path must " +
@@ -40,11 +41,11 @@ class R20OpsSpec extends SparkSpec {
       "post-compaction media report differs from the full in-plan chain")
     val pre = ServeOps.sfPrefix("graft_xm_s", sf)
     val fullN = XModalOps.mediaDense(spark, sf).count()
-    assert(spark.table(s"${pre}_c_media").count() === fullN,
+    assert(spark.table(s"${pre}_c_vectors").count() === fullN,
       "compacted media table must hold every dense media vector")
     assert(spark.table(s"${pre}_c_postings").count() === fullN * 8,
       "compacted postings must hold 8 rows per media vector")
-    assert(spark.table(s"${pre}_media").count() < fullN,
+    assert(spark.table(s"${pre}_vectors").count() < fullN,
       "the pre-compaction base must be a strict half")
   }
 
@@ -99,7 +100,7 @@ class R20OpsSpec extends SparkSpec {
     implicit val sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext
     // tagged prefix (ADVICE r20) — the exit sweep reclaims the tmpdir dirs
     val xmPre = ServeOps.sfPrefix("graft_xm_st", sf)
-    XModalOps.buildXmodalIndex(spark, sf, xmPre)
+    SrpIndex.write(XModalOps.mediaCorpus(spark, sf), xmPre, "doc_id", "mv")
     val q = XModalOps.retrievalQueries(spark, sf).localCheckpoint()
     // the batch rule, independently re-derived: probe the SAME tables,
     // rank with the SAME kernel, keep the true pair's rank
@@ -110,7 +111,7 @@ class R20OpsSpec extends SparkSpec {
       .select($"vec_id".as("qid"), ($"tbl" * 256 + $"bk").as("bkey"))
     val cand = probes.join(spark.table(s"${xmPre}_postings"), "bkey")
       .select($"qid", $"doc_id").distinct()
-    val want = cand.join(spark.table(s"${xmPre}_media"), "doc_id")
+    val want = cand.join(spark.table(s"${xmPre}_vectors"), "doc_id")
       .join(broadcast(q), "qid")
       .withColumn("cs", expr("round(decimal_dot9(qv, mv) / (qn * mn), 6)"))
       .withColumn("rk", row_number().over(
@@ -127,7 +128,7 @@ class R20OpsSpec extends SparkSpec {
     val stream = input.toDF().toDF("qid", "qv")
     val sq = graft.streaming.Streams.xmodalServeStream(stream,
         spark.table(s"${xmPre}_postings"),
-        spark.table(s"${xmPre}_media"))
+        spark.table(s"${xmPre}_vectors"))
       .writeStream.format("memory").queryName("xm_serve_stream")
       .outputMode("complete").start()
     try {
@@ -144,24 +145,9 @@ class R20OpsSpec extends SparkSpec {
       "Exchange-free on both bucketed index scans under forced-shuffle " +
       "static plans (the persisted layout is USED, not just read)") {
     import spark.implicits._
-    import org.apache.spark.sql.execution.{ColumnarToRowExec,
-      FileSourceScanExec, FilterExec, InputAdapter, ProjectExec, SortExec,
-      SparkPlan, WholeStageCodegenExec}
+    import org.apache.spark.sql.execution.FileSourceScanExec
     import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
-    // an Exchange counts against the layout only when it sits DIRECTLY
-    // over the bucketed scan (through transparent nodes) — the
-    // R19OpsSpec rule; a deep collect would false-positive on the
-    // query-side fan-out shuffles whose subtree contains a scan
-    @annotation.tailrec
-    def scanThroughTransparent(p: SparkPlan): Option[FileSourceScanExec] =
-      p match {
-        case s: FileSourceScanExec => Some(s)
-        case t @ (_: ProjectExec | _: FilterExec | _: SortExec |
-            _: ColumnarToRowExec | _: InputAdapter |
-            _: WholeStageCodegenExec) =>
-          scanThroughTransparent(t.children.head)
-        case _ => None
-      }
+    import PlanShapes.scanThroughTransparent
     // tables exist from the row-identity test's qXmodalCompact run in
     // this JVM; rebuild defensively in case of test-order changes
     val pre = ServeOps.sfPrefix("graft_xm_s", sf)
@@ -175,9 +161,8 @@ class R20OpsSpec extends SparkSpec {
     try {
       spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
       spark.conf.set("spark.sql.adaptive.enabled", "false")
-      val served = XModalOps.serveXmodal(q,
-        spark.table(s"${pre}_c_postings"),
-        spark.table(s"${pre}_c_media"), docsrc)
+      val served = XModalOps.xmodalRetrieve(q,
+        SrpIndex.stored(spark, s"${pre}_c"), docsrc)
       val bucketedScans = served.queryExecution.executedPlan.collect {
         case s: FileSourceScanExec if s.relation.bucketSpec.isDefined => s
       }
@@ -202,20 +187,9 @@ class R20OpsSpec extends SparkSpec {
       "bucketed base scan Exchange-free under forced-shuffle static " +
       "plans (the union-below-join re-shuffle is gone)") {
     import spark.implicits._
-    import org.apache.spark.sql.execution.{ColumnarToRowExec,
-      FileSourceScanExec, FilterExec, InputAdapter, ProjectExec, SortExec,
-      SparkPlan, WholeStageCodegenExec}
+    import org.apache.spark.sql.execution.FileSourceScanExec
     import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
-    @annotation.tailrec
-    def scanThroughTransparent(p: SparkPlan): Option[FileSourceScanExec] =
-      p match {
-        case s: FileSourceScanExec => Some(s)
-        case t @ (_: ProjectExec | _: FilterExec | _: SortExec |
-            _: ColumnarToRowExec | _: InputAdapter |
-            _: WholeStageCodegenExec) =>
-          scanThroughTransparent(t.children.head)
-        case _ => None
-      }
+    import PlanShapes.scanThroughTransparent
     val prevBc = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
     val prevAqe = spark.conf.get("spark.sql.adaptive.enabled")
     try {
@@ -223,8 +197,11 @@ class R20OpsSpec extends SparkSpec {
       spark.conf.set("spark.sql.adaptive.enabled", "false")
       for ((name, df) <- Seq(
           "q_ann_delta" -> ServeOps.qAnnDelta(spark, sf),
+          "q_ann_compact" -> ServeOps.qAnnCompact(spark, sf),
           "q_ivf_delta" -> ServeOps.qIvfDelta(spark, sf),
           "q_semcache_delta" -> ServeOps.qSemcacheDelta(spark, sf),
+          "q_semcache_served" -> ServeOps.qSemcacheServed(spark, sf),
+          "q_semcache_compact" -> ServeOps.qSemcacheCompact(spark, sf),
           "q_xmodal_delta" -> XModalOps.qXmodalDelta(spark, sf))) {
         val plan = df.queryExecution.executedPlan
         val bucketed = plan.collect {

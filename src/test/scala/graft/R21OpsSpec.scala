@@ -16,15 +16,45 @@ class R21OpsSpec extends SparkSpec {
       "key; a second call with the same key is a no-op; a different " +
       "prefix builds again") {
     var n = 0
-    ServeOps.buildOnce(spark, sf, "graft_r21_once_a") { n += 1 }
-    ServeOps.buildOnce(spark, sf, "graft_r21_once_a") { n += 1 }
+    ServeOps.buildOnce(spark, sf, "graft_r21_once_a") { _ => n += 1 }
+    ServeOps.buildOnce(spark, sf, "graft_r21_once_a") { _ => n += 1 }
     assert(n === 1, "same key must not re-run the build body")
-    ServeOps.buildOnce(spark, sf, "graft_r21_once_b") { n += 1 }
+    ServeOps.buildOnce(spark, sf, "graft_r21_once_b") { _ => n += 1 }
     assert(n === 2, "a different prefix is a different artifact")
     // a different fixture dir under the same prefix is a different key
     // (the verbatim-sfDir collision note on buildOnce)
-    ServeOps.buildOnce(spark, sf + "/.", "graft_r21_once_a") { n += 1 }
+    ServeOps.buildOnce(spark, sf + "/.", "graft_r21_once_a") { _ => n += 1 }
     assert(n === 3)
+    // a fixture rewritten in place is a different key: the memo also
+    // fingerprints every file's (relative path, length, mtime)
+    val copy = java.nio.file.Files.createTempDirectory("graft_r21_fixture")
+    try {
+      val src = java.nio.file.Paths.get(sf)
+      java.nio.file.Files.walk(src).forEach { p =>
+        val to = copy.resolve(src.relativize(p).toString)
+        if (java.nio.file.Files.isDirectory(p))
+          java.nio.file.Files.createDirectories(to)
+        else java.nio.file.Files.copy(p, to)
+      }
+      val dir = copy.toString
+      ServeOps.buildOnce(spark, dir, "graft_r21_once_c") { _ => n += 1 }
+      assert(n === 4)
+      ServeOps.buildOnce(spark, dir, "graft_r21_once_c") { _ => n += 1 }
+      assert(n === 4, "an unchanged fixture must not re-run the build body")
+      val f = java.nio.file.Files.walk(copy).filter(
+        java.nio.file.Files.isRegularFile(_)).findFirst().get.toFile
+      val mtime = f.lastModified()
+      f.setWritable(true)
+      java.nio.file.Files.write(f.toPath, Array[Byte](0),
+        java.nio.file.StandardOpenOption.APPEND)
+      assert(f.setLastModified(mtime + 10000L))
+      ServeOps.buildOnce(spark, dir, "graft_r21_once_c") { _ => n += 1 }
+      assert(n === 5, "a fixture changed in place must build again")
+    } finally {
+      java.nio.file.Files.walk(copy).sorted(
+        java.util.Comparator.reverseOrder[java.nio.file.Path]())
+        .forEach(p => java.nio.file.Files.delete(p))
+    }
   }
 
   test("SRP split artifacts ≡ fresh derivation: vectors = the %4 base " +
@@ -88,7 +118,7 @@ class R21OpsSpec extends SparkSpec {
       df.select($"doc_id", $"mv", $"mn").collect()
         .map(r => (r.getLong(0), r.getSeq[Long](1), r.getDouble(2)))
         .sortBy(_._1).toSeq
-    assert(rows(spark.table(s"${pre}_media")) ===
+    assert(rows(spark.table(s"${pre}_vectors")) ===
       rows(dense.filter($"doc_id" % 2 === 0)))
     assert(rows(spark.table(s"${pre}_delta")) ===
       rows(dense.filter($"doc_id" % 2 =!= 0)))
