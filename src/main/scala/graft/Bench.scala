@@ -1,9 +1,12 @@
 package graft
-import org.apache.spark.sql.SparkSession
+import java.nio.file.{Files, NoSuchFileException, Paths}
+import scala.util.Try
+import scala.util.control.NonFatal
+import BenchMetrics.{quote, r3}
 object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
+    val cpus = Envelope.cpus
     // passes per query, min taken: single-shot count() timings are noisy
     // (GC, codegen cache, page cache), and the per-round regression read
     // needs signal; 2 passes doubles the ~1 min runtime, still cheap
@@ -11,76 +14,20 @@ object Bench {
     // passes < 1 would "run" zero queries and emit a green 0.000 total —
     // a no-op bench that trivially passes the regression gate
     require(passes >= 1, s"SPARK_GRAFT_BENCH_PASSES must be >= 1, got $passes")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      // Task-count determinism (VERDICT r15 #1): AQE partition
-      // coalescing folds post-shuffle partitions by OBSERVED size, and
-      // observed map-output sizes differ across machines/timing enough
-      // that the builder and driver recorded 43-vs-242 / 51-vs-136 /
-      // 29-vs-174 tasks on IDENTICAL committed plans — which silently
-      // broke BASELINE.md's "identical tasks ⇒ machine" attribution
-      // rule. With coalescing off, every shuffle runs exactly
-      // `spark.sql.shuffle.partitions` reducers, so a query's task
-      // count is a pure function of its plan and cross-record task
-      // comparisons mean something again. Side effect, deliberately
-      // kept: CPU-heavy small-shuffle stages (the iterative graph ops)
-      // no longer collapse to 1–2 serialized tasks — the r14/r15
-      // q_adamic_adar wall≫run dispatch gaps were exactly that
-      // collapse. Skew-join and the rest of AQE stay on.
-      //
-      // r17 (VERDICT r16 #3): the blunt disable bought determinism at a
-      // measured 316→606 s full-tree cost (every tiny stage runs 32
-      // reducers), so the committed envelope is "pinned" instead:
-      // coalescing ON but every input pinned to a constant
-      // (parallelismFirst=false so the target is the pinned advisory
-      // size, never totalBytes/defaultParallelism; min size pinned too)
-      // — task counts then depend only on the plan and the
-      // deterministic map-output sizes, not on machine parallelism.
-      // See PERF.md round-17 for the A/B that chose it.
-      .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
-      .config("spark.sql.adaptive.coalescePartitions.parallelismFirst", "false")
-      .config("spark.sql.adaptive.advisoryPartitionSizeInBytes", "1m")
-      .config("spark.sql.adaptive.coalescePartitions.minPartitionSize", "1m")
-      // The LAST nondeterminism source under "pinned": AQE merges on the
-      // map-output sizes MapStatus reports = bytes as written, and lz4
-      // output depends on record ORDER inside each block — which follows
-      // shuffle fetch order, which is racy. Same machine, same plan,
-      // back-to-back: q_kcore coalesced to 52 vs 51 tasks, q_modularity
-      // 202 vs 212 (measured r17). Uncompressed block size = Σ per-record
-      // UnsafeRow bytes = order-INDEPENDENT, so compression off makes the
-      // merge boundaries a pure function of plan + data. Bench-envelope
-      // only (sf0.1 shuffles are page-cache-resident; a real cluster
-      // keeps compression on), and telemetry shuf_mb reads uncompressed
-      // from r17 on — see BASELINE.md caveat (f).
-      .config("spark.shuffle.compress", "false")
-      // Residual ±1-stage task fuzz, root-caused r17 and deliberately
-      // ACCEPTED: a handful of multi-consumer plans (q_modularity,
-      // q_bradley_terry, q_raking) occasionally run one extra 32-task
-      // stage at identical plans/counters — AQE materializes sibling
-      // stages concurrently and replans as each completes, so whether a
-      // stage that a replan (BHJ conversion / reuse) would eliminate
-      // had already launched is a scheduling race, not a size or plan
-      // effect. Measured: q_modularity standalone is bimodal 512/703 MB
-      // vs 544/802 under reuse; `spark.sql.exchange.reuse=false` pins
-      // it standalone (516/728 every run) but makes the FULL TREE
-      // worse — 8 queries go bimodal instead of 1, because reuse-off
-      // multiplies the duplicate sibling stages that race the replan.
-      // So reuse stays ON, and the BASELINE.md attribution rule reads
-      // those few rows via run-per-task, never raw task counts.
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Envelope.session()
+    val sc = spark.sparkContext
     // Per-query TaskMetrics telemetry (VERDICT r7 #1): spill / GC /
     // executor-run-time / peak-execution-memory, so a driver-side wall
     // number the builder cannot reproduce is attributable from the bench
     // record itself instead of demanding a forensic round.
     val metrics = new BenchMetrics
-    spark.sparkContext.addSparkListener(metrics)
+    sc.addSparkListener(metrics)
+    spark.listenerManager.register(metrics)
     // warm-up: JIT + codegen + parquet reader init on the smallest fixture,
     // so the first timed query doesn't absorb session warm-up costs
-    try SparkEntry.entry(spark).count() catch { case _: Throwable => () }
-    val errors = scala.collection.mutable.ArrayBuffer.empty[String]
+    try SparkEntry.entry(spark).count() catch { case NonFatal(_) => () }
+    // failed query → its first cause; the keys are the `errors` names
+    val errors = scala.collection.mutable.LinkedHashMap.empty[String, String]
     // Optional subset (comma-separated names) for single-query profiling
     // under the EXACT bench envelope — the driver never sets this, so the
     // per-round run is always the full tree. Unknown names fail loudly:
@@ -91,54 +38,58 @@ object Bench {
       val unknown = s.diff(SparkEntry.queries.keySet)
       require(unknown.isEmpty, s"unknown queries in SPARK_GRAFT_QUERIES: ${unknown.mkString(", ")}")
     }
-    val results = SparkEntry.queries.toSeq.sortBy(_._1)
-      .filter { case (n, _) => subset.forall(_.contains(n)) }
-      .map { case (name, fn) =>
-      // a throwing query contributes 0.0 (NOT its elapsed-until-throw, and
-      // not a negative sentinel): the 2× gate reads `total`, and a partial
-      // time would let a breakage move the number either direction
-      // noop sink, NOT count(): under count() Catalyst eliminates any
-      // final multiplicity-preserving operator chain — measured round 7:
-      // q_decontaminate's count plan reduced to scan+filter+count(1),
-      // skipping its whole shingle/semi-join pipeline (a LEFT JOIN whose
-      // right side is provably unique and whose columns count() never
-      // reads is dropped, as is the final sort). The noop write forces
-      // every output column of every operator to actually evaluate, so
-      // the timing measures the query, not what the optimizer can prove
-      // away when nobody reads the answer.
-      val times = (1 to passes).flatMap { _ =>
-        metrics.reset(spark.sparkContext)
-        val t0 = System.nanoTime()
-        try {
-          fn(spark, sfDir).write.format("noop").mode("overwrite").save()
-          val sec = (System.nanoTime() - t0) / 1e9
-          Some((sec, metrics.snapshot(spark.sparkContext)))
-        } catch { case _: Throwable => None }
+    // One timed pass: the window is fn() + the noop write, nothing else.
+    // noop sink, NOT count(): under count() Catalyst eliminates any
+    // final multiplicity-preserving operator chain — measured round 7:
+    // q_decontaminate's count plan reduced to scan+filter+count(1),
+    // skipping its whole shingle/semi-join pipeline (a LEFT JOIN whose
+    // right side is provably unique and whose columns count() never
+    // reads is dropped, as is the final sort). The noop write forces
+    // every output column of every operator to actually evaluate, so
+    // the timing measures the query, not what the optimizer can prove
+    // away when nobody reads the answer.
+    def timeOnce(name: String): Option[(Double, BenchMetrics.Snap)] = {
+      val fn = SparkEntry.queries(name)
+      metrics.reset(sc)
+      val t0 = System.nanoTime()
+      val pass = try {
+        val df = fn(spark, sfDir) // eager localCheckpoint jobs run here
+        val built = System.nanoTime()
+        df.write.format("noop").mode("overwrite").save()
+        val sec = (System.nanoTime() - t0) / 1e9
+        Some((sec, metrics.snapshot(sc).copy(buildMs = (built - t0) / 1000000)))
+      } catch { case NonFatal(e) =>
+        errors.getOrElseUpdate(name,
+          s"${e.getClass.getName}: ${String.valueOf(e.getMessage).take(200)}")
+        None
       }
-      if (times.size < passes && !errors.contains(name)) errors += name
-      // free this query's cache/checkpoint blocks before the next one:
+      // free this pass's cache/checkpoint blocks before the next one:
       // localCheckpoint registers eager MEMORY_AND_DISK blocks that
       // otherwise live until JVM GC lets the ContextCleaner at them, and
       // 150+ queries × 2 passes of leftovers tax late-alphabet queries
       // with storage eviction + GC churn (q_pagerank measured 2× slower
       // inside the full suite than standalone before this sweep). Nothing
-      // is reused across queries, so dropping every block is safe.
-      // blocking: the removals must COMPLETE before the next query's
+      // is reused across passes, so dropping every block is safe.
+      // blocking: the removals must COMPLETE before the next pass's
       // reset(), or they land inside its telemetry window and read as
       // evictions; the sweep sits outside the timed section either way
       spark.catalog.clearCache()
-      spark.sparkContext.getPersistentRDDs.values
-        .foreach(_.unpersist(blocking = true))
-      // report the min-wall pass AND its matching metrics snapshot: the
-      // telemetry must explain the number the gate reads, not the cold pass
-      val best = if (times.isEmpty) (0.0, BenchMetrics.Snap(0, 0, 0, 0, 0, 0, 0, 0))
-        else times.minBy(_._1)
-      (name, best._1, best._2)
+      sc.getPersistentRDDs.values.foreach(_.unpersist(blocking = true))
+      pass
     }
-    // Locale.ROOT: the f-interpolator is locale-sensitive, and a comma
-    // decimal separator would make the line invalid JSON
-    def r3(v: Double): String =
-      String.format(java.util.Locale.ROOT, "%.3f", Double.box(v))
+    // a throwing query contributes 0.0 (NOT its elapsed-until-throw, and
+    // not a negative sentinel): the 2× gate reads `total`, and a partial
+    // time would let a breakage move the number either direction.
+    // Report the min-wall pass AND its matching metrics snapshot: the
+    // telemetry must explain the number the gate reads, not the cold pass
+    val results = SparkEntry.queries.keys.toSeq.sorted
+      .filter(n => subset.forall(_.contains(n)))
+      .map { name =>
+        val times = (1 to passes).flatMap(_ => timeOnce(name))
+        val (w, s) = if (times.isEmpty) (0.0, BenchMetrics.Snap())
+          else times.minBy(_._1)
+        (name, w, s)
+      }
     // Third pass for the slowest tail only (VERDICT r11 #3): driver-VM
     // CPU steal concentrates on the highest-CPU-per-task queries, and
     // those few dominate the total (r11: four drifted rows = 19% of the
@@ -150,35 +101,32 @@ object Bench {
     // 0 disables the tail; a negative value would silently disable it
     // while LOOKING configured — reject loudly like the passes check
     require(tailN >= 0, s"SPARK_GRAFT_TAIL_PASSES must be >= 0, got $tailN")
-    // Full per-query telemetry → a file (the stdout tail can't hold 179
-    // entries); path overridable so test runs don't clobber the record.
+    // Full per-query telemetry → a file per core count (the stdout tail
+    // can't hold 474 entries, and an 8-core run must not overwrite the
+    // 32-core record); path overridable so test runs don't clobber it.
     val metricsOut = sys.env.getOrElse("SPARK_GRAFT_METRICS_OUT",
-      "BENCH_METRICS.json")
+      s"BENCH_METRICS_c$cpus.json")
     // Caveat-(d) discriminator, automated (VERDICT r12 #2): the rank-8
     // tail only re-runs the slowest queries, but r12's VM steal spread
     // across ~15 MID-TIER rows that each drifted under the rank cut. The
     // machine signature is run-core-seconds inflating at IDENTICAL task
     // counts, so compare each query's run/tasks against the COMMITTED
-    // record (the same file this run later overwrites): >2× per-task run
-    // with at least half a core-second of absolute inflation ⇒ re-run it
-    // too. Absent/unparseable record ⇒ empty map ⇒ rank tail only.
+    // record for this core count (the same file this run later
+    // overwrites): >2× per-task run with at least half a core-second of
+    // absolute inflation ⇒ re-run it too. Absent/unparseable record, or
+    // one taken at another core count ⇒ empty map ⇒ rank tail only.
     val record: Map[String, (Double, Long)] = try {
-      val txt = new String(java.nio.file.Files.readAllBytes(
-        java.nio.file.Paths.get(metricsOut)), "UTF-8")
-      val re = ("\"(q_[a-z0-9_]+)\":\\{\"wall\":[0-9.]+,\"run\":([0-9.]+)," +
-        "[^}]*\"tasks\":([0-9]+)").r
-      val parsed = re.findAllMatchIn(txt)
-        .map(m => m.group(1) -> (m.group(2).toDouble, m.group(3).toLong))
-        .toMap
+      val txt = new String(Files.readAllBytes(Paths.get(metricsOut)), "UTF-8")
+      val parsed = BenchMetrics.record(txt, cpus)
       // a record that exists but yields nothing means the format drifted
       // — say so, or the drift discriminator dies silently (ADVICE r13)
-      if (parsed.isEmpty) System.err.println(
+      if (parsed.exists(_.isEmpty)) System.err.println(
         s"[bench] WARNING: $metricsOut parsed to 0 entries — " +
           "drift re-run disabled this round")
-      parsed
+      parsed.getOrElse(Map.empty)
     } catch {
-      case _: java.nio.file.NoSuchFileException => Map.empty // first run
-      case e: Throwable =>
+      case _: NoSuchFileException => Map.empty // first run
+      case NonFatal(e) =>
         System.err.println(s"[bench] WARNING: cannot read $metricsOut " +
           s"(${e.getClass.getSimpleName}) — drift re-run disabled")
         Map.empty
@@ -190,40 +138,23 @@ object Bench {
             s.runMs / 1e3 - rRun > 0.5 } => n }.toSet
     val tailSet = results.sortBy(-_._2).take(tailN).map(_._1).toSet ++
       (if (tailN > 0) drifted else Set.empty[String])
+    // a query that breaks only on the extra pass lands in `errors` and
+    // does not hide behind its surviving first-pass timing (ADVICE r12)
     val finalResults = results.map { case (name, w, s) =>
       if (!tailSet(name) || w == 0.0) (name, w, s)
-      else {
-        metrics.reset(spark.sparkContext)
-        val t0 = System.nanoTime()
-        val rerun = try {
-          SparkEntry.queries(name)(spark, sfDir)
-            .write.format("noop").mode("overwrite").save()
-          val sec = (System.nanoTime() - t0) / 1e9
-          Some((sec, metrics.snapshot(spark.sparkContext)))
-        } catch { case _: Throwable => None }
-        spark.catalog.clearCache()
-        spark.sparkContext.getPersistentRDDs.values
-          .foreach(_.unpersist(blocking = true))
-        rerun match {
-          case Some((sec, snap)) if sec < w => (name, sec, snap)
-          case Some(_) => (name, w, s)
-          case None =>
-            // a query that breaks only on the extra pass must not hide
-            // behind its surviving first-pass timing (ADVICE r12)
-            if (!errors.contains(name)) errors += name
-            (name, w, s)
-        }
+      else timeOnce(name) match {
+        case Some((sec, snap)) if sec < w => (name, sec, snap)
+        case _ => (name, w, s)
       }
     }
     val total = finalResults.map(_._2).sum
     val metricsJson = finalResults.sortBy(_._2).map { case (n, w, s) =>
-      "\"" + n + "\":" + s.json(w)
-    }.mkString("{\"sf\":\"" + sfDir + "\",\"queries\":{", ",", "}}")
+      "\"" + n + "\":" + s.json(w, stages = true)
+    }.mkString(s"""{"sf":"$sfDir","cpus":$cpus,"queries":{""", ",", "}}")
     // telemetry must never fail the bench, but a write failure must be
     // visible — next round's drift discriminator depends on this file
-    try java.nio.file.Files.write(java.nio.file.Paths.get(metricsOut),
-      (metricsJson + "\n").getBytes("UTF-8"))
-    catch { case e: Throwable => System.err.println(
+    try Files.write(Paths.get(metricsOut), (metricsJson + "\n").getBytes("UTF-8"))
+    catch { case NonFatal(e) => System.err.println(
       s"[bench] WARNING: cannot write $metricsOut: ${e.getMessage}") }
     // Compact telemetry for the SLOW queries only (wall >= 4 s — the
     // anomaly band; normally ~5 entries) printed to stdout next to the
@@ -231,34 +162,37 @@ object Bench {
     val slow = finalResults.filter(_._2 >= 4.0).sortBy(_._2).map { case (n, w, s) =>
       "\"" + n + "\":" + s.json(w)
     }.mkString("{", ",", "}")
-    val aggSnap = BenchMetrics.Snap(
-      finalResults.map(_._3.runMs).sum, finalResults.map(_._3.gcMs).sum,
-      finalResults.map(_._3.memSpill).sum, finalResults.map(_._3.diskSpill).sum,
-      finalResults.map(_._3.peakExec).max, finalResults.map(_._3.shufRead).sum,
-      finalResults.map(_._3.shufWrite).sum, finalResults.map(_._3.tasks).sum,
-      finalResults.map(_._3.failed).sum, finalResults.map(_._3.retried).sum,
-      finalResults.map(_._3.stageRetries).sum, finalResults.map(_._3.evicted).sum)
-    // ONE formatting path for both output lines, so the contract can't
+    val agg = finalResults.map(_._3).foldLeft(BenchMetrics.Snap())(_ + _).json(total)
+    val driftJson = drifted.toSeq.sorted.map("\"" + _ + "\"").mkString("[", ",", "]")
+    val detail = errors.map { case (n, c) => quote(n) + ":" + quote(c) }.mkString("{", ",", "}")
+    val envelope = Envelope.settings(cpus).map { case (k, v) => quote(k) + ":" + quote(v) }
+      .mkString("{", ",", "}")
+    val sha = Try(sys.process.Process(Seq("git", "rev-parse", "HEAD"), None,
+      "GIT_DIR" -> ".git").!!(sys.process.ProcessLogger(_ => ())).trim).toOption
+    val telemetry = s"""{"agg":$agg,"slow":$slow,"drift_rerun":$driftJson,""" +
+      s""""errors_detail":$detail,"cpus":$cpus,"envelope":$envelope,""" +
+      s""""git_sha":${sha.map(quote).getOrElse("null")}}"""
+    // ONE formatting path for every total line, so the contract can't
     // drift between them if a field is added. A throwing query must not
     // hide inside a green rc: surface names in `errors`.
     def line(qs: Seq[(String, Double)], extra: String): String = {
       val qJson = qs.map { case (k, v) => "\"" + k + "\":" + r3(v) }
         .mkString("{", ",", "}")
-      val errs = errors.map("\"" + _ + "\"").mkString("[", ",", "]")
+      val errs = errors.keys.map("\"" + _ + "\"").mkString("[", ",", "]")
       s"""{"metric":"total","value":${r3(total)},"unit":"sec","queries":$qJson,"sf":"$sfDir"$extra,"errors":$errs}"""
     }
     // Slowest-LAST order: ascending-by-time puts the expensive queries,
     // the ones needed to attribute a total regression, at the end of the
     // map, where a reader of the stdout tail sees them.
-    println(line(finalResults.map(t => (t._1, t._2)).sortBy(_._2), ""))
+    val byTime = finalResults.map(t => (t._1, t._2)).sortBy(_._2)
+    println(line(byTime, ""))
     // Telemetry line between timings and total: slow-query metrics + the
     // suite-wide aggregate, so an unreproducible driver wall number is
     // attributable from the bench record alone (run≈wall×cores ⇒ real
     // compute; gc high ⇒ heap pressure; spill>0 ⇒ execution-memory
     // pressure; run≪wall ⇒ the machine, not the plan).
-    val driftJson = drifted.toSeq.sorted.map("\"" + _ + "\"")
-      .mkString("[", ",", "]")
-    println(s"""{"metric":"telemetry","slow":$slow,"agg":${aggSnap.json(total)},"drift_rerun":$driftJson,"file":"$metricsOut"}""")
+    // It stays until a recorded run shows the copy in the last line.
+    println(s"""{"metric":"telemetry","slow":$slow,"agg":$agg,"drift_rerun":$driftJson,"file":"$metricsOut"}""")
     // Short total-only line, kept from r20/r21 so every prior round's
     // parse target still prints (driver-contract rule: fix a measurement
     // bug, keep the old outputs too).
@@ -272,8 +206,10 @@ object Bench {
     // last line now carries the map the contract always specified;
     // ascending order keeps the slowest rows at the end, so even a
     // tail-window reader still sees the rows that explain a regression.
-    println(line(finalResults.map(t => (t._1, t._2)).sortBy(_._2),
-      s""","n_queries":${finalResults.size}"""))
+    // The telemetry object (gap≫busy ⇒ dispatch, not compute) rides in
+    // the same line, so the stored record explains itself.
+    println(line(byTime,
+      s""","n_queries":${finalResults.size},"telemetry":$telemetry"""))
     spark.stop()
   }
 }

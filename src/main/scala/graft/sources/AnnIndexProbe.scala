@@ -1,7 +1,5 @@
 package graft.sources
 
-import org.apache.spark.sql.SparkSession
-
 /** Cross-JVM ANN index persistence probe (r18) — [[MetastoreProbe]]'s
   * discipline applied to the vector-serving story: JVM #1 builds the
   * bucketed SRP index tables through a derby-backed Hive catalog and
@@ -21,12 +19,8 @@ object AnnIndexProbe {
   def main(args: Array[String]): Unit = {
     require(args.length >= 3, "usage: AnnIndexProbe build|serve <dir> <sfDir>")
     val (mode, dir, sfDir) = (args(0), args(1), args(2))
-    val spark = SparkSession.builder()
-      .master("local[4]")
+    val spark = graft.Envelope.builder(cpus = 4)
       .appName(s"ann-index-probe-$mode")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.session.timeZone", "UTC")
       .config("spark.sql.warehouse.dir", s"$dir/warehouse")
       .config("javax.jdo.option.ConnectionURL",
         s"jdbc:derby:;databaseName=$dir/metastore_db;create=true")

@@ -1,7 +1,5 @@
 package graft.sources
 
-import org.apache.spark.sql.SparkSession
-
 /** Cross-JVM metastore persistence probe — the deployed engine's defining
   * catalog capability (an external metastore that survives service
   * restarts; reference locus: the charm's `configure_hive` wiring an
@@ -25,12 +23,8 @@ object MetastoreProbe {
     require(args.length >= 2, "usage: MetastoreProbe write|read <dir>")
     val mode = args(0)
     val dir = args(1)
-    val spark = SparkSession.builder()
-      .master("local[2]")
+    val spark = graft.Envelope.builder(cpus = 2)
       .appName(s"metastore-probe-$mode")
-      .config("spark.sql.shuffle.partitions", "2")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.session.timeZone", "UTC")
       .config("spark.sql.warehouse.dir", s"$dir/warehouse")
       // embedded derby at a caller-owned path: the metastore CONTENT lives
       // on disk here, so a cold JVM sees exactly what a restarted service

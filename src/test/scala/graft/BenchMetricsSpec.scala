@@ -103,4 +103,70 @@ class BenchMetricsSpec extends SparkSpec {
         "a broadcast-block removal was miscounted as eviction")
     } finally spark.sparkContext.removeSparkListener(m)
   }
+
+  test("job spans: busy is the union of job intervals, the rest is gap") {
+    import org.apache.spark.scheduler.{JobSucceeded, SparkListenerJobEnd,
+      SparkListenerJobStart}
+    // a detached listener fed synthetic events: the shared session's own
+    // jobs never reach it
+    val m = new BenchMetrics
+    m.reset(spark.sparkContext)
+    def job(id: Int, start: Long, end: Long): Unit = {
+      m.onJobStart(SparkListenerJobStart(id, start, Seq.empty))
+      if (end >= 0) m.onJobEnd(SparkListenerJobEnd(id, end, JobSucceeded))
+    }
+    job(1, 1000, 1200) // [1000, 1200]
+    job(2, 1050, 1100) // nested inside job 1
+    job(3, 1150, 1300) // overlaps job 1's tail: union [1000, 1300]
+    job(4, 1500, 1550) // disjoint
+    job(5, 1600, -1)   // still running at snapshot: not a completed job
+    // an end whose start fell before the window is not counted
+    m.onJobEnd(SparkListenerJobEnd(6, 1700, JobSucceeded))
+    val snap = m.snapshot(spark.sparkContext)
+    assert(snap.jobs == 4, s"completed jobs: $snap")
+    assert(snap.busyMs == 350, s"union of [1000,1300] and [1500,1550]: $snap")
+    val json = snap.copy(buildMs = 200, planMs = 100).json(wallSec = 1.0)
+    for (kv <- Seq("\"jobs\":4", "\"busy_s\":0.350", "\"gap_s\":0.650",
+        "\"build_s\":0.200", "\"plan_s\":0.100", "\"exec_s\":0.700"))
+      assert(json.contains(kv), s"missing $kv in $json")
+    assert(!json.contains("top_stages"), s"stages outside the file: $json")
+    // a fresh window forgets every span
+    m.reset(spark.sparkContext)
+    val empty = m.snapshot(spark.sparkContext)
+    assert(empty.jobs == 0 && empty.busyMs == 0, s"reset left spans: $empty")
+    assert(BenchMetrics.unionMs(Seq((5L, 9L), (0L, 2L), (1L, 3L))) == 7)
+  }
+
+  test("top stages: the window's three longest, with their task counts") {
+    import org.apache.spark.scheduler.{SparkListenerStageCompleted, StageInfo}
+    val m = new BenchMetrics
+    m.reset(spark.sparkContext)
+    for ((id, dur, n) <- Seq((1, 50L, 4), (2, 400L, 1), (3, 10L, 8),
+        (4, 200L, 2), (5, 300L, 1))) {
+      val info = new StageInfo(id, 0, s"s$id", n, Seq.empty, Seq.empty, "",
+        resourceProfileId = 0)
+      info.submissionTime = Some(1000L)
+      info.completionTime = Some(1000L + dur)
+      m.onStageCompleted(SparkListenerStageCompleted(info))
+    }
+    val snap = m.snapshot(spark.sparkContext)
+    assert(snap.top == Seq((2, 400L, 1), (5, 300L, 1), (4, 200L, 2)))
+    assert(snap.json(1.0, stages = true).contains(
+      "\"top_stages\":[{\"stage\":2,\"s\":0.400,\"tasks\":1}," +
+        "{\"stage\":5,\"s\":0.300,\"tasks\":1},{\"stage\":4,\"s\":0.200,\"tasks\":2}]"))
+  }
+
+  test("the drift reader ignores a record taken at another core count") {
+    val entry = BenchMetrics.Snap(runMs = 2500, tasks = 12,
+      top = Seq((7, 900L, 3))).json(3.0, stages = true)
+    def file(cpus: String) =
+      s"""{"sf":"/x"$cpus,"queries":{"q_a":$entry,"q_b":$entry}}"""
+    val same = BenchMetrics.record(file(",\"cpus\":8"), 8)
+    // the query's own task count, never a top stage's
+    assert(same == Some(Map("q_a" -> (2.5, 12L), "q_b" -> (2.5, 12L))))
+    assert(BenchMetrics.record(file(",\"cpus\":32"), 8).isEmpty,
+      "a 32-core record was compared against an 8-core run")
+    // a record from before per-core files is keyed by its name alone
+    assert(BenchMetrics.record(file(""), 8) == same)
+  }
 }

@@ -9,10 +9,10 @@ package graft
   * This spec pins that property for the queries where a plan regression
   * would first surface (a new whole-partition buffer, a lost partial
   * aggregate, a broadcast falling back to a sort-merge buffer). The test
-  * session (local[4], 8g) gives each concurrent task MORE execution
-  * memory than the bench envelope does, so a spill here means a
-  * categorical plan change, not tuning noise; the per-round
-  * BENCH_METRICS.json record is the envelope-exact check.
+  * session (the bench envelope at local[4], 8g) gives each concurrent
+  * task MORE execution memory than the bench's local[32] does, so a spill
+  * here means a categorical plan change, not tuning noise; the per-round
+  * BENCH_METRICS_c<cpus>.json record is the envelope-exact check.
   */
 class SpillAuditSpec extends SparkSpec {
 
