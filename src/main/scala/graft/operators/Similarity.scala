@@ -19,6 +19,13 @@ import org.apache.spark.sql.functions._
   */
 object Similarity {
 
+  /** LSH banding S-curve: the probability that a pair whose per-row
+    * collision probability is `p` shares at least one of `b` bands of `r`
+    * rows, 1 − (1 − p^r)^b — p is the Jaccard similarity for MinHash and
+    * 1 − θ/π for sign random projections. */
+  def bandCollision(p: Column, b: Column, r: Column): Column =
+    lit(1.0) - pow(lit(1.0) - pow(p, r.cast("double")), b.cast("double"))
+
   /** Exact top-k cosine neighbors for each query vector (self excluded).
     * Ranking is on round(cos, 6) with id tie-break so results are
     * engine-portable; the query side should be small (it is broadcast). */

@@ -1,9 +1,9 @@
 package graft.queries
 
+import graft.Decimals._
 import graft.Tables
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.DecimalType
 
 /** Aggregation depth: the full UDAF surface of the deployed Hive engine
   * (GroupByOperator + GenericUDAF* family: count/sum/avg/min/max, the
@@ -23,8 +23,6 @@ import org.apache.spark.sql.types.DecimalType
   * and that constraint is documented at the call site.
   */
 object Aggregates extends QueryPack {
-
-  private def dec(c: Column): Column = c.cast(DecimalType(18, 2))
 
   /** Statistical UDAFs per return flag (variance/stddev/covar/corr). */
   def qAggStats(spark: SparkSession, sfDir: String): DataFrame = {
@@ -131,7 +129,7 @@ object Aggregates extends QueryPack {
     Tables.df(spark, sfDir, "orders")
       .rollup($"o_orderstatus", $"o_orderpriority")
       .agg(count(lit(1)).as("n"),
-        sum(dec($"o_totalprice")).cast("double").as("total"),
+        sum(money($"o_totalprice")).cast("double").as("total"),
         grouping($"o_orderstatus").cast("int").as("g1"),
         grouping($"o_orderpriority").cast("int").as("g2"))
       .orderBy($"g1", $"g2", $"o_orderstatus".asc_nulls_first,
@@ -168,7 +166,7 @@ object Aggregates extends QueryPack {
     import spark.implicits._
     Tables.df(spark, sfDir, "lineitem")
       .groupBy($"l_suppkey")
-      .agg(sum(dec($"l_quantity")).cast("double").as("sum_qty"),
+      .agg(sum(money($"l_quantity")).cast("double").as("sum_qty"),
         count(lit(1)).as("n"))
       .where($"sum_qty" > 14000)
       .orderBy($"l_suppkey")
@@ -225,9 +223,9 @@ object Aggregates extends QueryPack {
     def state(part: DataFrame): DataFrame =
       part.groupBy($"o_orderpriority").agg(
         count(lit(1)).as("cnt"),
-        sum(dec($"o_totalprice")).as("s"),
-        min(dec($"o_totalprice")).as("mn"),
-        max(dec($"o_totalprice")).as("mx"))
+        sum(money($"o_totalprice")).as("s"),
+        min(money($"o_totalprice")).as("mn"),
+        max(money($"o_totalprice")).as("mx"))
     val orders = Tables.df(spark, sfDir, "orders")
     val base = state(orders.filter($"o_orderdate" < cutoff))
     val delta = state(orders.filter($"o_orderdate" >= cutoff))

@@ -1,10 +1,10 @@
 package graft.queries
 
+import graft.Decimals._
 import graft.Tables
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.DecimalType
 
 /** Composite behavioral analytics over the events stream: conversion
   * funnel and cohort retention — multi-stage aggregation/join shapes that
@@ -12,8 +12,6 @@ import org.apache.spark.sql.types.DecimalType
   * Both are key-partitioned all the way down (user_id / cohort-day), so
   * they scale like any hash-aggregate pipeline. */
 object Analytics extends QueryPack {
-
-  private def dec(c: Column): Column = c.cast(DecimalType(18, 2))
 
   /** Signup → purchase conversion per user: first signup time, purchases
     * strictly after it, conversion flag. */
@@ -30,7 +28,7 @@ object Analytics extends QueryPack {
         "left")
       .groupBy($"user_id", $"first_signup")
       .agg(count($"p_ts").as("n_purchases"),
-        coalesce(sum(dec($"value")).cast("double"), lit(0.0)).as("spend"))
+        coalesce(sum(money($"value")).cast("double"), lit(0.0)).as("spend"))
       .withColumn("converted", $"n_purchases" > 0)
       .orderBy($"user_id")
   }
@@ -70,7 +68,7 @@ object Analytics extends QueryPack {
       .groupBy($"o_custkey")
       .agg(max(to_date($"o_orderdate")).as("last_d"),
         count(lit(1)).as("f"),
-        sum(dec($"o_totalprice")).as("m"))
+        sum(money($"o_totalprice")).as("m"))
       .crossJoin(broadcast(ref))
       .select($"o_custkey", datediff($"ref_d", $"last_d").as("r"),
         $"f", round($"m".cast("double"), 6).as("m"))
@@ -93,7 +91,7 @@ object Analytics extends QueryPack {
         quintile($"m", $"mc").as("m_q"), $"m")
       .groupBy($"r_q", $"f_q", $"m_q")
       .agg(count(lit(1)).as("n_cust"),
-        round(sum($"m".cast(DecimalType(18, 6))).cast("double") /
+        round(sum($"m".cast(dec18_6)).cast("double") /
           count(lit(1)), 6).as("avg_m"))
       .orderBy($"r_q", $"f_q", $"m_q")
   }
@@ -149,8 +147,6 @@ object Analytics extends QueryPack {
     * family) yields NULL smoothing on both engines. */
   def qCtrSmooth(spark: SparkSession, sfDir: String): DataFrame = {
     import spark.implicits._
-    val dec6 = DecimalType(18, 6)
-    val dec9 = DecimalType(18, 9)
     val users = Tables.df(spark, sfDir, "events")
       .filter($"event_type".isin("view", "purchase"))
       .groupBy($"user_id")
@@ -159,8 +155,8 @@ object Analytics extends QueryPack {
       .withColumn("rate", round($"p".cast("double") / $"n", 6))
       .localCheckpoint() // user-thin; feeds the moment fit + scoring
     val prior = users
-      .agg(count(lit(1)).as("nu"), sum($"rate".cast(dec6)).as("sr"),
-        sum(round($"rate" * $"rate", 9).cast(dec9)).as("srr"))
+      .agg(count(lit(1)).as("nu"), sum($"rate".cast(dec18_6)).as("sr"),
+        sum(round($"rate" * $"rate", 9).cast(dec18_9)).as("srr"))
       .select($"nu", round($"sr".cast("double") / $"nu", 6).as("m"),
         round($"srr".cast("double") / $"nu"
           - ($"sr".cast("double") / $"nu")
@@ -218,10 +214,9 @@ object Analytics extends QueryPack {
     * window runs on the value-distinct relation only. */
   def qGini(spark: SparkSession, sfDir: String): DataFrame = {
     import spark.implicits._
-    val dec9 = DecimalType(18, 9)
     val spend = Tables.df(spark, sfDir, "orders")
       .groupBy($"o_custkey")
-      .agg(sum(dec($"o_totalprice")).as("s"))
+      .agg(sum(money($"o_totalprice")).as("s"))
     val byV = spend.groupBy($"s".as("v"))
       .agg(count(lit(1)).as("m"))
     val tot = byV.agg(sum($"m").as("n"),
@@ -233,7 +228,7 @@ object Analytics extends QueryPack {
       .select(($"m".cast("double") / $"n"
         * (($"cs" + $"cs" - $"v" * $"m").cast("double")
           / $"stot".cast("double"))).as("t"), $"n", $"stot")
-      .select(round($"t", 9).cast(dec9).as("t"), $"n", $"stot")
+      .select(round($"t", 9).cast(dec18_9).as("t"), $"n", $"stot")
     terms.groupBy($"n", $"stot").agg(sum($"t").as("st"))
       .select($"n".as("n_cust"),
         round($"stot".cast("double"), 2).as("total_spend"),
@@ -255,18 +250,16 @@ object Analytics extends QueryPack {
     * scan → user-thin relation → 1-row broadcast mean → one agg. */
   def qTheilIndex(spark: SparkSession, sfDir: String): DataFrame = {
     import spark.implicits._
-    val dec9 = DecimalType(18, 9)
-    val dec4 = DecimalType(38, 4)
     val spend = Tables.df(spark, sfDir, "orders")
-      .groupBy($"o_custkey").agg(sum(dec($"o_totalprice")).as("s"))
+      .groupBy($"o_custkey").agg(sum(money($"o_totalprice")).as("s"))
     val tot = spend.agg(count(lit(1)).as("n"), sum($"s").as("stot"))
     val mu = $"stot".cast("double") / $"n"
     val xd = $"s".cast("double")
     val terms = spend.crossJoin(broadcast(tot))
       .select($"n", $"stot",
-        round((xd / mu) * log(xd / mu), 9).cast(dec9).as("tt"),
-        round(log(xd), 9).cast(dec9).as("lx"),
-        round(xd * xd, 4).cast(dec4).as("x2"))
+        round((xd / mu) * log(xd / mu), 9).cast(dec18_9).as("tt"),
+        round(log(xd), 9).cast(dec18_9).as("lx"),
+        round(xd * xd, 4).cast(dec38_4).as("x2"))
     terms.groupBy($"n", $"stot")
       .agg(sum($"tt").as("stt"), sum($"lx").as("slx"),
         sum($"x2").as("sx2"))
@@ -297,7 +290,7 @@ object Analytics extends QueryPack {
     import spark.implicits._
     val cust = Tables.df(spark, sfDir, "customer")
       .select($"c_custkey", $"c_nationkey".as("g"),
-        $"c_acctbal".cast(DecimalType(18, 2)).as("x"))
+        $"c_acctbal".cast(dec18_2).as("x"))
     val grp = cust.groupBy($"g")
       .agg(count(lit(1)).as("n_g"), sum($"x").as("s_g"))
     val glob = grp.agg(sum($"s_g").as("s"), sum($"n_g").as("n"))
@@ -359,16 +352,15 @@ object Analytics extends QueryPack {
     * identical by construction. */
   def qElasticity(spark: SparkSession, sfDir: String): DataFrame = {
     import spark.implicits._
-    val dec9 = DecimalType(18, 9)
     val parts = Tables.df(spark, sfDir, "lineitem")
       .groupBy($"l_partkey")
       .agg(sum(floor($"l_quantity").cast("long")).as("q"),
-        sum(round($"l_extendedprice", 2).cast(DecimalType(18, 2)))
+        sum(round($"l_extendedprice", 2).cast(dec18_2))
           .as("rev"))
       .filter($"q" > 0 && $"rev" > 0)
       .select(
-        round(log($"q".cast("double")), 6).cast(dec9).as("y"),
-        round(log(round($"rev".cast("double") / $"q", 6)), 6).cast(dec9)
+        round(log($"q".cast("double")), 6).cast(dec18_9).as("y"),
+        round(log(round($"rev".cast("double") / $"q", 6)), 6).cast(dec18_9)
           .as("x"))
     val s = parts.agg(count(lit(1)).as("n"),
       sum($"x").as("dsx"), sum($"y").as("dsy"),

@@ -1,15 +1,13 @@
 package graft.queries
 
+import graft.Decimals._
 import graft.Tables
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.DecimalType
 
 /** Corpus-health additions (r14–r15). */
 object Corpus2Ops extends QueryPack {
-
-  private val dec9 = DecimalType(28, 9)
 
   /** DuckDB twin of [[graft.functions.TextFunctions.tokens]] — declared
     * BEFORE the oracle map (a later val would still be null during
@@ -66,7 +64,7 @@ object Corpus2Ops extends QueryPack {
       cnt.join(tot, "source")
         .select($"source", $"tn", $"vocab",
           round(($"c".cast("double") / $"tn")
-            * log($"c".cast("double") / $"tn"), 9).cast(dec9).as("tm"))
+            * log($"c".cast("double") / $"tn"), 9).cast(dec28_9).as("tm"))
         .groupBy($"source", $"tn", $"vocab")
         .agg((-sum($"tm").cast("double")).as("h"))
     }
@@ -99,7 +97,6 @@ object Corpus2Ops extends QueryPack {
     * vocabulary-thin spine (S × V), never doc-grain. */
   def qJsSources(spark: SparkSession, sfDir: String): DataFrame = {
     import spark.implicits._
-    val dec9n = DecimalType(18, 9)
     val counts = sourceTokenCounts(spark, sfDir)
     val totals = counts.groupBy($"source").agg(sum($"c").as("n"))
     val vocab = counts.select($"tok").distinct()
@@ -117,7 +114,7 @@ object Corpus2Ops extends QueryPack {
       .withColumn("m", ($"p1" + $"p2") / 2)
       .select($"src1", $"src2",
         round(lit(0.5) * ($"p1" * log($"p1" / $"m")
-          + $"p2" * log($"p2" / $"m")), 9).cast(dec9n).as("term"))
+          + $"p2" * log($"p2" / $"m")), 9).cast(dec18_9).as("term"))
       .groupBy($"src1", $"src2")
       .agg(sum($"term").cast("double").as("js"))
       .withColumn("js_dist", round(sqrt($"js"), 6))
@@ -143,8 +140,6 @@ object Corpus2Ops extends QueryPack {
     * count relation; everything downstream is S × 32. */
   def qBurrowsDelta(spark: SparkSession, sfDir: String): DataFrame = {
     import spark.implicits._
-    val decF = DecimalType(12, 9)
-    val dec6 = DecimalType(18, 6)
     val counts = sourceTokenCounts(spark, sfDir).localCheckpoint()
     val totals = counts.groupBy($"source").agg(sum($"c").as("n"))
     val top = counts.groupBy($"tok").agg(sum($"c").as("ct"))
@@ -154,7 +149,7 @@ object Corpus2Ops extends QueryPack {
       .join(counts, Seq("source", "tok"), "left")
       .select($"source", $"tok",
         round(coalesce($"c", lit(0L)).cast("double") / $"n", 9)
-          .cast(decF).as("f"))
+          .cast(dec12_9).as("f"))
       .localCheckpoint() // moment pass + both z arms
     val mom = f.groupBy($"tok").agg(count(lit(1)).as("k"),
       sum($"f").as("sx"), sum($"f" * $"f").as("sx2"))
@@ -172,7 +167,7 @@ object Corpus2Ops extends QueryPack {
     za.join(zb, "tok")
       .filter($"src1" < $"src2")
       .select($"src1", $"src2",
-        round(abs($"z1" - $"z2"), 6).cast(dec6).as("dz"))
+        round(abs($"z1" - $"z2"), 6).cast(dec18_6).as("dz"))
       .groupBy($"src1", $"src2")
       .agg(count($"dz").as("n_tokens"),
         round(sum($"dz").cast("double") / count($"dz"), 6).as("delta"))
@@ -228,7 +223,6 @@ object Corpus2Ops extends QueryPack {
     * rank-50 cut is ≤ 50 × 50 rows. */
   def qRboDrift(spark: SparkSession, sfDir: String): DataFrame = {
     import spark.implicits._
-    val dec9n = DecimalType(18, 9)
     val counts = Tables.df(spark, sfDir, "documents")
       .select(($"doc_id" % 2).cast("int").as("half"),
         explode(graft.functions.TextFunctions.tokens($"text")).as("tok"))
@@ -248,7 +242,7 @@ object Corpus2Ops extends QueryPack {
       .groupBy($"d").agg(count($"mr").as("ov"))
       .select($"d", $"ov",
         round(round(pow(lit(0.9), $"d" - 1), 12)
-          * $"ov" / $"d", 9).cast(dec9n).as("contrib"))
+          * $"ov" / $"d", 9).cast(dec18_9).as("contrib"))
     val wC = Window.orderBy($"d")
       .rowsBetween(Window.unboundedPreceding, Window.currentRow)
     ov.withColumn("cum", sum($"contrib").over(wC))
@@ -277,7 +271,6 @@ object Corpus2Ops extends QueryPack {
     * the inner total joins identically in both engines. */
   def qRougeLite(spark: SparkSession, sfDir: String): DataFrame = {
     import spark.implicits._
-    val dec9 = DecimalType(18, 9)
     val docs = Tables.df(spark, sfDir, "documents")
       .select($"doc_id", $"source",
         graft.functions.TextFunctions.tokens($"text").as("T"))
@@ -312,13 +305,13 @@ object Corpus2Ops extends QueryPack {
       .select($"source", $"n", coalesce($"ovl", lit(0L)).as("ovl"),
         $"ta", $"tb")
       .select($"source", $"n",
-        round($"ovl".cast("double") / $"tb", 9).cast(dec9).as("p"),
-        round($"ovl".cast("double") / $"ta", 9).cast(dec9).as("r"),
+        round($"ovl".cast("double") / $"tb", 9).cast(dec18_9).as("p"),
+        round($"ovl".cast("double") / $"ta", 9).cast(dec18_9).as("r"),
         $"ovl")
       .withColumn("f", when($"ovl" > 0,
         round(lit(2.0) * $"p".cast("double") * $"r".cast("double")
-          / ($"p".cast("double") + $"r".cast("double")), 9).cast(dec9))
-        .otherwise(lit(0).cast(dec9)))
+          / ($"p".cast("double") + $"r".cast("double")), 9).cast(dec18_9))
+        .otherwise(lit(0).cast(dec18_9)))
       .groupBy($"source", $"n")
       .agg(count(lit(1)).as("n_pairs"),
         round(sum($"p").cast("double") / count(lit(1)), 6).as("rouge_p"),

@@ -1,11 +1,11 @@
 package graft.queries
 
+import graft.Decimals._
 import graft.Tables
 import graft.functions.TextFunctions
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.DecimalType
 
 /** Corpus-level retrieval and tokenizer-statistics operators — the lexical
   * complement to the vector family in [[VectorQueries]]: BM25 keyword
@@ -92,7 +92,7 @@ object CorpusOps extends QueryPack {
             * ($"tf" * lit(2.2))
             / ($"tf" + lit(1.2)
               * (lit(0.25) + lit(0.75) * $"dl" / $"avgdl")),
-          6).cast(DecimalType(18, 6)).as("s"))
+          6).cast(dec18_6).as("s"))
     val byDoc = scored.groupBy($"qid", $"doc_id")
       .agg(sum($"s").as("score"))
     val w = Window.partitionBy($"qid").orderBy($"score".desc, $"doc_id".asc)
@@ -111,9 +111,8 @@ object CorpusOps extends QueryPack {
     * simply lack the vector term. */
   def qHybridRrf(spark: SparkSession, sfDir: String): DataFrame = {
     import spark.implicits._
-    val dec9 = DecimalType(12, 9)
     def rrfTerm(r: Column): Column =
-      round(lit(1.0) / (lit(60) + r), 9).cast(dec9)
+      round(lit(1.0) / (lit(60) + r), 9).cast(dec12_9)
     val lex = bm25Ranked(spark, sfDir, 50)
       .select($"qid", $"doc_id", $"rk".as("r_lex"))
     val emb = Tables.df(spark, sfDir, "embeddings")
@@ -121,7 +120,7 @@ object CorpusOps extends QueryPack {
     val vec = graft.operators.Similarity.knnBruteForce(emb, qvecs, 50)
       .select(expr("qid div 100").cast("int").as("qid"),
         $"vec_id".as("doc_id"), $"rank".as("r_vec"))
-    val zero = lit(0).cast(dec9)
+    val zero = lit(0).cast(dec12_9)
     lex.join(vec, Seq("qid", "doc_id"), "full_outer")
       .select($"qid", $"doc_id",
         (coalesce(rrfTerm($"r_lex"), zero)
@@ -325,13 +324,12 @@ object CorpusOps extends QueryPack {
     * thin semi-join aggregate; everything downstream is per-qid rows. */
   def qRetrievalEval(spark: SparkSession, sfDir: String): DataFrame = {
     import spark.implicits._
-    val dec9 = DecimalType(12, 9)
     val run = qBm25(spark, sfDir).select($"qid", $"doc_id", $"rk")
     val qterms = Seq((1, "hash"), (1, "join"), (2, "window"), (2, "agg"),
       (2, "stream"), (3, "slow"), (3, "scan")).toDF("qid", "term")
     val nterms = qterms.groupBy($"qid").agg(count(lit(1)).as("n_terms"))
     val discs = ndcgDiscs.toDF("rk", "d")
-      .select($"rk", $"d".cast(dec9).as("disc"))
+      .select($"rk", $"d".cast(dec12_9).as("disc"))
     val dt = Tables.df(spark, sfDir, "documents")
       .select($"doc_id", explode(TextFunctions.tokens($"text")).as("tok"))
       .distinct()
@@ -386,7 +384,6 @@ object CorpusOps extends QueryPack {
     * round once to 9dp into exact decimal sums. */
   def qTopicCoherence(spark: SparkSession, sfDir: String): DataFrame = {
     import spark.implicits._
-    val dec9 = DecimalType(28, 9)
     val tt = qTopicTerms(spark, sfDir).select($"source", $"rk", $"tok")
     val dt = Tables.df(spark, sfDir, "documents")
       .select($"doc_id", explode(TextFunctions.tokens($"text")).as("tok"))
@@ -405,7 +402,7 @@ object CorpusOps extends QueryPack {
       .join(dtc.select($"tok".as("tl"), $"dl"), "tl")
       .select($"source",
         round(log((coalesce($"dml", lit(0L)) + 1).cast("double")
-          / $"dl"), 9).cast(dec9).as("term"))
+          / $"dl"), 9).cast(dec28_9).as("term"))
       .groupBy($"source")
       .agg(count(lit(1)).as("n_pairs"),
         round(sum($"term").cast("double"), 6).as("coherence"))
@@ -434,7 +431,6 @@ object CorpusOps extends QueryPack {
     * point). */
   def qBm25Tune(spark: SparkSession, sfDir: String): DataFrame = {
     import spark.implicits._
-    val dec6 = DecimalType(18, 6)
     val grid = Seq((0.6, 0.3), (0.6, 0.75), (1.2, 0.3), (1.2, 0.75),
       (1.8, 0.3), (1.8, 0.75)).toDF("k1", "b")
     val input = bm25ScoringInput(spark, sfDir)
@@ -447,7 +443,7 @@ object CorpusOps extends QueryPack {
             * ($"tf" * ($"k1" + lit(1.0)))
             / ($"tf" + $"k1"
               * ((lit(1.0) - $"b") + $"b" * $"dl" / $"avgdl")),
-          6).cast(dec6).as("s"))
+          6).cast(dec18_6).as("s"))
     val byDoc = scored.groupBy($"k1", $"b", $"qid", $"doc_id")
       .agg(sum($"s").as("score"))
     val top = byDoc.withColumn("rk", row_number().over(
@@ -456,7 +452,7 @@ object CorpusOps extends QueryPack {
       .filter($"rk" <= 10)
     val qterms = bm25Qterms(spark)
     val discs = ndcgDiscs.toDF("rk", "d")
-      .select($"rk", $"d".cast(DecimalType(12, 9)).as("disc"))
+      .select($"rk", $"d".cast(dec12_9).as("disc"))
     val qrels = input.groupBy($"qid", $"doc_id")
       .agg(sum($"tf").as("rel"))
     val dcg = top.join(qrels, Seq("qid", "doc_id"), "left")
@@ -477,7 +473,7 @@ object CorpusOps extends QueryPack {
         when($"idcg".isNotNull && $"idcg" > 0,
           round(coalesce($"dcg", lit(java.math.BigDecimal.ZERO))
             .cast("double") / $"idcg".cast("double"), 6))
-          .otherwise(0.0).cast(dec6).as("nd"))
+          .otherwise(0.0).cast(dec18_6).as("nd"))
     nd.groupBy($"k1", $"b")
       .agg(round(sum($"nd").cast("double") / count(lit(1)), 6)
         .as("mean_ndcg"))
@@ -536,12 +532,11 @@ object CorpusOps extends QueryPack {
     * discipline). */
   def qW2vNegatives(spark: SparkSession, sfDir: String): DataFrame = {
     import spark.implicits._
-    val dec6 = org.apache.spark.sql.types.DecimalType(18, 6)
     val vocab = Tables.df(spark, sfDir, "documents")
       .select(explode(TextFunctions.tokens($"text")).as("tok"))
       .groupBy($"tok").agg(count(lit(1)).as("cnt"))
     val wts = vocab.select($"tok",
-      round(pow($"cnt".cast("double"), 0.75), 6).cast(dec6).as("w"))
+      round(pow($"cnt".cast("double"), 0.75), 6).cast(dec18_6).as("w"))
     val wv = Window.orderBy($"tok")
     val cum = wts
       .withColumn("hi", sum($"w").over(wv))
@@ -619,7 +614,6 @@ object CorpusOps extends QueryPack {
     * the sign and the n = min(1000, |vocab|) = 31 row budget). */
   def qZipfFit(spark: SparkSession, sfDir: String): DataFrame = {
     import spark.implicits._
-    val dec9 = DecimalType(18, 9)
     val docs = Tables.df(spark, sfDir, "documents")
     val cnt = docs.select(explode(TextFunctions.tokens($"text")).as("tok"))
       .groupBy($"tok").agg(count(lit(1)).as("cnt"))
@@ -627,8 +621,8 @@ object CorpusOps extends QueryPack {
     val ranked = top.withColumn("rk",
       row_number().over(Window.orderBy($"cnt".desc, $"tok".asc)))
     val xy = ranked.select(
-      round(log($"rk"), 6).cast(dec9).as("x"),
-      round(log($"cnt"), 6).cast(dec9).as("y"))
+      round(log($"rk"), 6).cast(dec18_9).as("x"),
+      round(log($"cnt"), 6).cast(dec18_9).as("y"))
     val s = xy.agg(count(lit(1)).as("n"),
       sum($"x").as("dsx"), sum($"y").as("dsy"),
       sum($"x" * $"y").as("dsxy"),
@@ -834,7 +828,6 @@ object CorpusOps extends QueryPack {
     * log-probs round once to DECIMAL(18,6) before summation. */
   def qKneserNey(spark: SparkSession, sfDir: String): DataFrame = {
     import spark.implicits._
-    val dec6 = org.apache.spark.sql.types.DecimalType(18, 6)
     val w = Window.partitionBy($"doc_id").orderBy($"pos")
     val bigrams = Tables.df(spark, sfDir, "documents")
       .select($"doc_id", $"source", $"text")
@@ -857,7 +850,7 @@ object CorpusOps extends QueryPack {
         round(log((greatest($"cb" - lit(0.75), lit(0.0))
           + lit(0.75) * $"n1u"
             * ($"n1w".cast("double") / $"ntypes")) / $"cu"), 6)
-          .cast(dec6).as("lp"))
+          .cast(dec18_6).as("lp"))
     scored.groupBy($"source")
       .agg(count(lit(1)).as("n_bigrams"), sum($"lp").as("slp"))
       .select($"source", $"n_bigrams",
@@ -876,7 +869,6 @@ object CorpusOps extends QueryPack {
     * frame over doc-partitioned positions — O(20·tokens), no joins. */
   def qMattr(spark: SparkSession, sfDir: String): DataFrame = {
     import spark.implicits._
-    val dec6 = org.apache.spark.sql.types.DecimalType(18, 6)
     val w = Window.partitionBy($"doc_id").orderBy($"pos")
       .rowsBetween(Window.currentRow, 19)
     val toks = Tables.df(spark, sfDir, "documents")
@@ -892,7 +884,7 @@ object CorpusOps extends QueryPack {
       .select($"doc_id", $"source",
         round($"wset".cast("double") / 20, 6).as("ttr_w"))
     val perDoc = winTtr.groupBy($"doc_id", $"source")
-      .agg(round(sum($"ttr_w".cast(dec6)).cast("double")
+      .agg(round(sum($"ttr_w".cast(dec18_6)).cast("double")
         / count(lit(1)), 6).as("mattr"))
     val rawTtr = toks.groupBy($"doc_id", $"source")
       .agg(round(countDistinct($"tok").cast("double")
@@ -902,9 +894,9 @@ object CorpusOps extends QueryPack {
         coalesce($"mattr", $"raw_ttr").as("mattr"), $"raw_ttr")
     joined.groupBy($"source")
       .agg(count(lit(1)).as("n_docs"),
-        round(sum($"mattr".cast(dec6)).cast("double") / count(lit(1)), 6)
+        round(sum($"mattr".cast(dec18_6)).cast("double") / count(lit(1)), 6)
           .as("mean_mattr"),
-        round(sum($"raw_ttr".cast(dec6)).cast("double") / count(lit(1)), 6)
+        round(sum($"raw_ttr".cast(dec18_6)).cast("double") / count(lit(1)), 6)
           .as("mean_raw_ttr"))
       .orderBy($"source")
   }
@@ -920,7 +912,6 @@ object CorpusOps extends QueryPack {
     * Support ≥ 5, top-20 by G². */
   def qLlrColloc(spark: SparkSession, sfDir: String): DataFrame = {
     import spark.implicits._
-    val dec9 = org.apache.spark.sql.types.DecimalType(18, 9)
     val w = Window.partitionBy($"doc_id").orderBy($"pos")
     val cb = Tables.df(spark, sfDir, "documents")
       .select($"doc_id", $"text")
@@ -937,7 +928,7 @@ object CorpusOps extends QueryPack {
     def term(k: Column, r: Column, c: Column, nn: Column): Column =
       when(k > 0,
         round(k * log(k.cast("double") * nn / (r * c)), 9))
-        .otherwise(lit(0.0)).cast(dec9)
+        .otherwise(lit(0.0)).cast(dec18_9)
     cb.filter($"k11" >= 5)
       .join(ra, "a").join(cbb, "b").crossJoin(broadcast(n))
       .select($"a", $"b", $"k11", $"r1", $"c1",
@@ -1054,7 +1045,6 @@ object CorpusOps extends QueryPack {
     * cut IS the 100 TB lever: the graph never outgrows the top-k. */
   def qTextrank(spark: SparkSession, sfDir: String): DataFrame = {
     import spark.implicits._
-    val dec14 = DecimalType(28, 14)
     val toks = Tables.df(spark, sfDir, "documents")
       .repartition(Tables.shufflePartitions(spark), $"doc_id")
       .select($"doc_id",
@@ -1083,7 +1073,7 @@ object CorpusOps extends QueryPack {
     for (_ <- 1 to 3) {
       val contrib = e2.join(pr, e2("u") === pr("node"))
         .select($"v".as("node"),
-          round($"pr" * $"w" / $"wdeg", 12).cast(dec14).as("c"))
+          round($"pr" * $"w" / $"wdeg", 12).cast(dec28_14).as("c"))
         .groupBy($"node").agg(sum($"c").as("sw"))
       pr = pr.select($"node", $"wdeg", $"n")
         .join(contrib, Seq("node"), "left")

@@ -1,11 +1,12 @@
 package graft.queries
 
+import graft.Decimals._
 import graft.Tables
 import graft.functions.{CosineSimilarity, SortedIntersectSize, TextFunctions}
+import graft.operators.Similarity
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.DecimalType
 
 /** Corpus-curation pack: an exact set-similarity join with prefix
   * filtering (the All-Pairs / PPJoin candidate scheme — Bayardo et al.,
@@ -23,8 +24,6 @@ import org.apache.spark.sql.types.DecimalType
   * corpus pass to count frequencies.
   */
 object CurateOps extends QueryPack {
-
-  private val dec6 = DecimalType(18, 6)
 
   /** Exact Jaccard-threshold pairs via prefix filtering.
     *
@@ -213,21 +212,20 @@ object CurateOps extends QueryPack {
     val grid = Seq((1, 16), (2, 8), (4, 4), (8, 2), (16, 1),
         (1, 8), (2, 4), (4, 2), (8, 1), (1, 4), (2, 2), (4, 1))
       .toDF("b", "r")
-    def pcand(j: Column, b: Column, r: Column): Column =
-      lit(1.0) - pow(lit(1.0) - pow(j, r.cast("double")), b.cast("double"))
     val truth = prefixPairs(spark, sfDir, subsetMod = 5, num = 7, den = 10)
       .select($"j")
     val scored = truth.crossJoin(broadcast(grid))
       .select($"b", $"r",
-        round(pcand($"j", $"b", $"r"), 6).cast(dec6).as("p"))
+        round(Similarity.bandCollision($"j", $"b", $"r"), 6).cast(dec18_6)
+          .as("p"))
       .groupBy($"b", $"r")
       .agg(round(sum($"p").cast("double") / count(lit(1)), 6)
         .as("exp_recall07"))
     grid.join(scored, Seq("b", "r"), "left")
       .select($"b", $"r", ($"b" * $"r").as("n_perms"),
-        round(pcand(lit(0.5), $"b", $"r"), 6).as("p50"),
-        round(pcand(lit(0.7), $"b", $"r"), 6).as("p70"),
-        round(pcand(lit(0.9), $"b", $"r"), 6).as("p90"),
+        round(Similarity.bandCollision(lit(0.5), $"b", $"r"), 6).as("p50"),
+        round(Similarity.bandCollision(lit(0.7), $"b", $"r"), 6).as("p70"),
+        round(Similarity.bandCollision(lit(0.9), $"b", $"r"), 6).as("p90"),
         $"exp_recall07")
       .orderBy($"n_perms".desc, $"b")
   }
@@ -572,7 +570,6 @@ object CurateOps extends QueryPack {
     * summed decimals cast once to double. */
   def qFellegiSunter(spark: SparkSession, sfDir: String): DataFrame = {
     import spark.implicits._
-    val dec9 = DecimalType(18, 9)
     val d = Tables.df(spark, sfDir, "documents")
       .select($"doc_id", $"lang", $"source", $"n_chars",
         substring($"text", 1, 12).as("head12"),
@@ -614,9 +611,9 @@ object CurateOps extends QueryPack {
     def m(a: Column) = (a + 0.5) / ($"nm" + 1)
     def uu(b: Column) = (b + 0.5) / ($"nu" + 1)
     def wa(a: Column, b: Column) =
-      round(log(m(a) / uu(b)), 9).cast(dec9)
+      round(log(m(a) / uu(b)), 9).cast(dec18_9)
     def wd(a: Column, b: Column) =
-      round(log((lit(1.0) - m(a)) / (lit(1.0) - uu(b))), 9).cast(dec9)
+      round(log((lit(1.0) - m(a)) / (lit(1.0) - uu(b))), 9).cast(dec18_9)
     val w = mu.select(
       wa($"a1", $"b1").as("w1a"), wd($"a1", $"b1").as("w1d"),
       wa($"a2", $"b2").as("w2a"), wd($"a2", $"b2").as("w2d"),
@@ -773,7 +770,7 @@ object CurateOps extends QueryPack {
       dims.join(broadcast(cent), "d")
         .select($"vec_id", $"cid",
           round(($"x" - $"c") * ($"x" - $"c"), 9)
-            .cast(DecimalType(20, 9)).as("t"))
+            .cast(dec20_9).as("t"))
         .groupBy($"vec_id", $"cid").agg(sum($"t").as("dist"))
 
     def assign(cent: DataFrame): DataFrame =
@@ -783,7 +780,7 @@ object CurateOps extends QueryPack {
 
     def recompute(asg: DataFrame): DataFrame =
       dims.join(asg, "vec_id")
-        .select($"cid", $"d", round($"x", 6).cast(dec6).as("xd"))
+        .select($"cid", $"d", round($"x", 6).cast(dec18_6).as("xd"))
         .groupBy($"cid", $"d")
         .agg((sum($"xd").cast("double") / count(lit(1))).as("c"))
 
@@ -854,7 +851,7 @@ object CurateOps extends QueryPack {
           .as("s"))
     per.groupBy($"cid")
       .agg(count(lit(1)).as("n"),
-        round(sum($"s".cast(dec6)).cast("double") / count(lit(1)), 6)
+        round(sum($"s".cast(dec18_6)).cast("double") / count(lit(1)), 6)
           .as("mean_sil"),
         min($"s").as("min_sil"))
       .orderBy($"cid")
@@ -939,14 +936,14 @@ object CurateOps extends QueryPack {
       .select($"vec_id", posexplode($"embedding".cast("array<double>"))
         .as(Seq("d", "x")))
     val cent = dims.join(asg, "vec_id")
-      .select($"cid", $"d", round($"x", 6).cast(dec6).as("xd"))
+      .select($"cid", $"d", round($"x", 6).cast(dec18_6).as("xd"))
       .groupBy($"cid", $"d")
       .agg((sum($"xd").cast("double") / count(lit(1))).as("c"))
     val dist = dims.join(asg, "vec_id")
       .join(broadcast(cent), Seq("cid", "d"))
       .select($"vec_id", $"cid",
         round(($"x" - $"c") * ($"x" - $"c"), 9)
-          .cast(DecimalType(20, 9)).as("t"))
+          .cast(dec20_9).as("t"))
       .groupBy($"vec_id", $"cid").agg(sum($"t").as("dist"))
     dist
       .withColumn("rk", row_number().over(
@@ -1144,7 +1141,7 @@ object CurateOps extends QueryPack {
         round((lit(2.0) * $"g" - $"t") / sqrt($"t"), 6).as("z"))
     perDoc.groupBy($"source")
       .agg(count(lit(1)).as("n_docs"),
-        round(sum($"z".cast(dec6)).cast("double") / count(lit(1)), 6)
+        round(sum($"z".cast(dec18_6)).cast("double") / count(lit(1)), 6)
           .as("mean_z"),
         max($"z").as("max_z"),
         sum(when($"z" >= 4.0, 1L).otherwise(0L)).as("n_flagged"))

@@ -1,11 +1,11 @@
 package graft.queries
 
+import graft.Decimals._
 import graft.Tables
 import graft.functions.TextFunctions
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.DecimalType
 
 /** Decision-analysis pack — the procedures a data platform runs AFTER
   * the basic tests say "something differs", answering "so what do we
@@ -29,10 +29,6 @@ import org.apache.spark.sql.types.DecimalType
   */
 object DecisionOps extends QueryPack {
 
-  private val dec2 = DecimalType(18, 2)
-  private val dec4 = DecimalType(38, 4)
-  private val dec9 = DecimalType(18, 9)
-
   // ---- q_iv_wald ----------------------------------------------------------
   /** Instrumental-variable Wald estimator (Wald '40; Angrist &
     * Krueger '91 usage): with user parity as the (pseudo-)instrument z,
@@ -54,7 +50,7 @@ object DecisionOps extends QueryPack {
       .groupBy($"user_id").agg(
         sum(when($"event_type" === "click", 1L).otherwise(0L)).as("x"),
         sum(when($"event_type" === "purchase",
-          round($"value", 2).cast(dec2)).otherwise(lit(0).cast(dec2)))
+          round($"value", 2).cast(dec18_2)).otherwise(lit(0).cast(dec18_2)))
           .as("y"))
       .select(($"user_id" % 2 === 0).as("z"), $"x", ($"x" * $"x").as("x2"),
         $"y")
@@ -220,10 +216,10 @@ object DecisionOps extends QueryPack {
       (($"b" * $"c").cast("double")
         / ($"a" + $"b" + $"c" + $"d").cast("double")).as("bc"))
     val s = terms.agg(count(lit(1)).as("k"), sum($"a").as("sa"),
-      sum(round($"e", 9).cast(dec9)).as("se"),
-      sum(round($"v", 9).cast(dec9)).as("sv"),
-      sum(round($"ad", 9).cast(dec9)).as("sad"),
-      sum(round($"bc", 9).cast(dec9)).as("sbc"))
+      sum(round($"e", 9).cast(dec18_9)).as("se"),
+      sum(round($"v", 9).cast(dec18_9)).as("sv"),
+      sum(round($"ad", 9).cast(dec18_9)).as("sad"),
+      sum(round($"bc", 9).cast(dec18_9)).as("sbc"))
     val dev = abs($"sa".cast("double") - $"se".cast("double")) - 0.5
     val chi2 = when($"sv".cast("double") > 0.0,
       dev * dev / $"sv".cast("double"))
@@ -248,7 +244,7 @@ object DecisionOps extends QueryPack {
     import spark.implicits._
     val o = Tables.df(spark, sfDir, "orders")
       .select(substring($"o_orderpriority", 1, 1).cast("long").as("s"),
-        round($"o_totalprice", 2).cast(dec2).as("p"))
+        round($"o_totalprice", 2).cast(dec18_2).as("p"))
     val mean = o.agg((sum($"p").cast("double") / count(lit(1)))
       .as("pbar"))
     val g = o.crossJoin(broadcast(mean))
@@ -298,9 +294,9 @@ object DecisionOps extends QueryPack {
   def qTukeyHsd(spark: SparkSession, sfDir: String): DataFrame = {
     import spark.implicits._
     val ev = Tables.df(spark, sfDir, "events")
-      .select($"event_type", round($"value", 2).cast(dec2).as("v"))
+      .select($"event_type", round($"value", 2).cast(dec18_2).as("v"))
       .select($"event_type", $"v",
-        round($"v".cast("double") * $"v".cast("double"), 4).cast(dec4)
+        round($"v".cast("double") * $"v".cast("double"), 4).cast(dec38_4)
           .as("v2"))
     val g = ev.groupBy($"event_type").agg(
       count(lit(1)).as("ng"), sum($"v").as("s1"), sum($"v2").as("s2"))
@@ -340,9 +336,9 @@ object DecisionOps extends QueryPack {
     import spark.implicits._
     val c = Tables.df(spark, sfDir, "customer")
       .select($"c_mktsegment".as("seg"), ($"c_custkey" % 2 === 0).as("t"),
-        round($"c_acctbal", 2).cast(dec2).as("v"))
+        round($"c_acctbal", 2).cast(dec18_2).as("v"))
       .select($"seg", $"t", $"v",
-        round($"v".cast("double") * $"v".cast("double"), 4).cast(dec4)
+        round($"v".cast("double") * $"v".cast("double"), 4).cast(dec38_4)
           .as("v2"))
     val cells = c.groupBy($"seg").agg(
       sum(when($"t", 1L).otherwise(0L)).as("n1"),
@@ -358,16 +354,16 @@ object DecisionOps extends QueryPack {
         (svar($"s2a", $"s1a", $"n1") / $"n1"
           + svar($"s2b", $"s1b", $"n0") / $"n0").as("v"))
       .filter($"v" > 0.0)
-      .select($"seg", $"e", round(lit(1.0) / $"v", 9).cast(dec9).as("w"))
+      .select($"seg", $"e", round(lit(1.0) / $"v", 9).cast(dec18_9).as("w"))
       .select($"seg", $"e", $"w",
-        round($"w".cast("double") * $"e", 9).cast(dec9).as("we"))
+        round($"w".cast("double") * $"e", 9).cast(dec18_9).as("we"))
       .localCheckpoint() // feeds the pooled row and the Q_het terms
     val pooled = eff.agg(count(lit(1)).as("k"), sum($"w").as("sw"),
         sum($"we").as("swe"))
       .select($"k", $"sw", ($"swe".cast("double") / $"sw").as("pool"))
     val qHet = eff.crossJoin(broadcast(pooled.select($"pool")))
       .select(round($"w".cast("double") * ($"e" - $"pool")
-        * ($"e" - $"pool"), 9).cast(dec9).as("qt"))
+        * ($"e" - $"pool"), 9).cast(dec18_9).as("qt"))
       .agg(sum($"qt").as("q"))
     pooled.crossJoin(broadcast(qHet))
       .select($"k", round($"pool", 6).as("pooled_effect"),
@@ -409,7 +405,7 @@ object DecisionOps extends QueryPack {
         round($"v" * (pow($"cum".cast("double") / $"tot",
             $"n".cast("double"))
           - pow(($"cum" - $"nv").cast("double") / $"tot",
-            $"n".cast("double"))), 9).cast(dec9).as("t"))
+            $"n".cast("double"))), 9).cast(dec18_9).as("t"))
     terms.groupBy($"source", $"n")
       .agg(round(sum($"t").cast("double"), 6).as("exp_max"))
       .orderBy($"source", $"n")
@@ -468,7 +464,7 @@ object DecisionOps extends QueryPack {
           / factorial($"k").cast("double"))
     val phi = pairs.groupBy($"channel")
       .agg(sum(round($"w" * ($"v1" - $"v0"), 9)
-        .cast(DecimalType(28, 9))).as("phi"))
+        .cast(dec28_9)).as("phi"))
       .select($"channel", round($"phi".cast("double"), 6).as("phi"))
     val total = v
       .agg(sum(when($"s" === pow(lit(2.0), $"k").cast("int") - 1, $"v"))
@@ -676,7 +672,6 @@ object DecisionOps extends QueryPack {
     * Outcome terms round to 6dp into exact decimal sums. */
   def qPsmAtt(spark: SparkSession, sfDir: String): DataFrame = {
     import spark.implicits._
-    val dec9 = DecimalType(28, 9)
     val acts = Tables.df(spark, sfDir, "events")
       .groupBy($"user_id")
       .agg(sum(when($"event_type" === "view", 1L).otherwise(0L))
@@ -686,7 +681,7 @@ object DecisionOps extends QueryPack {
         sum(when($"event_type" === "signup", 1L).otherwise(0L))
           .as("ns"),
         sum(when($"event_type" === "purchase",
-          round($"value", 2).cast(DecimalType(12, 2)))).as("yd"))
+          round($"value", 2).cast(dec12_2))).as("yd"))
       .withColumn("s", $"n_views" + lit(2L) * $"n_clicks")
     // treatment is DATA-RELATIVE (above-mean signup intensity, the exact
     // integer predicate ns·n > Σns — on this fixture every user has
@@ -710,7 +705,7 @@ object DecisionOps extends QueryPack {
       .localCheckpoint() // treated arm, control grain, and the counts
     val cg = users.filter($"treated" === 0)
       .groupBy($"p".as("pc"))
-      .agg(round(sum(round($"y", 6).cast(dec9)).cast("double")
+      .agg(round(sum(round($"y", 6).cast(dec28_9)).cast("double")
         / count(lit(1)), 6).as("yb"))
       .withColumn("b0", floor($"pc" * 20).cast("long"))
       .select(explode(array($"b0" - 1, $"b0", $"b0" + 1)).as("band"),
@@ -749,9 +744,9 @@ object DecisionOps extends QueryPack {
         count(lit(1)).as("n_treated"),
         sum(when($"ym".isNotNull, 1L).otherwise(0L)).as("n_matched"),
         sum(when($"ym".isNotNull,
-          round($"y" - $"ym", 6).cast(dec9))).as("sdiff"),
+          round($"y" - $"ym", 6).cast(dec28_9))).as("sdiff"),
         sum(when($"ym".isNotNull,
-          round($"pd", 6).cast(dec9))).as("spd"))
+          round($"pd", 6).cast(dec28_9))).as("spd"))
       .crossJoin(broadcast(nctl))
       .select($"n_treated", $"n_control", $"n_matched",
         round($"sdiff".cast("double") / $"n_matched", 6).as("att"),

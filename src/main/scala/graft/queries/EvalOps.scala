@@ -1,10 +1,10 @@
 package graft.queries
 
+import graft.Decimals._
 import graft.Tables
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.DecimalType
 
 /** Model-evaluation pack — the procedures that turn q_ridge / q_logreg
   * style in-plan probes into TRUSTED production components: distribution-
@@ -21,9 +21,6 @@ import org.apache.spark.sql.types.DecimalType
   * 60-bit hash rank both engines share — never RAND(). */
 object EvalOps extends QueryPack {
 
-  private val dec2 = DecimalType(18, 2)
-  private val dec4 = DecimalType(38, 4)
-
   /** Portable 60-bit md5 hash of a salted key (SURVEY §7.4). */
   private def h60(salt: String, key: Column): Column =
     conv(substring(md5(concat(lit(salt), key.cast("string"))), 1, 15),
@@ -38,7 +35,7 @@ object EvalOps extends QueryPack {
         sum(floor($"l_quantity").cast("long")).as("x2"))
       .join(Tables.df(spark, sfDir, "orders")
         .select($"o_orderkey".as("l_orderkey"),
-          $"o_totalprice".cast(dec2).as("yv")), "l_orderkey")
+          $"o_totalprice".cast(dec18_2).as("yv")), "l_orderkey")
   }
 
   private val ridgePerSql =
@@ -204,7 +201,7 @@ object EvalOps extends QueryPack {
     def mse(x1c: Column, x2c: Column): Column = {
       val err = ($"yv".cast("double") - ($"b0"
         + $"w1" * x1c.cast("double") + $"w2" * x2c.cast("double")))
-      sum(round(err * err, 4).cast(dec4))
+      sum(round(err * err, 4).cast(dec38_4))
     }
     val agg = joined.agg(count(lit(1)).as("n"),
       mse($"x1", $"x2").as("m_base"),
@@ -239,7 +236,7 @@ object EvalOps extends QueryPack {
   def qImpute(spark: SparkSession, sfDir: String): DataFrame = {
     import spark.implicits._
     val ev = Tables.df(spark, sfDir, "events")
-      .select($"event_id", $"event_type", round($"value", 2).cast(dec2)
+      .select($"event_id", $"event_type", round($"value", 2).cast(dec18_2)
         .as("v"))
       .withColumn("masked", pmod(h60("imp:", $"event_id"), lit(5)) === 0)
       .localCheckpoint() // median pass + scoring pass
@@ -258,8 +255,8 @@ object EvalOps extends QueryPack {
       .agg(count(lit(1)).as("n_masked"),
         min($"fill").as("fill"),
         sum(round(($"v".cast("double") - $"fill")
-          * ($"v".cast("double") - $"fill"), 4).cast(dec4)).as("se"),
-        sum(round(abs($"v".cast("double") - $"fill"), 4).cast(dec4))
+          * ($"v".cast("double") - $"fill"), 4).cast(dec38_4)).as("se"),
+        sum(round(abs($"v".cast("double") - $"fill"), 4).cast(dec38_4))
           .as("ae"),
         sum($"v").as("sv"))
       .select($"event_type", $"n_masked",
@@ -294,7 +291,7 @@ object EvalOps extends QueryPack {
     val per = Tables.df(spark, sfDir, "lineitem")
       .groupBy($"l_orderkey").agg(count(lit(1)).as("x1"),
         sum(floor($"l_quantity").cast("long")).as("x2"),
-        sum(round($"l_extendedprice", 2).cast(dec2)).as("yv"))
+        sum(round($"l_extendedprice", 2).cast(dec18_2)).as("yv"))
       .withColumn("bkt", pmod(h60("ysb:", $"l_orderkey"), lit(64)))
       .withColumn("rn", row_number().over(
         Window.partitionBy($"bkt")
@@ -310,12 +307,12 @@ object EvalOps extends QueryPack {
     val wT = ridgeFit(joined)
     val wS = ridgeFit(joined.select($"x1", $"x2", $"yscr".as("yv")))
     val mom = joined.agg(count(lit(1)).as("n"), sum($"yv").as("sy"),
-      sum(round($"yv".cast("double") * $"yv", 4).cast(dec4)).as("sy2"))
+      sum(round($"yv".cast("double") * $"yv", 4).cast(dec38_4)).as("sy2"))
     def ssr(w: DataFrame, y: Column): Column = {
       val e = (y.cast("double") - (col("b0")
         + col("w1") * col("x1").cast("double")
         + col("w2") * col("x2").cast("double")))
-      sum(round(e * e, 4).cast(dec4))
+      sum(round(e * e, 4).cast(dec38_4))
     }
     val ssrT = joined.crossJoin(broadcast(wT))
       .agg(ssr(wT, $"yv").as("ssr_t"))

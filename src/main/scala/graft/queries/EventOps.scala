@@ -1,11 +1,11 @@
 package graft.queries
 
+import graft.Decimals._
 import graft.Tables
 import graft.streaming.Streams
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.DecimalType
 
 /** Batch twins of the streaming transforms (SURVEY.md §2.10): the same
   * Streams.* code paths, run over the static events table so the DuckDB
@@ -62,7 +62,6 @@ object EventOps extends QueryPack {
   def qResample(spark: SparkSession, sfDir: String): DataFrame = {
     import spark.implicits._
     import org.apache.spark.sql.expressions.Window
-    import org.apache.spark.sql.types.DecimalType
     val agg = Tables.df(spark, sfDir, "events")
       .filter($"user_id" % 50 === 0)
       // ts is TIMESTAMP_NTZ (no direct long cast); routing through LTZ in
@@ -72,7 +71,7 @@ object EventOps extends QueryPack {
           .as("e"), $"value")
       .groupBy($"user_id", $"e")
       .agg(count(lit(1)).cast("int").as("n"),
-        sum($"value".cast(DecimalType(18, 2))).as("sv"))
+        sum($"value".cast(dec18_2)).as("sv"))
     val spine = agg.groupBy($"user_id")
       .agg(min($"e").as("e0"), max($"e").as("e1"))
       .select($"user_id",
@@ -135,7 +134,7 @@ object EventOps extends QueryPack {
       .rowsBetween(org.apache.spark.sql.expressions.Window.unboundedPreceding, -1)
     Tables.df(spark, sfDir, "events")
       .select($"event_id", $"event_type", $"ts",
-        round($"value", 6).cast(org.apache.spark.sql.types.DecimalType(18, 6))
+        round($"value", 6).cast(dec18_6)
           .as("v"))
       .withColumn("np", count(lit(1)).over(w))
       .withColumn("sx", sum($"v").over(w))
@@ -409,11 +408,10 @@ object EventOps extends QueryPack {
           - unix_micros($"prev".cast("timestamp"))).as("g"))
     // g² would overflow BIGINT at ~day-scale microsecond gaps — the
     // squares multiply and sum as DECIMAL(38,0), exact at any horizon
-    val dec38 = DecimalType(38, 0)
     val s = gaps.groupBy($"event_type").agg(
       count(lit(1)).as("n_gaps"),
       sum($"g").as("sg"),
-      sum($"g".cast(dec38) * $"g".cast(dec38)).as("sgg"))
+      sum($"g".cast(dec38_0) * $"g".cast(dec38_0)).as("sgg"))
     val nd = $"n_gaps".cast("double")
     val mean = $"sg".cast("double") / nd
     val varg = $"sgg".cast("double") / nd - mean * mean
@@ -569,7 +567,6 @@ object EventOps extends QueryPack {
     * exact and order-independent in both engines. */
   def qOfflineEval(spark: SparkSession, sfDir: String): DataFrame = {
     import spark.implicits._
-    val dec6 = DecimalType(18, 6)
     val ev = Tables.df(spark, sfDir, "events")
       .select($"event_id",
         // integer floor-div on both sides (DuckDB's double→INT cast
@@ -577,7 +574,7 @@ object EventOps extends QueryPack {
         expr("CAST(get_json_object(props, '$.k') AS INT) div 25")
           .cast("int").as("ctx"),
         $"event_type".as("action"),
-        $"value".cast(DecimalType(18, 2)).as("r"))
+        $"value".cast(dec18_2).as("r"))
     val learn = ev.filter($"event_id" % 2 === 0)
     val eval_ = ev.filter($"event_id" % 2 === 1)
     val pi = learn.groupBy($"ctx", $"action")
@@ -600,8 +597,8 @@ object EventOps extends QueryPack {
       .agg(count(lit(1)).as("n_eval"),
         sum(when($"matched", 1L).otherwise(0L)).as("n_match"),
         sum($"r").as("logged_sum"),
-        sum(round($"r".cast("double") * $"w", 6).cast(dec6)).as("ips_sum"),
-        sum(round($"w", 6).cast(dec6)).as("w_sum"))
+        sum(round($"r".cast("double") * $"w", 6).cast(dec18_6)).as("ips_sum"),
+        sum(round($"w", 6).cast(dec18_6)).as("w_sum"))
       .select($"ctx", $"pi_action", $"n_eval", $"n_match",
         round($"logged_sum".cast("double") / $"n_eval", 6).as("logged_avg"),
         round($"ips_sum".cast("double") / $"n_eval", 6).as("ips_value"),
@@ -650,7 +647,6 @@ object EventOps extends QueryPack {
     * into exact decimal sums. */
   def qCoxScore(spark: SparkSession, sfDir: String): DataFrame = {
     import spark.implicits._
-    val dec9 = DecimalType(18, 9)
     val users = Tables.df(spark, sfDir, "events")
       .groupBy($"user_id")
       .agg(min($"ts").as("first_ts"),
@@ -681,10 +677,10 @@ object EventOps extends QueryPack {
       .filter($"d" > 0)
       .select(
         round($"dx" - $"d" * ($"s1".cast("double") / $"s0"), 9)
-          .cast(dec9).as("u_t"),
+          .cast(dec18_9).as("u_t"),
         round($"d" * ($"s1".cast("double") / $"s0")
           * (lit(1.0) - $"s1".cast("double") / $"s0"), 9)
-          .cast(dec9).as("i_t"))
+          .cast(dec18_9).as("i_t"))
     // n_events = Σd over the day grain; under complete observation (the
     // stated estimator assumption above) it EQUALS n_users, but deriving
     // it from the death counts keeps the two columns meaning what they
@@ -770,7 +766,6 @@ object EventOps extends QueryPack {
     * and V terms round to DECIMAL(18,9) before their exact sums. */
   def qLogrank(spark: SparkSession, sfDir: String): DataFrame = {
     import spark.implicits._
-    val dec9 = DecimalType(18, 9)
     val ev = Tables.df(spark, sfDir, "events")
     val users = ev.groupBy($"user_id")
       .agg(min($"ts").as("first_ts"), max($"ts").as("last_ts"),
@@ -797,12 +792,12 @@ object EventOps extends QueryPack {
     val r = $"n1_risk".cast("double") / $"n_risk"
     val terms = risks.select($"d_1",
       round($"d_all".cast("double") * $"n1_risk" / $"n_risk", 9)
-        .cast(dec9).as("e1"),
+        .cast(dec18_9).as("e1"),
       when($"n_risk" > 1,
         round($"d_all".cast("double") * r * (lit(1.0) - r)
           * (($"n_risk" - $"d_all").cast("double")
-            / ($"n_risk" - lit(1L))), 9).cast(dec9))
-        .otherwise(lit(0).cast(dec9)).as("v"))
+            / ($"n_risk" - lit(1L))), 9).cast(dec18_9))
+        .otherwise(lit(0).cast(dec18_9)).as("v"))
     val s = terms.agg(count(lit(1)).as("n_times"),
       sum($"d_1").as("o1"), sum($"e1").as("e1"), sum($"v").as("v"))
     val z = when($"v" > 0,
@@ -823,7 +818,6 @@ object EventOps extends QueryPack {
   private def survivalBase(spark: SparkSession, sfDir: String)
       : DataFrame = {
     import spark.implicits._
-    val dec9 = DecimalType(18, 9)
     val ev = Tables.df(spark, sfDir, "events")
     val horizon = ev.agg(max($"ts").as("max_ts"))
     val users = ev.groupBy($"user_id")
@@ -846,8 +840,8 @@ object EventOps extends QueryPack {
       .withColumn("term",
         when($"d" < $"n_risk",
           round(log(lit(1.0) - $"d".cast("double") / $"n_risk"), 9)
-            .cast(dec9))
-          .otherwise(lit(null).cast(dec9)))
+            .cast(dec18_9))
+          .otherwise(lit(null).cast(dec18_9)))
       .withColumn("absorbed",
         max(($"d" === $"n_risk").cast("int")).over(wCum))
   }
@@ -855,12 +849,11 @@ object EventOps extends QueryPack {
   /** The survival column expression over [[survivalBase]]'s cumulative
     * window — one home for the curve arithmetic. */
   private def survivalCol: Column = {
-    val dec9 = DecimalType(18, 9)
     val wCum = Window.orderBy(col("t"))
       .rowsBetween(Window.unboundedPreceding, Window.currentRow)
     when(col("absorbed") === 1, 0.0)
       .otherwise(round(exp(
-        sum(coalesce(col("term"), lit(0).cast(dec9))).over(wCum)
+        sum(coalesce(col("term"), lit(0).cast(dec18_9))).over(wCum)
           .cast("double")), 6))
   }
 
@@ -885,7 +878,6 @@ object EventOps extends QueryPack {
     * run over the day-grain (calendar-bounded) curve relation. */
   def qKmCi(spark: SparkSession, sfDir: String): DataFrame = {
     import spark.implicits._
-    val dec12 = DecimalType(18, 12)
     val wCum = Window.orderBy($"t")
       .rowsBetween(Window.unboundedPreceding, Window.currentRow)
     val withGw = survivalBase(spark, sfDir)
@@ -893,10 +885,10 @@ object EventOps extends QueryPack {
         when($"d" < $"n_risk",
           round($"d".cast("double")
             / ($"n_risk".cast("double") * ($"n_risk" - $"d")), 12)
-            .cast(dec12))
-          .otherwise(lit(null).cast(dec12)))
+            .cast(dec18_12))
+          .otherwise(lit(null).cast(dec18_12)))
       .withColumn("gw",
-        sum(coalesce($"gwt", lit(0).cast(dec12))).over(wCum))
+        sum(coalesce($"gwt", lit(0).cast(dec18_12))).over(wCum))
       .withColumn("survival", survivalCol)
     val se = $"survival" * sqrt($"gw".cast("double"))
     withGw.select($"t", $"n_risk", $"d".as("d_churned"), $"survival",
@@ -917,14 +909,13 @@ object EventOps extends QueryPack {
     * oracle-checked upstream (q_survival, the purchase stream). */
   def qLtv(spark: SparkSession, sfDir: String): DataFrame = {
     import spark.implicits._
-    val dec6 = DecimalType(18, 6)
     val exp_ = survivalCurve(spark, sfDir)
-      .agg(sum($"survival".cast(dec6)).as("sd"),
+      .agg(sum($"survival".cast(dec18_6)).as("sd"),
         count(lit(1)).as("n_steps"))
       .select(round($"sd".cast("double"), 6).as("exp_days"), $"n_steps")
     val ev = Tables.df(spark, sfDir, "events")
     val rev = ev.filter($"event_type" === "purchase")
-      .agg(sum($"value".cast(DecimalType(18, 2))).as("v"))
+      .agg(sum($"value".cast(dec18_2)).as("v"))
     val ud = ev.select($"user_id", to_date($"ts").as("d")).distinct()
       .agg(count(lit(1)).as("user_days"))
     exp_.crossJoin(broadcast(rev)).crossJoin(broadcast(ud))
@@ -977,9 +968,6 @@ object EventOps extends QueryPack {
     * a #types-row relation into the scan. */
   def qReturns(spark: SparkSession, sfDir: String): DataFrame = {
     import spark.implicits._
-    val dec2 = DecimalType(18, 2)
-    val dec6 = DecimalType(18, 6)
-    val dec9 = DecimalType(18, 9)
     val w = Window.partitionBy($"user_id", $"d").orderBy($"ts", $"event_id")
     // suffix frame KEPT as [currentRow, unboundedFollowing] (r22,
     // measured): the q_knn_shapley descending-running-sum rewrite was
@@ -994,30 +982,30 @@ object EventOps extends QueryPack {
     val steps = Tables.df(spark, sfDir, "events")
       .select($"user_id", to_date($"ts").as("d"), $"ts", $"event_id",
         $"event_type",
-        when($"event_type" === "purchase", $"value".cast(dec2))
-          .otherwise(lit(0).cast(dec2)).as("r"))
+        when($"event_type" === "purchase", $"value".cast(dec18_2))
+          .otherwise(lit(0).cast(dec18_2)).as("r"))
       .withColumn("k", row_number().over(w) - 1)
-      .withColumn("gk", round(pow(lit(0.9), $"k"), 9).cast(dec9))
+      .withColumn("gk", round(pow(lit(0.9), $"k"), 9).cast(dec18_9))
       // ADVICE r10 #1: γ^k rounded to DECIMAL(18,9) is exactly 0 for
       // k >= 204 (0.9^204 < 0.5e-9), so suf/gk would divide by zero and
       // poison the per-type aggregates with Inf/NaN. Steps beyond the
       // representable discount horizon carry ~0 return mass by definition;
       // drop them (mirrored by the oracle's WHERE gk > 0). The episode-
       // length bound this query assumes is therefore k < 204 per user-day.
-      .filter($"gk" > lit(0).cast(dec9))
+      .filter($"gk" > lit(0).cast(dec18_9))
       .withColumn("suf", sum($"gk" * $"r").over(wSuf))
       .select($"event_type",
         round($"suf".cast("double") / $"gk".cast("double"), 6).as("g"))
     val base = steps.groupBy($"event_type")
       .agg(count(lit(1)).as("n_steps"),
-        round(sum($"g".cast(dec6)).cast("double") / count(lit(1)), 6)
+        round(sum($"g".cast(dec18_6)).cast("double") / count(lit(1)), 6)
           .as("baseline"))
     steps.join(broadcast(base), "event_type")
       .select($"event_type", $"n_steps", $"baseline",
         round($"g" - $"baseline", 6).as("adv"))
       .groupBy($"event_type", $"n_steps", $"baseline")
       .agg(min($"adv").as("min_adv"), max($"adv").as("max_adv"),
-        round(sum(abs($"adv").cast(dec6)).cast("double") / count(lit(1)), 6)
+        round(sum(abs($"adv").cast(dec18_6)).cast("double") / count(lit(1)), 6)
           .as("mean_abs_adv"))
       .orderBy($"event_type")
   }
@@ -1035,13 +1023,10 @@ object EventOps extends QueryPack {
     * q_returns' episodes. */
   def qAttributionU(spark: SparkSession, sfDir: String): DataFrame = {
     import spark.implicits._
-    val dec2 = DecimalType(18, 2)
-    val dec6 = DecimalType(18, 6)
-    val dec9 = DecimalType(18, 9)
     val ev = Tables.df(spark, sfDir, "events")
     val purchases = ev.filter($"event_type" === "purchase")
       .select($"user_id", to_date($"ts").as("d"), $"ts".as("p_ts"),
-        $"event_id".as("p_id"), $"value".cast(dec2).as("v"))
+        $"event_id".as("p_id"), $"value".cast(dec18_2).as("v"))
     val touches = ev.filter($"event_type".isin("view", "click"))
       .select($"user_id", to_date($"ts").as("d"), $"ts".as("t_ts"),
         $"event_id".as("t_id"), $"event_type".as("channel"))
@@ -1055,11 +1040,11 @@ object EventOps extends QueryPack {
         when($"n_t" === 1, lit(1.0))
           .when($"n_t" === 2, lit(0.5))
           .when($"k" === 1 || $"k" === $"n_t", lit(0.4))
-          .otherwise(lit(0.2) / ($"n_t" - 2)), 9).cast(dec9))
+          .otherwise(lit(0.2) / ($"n_t" - 2)), 9).cast(dec18_9))
       .select($"p_id", $"channel", $"v", $"credit")
     val attributed = credited.groupBy($"channel")
       .agg(count(lit(1)).as("n_events"),
-        sum(round(($"credit" * $"v").cast("double"), 6).cast(dec6))
+        sum(round(($"credit" * $"v").cast("double"), 6).cast(dec18_6))
           .as("cv"))
       .select($"channel", $"n_events",
         round($"cv".cast("double"), 6).as("value_credited"))
@@ -1134,7 +1119,6 @@ object EventOps extends QueryPack {
     * entropy terms round to DECIMAL(18,9) before the per-state sum. */
   def qMarkovChain(spark: SparkSession, sfDir: String): DataFrame = {
     import spark.implicits._
-    val dec9 = DecimalType(18, 9)
     val w = Window.partitionBy($"user_id").orderBy($"ts", $"event_id")
     val trans = Tables.df(spark, sfDir, "events")
       .select($"user_id", $"ts", $"event_id", $"event_type".as("cur"))
@@ -1148,7 +1132,7 @@ object EventOps extends QueryPack {
     val ent = withP
       .select($"cur",
         round(-($"n" / $"n_cur" * log($"n" / $"n_cur")), 9)
-          .cast(dec9).as("term"))
+          .cast(dec18_9).as("term"))
       .groupBy($"cur").agg(round(sum($"term").cast("double"), 6).as("h"))
     withP.join(broadcast(ent), "cur")
       .select($"cur", $"nxt", $"n", $"p", $"h".as("h_cur"))
@@ -1164,11 +1148,10 @@ object EventOps extends QueryPack {
     * day-arithmetic self-join on that tiny relation. */
   def qAutocorr(spark: SparkSession, sfDir: String): DataFrame = {
     import spark.implicits._
-    val dec9 = DecimalType(18, 9)
     val daily = Tables.df(spark, sfDir, "events")
       .filter($"event_type" === "purchase")
       .groupBy(to_date($"ts").as("d"))
-      .agg(sum($"value".cast(DecimalType(18, 2))).as("x"))
+      .agg(sum($"value".cast(dec18_2)).as("x"))
       .localCheckpoint() // day-thin; feeds moments + all 7 lag joins
     val mom = daily.agg(count(lit(1)).as("nd"),
       sum($"x").as("sx"))
@@ -1177,13 +1160,13 @@ object EventOps extends QueryPack {
         ($"x".cast("double") - $"sx".cast("double") / $"nd").as("e"))
       .localCheckpoint()
     val denom = dev
-      .select(round($"e" * $"e", 9).cast(dec9).as("t"))
+      .select(round($"e" * $"e", 9).cast(dec18_9).as("t"))
       .agg(sum($"t").as("den"))
     val lags = dev.select($"d", $"e")
       .join(dev.select($"d".as("d2"), $"e".as("e2")),
         datediff($"d", $"d2").between(1, 7))
       .select(datediff($"d", $"d2").as("lag"),
-        round($"e" * $"e2", 9).cast(dec9).as("t"))
+        round($"e" * $"e2", 9).cast(dec18_9).as("t"))
       .groupBy($"lag")
       .agg(count(lit(1)).as("n_pairs"), sum($"t").as("num"))
     lags.crossJoin(broadcast(denom))
@@ -1326,11 +1309,10 @@ object EventOps extends QueryPack {
     * before the exact sum. */
   private[graft] def driftPsi(spark: SparkSession): Column = {
     import spark.implicits._
-    val dec9 = DecimalType(18, 9)
     (1 to 10).map { i =>
       val p = (col(s"c$i") + 0.5) / ($"n" + 5)
       val r = (col(s"r$i") + 0.5) / ($"n_ref" + 5)
-      round((p - r) * log(p / r), 9).cast(dec9)
+      round((p - r) * log(p / r), 9).cast(dec18_9)
     }.reduce(_ + _).cast("double")
   }
 
@@ -1453,7 +1435,6 @@ object EventOps extends QueryPack {
     * is the per-user adjusted outcome's DECIMAL(18,9) pre-sum. */
   def qCuped(spark: SparkSession, sfDir: String): DataFrame = {
     import spark.implicits._
-    val dec9 = DecimalType(18, 9)
     val ev = Tables.df(spark, sfDir, "events")
     val mid = ev.agg(expr("(min(unix_micros(cast(ts as timestamp)))"
       + " + max(unix_micros(cast(ts as timestamp)))) div 2")
@@ -1489,19 +1470,19 @@ object EventOps extends QueryPack {
       .withColumn("ya_d",
         round($"y" - $"theta" * ($"pre" - $"pbar"), 9))
       .select($"arm_a", $"y", $"n", $"theta",
-        $"ya_d".cast(dec9).as("ya"),
+        $"ya_d".cast(dec18_9).as("ya"),
         // square in DOUBLE then round once: a decimal-decimal square
         // would tie-round differently across engines
-        round($"ya_d" * $"ya_d", 9).cast(dec9).as("ya2"))
+        round($"ya_d" * $"ya_d", 9).cast(dec18_9).as("ya2"))
     adj.groupBy($"n", $"theta")
       .agg(
         sum(when($"arm_a", 1L).otherwise(0L)).as("na"),
         sum(when(!$"arm_a", 1L).otherwise(0L)).as("nb"),
         sum(when($"arm_a", $"y").otherwise(0L)).as("ya_raw"),
         sum(when(!$"arm_a", $"y").otherwise(0L)).as("yb_raw"),
-        sum(when($"arm_a", $"ya").otherwise(lit(0).cast(dec9)))
+        sum(when($"arm_a", $"ya").otherwise(lit(0).cast(dec18_9)))
           .as("ya_adj"),
-        sum(when(!$"arm_a", $"ya").otherwise(lit(0).cast(dec9)))
+        sum(when(!$"arm_a", $"ya").otherwise(lit(0).cast(dec18_9)))
           .as("yb_adj"),
         sum($"y" * $"y").as("syy"),
         sum($"ya2").as("syy_adj"),

@@ -1,18 +1,16 @@
 package graft.queries
 
+import graft.Decimals._
 import graft.Tables
 import graft.operators.RangeJoin
 import graft.plans.{AsOfJoinPlan, AsOfJoinStrategy}
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.DecimalType
 
 /** Second-tier function coverage (substring_index / find_in_set / overlay /
   * bit ops / trig), the bucketed interval join, and the NATIVE as-of join
   * exec run inside the correctness gate. */
 object FnExtra extends QueryPack {
-
-  private def dec(c: Column): Column = c.cast(DecimalType(18, 2))
 
   def qFnExtra(spark: SparkSession, sfDir: String): DataFrame = {
     import spark.implicits._
@@ -92,7 +90,7 @@ object FnExtra extends QueryPack {
       "start_ts", "end_ts", bucketSecs = 900L)
       .groupBy($"incident_id")
       .agg(count(lit(1)).as("n_purchases"),
-        sum(dec($"value")).cast("double").as("sum_value"))
+        sum(money($"value")).cast("double").as("sum_value"))
       .orderBy($"incident_id")
   }
 

@@ -1,11 +1,11 @@
 package graft.queries
 
+import graft.Decimals._
 import graft.Tables
 import graft.functions.TextFunctions
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.DecimalType
 
 /** Corpus-governance operators — the planning reports a multi-source
   * training-data program runs BEFORE committing to an expensive pipeline:
@@ -317,7 +317,6 @@ object GovernOps extends QueryPack {
     * equi-join fanning out S² per token — never a doc-level join. */
   def qKlSources(spark: SparkSession, sfDir: String): DataFrame = {
     import spark.implicits._
-    val dec9 = org.apache.spark.sql.types.DecimalType(18, 9)
     val toks = Tables.df(spark, sfDir, "documents")
       .select($"source", explode(TextFunctions.tokens($"text")).as("tok"))
     val counts = toks.groupBy($"source", $"tok")
@@ -336,7 +335,7 @@ object GovernOps extends QueryPack {
     a.join(b, "tok")
       .filter($"src1" =!= $"src2")
       .select($"src1", $"src2",
-        round($"p1" * log($"p1" / $"p2"), 9).cast(dec9).as("term"))
+        round($"p1" * log($"p1" / $"p2"), 9).cast(dec18_9).as("term"))
       .groupBy($"src1", $"src2")
       .agg(sum($"term").cast("double").as("kl"))
       .orderBy($"src1", $"src2")
@@ -476,7 +475,6 @@ object GovernOps extends QueryPack {
     * passes (train counts, score join) + a doc-thin rank window. */
   def qMiaAudit(spark: SparkSession, sfDir: String): DataFrame = {
     import spark.implicits._
-    val dec6 = DecimalType(18, 6)
     val toks = Tables.df(spark, sfDir, "documents")
       .select($"doc_id", ($"doc_id" % 2 === 0).as("member"),
         explode(graft.functions.TextFunctions.tokens($"text")).as("tok"))
@@ -489,7 +487,7 @@ object GovernOps extends QueryPack {
       .crossJoin(broadcast(mTot))
       .select($"doc_id", $"member",
         round(log((coalesce($"cnt", lit(0L)) + 1)
-          / ($"n_m" + $"v_m")), 6).cast(dec6).as("lp"))
+          / ($"n_m" + $"v_m")), 6).cast(dec18_6).as("lp"))
       .groupBy($"doc_id", $"member")
       .agg(count(lit(1)).as("n_toks"), sum($"lp").as("slp"))
       .select($"member",
@@ -532,10 +530,9 @@ object GovernOps extends QueryPack {
     * decimal sums, each fraction divides once. */
   def qRetentionSweep(spark: SparkSession, sfDir: String): DataFrame = {
     import spark.implicits._
-    val dec6 = DecimalType(18, 6)
     val ev = Tables.df(spark, sfDir, "events")
       .select($"event_type", to_date($"ts").as("day"),
-        round($"value", 6).cast(dec6).as("v"))
+        round($"value", 6).cast(dec18_6).as("v"))
     val anchor = ev.agg(max($"day").as("anchor"))
     val spine = Seq(30, 60, 90).toDF("policy_days")
     ev.crossJoin(broadcast(anchor)).crossJoin(broadcast(spine))
@@ -548,7 +545,7 @@ object GovernOps extends QueryPack {
       .select($"event_type", $"policy_days", $"n_rows", $"rows_dropped",
         round($"rows_dropped".cast("double") / $"n_rows", 6)
           .as("drop_frac"),
-        round(coalesce($"value_dropped", lit(0).cast(dec6))
+        round(coalesce($"value_dropped", lit(0).cast(dec18_6))
           .cast("double"), 2).as("value_dropped"),
         $"oldest_kept_day")
       .orderBy($"event_type", $"policy_days")
@@ -678,7 +675,7 @@ object GovernOps extends QueryPack {
       .localCheckpoint() // harmonic pass + the adjust window
     val cm = ranked
       .select(round(lit(1.0) / $"rk", 12)
-        .cast(DecimalType(28, 12)).as("t"))
+        .cast(dec28_12).as("t"))
       .agg(sum($"t").cast("double").as("cm"))
     val wCumMin = Window.orderBy($"rk".desc)
       .rowsBetween(Window.unboundedPreceding, Window.currentRow)
@@ -705,7 +702,6 @@ object GovernOps extends QueryPack {
     * every later stage re-aggregates cells, never rows. */
   def qLdiversity(spark: SparkSession, sfDir: String): DataFrame = {
     import spark.implicits._
-    val dec9 = DecimalType(18, 9)
     val cells = Tables.df(spark, sfDir, "customer")
       .select($"c_mktsegment".as("seg"), $"c_nationkey".as("nat"),
         floor($"c_acctbal" / 1000).as("sv"))
@@ -717,7 +713,7 @@ object GovernOps extends QueryPack {
         Seq("seg", "nat"))
       .select($"seg", $"nat",
         round(-($"c" / $"n_rows" * log($"c" / $"n_rows")), 9)
-          .cast(dec9).as("term"))
+          .cast(dec18_9).as("term"))
       .groupBy($"seg", $"nat").agg(sum($"term").as("h"))
     cls.join(ent, Seq("seg", "nat"))
       .select($"seg", $"nat", $"n_rows", $"distinct_l",
@@ -884,7 +880,7 @@ object GovernOps extends QueryPack {
     val eps = 0.5
     val bySrc = Tables.df(spark, sfDir, "documents")
       .groupBy($"source").agg(count(lit(1)).as("n"),
-        sum(least($"n_chars".cast("double"), lit(cap)).cast(dec2))
+        sum(least($"n_chars".cast("double"), lit(cap)).cast(dec18_2))
           .as("s"))
     def lap(tag: String, scale: Double): Column = {
       val u = (conv(substring(md5(concat(lit(s"dpm:$tag:"), $"source")),
@@ -905,8 +901,6 @@ object GovernOps extends QueryPack {
           / ($"s".cast("double") / $"n"), 6).as("rel_err"))
       .orderBy($"source")
   }
-
-  private val dec2 = org.apache.spark.sql.types.DecimalType(18, 2)
 
   // ---- q_dp_histogram ----------------------------------------------------
   /** Differentially-private histogram release (the workhorse DP query —
@@ -935,7 +929,7 @@ object GovernOps extends QueryPack {
       .withColumn("released", greatest($"n" + $"lap", lit(0.0)))
       .localCheckpoint() // feeds the renormalizer + the output
     val tot = noisy.agg(sum($"n").as("n_tot"),
-      sum($"released".cast(DecimalType(18, 6))).as("r_tot"))
+      sum($"released".cast(dec18_6)).as("r_tot"))
     noisy.crossJoin(broadcast(tot))
       .select($"bin", $"n",
         round($"n" + $"lap", 2).as("noisy"),
@@ -965,7 +959,6 @@ object GovernOps extends QueryPack {
     * broadcast cross join, one bin-ordered window per class. */
   def qTcloseness(spark: SparkSession, sfDir: String): DataFrame = {
     import spark.implicits._
-    val dec38 = DecimalType(38, 0)
     val rows = Tables.df(spark, sfDir, "customer")
       .select($"c_mktsegment".as("seg"), $"c_nationkey".as("nat"),
         floor($"c_acctbal" / 1000).as("sv"))
@@ -983,7 +976,7 @@ object GovernOps extends QueryPack {
       .rowsBetween(Window.unboundedPreceding, Window.currentRow)
     grid
       .withColumn("num",
-        ($"c".cast(dec38) * $"big_n" - $"g".cast(dec38) * $"n"))
+        ($"c".cast(dec38_0) * $"big_n" - $"g".cast(dec38_0) * $"n"))
       .withColumn("cum", sum($"num").over(wCum))
       .groupBy($"seg", $"nat", $"n", $"big_n", $"m")
       .agg(sum(abs($"cum")).as("sabs"))
@@ -1014,9 +1007,9 @@ object GovernOps extends QueryPack {
     val eps = 1.0
     val users = Tables.df(spark, sfDir, "events")
       .filter($"event_type" === "purchase")
-      .select($"user_id", round($"value", 2).cast(dec2).as("vr"))
+      .select($"user_id", round($"value", 2).cast(dec18_2).as("vr"))
       .groupBy($"user_id")
-      .agg(least(sum($"vr"), lit(5000.0).cast(dec2)).as("x"))
+      .agg(least(sum($"vr"), lit(5000.0).cast(dec18_2)).as("x"))
     val cnt = users.groupBy(least(floor($"x" / 100), lit(49L)).as("b"))
       .agg(count(lit(1)).as("c"))
     val bins = spark.range(0, 50).select($"id".as("b"))

@@ -1,10 +1,10 @@
 package graft.queries
 
+import graft.Decimals._
 import graft.Tables
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.DecimalType
 
 /** Iterative graph analytics as relational plans. Companion to
   * [[graft.operators.Components]]: where connected components converges by
@@ -130,7 +130,7 @@ object GraphOps extends QueryPack {
     for (_ <- 1 to iters) {
       val contrib = edges.join(pr, edges("u") === pr("node"))
         .select($"v".as("node"),
-          round($"pr" / $"deg", 12).cast(DecimalType(28, 14)).as("w"))
+          round($"pr" / $"deg", 12).cast(dec28_14).as("w"))
         .groupBy($"node").agg(sum($"w").as("sw"))
       pr = pr.select($"node", $"deg", $"n")
         .join(contrib, Seq("node"), "left")
@@ -232,7 +232,6 @@ object GraphOps extends QueryPack {
     * exact integer floor-division. */
   def qClusteringCoeff(spark: SparkSession, sfDir: String): DataFrame = {
     import spark.implicits._
-    val dec9 = org.apache.spark.sql.types.DecimalType(20, 9)
     val (deg, triCnt) = triangleParts(spark, sfDir)
     val per = deg.join(triCnt, Seq("node"), "left")
       .select($"d", coalesce($"tri_cnt", lit(0L)).as("t"))
@@ -242,7 +241,7 @@ object GraphOps extends QueryPack {
         sum($"t").as("ti"),
         sum(round(when($"d" >= 2,
             lit(2.0) * $"t" / ($"d" * ($"d" - 1))).otherwise(0.0), 9)
-          .cast(dec9)).as("s_cc"))
+          .cast(dec20_9)).as("s_cc"))
       .select($"n_nodes", $"n_wedges",
         expr("ti div 3").as("n_triangles"),
         when($"n_wedges" > 0,
@@ -418,7 +417,6 @@ object GraphOps extends QueryPack {
     * graph. Output: top-15 authorities and top-15 hubs. */
   def qHits(spark: SparkSession, sfDir: String): DataFrame = {
     import spark.implicits._
-    val dec9 = DecimalType(18, 9)
     val li = Tables.df(spark, sfDir, "lineitem")
       .select($"l_orderkey", $"l_suppkey")
     val ords = Tables.df(spark, sfDir, "orders")
@@ -438,10 +436,10 @@ object GraphOps extends QueryPack {
       in.crossJoin(broadcast(tot))
         .select(in.columns.filter(_ != col0).map(col) :+
           round(col(col0).cast("double") / $"tot".cast("double"), 9)
-            .cast(dec9).as(col0): _*)
+            .cast(dec18_9).as(col0): _*)
     }
     val a1 = l1norm(edges.groupBy($"s")
-      .agg(count(lit(1)).cast(dec9).as("a")), "a")
+      .agg(count(lit(1)).cast(dec18_9).as("a")), "a")
     val h1 = l1norm(edges.join(a1, "s").groupBy($"c")
       .agg(sum($"a").as("h")), "h")
     val a2 = l1norm(edges.join(h1, "c").groupBy($"s")
@@ -581,7 +579,6 @@ object GraphOps extends QueryPack {
     * with full tie-breaks. */
   def qAdamicAdar(spark: SparkSession, sfDir: String): DataFrame = {
     import spark.implicits._
-    val dec9 = DecimalType(18, 9)
     val li = Tables.df(spark, sfDir, "lineitem")
       .select($"l_orderkey", $"l_partkey")
     val ords = Tables.df(spark, sfDir, "orders")
@@ -592,8 +589,8 @@ object GraphOps extends QueryPack {
     val keep = cp.groupBy($"p").agg(count(lit(1)).as("pd"))
       .filter($"pd".between(2, 100))
       .select($"p",
-        round(lit(1.0) / log($"pd".cast("double")), 9).cast(dec9).as("aw"),
-        round(lit(1.0) / $"pd".cast("double"), 9).cast(dec9).as("rw"))
+        round(lit(1.0) / log($"pd".cast("double")), 9).cast(dec18_9).as("aw"),
+        round(lit(1.0) / $"pd".cast("double"), 9).cast(dec18_9).as("rw"))
     // keep is part-grain bounded (≤ |part|, hub-capped) — broadcast it so
     // the incidence never shuffles to build the weights join; the wedge
     // self-join is a shuffled-hash join (both sides are the same bounded
@@ -784,13 +781,12 @@ object GraphOps extends QueryPack {
     * closeness with the string-id tie-break (the pagerankTop rule). */
   def qCloseness(spark: SparkSession, sfDir: String): DataFrame = {
     import spark.implicits._
-    val dec9 = DecimalType(28, 9)
     val agg = landmarkDistances(spark, sfDir)
       .groupBy($"node")
       .agg(count(lit(1)).as("cov"), sum($"d").as("sum_d"),
         sum(when($"d" > 0,
-          round(lit(1.0) / $"d".cast("double"), 9).cast(dec9))
-          .otherwise(lit(BigDecimal("0").bigDecimal).cast(dec9)))
+          round(lit(1.0) / $"d".cast("double"), 9).cast(dec28_9))
+          .otherwise(lit(BigDecimal("0").bigDecimal).cast(dec28_9)))
           .as("hsum"))
       .filter($"cov" === 10)
     agg.select(
@@ -837,7 +833,6 @@ object GraphOps extends QueryPack {
     * distinct degree values, tiny at any corpus scale. */
   def qDegreeDist(spark: SparkSession, sfDir: String): DataFrame = {
     import spark.implicits._
-    val dec9 = DecimalType(18, 9)
     val deg = coPurchaseEdgesLong(spark, sfDir)
       .groupBy($"u").agg(count(lit(1)).as("d"))
       .localCheckpoint() // summary + histogram
@@ -845,8 +840,8 @@ object GraphOps extends QueryPack {
       min($"d").as("d_min"), max($"d").as("d_max"))
     val hist = deg.groupBy($"d").agg(count(lit(1)).as("nv"))
     val xy = hist.select(
-      round(log($"d"), 6).cast(dec9).as("x"),
-      round(log($"nv"), 6).cast(dec9).as("y"))
+      round(log($"d"), 6).cast(dec18_9).as("x"),
+      round(log($"nv"), 6).cast(dec18_9).as("y"))
     val s = xy.agg(count(lit(1)).as("n"),
       sum($"x").as("dsx"), sum($"y").as("dsy"),
       sum($"x" * $"y").as("dsxy"),

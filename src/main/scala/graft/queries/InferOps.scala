@@ -1,10 +1,10 @@
 package graft.queries
 
+import graft.Decimals._
 import graft.Tables
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.DecimalType
 
 /** Statistical-inference pack — the classical hypothesis tests an
   * experimentation platform runs beside the z-test family already in
@@ -30,15 +30,6 @@ import org.apache.spark.sql.types.DecimalType
   */
 object InferOps extends QueryPack {
 
-  private val dec2 = DecimalType(18, 2)
-  // 38,4 not 18,4 (ADVICE r11): the squared-moment columns need
-  // headroom — a per-user total >= 1e7 would overflow an (18,4) square,
-  // and Spark (non-ANSI) silently NULLs decimal overflow while DuckDB
-  // errors, so the engines would diverge rather than fail loudly
-  private val dec4 = DecimalType(38, 4)
-  private val dec6 = DecimalType(18, 6)
-  private val dec38 = DecimalType(38, 0)
-
   // ---- q_welch_ttest -----------------------------------------------------
   /** The per-arm exact moment relation (1 row: n/Σm/Σm² per parity arm)
     * over per-user total event value — shared by [[qWelchTtest]] and
@@ -47,10 +38,10 @@ object InferOps extends QueryPack {
       : DataFrame = {
     import spark.implicits._
     val users = Tables.df(spark, sfDir, "events")
-      .select($"user_id", round($"value", 2).cast(dec2).as("v"))
+      .select($"user_id", round($"value", 2).cast(dec18_2).as("v"))
       .groupBy($"user_id").agg(sum($"v").as("m"))
       .select(($"user_id" % 2 === 0).as("a"), $"m",
-        round($"m".cast("double") * $"m".cast("double"), 4).cast(dec4)
+        round($"m".cast("double") * $"m".cast("double"), 4).cast(dec38_4)
           .as("m2"))
     users.agg(
       sum(when($"a", 1L).otherwise(0L)).as("n1"),
@@ -192,8 +183,8 @@ object InferOps extends QueryPack {
       .select($"ng", $"n",
         round($"s2".cast("double")
           - $"s1".cast("double") * $"s1".cast("double") / $"ng", 6)
-          .cast(dec6).as("ssw_g"),
-        round($"ng".cast("double") * dm * dm, 6).cast(dec6).as("ssb_g"))
+          .cast(dec18_6).as("ssw_g"),
+        round($"ng".cast("double") * dm * dm, 6).cast(dec18_6).as("ssb_g"))
     terms.agg(count(lit(1)).as("k"), max($"n").as("n"),
       sum($"ssb_g").as("ssb"), sum($"ssw_g").as("ssw"))
   }
@@ -209,9 +200,9 @@ object InferOps extends QueryPack {
   def qAnova(spark: SparkSession, sfDir: String): DataFrame = {
     import spark.implicits._
     val ev = Tables.df(spark, sfDir, "events")
-      .select($"event_type", round($"value", 2).cast(dec2).as("v"))
+      .select($"event_type", round($"value", 2).cast(dec18_2).as("v"))
       .select($"event_type", $"v",
-        round($"v".cast("double") * $"v".cast("double"), 4).cast(dec4)
+        round($"v".cast("double") * $"v".cast("double"), 4).cast(dec38_4)
           .as("v2"))
     val g = ev.groupBy($"event_type").agg(
       count(lit(1)).as("ng"), sum($"v").as("s1"), sum($"v2").as("s2"))
@@ -241,7 +232,7 @@ object InferOps extends QueryPack {
     import spark.implicits._
     val cust = Tables.df(spark, sfDir, "orders")
       .groupBy($"o_custkey").agg(count(lit(1)).as("x"),
-        sum($"o_totalprice".cast(dec2)).as("y"))
+        sum($"o_totalprice".cast(dec18_2)).as("y"))
     def ranks(keyed: DataFrame, c: String, out: String): DataFrame =
       withRank2(keyed.groupBy(col(c)).agg(count(lit(1)).as("nv")), c)
         .select(col(c), $"r2".as(out))
@@ -252,7 +243,7 @@ object InferOps extends QueryPack {
     // so its size grows with |customers| — no hint, the planner picks
     // (ADVICE r11: a forced broadcast there risks driver OOM at scale)
     val ranked = cust.join(broadcast(rx), "x").join(ry, "y")
-      .select($"rx2".cast(dec38).as("rx"), $"ry2".cast(dec38).as("ry"))
+      .select($"rx2".cast(dec38_0).as("rx"), $"ry2".cast(dec38_0).as("ry"))
     val s = ranked.agg(count(lit(1)).as("n"),
       sum($"rx").as("sx"), sum($"ry").as("sy"),
       sum($"rx" * $"rx").as("sxx"), sum($"ry" * $"ry").as("syy"),
@@ -283,7 +274,7 @@ object InferOps extends QueryPack {
     import spark.implicits._
     val daily = Tables.df(spark, sfDir, "events")
       .groupBy(to_date($"ts").as("d"))
-      .agg(count(lit(1)).as("x"), sum(round($"value", 2).cast(dec2)).as("y"))
+      .agg(count(lit(1)).as("x"), sum(round($"value", 2).cast(dec18_2)).as("y"))
     val a = daily.select($"d".as("da"), $"x".as("xa"), $"y".as("ya"))
     val b = daily.select($"d".as("db"), $"x".as("xb"), $"y".as("yb"))
     val s = a.join(b, $"da" < $"db").agg(
@@ -381,14 +372,14 @@ object InferOps extends QueryPack {
   def qLevene(spark: SparkSession, sfDir: String): DataFrame = {
     import spark.implicits._
     val ev = Tables.df(spark, sfDir, "events")
-      .select($"event_type", round($"value", 2).cast(dec2).as("v"))
+      .select($"event_type", round($"value", 2).cast(dec18_2).as("v"))
     val med = ev.groupBy($"event_type")
       .agg(expr("percentile(CAST(v AS DOUBLE), 0.5)").as("med"))
     val z = ev.join(broadcast(med), "event_type")
       .select($"event_type",
-        round(abs($"v".cast("double") - $"med"), 6).cast(dec6).as("z"))
+        round(abs($"v".cast("double") - $"med"), 6).cast(dec18_6).as("z"))
       .select($"event_type", $"z",
-        round($"z".cast("double") * $"z".cast("double"), 4).cast(dec4)
+        round($"z".cast("double") * $"z".cast("double"), 4).cast(dec38_4)
           .as("z2"))
     val g = z.groupBy($"event_type").agg(
       count(lit(1)).as("ng"), sum($"z").as("s1"), sum($"z2").as("s2"))
@@ -455,15 +446,14 @@ object InferOps extends QueryPack {
     * to 9dp into decimal sums so engine summation order cannot leak. */
   def qAnova2(spark: SparkSession, sfDir: String): DataFrame = {
     import spark.implicits._
-    val dec9 = DecimalType(28, 9)
     val rows = Tables.df(spark, sfDir, "orders")
       .join(Tables.df(spark, sfDir, "customer")
         .select($"c_custkey".as("o_custkey"), $"c_mktsegment".as("b")),
         "o_custkey")
       .select($"o_orderpriority".as("a"), $"b",
-        $"o_totalprice".cast(dec2).as("v"))
+        $"o_totalprice".cast(dec18_2).as("v"))
       .select($"a", $"b", $"v",
-        round($"v".cast("double") * $"v".cast("double"), 4).cast(dec4)
+        round($"v".cast("double") * $"v".cast("double"), 4).cast(dec38_4)
           .as("v2"))
     val cells = rows.groupBy($"a", $"b")
       .agg(count(lit(1)).as("n"), sum($"v").as("s"), sum($"v2").as("s2"))
@@ -474,7 +464,7 @@ object InferOps extends QueryPack {
       df.groupBy(keys.map(col): _*)
         .agg(sum($"n").as("gn"), sum($"s").as("gs"))
         .select(round($"gs".cast("double") * $"gs".cast("double")
-          / $"gn", 9).cast(dec9).as("tm"))
+          / $"gn", 9).cast(dec28_9).as("tm"))
         .agg(sum($"tm").as("ss_raw"), count(lit(1)).as("k"))
     val sa = ssTerm(cells, Seq("a")).select($"ss_raw".as("ra"),
       $"k".as("ka"))
@@ -487,13 +477,12 @@ object InferOps extends QueryPack {
     // leaving ~1e11): they happen in EXACT DECIMAL — only the grand-mean
     // term passes through double (one 9dp-rounded conversion), so no
     // engine-specific decimal→double conversion can leak into the SS
-    val dec30 = DecimalType(30, 9)
     val gm9 = round($"ts".cast("double") * $"ts".cast("double")
-      / $"nn".cast("double"), 9).cast(dec30)
-    val sstD = $"ts2".cast(dec30) - gm9
-    val ssaD = $"ra".cast(dec30) - gm9
-    val ssbD = $"rb".cast(dec30) - gm9
-    val sscD = $"rc".cast(dec30) - gm9
+      / $"nn".cast("double"), 9).cast(dec30_9)
+    val sstD = $"ts2".cast(dec30_9) - gm9
+    val ssaD = $"ra".cast(dec30_9) - gm9
+    val ssbD = $"rb".cast(dec30_9) - gm9
+    val sscD = $"rc".cast(dec30_9) - gm9
     val ssabD = sscD - ssaD - ssbD
     val sswD = sstD - sscD
     val dfw = $"nn" - $"ncells"
@@ -540,10 +529,9 @@ object InferOps extends QueryPack {
     * relation. */
   def qAndersonDarling(spark: SparkSession, sfDir: String): DataFrame = {
     import spark.implicits._
-    val dec9 = DecimalType(28, 9)
     val days = SeriesOps.dailySeries(spark, sfDir)
     val mom = days.agg(count(lit(1)).as("n"), sum($"y").as("sy"),
-      sum(round($"y".cast("double") * $"y", 4).cast(dec4)).as("sy2"))
+      sum(round($"y".cast("double") * $"y", 4).cast(dec38_4)).as("sy2"))
     val z = days.crossJoin(broadcast(mom))
       .withColumn("mu", $"sy".cast("double") / $"n")
       .withColumn("sd", sqrt(($"sy2".cast("double")
@@ -557,9 +545,9 @@ object InferOps extends QueryPack {
       lit(1e-12))
     val terms = ranked.select($"n",
       round((lit(2) * $"i" - 1).cast("double")
-        * round(log(phi), 9), 9).cast(dec9).as("t1"),
+        * round(log(phi), 9), 9).cast(dec28_9).as("t1"),
       round((lit(2) * ($"n" - $"i") + 1).cast("double")
-        * round(log(lit(1.0) - phi), 9), 9).cast(dec9).as("t2"))
+        * round(log(lit(1.0) - phi), 9), 9).cast(dec28_9).as("t2"))
     terms.groupBy($"n").agg(sum($"t1").as("s1"), sum($"t2").as("s2"))
       .select($"n",
         round(-$"n".cast("double")

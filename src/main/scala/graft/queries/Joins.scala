@@ -1,9 +1,9 @@
 package graft.queries
 
+import graft.Decimals._
 import graft.Tables
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.DecimalType
 
 /** Join surface: every join strategy/type the deployed Hive engine offers
   * (reference execution loci: CommonJoinOperator / MapJoinOperator /
@@ -22,8 +22,6 @@ import org.apache.spark.sql.types.DecimalType
   */
 object Joins extends QueryPack {
 
-  private def dec(c: Column): Column = c.cast(DecimalType(18, 2))
-
   /** TPC-H Q3-shaped shipping priority: broadcast dim filter + two equi
     * joins + agg + top-k. */
   def q3Shipping(spark: SparkSession, sfDir: String): DataFrame = {
@@ -37,7 +35,7 @@ object Joins extends QueryPack {
     li.join(orders, $"l_orderkey" === $"o_orderkey")
       .join(broadcast(cust), $"o_custkey" === $"c_custkey")
       .groupBy($"l_orderkey", $"o_orderdate")
-      .agg(sum(dec($"l_extendedprice") * (lit(1) - dec($"l_discount")))
+      .agg(sum(money($"l_extendedprice") * (lit(1) - money($"l_discount")))
         .cast("double").as("revenue"))
       .orderBy($"revenue".desc, $"l_orderkey".asc)
       .limit(10)
@@ -62,7 +60,7 @@ object Joins extends QueryPack {
       .join(broadcast(nation), $"s_nationkey" === $"n_nationkey")
       .join(broadcast(region), $"n_regionkey" === $"r_regionkey")
       .groupBy($"n_name")
-      .agg(sum(dec($"l_extendedprice") * (lit(1) - dec($"l_discount")))
+      .agg(sum(money($"l_extendedprice") * (lit(1) - money($"l_discount")))
         .cast("double").as("revenue"))
       .orderBy($"revenue".desc, $"n_name".asc)
   }
@@ -99,7 +97,7 @@ object Joins extends QueryPack {
       .join(orders, $"c_custkey" === $"o_custkey", "left")
       .groupBy($"c_custkey")
       .agg(count($"o_orderkey").as("n_orders"),
-        coalesce(sum(dec($"o_totalprice")).cast("double"), lit(0.0))
+        coalesce(sum(money($"o_totalprice")).cast("double"), lit(0.0))
           .as("total_spend"))
       .orderBy($"c_custkey")
   }

@@ -1,11 +1,11 @@
 package graft.queries
 
+import graft.Decimals._
 import graft.Tables
 import graft.functions.TextFunctions
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.DecimalType
 
 /** Learned models expressed as relational plans — the "train a cheap model
   * on the corpus, score every doc with it" family of data-curation steps
@@ -32,7 +32,6 @@ object LearnOps extends QueryPack {
     * smoothing floor, and argmaxes per doc with a window rank. */
   def qNbLangClassify(spark: SparkSession, sfDir: String): DataFrame = {
     import spark.implicits._
-    val dec6 = DecimalType(18, 6)
     val docs = Tables.df(spark, sfDir, "documents")
     // deliberately NOT cached: the explode is cheaper to recompute from
     // the pruned parquet scan than an InMemoryRelation is to build+scan
@@ -51,7 +50,7 @@ object LearnOps extends QueryPack {
     val priors = docs.groupBy($"lang".as("c"))
       .agg(count(lit(1)).as("n_c"))
       .crossJoin(broadcast(docs.agg(count(lit(1)).as("n_docs"))))
-      .select($"c", round(log($"n_c" / $"n_docs"), 6).cast(dec6).as("lp0"))
+      .select($"c", round(log($"n_c" / $"n_docs"), 6).cast(dec18_6).as("lp0"))
     val classTok = toks.groupBy($"lang".as("c"), $"tok")
       .agg(count(lit(1)).as("cnt"))
     // totals and vocabulary re-aggregate the (class, token) counts —
@@ -67,7 +66,7 @@ object LearnOps extends QueryPack {
       .crossJoin(broadcast(vocab))
       .select($"doc_id", $"c",
         round(log((coalesce($"cnt", lit(0L)) + 1) / ($"n_toks_c" + $"v")), 6)
-          .cast(dec6).as("lp"))
+          .cast(dec18_6).as("lp"))
       .groupBy($"doc_id", $"c")
       .agg(sum($"lp").as("slp"))
       .join(broadcast(priors), "c")
@@ -102,7 +101,6 @@ object LearnOps extends QueryPack {
     * carry identical doubles into round two. */
   def qBradleyTerry(spark: SparkSession, sfDir: String): DataFrame = {
     import spark.implicits._
-    val dec9 = DecimalType(18, 9)
     val li = Tables.df(spark, sfDir, "lineitem")
       .select($"l_orderkey", $"l_partkey", $"l_quantity")
     val pairs = li.as("a").join(li.as("b"),
@@ -127,7 +125,7 @@ object LearnOps extends QueryPack {
     val den = sym
       .join(s1.select($"u", $"s".as("su")), "u")
       .join(s1.select($"u".as("v"), $"s".as("sv")), "v")
-      .select($"u", round($"n" / ($"su" + $"sv"), 9).cast(dec9).as("term"))
+      .select($"u", round($"n" / ($"su" + $"sv"), 9).cast(dec18_9).as("term"))
       .groupBy($"u").agg(sum($"term").as("den"))
     wins.join(s1.select($"u", $"s".as("s_1")), "u")
       .join(den, "u")
@@ -167,20 +165,18 @@ object LearnOps extends QueryPack {
     * scored pass → (source × ≤10 bins)-thin relation → source-thin. */
   def qGroupEce(spark: SparkSession, sfDir: String): DataFrame = {
     import spark.implicits._
-    val dec6 = DecimalType(18, 6)
-    val dec9 = DecimalType(18, 9)
     val bins = scoredDocs(spark, sfDir)
       .select($"source", $"y", $"p",
         least(floor($"p" * 10), lit(9)).cast("int").as("bin"))
       .groupBy($"source", $"bin")
       .agg(count(lit(1)).as("n"), sum($"y").as("pos"),
-        sum($"p".cast(dec6)).as("psum"))
+        sum($"p".cast(dec18_6)).as("psum"))
       .select($"source", $"n",
         round(abs(round($"pos".cast("double") / $"n", 6)
           - round($"psum".cast("double") / $"n", 6)), 6).as("gap"))
     bins.groupBy($"source")
       .agg(sum($"n").as("n_docs"),
-        sum(round($"gap" * $"n", 9).cast(dec9)).as("wsum"),
+        sum(round($"gap" * $"n", 9).cast(dec18_9)).as("wsum"),
         max($"gap").as("max_bin_gap"))
       .select($"source", $"n_docs",
         round($"wsum".cast("double") / $"n_docs", 6).as("ece"),
@@ -239,7 +235,7 @@ object LearnOps extends QueryPack {
         least(floor($"p" * 10), lit(9)).cast("int").as("bin"))
       .groupBy($"bin")
       .agg(count(lit(1)).as("n"), sum($"y").as("pos"),
-        sum($"p".cast(DecimalType(18, 6))).as("psum"))
+        sum($"p".cast(dec18_6)).as("psum"))
     val tot = bins.agg(sum($"n").as("n_tot"))
     bins.crossJoin(broadcast(tot))
       .select($"bin", $"n",
@@ -327,7 +323,6 @@ object LearnOps extends QueryPack {
     * by. The cumulative window runs on the ≤10-row decile relation. */
   def qGains(spark: SparkSession, sfDir: String): DataFrame = {
     import spark.implicits._
-    val dec6 = DecimalType(18, 6)
     val users = Tables.df(spark, sfDir, "events")
       .groupBy($"user_id")
       .agg(count(lit(1)).as("n_ev"),
@@ -407,7 +402,6 @@ object LearnOps extends QueryPack {
     * means. Reports coefficients and the explained-variance fraction. */
   def qRidge(spark: SparkSession, sfDir: String): DataFrame = {
     import spark.implicits._
-    val dec2 = DecimalType(18, 2)
     val per = Tables.df(spark, sfDir, "lineitem")
       .groupBy($"l_orderkey").agg(count(lit(1)).as("x1"),
         // floor() on BOTH engines: Spark's long cast truncates while
@@ -416,7 +410,7 @@ object LearnOps extends QueryPack {
         sum(floor($"l_quantity").cast("long")).as("x2"))
       .join(Tables.df(spark, sfDir, "orders")
         .select($"o_orderkey".as("l_orderkey"),
-          $"o_totalprice".cast(dec2).as("yv")), "l_orderkey")
+          $"o_totalprice".cast(dec18_2).as("yv")), "l_orderkey")
     val s = per.agg(count(lit(1)).as("n"),
       sum($"x1").as("sx"), sum($"x2").as("sy0"),
       sum($"x1" * $"x1").as("sxx"), sum($"x2" * $"x2").as("syy"),
@@ -466,19 +460,17 @@ object LearnOps extends QueryPack {
     * no rounding, an integer-exact decision. */
   def qLogreg(spark: SparkSession, sfDir: String): DataFrame = {
     import spark.implicits._
-    val dec6 = DecimalType(18, 6)
-    val dec9 = DecimalType(18, 9)
     val toks = TextFunctions.tokens($"text")
     val stopRaw = TextFunctions.rawStopwordRatio($"text")
     val base = Tables.df(spark, sfDir, "documents")
       .select(($"lang" === "en").cast("long").as("y"),
         size(toks).cast("long").as("x1"),
-        round(stopRaw, 6).cast(dec6).as("x2"))
+        round(stopRaw, 6).cast(dec18_6).as("x2"))
     val stats = base.agg(count(lit(1)).as("n"),
       sum($"x1").as("s1"), sum($"x1" * $"x1").as("s11"),
       sum($"x2").as("s2"),
       sum(round($"x2".cast("double") * $"x2".cast("double"), 9)
-        .cast(dec9)).as("s22"))
+        .cast(dec18_9)).as("s22"))
     val nd = $"n".cast("double")
     val mu1 = $"s1".cast("double") / nd
     val sd1 = sqrt($"s11".cast("double") / nd - mu1 * mu1)
@@ -499,9 +491,9 @@ object LearnOps extends QueryPack {
       val g = j.agg(
         max($"n").as("n"), max($"w0").as("pw0"), max($"w1").as("pw1"),
         max($"w2").as("pw2"),
-        sum(round(p - $"y", 9).cast(dec9)).as("t0"),
-        sum(round((p - $"y") * $"z1", 9).cast(dec9)).as("t1"),
-        sum(round((p - $"y") * $"z2", 9).cast(dec9)).as("t2"))
+        sum(round(p - $"y", 9).cast(dec18_9)).as("t0"),
+        sum(round((p - $"y") * $"z1", 9).cast(dec18_9)).as("t1"),
+        sum(round((p - $"y") * $"z2", 9).cast(dec18_9)).as("t2"))
       w = g.select(
         ($"pw0" - $"t0".cast("double") / $"n").as("w0"),
         ($"pw1" - $"t1".cast("double") / $"n").as("w1"),

@@ -1,11 +1,11 @@
 package graft.queries
 
+import graft.Decimals._
 import graft.Tables
 import graft.functions.TextFunctions
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.DecimalType
 
 /** Agreement and nonparametric extensions to InferOps — the tests a
   * data-curation platform runs when the metric is ordinal, categorical,
@@ -28,9 +28,6 @@ import org.apache.spark.sql.types.DecimalType
   * discipline) so the "random" draws replay bit-for-bit on both engines.
   */
 object NonparamOps extends QueryPack {
-
-  private val dec2 = DecimalType(18, 2)
-  private val dec9 = DecimalType(18, 9)
 
   // shared md5 60-bit uniform: (hash60(md5(s)) + 0.5) / 2^60 ∈ (0,1)
   private def u01(tag: org.apache.spark.sql.Column): org.apache.spark.sql.Column =
@@ -163,7 +160,7 @@ object NonparamOps extends QueryPack {
     import spark.implicits._
     val g = Tables.df(spark, sfDir, "events")
       .select(to_date($"ts").as("d"), $"event_type".as("j"),
-        round($"value", 2).cast(dec2).as("vr"))
+        round($"value", 2).cast(dec18_2).as("vr"))
       .groupBy($"d", $"j").agg(sum($"vr").as("v"))
       .localCheckpoint() // feeds k, complete-block cut, ranks, and joins
     val k1 = g.agg(countDistinct($"j").as("k"))
@@ -290,7 +287,7 @@ object NonparamOps extends QueryPack {
     val s = cell.join(broadcast(rt), "seg").join(broadcast(ct), "reg")
       .select($"seg", $"reg", $"o",
         round(($"o" * $"o").cast("double") / ($"rt" * $"ct").cast("double"),
-          9).cast(dec9).as("term"))
+          9).cast(dec18_9).as("term"))
       .agg(sum($"o").as("n"), countDistinct($"seg").as("r"),
         countDistinct($"reg").as("c"), sum($"term").as("sterm"))
     val nD = $"n".cast("double")
@@ -328,7 +325,7 @@ object NonparamOps extends QueryPack {
     import spark.implicits._
     val users = Tables.df(spark, sfDir, "events")
       .filter($"event_type" === "purchase")
-      .select($"user_id", round($"value", 2).cast(dec2).as("vr"))
+      .select($"user_id", round($"value", 2).cast(dec18_2).as("vr"))
       .groupBy($"user_id").agg(sum($"vr").as("x"))
       .localCheckpoint() // feeds the observed diff AND the 200 reps
     def diffCol(n1: org.apache.spark.sql.Column,
@@ -561,7 +558,7 @@ object NonparamOps extends QueryPack {
         |       ELSE 'large' END AS magnitude
         |FROM f""".stripMargin,
 
-    // same dec9-rounded cell terms, same Bergsma correction
+    // same dec18_9-rounded cell terms, same Bergsma correction
     "q_cramers_v" ->
       """WITH cust AS (
         |  SELECT c.c_mktsegment AS seg, n.n_regionkey AS reg

@@ -1,5 +1,6 @@
 package graft.queries
 
+import graft.Decimals._
 import graft.Tables
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
@@ -372,19 +373,18 @@ object PipelineOps extends QueryPack {
     * pow discipline); both normalizers are exact integer/decimal sums. */
   def qMixReweight(spark: SparkSession, sfDir: String): DataFrame = {
     import spark.implicits._
-    val dec6 = org.apache.spark.sql.types.DecimalType(18, 6)
     val docs = Tables.df(spark, sfDir, "documents")
     val toks = docs.select($"doc_id",
       explode(graft.functions.TextFunctions.tokens($"text")).as("tok"))
     val counts = toks.groupBy($"tok").agg(count(lit(1)).as("cnt"))
     val n = toks.agg(count(lit(1)).as("n_total"))
     val lp = counts.crossJoin(broadcast(n))
-      .select($"tok", round(log($"cnt" / $"n_total"), 6).cast(dec6).as("lp"))
+      .select($"tok", round(log($"cnt" / $"n_total"), 6).cast(dec18_6).as("lp"))
     val docNll = toks.join(lp, "tok")
       .groupBy($"doc_id")
       .agg(count(lit(1)).as("n_toks"), sum($"lp").as("slp"))
       .select($"doc_id",
-        round(-($"slp".cast("double")) / $"n_toks", 6).cast(dec6).as("nll"))
+        round(-($"slp".cast("double")) / $"n_toks", 6).cast(dec18_6).as("nll"))
     val bySrc = docs.select($"doc_id", $"source").join(docNll, "doc_id")
       .groupBy($"source")
       .agg(count(lit(1)).as("n_docs"), sum($"nll").as("snll"))
@@ -395,7 +395,7 @@ object PipelineOps extends QueryPack {
         round($"snll".cast("double") / $"n_docs"
           - $"stot".cast("double") / $"nd", 6).as("excess"))
     val scored = e.select($"source", $"n_docs", $"mean_nll", $"excess",
-      ($"n_docs" * round(exp($"excess"), 6).cast(dec6)).as("w1"))
+      ($"n_docs" * round(exp($"excess"), 6).cast(dec18_6)).as("w1"))
     val z = scored.agg(sum($"w1").as("z1"), sum($"n_docs").as("ndt"))
     scored.crossJoin(broadcast(z))
       .select($"source", $"n_docs", $"mean_nll", $"excess",
@@ -412,10 +412,9 @@ object PipelineOps extends QueryPack {
   private[graft] def tempRates(docs: DataFrame): DataFrame = {
     val spark = docs.sparkSession
     import spark.implicits._
-    val dec6 = org.apache.spark.sql.types.DecimalType(18, 6)
     val bySrc = docs.groupBy($"source").agg(count(lit(1)).as("n_src"))
     val wts = bySrc.select($"source", $"n_src",
-      round(pow($"n_src".cast("double"), 0.7), 6).cast(dec6).as("w"))
+      round(pow($"n_src".cast("double"), 0.7), 6).cast(dec18_6).as("w"))
     val z = wts.agg(sum($"w").as("z"))
       .crossJoin(docs.agg(count(lit(1)).as("n_total")))
     wts.crossJoin(broadcast(z))
@@ -485,7 +484,6 @@ object PipelineOps extends QueryPack {
     * land in one phase). The final aggregate is 4 rows. */
   def qCurriculum(spark: SparkSession, sfDir: String): DataFrame = {
     import spark.implicits._
-    val dec6 = org.apache.spark.sql.types.DecimalType(18, 6)
     val docs = Tables.df(spark, sfDir, "documents")
       .select($"doc_id", graft.functions.TextFunctions.tokens($"text").as("tk"))
       .filter(size($"tk") > 0)
@@ -503,7 +501,7 @@ object PipelineOps extends QueryPack {
       .groupBy($"phase")
       .agg(count(lit(1)).as("n_docs"),
         min($"diff").as("min_diff"), max($"diff").as("max_diff"),
-        sum($"diff".cast(dec6)).as("sd"),
+        sum($"diff".cast(dec18_6)).as("sd"),
         sum($"n_tok").as("tokens"))
       .withColumn("mean_diff", round($"sd".cast("double") / $"n_docs", 6))
       .select($"phase", $"n_docs", $"min_diff", $"max_diff", $"mean_diff",
@@ -654,7 +652,6 @@ object PipelineOps extends QueryPack {
     * iteration. */
   def qRaking(spark: SparkSession, sfDir: String): DataFrame = {
     import spark.implicits._
-    val dec9 = org.apache.spark.sql.types.DecimalType(18, 9)
     val cells = Tables.df(spark, sfDir, "documents")
       .groupBy($"lang", $"source").agg(count(lit(1)).as("n"))
       .localCheckpoint() // the four adjustment rounds re-read it
@@ -663,7 +660,7 @@ object PipelineOps extends QueryPack {
       countDistinct($"source").as("ns"))
     var w = cells.crossJoin(broadcast(tot))
       .select($"lang", $"source", $"n", $"nAll", $"nl", $"ns",
-        lit(BigDecimal(1)).cast(dec9).as("w"))
+        lit(BigDecimal(1)).cast(dec18_9).as("w"))
     for (axis <- Seq("lang", "source", "lang", "source")) {
       val tgt = if (axis == "lang") $"nAll".cast("double") / $"nl"
         else $"nAll".cast("double") / $"ns"
@@ -672,7 +669,7 @@ object PipelineOps extends QueryPack {
       w = w.join(broadcast(cur), axis)
         .select($"lang", $"source", $"n", $"nAll", $"nl", $"ns",
           round($"w".cast("double")
-            * (tgt / $"cur".cast("double")), 9).cast(dec9).as("w"))
+            * (tgt / $"cur".cast("double")), 9).cast(dec18_9).as("w"))
     }
     w.select($"lang", $"source", $"n", round($"w".cast("double"), 6)
         .as("weight"),
@@ -694,12 +691,10 @@ object PipelineOps extends QueryPack {
     * exact decimal sums. */
   def qPpsSample(spark: SparkSession, sfDir: String): DataFrame = {
     import spark.implicits._
-    val dec2 = org.apache.spark.sql.types.DecimalType(18, 2)
-    val dec4 = org.apache.spark.sql.types.DecimalType(28, 4)
     val k = 200
     val o = Tables.df(spark, sfDir, "orders")
       .select($"o_orderkey",
-        round($"o_totalprice", 2).cast(dec2).as("p"))
+        round($"o_totalprice", 2).cast(dec18_2).as("p"))
     val tot = o.agg(sum($"p").as("ptot"), count(lit(1)).as("n_pop"))
     val drawn = o.crossJoin(broadcast(tot))
       .withColumn("pi", least(lit(1.0),
@@ -713,7 +708,7 @@ object PipelineOps extends QueryPack {
         min($"n_pop").as("n_pop"),
         count(lit(1)).as("n_sample"),
         min($"ptot").as("ptot"),
-        sum(round($"p".cast("double") / $"pi", 4).cast(dec4)).as("ht"))
+        sum(round($"p".cast("double") / $"pi", 4).cast(dec28_4)).as("ht"))
       .select($"n_pop", $"n_sample",
         round($"ptot".cast("double"), 2).as("total_true"),
         round($"ht".cast("double"), 2).as("ht_estimate"),

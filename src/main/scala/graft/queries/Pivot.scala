@@ -1,9 +1,9 @@
 package graft.queries
 
+import graft.Decimals._
 import graft.Tables
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.DecimalType
 
 /** PIVOT (cross-tab) and the HiveQL physical-layout SQL clauses
   * (DISTRIBUTE BY / SORT BY / CLUSTER BY, temp-view indirection) through
@@ -13,8 +13,6 @@ import org.apache.spark.sql.types.DecimalType
   * conditional-agg plan: one shuffle, no extra pass per pivot value). */
 object Pivot extends QueryPack {
 
-  private def dec(c: Column): Column = c.cast(DecimalType(18, 2))
-
   /** Cross-tab: total order value per priority × status. Explicit pivot
     * value list keeps the plan single-pass (no distinct-values pre-query). */
   def qPivot(spark: SparkSession, sfDir: String): DataFrame = {
@@ -22,7 +20,7 @@ object Pivot extends QueryPack {
     Tables.df(spark, sfDir, "orders")
       .groupBy($"o_orderpriority")
       .pivot("o_orderstatus", Seq("F", "O", "P"))
-      .agg(sum(dec($"o_totalprice")).cast("double"))
+      .agg(sum(money($"o_totalprice")).cast("double"))
       .na.fill(0.0, Seq("F", "O", "P"))
       .orderBy($"o_orderpriority")
   }

@@ -1,9 +1,9 @@
 package graft.queries
 
+import graft.Decimals._
 import graft.Tables
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.DecimalType
 
 /** Core relational surface: scan → filter → project → hash-agg → sort.
   *
@@ -23,7 +23,6 @@ object Relational extends QueryPack {
 
   /** Money column → exact decimal, so sums are order-independent and
     * hash-stable against the DuckDB oracle (SURVEY.md §7.4 trap #1). */
-  private def dec(c: Column): Column = c.cast(DecimalType(18, 2))
 
   /** TPC-H Q1-shaped pricing summary (flagship). */
   def q1Pricing(spark: SparkSession, sfDir: String): DataFrame = {
@@ -32,14 +31,14 @@ object Relational extends QueryPack {
       .filter($"l_shipdate" <= to_timestamp(lit("2000-09-01")))
       .groupBy($"l_returnflag", $"l_linestatus")
       .agg(
-        sum(dec($"l_quantity")).cast("double").as("sum_qty"),
-        sum(dec($"l_extendedprice")).cast("double").as("sum_base_price"),
-        sum(dec($"l_extendedprice") * (lit(1) - dec($"l_discount")))
+        sum(money($"l_quantity")).cast("double").as("sum_qty"),
+        sum(money($"l_extendedprice")).cast("double").as("sum_base_price"),
+        sum(money($"l_extendedprice") * (lit(1) - money($"l_discount")))
           .cast("double").as("sum_disc_price"),
-        sum(dec($"l_extendedprice") * (lit(1) - dec($"l_discount"))
-            * (lit(1) + dec($"l_tax")))
+        sum(money($"l_extendedprice") * (lit(1) - money($"l_discount"))
+            * (lit(1) + money($"l_tax")))
           .cast("double").as("sum_charge"),
-        (sum(dec($"l_quantity")).cast("double") / count($"l_quantity"))
+        (sum(money($"l_quantity")).cast("double") / count($"l_quantity"))
           .as("avg_qty"),
         count(lit(1)).as("count_order"))
       .orderBy($"l_returnflag", $"l_linestatus")
@@ -86,7 +85,7 @@ object Relational extends QueryPack {
     import spark.implicits._
     Tables.df(spark, sfDir, "orders")
       .groupBy($"o_custkey")
-      .agg(sum(dec($"o_totalprice")).cast("double").as("total_spend"),
+      .agg(sum(money($"o_totalprice")).cast("double").as("total_spend"),
         count(lit(1)).as("n_orders"))
       .orderBy($"total_spend".desc, $"o_custkey".asc)
       .limit(15)
@@ -116,7 +115,7 @@ object Relational extends QueryPack {
       .filter($"l_orderkey" % 10 === 3)
       .groupBy($"l_returnflag")
       .agg(count(lit(1)).as("n"),
-        sum(dec($"l_quantity")).cast("double").as("sum_qty"))
+        sum(money($"l_quantity")).cast("double").as("sum_qty"))
       .orderBy($"l_returnflag")
   }
 

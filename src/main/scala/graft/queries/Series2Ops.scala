@@ -1,10 +1,10 @@
 package graft.queries
 
+import graft.Decimals._
 import graft.Tables
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.DecimalType
 
 /** Series-diagnostics pack (r14) — the residual/randomness checks a
   * platform runs BEFORE trusting any of the SeriesOps forecasters or
@@ -25,8 +25,6 @@ import org.apache.spark.sql.types.DecimalType
   */
 object Series2Ops extends QueryPack {
 
-  private val dec9 = DecimalType(28, 9)
-  private val dec38 = DecimalType(38, 9)
   private val zCrit = 1.959964 // two-sided 5% normal, the shared literal
 
   // ---- q_ljung_box ---------------------------------------------------------
@@ -49,20 +47,20 @@ object Series2Ops extends QueryPack {
       .select($"t", $"nd",
         ($"y".cast("double") - $"sy".cast("double") / $"nd").as("e"))
       .localCheckpoint()
-    val den = dev.select(round($"e" * $"e", 9).cast(dec9).as("tm"))
+    val den = dev.select(round($"e" * $"e", 9).cast(dec28_9).as("tm"))
       .agg(sum($"tm").as("den"))
     val acf = dev
       .join(dev.select($"t".as("t2"), $"e".as("e2")),
         ($"t" - $"t2").between(1, 7))
       .select(($"t" - $"t2").cast("int").as("lag"), $"nd",
-        round($"e" * $"e2", 9).cast(dec9).as("tm"))
+        round($"e" * $"e2", 9).cast(dec28_9).as("tm"))
       .groupBy($"lag", $"nd").agg(sum($"tm").as("num"))
       .crossJoin(broadcast(den))
       .select($"lag", $"nd",
         round($"num".cast("double") / $"den".cast("double"), 6).as("r"))
     val terms = acf.select($"lag", $"nd", $"r",
       round($"r" * $"r" / ($"nd" - $"lag").cast("double"), 9)
-        .cast(dec9).as("term"))
+        .cast(dec28_9).as("term"))
     // bounded single-partition window: 7 lag rows, never data-scale
     val w7 = Window.orderBy($"lag")
       .rowsBetween(Window.unboundedPreceding, Window.currentRow)
@@ -85,7 +83,7 @@ object Series2Ops extends QueryPack {
     * χ²(2) critical value — the "are ±z bands meaningful on this
     * metric" pre-check for every normal-theory monitor in the repo.
     * Central-moment terms (e², e³, e⁴) round once to 9dp into exact
-    * DECIMAL(38,9) sums (e⁴ outgrows the house dec9); the statistics
+    * DECIMAL(38,9) sums (e⁴ outgrows the house dec28_9); the statistics
     * are shared double closed forms (m2^{3/2} = m2·sqrt(m2), sqrt being
     * IEEE-exact), rounded once at output, and `significant` compares
     * the ROUNDED JB so both engines decide on the same value. */
@@ -97,9 +95,9 @@ object Series2Ops extends QueryPack {
       .select($"nd",
         ($"y".cast("double") - $"sy".cast("double") / $"nd").as("e"))
     val sums = e.groupBy($"nd").agg(
-      sum(round($"e" * $"e", 9).cast(dec38)).as("s2"),
-      sum(round($"e" * $"e" * $"e", 9).cast(dec38)).as("s3"),
-      sum(round($"e" * $"e" * $"e" * $"e", 9).cast(dec38)).as("s4"))
+      sum(round($"e" * $"e", 9).cast(dec38_9)).as("s2"),
+      sum(round($"e" * $"e" * $"e", 9).cast(dec38_9)).as("s3"),
+      sum(round($"e" * $"e" * $"e" * $"e", 9).cast(dec38_9)).as("s4"))
     val nd = $"nd".cast("double")
     val m2 = $"s2".cast("double") / nd
     val m3 = $"s3".cast("double") / nd
@@ -212,8 +210,8 @@ object Series2Ops extends QueryPack {
         ($"y".cast("double") - ($"mt" + $"bu" * ($"yl".cast("double")
           - $"ma") + $"cu" * ($"xl".cast("double") - $"mb"))).as("eu"))
     val ssr = scored.groupBy($"n", $"br", $"bu", $"cu").agg(
-      sum(round($"er" * $"er", 9).cast(dec38)).as("ssr_r"),
-      sum(round($"eu" * $"eu", 9).cast(dec38)).as("ssr_u"))
+      sum(round($"er" * $"er", 9).cast(dec38_9)).as("ssr_r"),
+      sum(round($"eu" * $"eu", 9).cast(dec38_9)).as("ssr_u"))
     val f = when($"ssr_u".cast("double") > 0,
       ($"ssr_r".cast("double") - $"ssr_u".cast("double"))
         / ($"ssr_u".cast("double") / ($"n" - 3).cast("double")))
@@ -387,7 +385,7 @@ object Series2Ops extends QueryPack {
       .select(round(
         when($"t" === 1, pow(lit(1.0 - alpha), $"n" - 1))
           .otherwise(lit(alpha) * pow(lit(1.0 - alpha), $"n" - $"t"))
-          * $"z", 9).cast(dec9).as("term"))
+          * $"z", 9).cast(dec28_9).as("term"))
       .agg(sum($"term").cast("double").as("ses_level"))
     fit.crossJoin(broadcast(lvl))
       .select($"n", $"a", $"b", $"ses_level",
@@ -419,7 +417,7 @@ object Series2Ops extends QueryPack {
     val per = seasonalMkPer(spark, sfDir)
       .localCheckpoint() // 7-row; output + the combined aggregate
     val tot = per.agg(sum($"s_g").as("s_tot"),
-      sum(round($"var_g", 9).cast(dec9)).as("var_tot"))
+      sum(round($"var_g", 9).cast(dec28_9)).as("var_tot"))
     val vT = $"var_tot".cast("double")
     val z = when($"s_tot" > 0L, ($"s_tot" - 1L).cast("double") / sqrt(vT))
       .when($"s_tot" < 0L, ($"s_tot" + 1L).cast("double") / sqrt(vT))
@@ -479,20 +477,19 @@ object Series2Ops extends QueryPack {
     * rank-8 window runs per supplier on that sparse relation. */
   def qCroston(spark: SparkSession, sfDir: String): DataFrame = {
     import spark.implicits._
-    val dec12 = DecimalType(16, 12)
     // alpha(1-alpha)^j for j = 0..7 — exact decimal literals
     val w = (0 to 7).map(j =>
       (j, (BigDecimal("0.2") * BigDecimal("0.8").pow(j)).toString))
       .toDF("j", "w_s")
-      .select($"j", $"w_s".cast(dec12).as("w"))
+      .select($"j", $"w_s".cast(dec16_12).as("w"))
     val dem = Tables.df(spark, sfDir, "lineitem")
       .filter($"l_suppkey" % 20 === 0)
       .select($"l_suppkey".as("supp"), to_date($"l_shipdate").as("day"),
-        round($"l_quantity", 2).cast(DecimalType(18, 2)).as("q"))
+        round($"l_quantity", 2).cast(dec18_2).as("q"))
       .groupBy($"supp", $"day")
       // recast after the sum: (16,12) weights × an unbounded-precision
       // sum would overflow decimal precision 38 and silently lose scale
-      .agg(sum($"q").cast(DecimalType(18, 2)).as("z"))
+      .agg(sum($"q").cast(dec18_2).as("z"))
     val seq0 = dem
       .withColumn("gap", datediff($"day",
         lag($"day", 1).over(Window.partitionBy($"supp").orderBy($"day"))))

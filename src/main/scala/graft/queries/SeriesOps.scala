@@ -1,10 +1,10 @@
 package graft.queries
 
+import graft.Decimals._
 import graft.Tables
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.DecimalType
 
 /** Sequential-monitoring pack — the control-chart and trend procedures a
   * data platform runs CONTINUOUSLY over its daily metric series, where
@@ -32,10 +32,6 @@ import org.apache.spark.sql.types.DecimalType
   */
 object SeriesOps extends QueryPack {
 
-  private val dec2 = DecimalType(18, 2)
-  private val dec4 = DecimalType(38, 4)
-  private val dec9 = DecimalType(28, 9)
-
   /** The shared daily-purchase series (d, y DECIMAL(18,2), t row index) —
     * the same relation q_ses / q_forecast_eval monitor. Shared with
     * [[Series2Ops]] (r14 diagnostics) so both packs watch ONE series;
@@ -46,7 +42,7 @@ object SeriesOps extends QueryPack {
     Tables.df(spark, sfDir, "events")
       .filter($"event_type" === "purchase")
       .groupBy(to_date($"ts").as("d"))
-      .agg(sum(round($"value", 2).cast(dec2)).cast(dec2).as("y"))
+      .agg(sum(round($"value", 2).cast(dec18_2)).cast(dec18_2).as("y"))
       .withColumn("t", row_number().over(Window.orderBy($"d")))
   }
 
@@ -66,14 +62,14 @@ object SeriesOps extends QueryPack {
     import spark.implicits._
     val days = dailySeries(spark, sfDir)
     val m = days.agg(count(lit(1)).as("n"), sum($"y").as("s1"),
-      sum(round($"y".cast("double") * $"y", 4).cast(dec4)).as("s2"))
+      sum(round($"y".cast("double") * $"y", 4).cast(dec38_4)).as("s2"))
     val mu = $"s1".cast("double") / $"n"
     val sd = sqrt(($"s2".cast("double")
       - $"s1".cast("double") * $"s1".cast("double") / $"n")
       / ($"n" - lit(1L)))
     days.crossJoin(broadcast(m))
       .select($"d", $"t", $"y",
-        round(($"y".cast("double") - mu) / sd, 9).cast(dec9).as("z"))
+        round(($"y".cast("double") - mu) / sd, 9).cast(dec28_9).as("z"))
   }
 
   private val zCtesSql =
@@ -102,8 +98,8 @@ object SeriesOps extends QueryPack {
     * iteration, any series length. */
   def qCusum(spark: SparkSession, sfDir: String): DataFrame = {
     import spark.implicits._
-    val k = lit(BigDecimal("0.5").bigDecimal).cast(dec9)
-    val zero = lit(BigDecimal("0").bigDecimal).cast(dec9)
+    val k = lit(BigDecimal("0.5").bigDecimal).cast(dec28_9)
+    val zero = lit(BigDecimal("0").bigDecimal).cast(dec28_9)
     val w = Window.orderBy($"t")
       .rowsBetween(Window.unboundedPreceding, Window.currentRow)
     val p = zSeries(spark, sfDir)
@@ -135,7 +131,7 @@ object SeriesOps extends QueryPack {
     val zs = zSeries(spark, sfDir)
       .withColumn("zbar", sum($"z").over(w).cast("double") / $"t")
       .withColumn("dev",
-        round(($"z".cast("double") - $"zbar") - 0.05, 9).cast(dec9))
+        round(($"z".cast("double") - $"zbar") - 0.05, 9).cast(dec28_9))
       .withColumn("m", sum($"dev").over(w))
     zs.select($"d".cast("string").as("d"),
         round($"z".cast("double"), 6).as("z"),
@@ -244,23 +240,23 @@ object SeriesOps extends QueryPack {
     // stays inside precision 38 with no silent Spark scale loss.
     val coef = holtCoef.toDF("j", "a11s", "a12s", "a21s", "a22s")
       .select($"j",
-        $"a11s".cast(DecimalType(16, 12)).as("a11"),
-        $"a12s".cast(DecimalType(16, 12)).as("a12"),
-        $"a21s".cast(DecimalType(16, 12)).as("a21"),
-        $"a22s".cast(DecimalType(16, 12)).as("a22"))
+        $"a11s".cast(dec16_12).as("a11"),
+        $"a12s".cast(dec16_12).as("a12"),
+        $"a21s".cast(dec16_12).as("a21"),
+        $"a22s".cast(dec16_12).as("a22"))
       .select($"j", $"a11", $"a12", $"a21", $"a22",
         ($"a11" * expr("CAST(0.3 AS DECIMAL(2,1))")
           + $"a12" * expr("CAST(0.03 AS DECIMAL(3,2))"))
-          .cast(DecimalType(16, 14)).as("cvl"),
+          .cast(dec16_14).as("cvl"),
         ($"a21" * expr("CAST(0.3 AS DECIMAL(2,1))")
           + $"a22" * expr("CAST(0.03 AS DECIMAL(3,2))"))
-          .cast(DecimalType(16, 14)).as("cvb"))
+          .cast(dec16_14).as("cvb"))
     val days = dailySeries(spark, sfDir).localCheckpoint()
     val init = days.filter($"t" <= 2)
       .agg(sum(when($"t" === 1, $"y")).as("l1d"),
         sum(when($"t" === 2, $"y").otherwise(-$"y")).as("b1d"))
-      .select($"l1d".cast(DecimalType(12, 2)).as("l1"),
-        $"b1d".cast(DecimalType(12, 2)).as("b1"))
+      .select($"l1d".cast(dec12_2).as("l1"),
+        $"b1d".cast(dec12_2).as("b1"))
     // state x_tt = sum_{j=0..tt-2} A^j v y_{tt-j} + A^{tt-1} x_1, tt >= 2
     val terms = days.select($"t".as("tt"))
       .filter($"tt" >= 2)
@@ -269,8 +265,8 @@ object SeriesOps extends QueryPack {
       .join(broadcast(coef), $"j" === $"tt" - $"src")
       .groupBy($"tt")
       .agg(
-        sum(round($"cvl" * $"ysrc", 9).cast(dec9)).as("sum_l"),
-        sum(round($"cvb" * $"ysrc", 9).cast(dec9)).as("sum_b"))
+        sum(round($"cvl" * $"ysrc", 9).cast(dec28_9)).as("sum_l"),
+        sum(round($"cvb" * $"ysrc", 9).cast(dec28_9)).as("sum_b"))
     // level/trend stay EXACT DECIMALS through the final 6dp round: the
     // state is a 9dp decimal grid, so y − (level+trend) can land
     // exactly on a 6dp half boundary where the engines' double-round
@@ -280,17 +276,16 @@ object SeriesOps extends QueryPack {
     // would need precision 39 and Spark SILENTLY drops to scale 8
     // (the allowPrecisionLoss trap — cost a 5e-9 divergence here).
     // Cast both addends to (20,9) first so the add stays exact.
-    val dec20 = DecimalType(20, 9)
     val state = terms
       .join(broadcast(coef), $"j" === $"tt" - 1)
       .crossJoin(broadcast(init))
       .select($"tt",
-        ($"sum_l".cast(dec20)
-          + round($"a11" * $"l1" + $"a12" * $"b1", 9).cast(dec20))
-          .cast(dec20).as("level"),
-        ($"sum_b".cast(dec20)
-          + round($"a21" * $"l1" + $"a22" * $"b1", 9).cast(dec20))
-          .cast(dec20).as("trend"))
+        ($"sum_l".cast(dec20_9)
+          + round($"a11" * $"l1" + $"a12" * $"b1", 9).cast(dec20_9))
+          .cast(dec20_9).as("level"),
+        ($"sum_b".cast(dec20_9)
+          + round($"a21" * $"l1" + $"a22" * $"b1", 9).cast(dec20_9))
+          .cast(dec20_9).as("trend"))
       .localCheckpoint() // feeds fitted rows, forecast rows, and the shift
     val fitted = days.filter($"t" >= 3)
       .join(state.select(($"tt" + 1).as("t"),
@@ -305,7 +300,7 @@ object SeriesOps extends QueryPack {
       .select(date_add($"dmax", $"h").cast("string").as("d"),
         ($"tmax" + $"h").cast("int").as("t"),
         lit(null).cast("double").as("y"),
-        round($"level" + $"h".cast(DecimalType(2, 0)) * $"trend", 6)
+        round($"level" + $"h".cast(dec2_0) * $"trend", 6)
           .cast("double").as("fitted"),
         lit(null).cast("double").as("err"))
     fitted.unionByName(fc).orderBy($"t")
@@ -327,8 +322,8 @@ object SeriesOps extends QueryPack {
       .groupBy(to_date($"ts").as("d"))
       .agg(count(lit(1)).as("x"),
         coalesce(sum(when($"event_type" === "purchase",
-          round($"value", 2).cast(dec2))).cast(dec2),
-          lit(0).cast(dec2)).as("y"))
+          round($"value", 2).cast(dec18_2))).cast(dec18_2),
+          lit(0).cast(dec18_2)).as("y"))
       .localCheckpoint() // both sides of the lag join
     val lags = spark.range(-7, 8).select($"id".cast("int").as("lag"))
     val pairs = dd.as("a").crossJoin(broadcast(lags))
@@ -338,7 +333,7 @@ object SeriesOps extends QueryPack {
       count(lit(1)).as("n"),
       sum($"x").as("sx"), sum($"y").as("sy"),
       sum($"x" * $"x").as("sxx"),
-      sum(round($"y".cast("double") * $"y", 4).cast(dec4)).as("syy"),
+      sum(round($"y".cast("double") * $"y", 4).cast(dec38_4)).as("syy"),
       sum($"x" * $"y").as("sxy"))
     mo.withColumn("den",
         sqrt($"n" * $"sxx".cast("double") - $"sx".cast("double") * $"sx")
@@ -372,9 +367,9 @@ object SeriesOps extends QueryPack {
       .select($"t".cast("long").as("t"), $"y".cast("double").as("y"))
       .localCheckpoint() // OLS moments + scale + 3 IRLS rounds
     val ols = days.agg(count(lit(1)).as("n"),
-        sum($"t").as("st"), sum(round($"y", 2).cast(dec2)).as("sy"),
+        sum($"t").as("st"), sum(round($"y", 2).cast(dec18_2)).as("sy"),
         sum($"t" * $"t").as("stt"),
-        sum(round($"t" * $"y", 2).cast(dec2)).as("sty"))
+        sum(round($"t" * $"y", 2).cast(dec18_2)).as("sty"))
       .withColumn("b0",
         ($"n" * $"sty".cast("double") - $"st".cast("double")
           * $"sy".cast("double"))
@@ -392,11 +387,11 @@ object SeriesOps extends QueryPack {
         .withColumn("r", $"y" - ($"a" + $"b" * $"t"))
         .withColumn("w", when(abs($"r") <= $"c", lit(1.0))
           .otherwise(round($"c" / abs($"r"), 9)))
-        .agg(sum(round($"w", 4).cast(dec4)).as("sw"),
-          sum(round($"w" * $"t", 4).cast(dec4)).as("swt"),
-          sum(round($"w" * $"y", 4).cast(dec4)).as("swy"),
-          sum(round($"w" * $"t" * $"t", 4).cast(dec4)).as("swtt"),
-          sum(round($"w" * $"t" * $"y", 4).cast(dec4)).as("swty"))
+        .agg(sum(round($"w", 4).cast(dec38_4)).as("sw"),
+          sum(round($"w" * $"t", 4).cast(dec38_4)).as("swt"),
+          sum(round($"w" * $"y", 4).cast(dec38_4)).as("swy"),
+          sum(round($"w" * $"t" * $"t", 4).cast(dec38_4)).as("swtt"),
+          sum(round($"w" * $"t" * $"y", 4).cast(dec38_4)).as("swty"))
         .select(
           (($"sw".cast("double") * $"swty".cast("double")
             - $"swt".cast("double") * $"swy".cast("double"))
@@ -441,13 +436,13 @@ object SeriesOps extends QueryPack {
       .select($"t",
         ($"y".cast("double") - $"sy".cast("double") / $"nd").as("e"))
       .localCheckpoint() // shared by denominator + both join sides
-    val den = dev.select(round($"e" * $"e", 9).cast(dec9).as("tm"))
+    val den = dev.select(round($"e" * $"e", 9).cast(dec28_9).as("tm"))
       .agg(sum($"tm").as("den"))
     val acf = dev
       .join(dev.select($"t".as("t2"), $"e".as("e2")),
         ($"t" - $"t2").between(1, 3))
       .select(($"t" - $"t2").cast("int").as("lag"),
-        round($"e" * $"e2", 9).cast(dec9).as("tm"))
+        round($"e" * $"e2", 9).cast(dec28_9).as("tm"))
       .groupBy($"lag").agg(sum($"tm").as("num"))
       .crossJoin(broadcast(den))
       .select($"lag",
@@ -502,7 +497,7 @@ object SeriesOps extends QueryPack {
     val sst = days.crossJoin(broadcast(mom))
       .select(($"y".cast("double") - $"sy".cast("double") / $"nd")
         .as("dv"))
-      .select(round($"dv" * $"dv", 9).cast(dec9).as("tm"))
+      .select(round($"dv" * $"dv", 9).cast(dec28_9).as("tm"))
       .agg(sum($"tm").as("sst"))
     val periods = spark.range(2, 11).select($"id".cast("int").as("p"))
     val ssb = days.crossJoin(broadcast(periods))
@@ -513,7 +508,7 @@ object SeriesOps extends QueryPack {
       .select($"p",
         ($"sg".cast("double") / $"ng"
           - $"sy".cast("double") / $"nd").as("dg"), $"ng")
-      .select($"p", round($"ng" * $"dg" * $"dg", 9).cast(dec9).as("tm"))
+      .select($"p", round($"ng" * $"dg" * $"dg", 9).cast(dec28_9).as("tm"))
       .groupBy($"p").agg(sum($"tm").as("ssb"))
     val scored = ssb.crossJoin(broadcast(sst)).crossJoin(broadcast(mom))
       .select($"p",
@@ -554,7 +549,7 @@ object SeriesOps extends QueryPack {
     val loss = dailySeries(spark, sfDir)
       .withColumn("prev", lag($"y", 1).over(wT))
       .filter($"prev".isNotNull)
-      .select($"d", ($"prev" - $"y").cast(dec2).as("loss"))
+      .select($"d", ($"prev" - $"y").cast(dec18_2).as("loss"))
       .localCheckpoint() // day-thin; feeds count + rank + tail scan
     val n = loss.agg(count(lit(1)).as("n"))
     val ranked = loss

@@ -1,5 +1,6 @@
 package graft.queries
 
+import graft.Decimals._
 import graft.Tables
 import graft.functions.CosineSimilarity
 import org.apache.spark.sql.{DataFrame, SparkSession}
@@ -409,12 +410,12 @@ object ServeOps extends QueryPack {
     * valuation path [[ValueOps]]' scaladoc promised (VERDICT r17 #2):
     * instead of brute-ranking the whole corpus per query, each %100
     * query's ranking is RESTRICTED to its [[VectorQueries.annMd5Pairs]]
-    * multiprobe candidates, and the identical Jia '19 suffix-sum
-    * recursion runs on that truncated list. The estimator is exact on
-    * whatever the candidates cover: for T ≥ K the last-rank seed
-    * m·min(K,T)/(K·T) IS the exact recursion's term, so truncation
-    * drops only the O(1/rank) tail past the candidate set — the reason
-    * the truncated estimator converges (Jia et al. '19 §4). Vectors
+    * multiprobe candidates, and the one Jia '19 suffix-sum recursion
+    * ([[ValueOps.knnShapley]]) runs on that truncated list. The
+    * estimator is exact on whatever the candidates cover: for T ≥ K the
+    * last-rank seed m·min(K,T)/(K·T) IS the exact recursion's term, so
+    * truncation drops only the O(1/rank) tail past the candidate set —
+    * the reason the truncated estimator converges (Jia et al. '19 §4). Vectors
     * never retrieved for any query carry value 0 (the mean divides by
     * the TOTAL query count, not appearances, so truncated and exact
     * values share a scale — ValueOpsSpec pins the agreement floor).
@@ -430,7 +431,6 @@ object ServeOps extends QueryPack {
   private[graft] def knnShapleyAnnPerQuery(spark: SparkSession,
       sfDir: String): DataFrame = {
     import spark.implicits._
-    val dec9 = org.apache.spark.sql.types.DecimalType(28, 9)
     val pairs = VectorQueries.annMd5Pairs(spark, sfDir).localCheckpoint()
     val cands = pairs.select($"id1".as("qid"), $"id2".as("vec_id"), $"sim")
       .unionAll(pairs.select($"id2".as("qid"), $"id1".as("vec_id"), $"sim"))
@@ -440,34 +440,12 @@ object ServeOps extends QueryPack {
       .select($"vec_id".as("qid"), $"label".as("truth"))
     val wRank = org.apache.spark.sql.expressions.Window
       .partitionBy($"qid").orderBy($"sim".desc, $"vec_id".asc)
-    val wOrd = org.apache.spark.sql.expressions.Window
-      .partitionBy($"qid").orderBy($"rk")
-    val ranked = cands
+    ValueOps.knnShapley(cands
       .join(broadcast(truth), "qid")
       .join(emb.select($"vec_id", $"label"), "vec_id")
       .withColumn("rk", row_number().over(wRank))
       .withColumn("m", ($"label" === $"truth").cast("long"))
-      .select($"qid", $"vec_id", $"label", $"rk", $"m")
-    ranked
-      .withColumn("m_next", lead($"m", 1).over(wOrd))
-      // ONE formula for every rank: at the truncated tail m_next is
-      // absent, and m·min(K,T)/(K·T) is exactly what the full recursion
-      // assigns rank T when everything past it is dropped
-      .withColumn("t", round(
-          (when($"m_next".isNull, $"m").otherwise($"m" - $"m_next")
-            * least($"rk", lit(10L))).cast("double") / ($"rk" * lit(10.0)),
-          9).cast(dec9))
-      // suffix sum as a rank-descending running sum — the
-      // ValueOps.knnShapleyPerQuery O(rows²)-frame fix (r21), same
-      // row-set/exact-decimal identity argument; candidate lists are
-      // shorter here but the frame class is the same
-      .withColumn("shap", sum($"t").over(
-        org.apache.spark.sql.expressions.Window
-          .partitionBy($"qid").orderBy($"rk".desc)
-          .rowsBetween(
-            org.apache.spark.sql.expressions.Window.unboundedPreceding,
-            org.apache.spark.sql.expressions.Window.currentRow)))
-      .select($"qid", $"vec_id", $"label", $"rk", $"m", $"shap")
+      .select($"qid", $"vec_id", $"label", $"rk", $"m"))
   }
 
   def qKnnShapleyAnn(spark: SparkSession, sfDir: String): DataFrame = {

@@ -1,5 +1,6 @@
 package graft.queries
 
+import graft.Decimals._
 import graft.Tables
 import graft.functions.TextFunctions
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
@@ -349,7 +350,7 @@ object SketchOps extends QueryPack {
       .withColumn("ov", greatest(lit(0.0),
         (least($"hi", $"blo" + $"w") - greatest($"lo", $"blo")) / $"w"))
       .groupBy($"pred", $"actual")
-      .agg(sum(round($"cnt" * least($"ov", lit(1.0)), 4).cast(dec4))
+      .agg(sum(round($"cnt" * least($"ov", lit(1.0)), 4).cast(dec18_4))
         .as("est"))
     est.select($"pred", round($"est".cast("double"), 1).as("est_rows"),
       $"actual",
@@ -357,8 +358,6 @@ object SketchOps extends QueryPack {
         .as("ratio"))
       .orderBy($"pred")
   }
-
-  private val dec4 = org.apache.spark.sql.types.DecimalType(18, 4)
 
   // ---- q_zonemap_prune ---------------------------------------------------
   /** Zone-map (min/max statistics) pruning report — the data-skipping

@@ -1,19 +1,17 @@
 package graft.queries
 
+import graft.Decimals._
 import graft.Tables
 import graft.sources.Sources
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.DecimalType
 
 /** Writer-path operators exercised inside the correctness gate: a dynamic
   * partitioned write, read back through partition pruning, aggregated and
   * hash-checked against the oracle over the ORIGINAL table — proving the
   * write→prune→read path is lossless. */
 object SourceOps extends QueryPack {
-
-  private def dec(c: Column): Column = c.cast(DecimalType(18, 2))
 
   def qPartitionedRoundtrip(spark: SparkSession, sfDir: String): DataFrame = {
     import spark.implicits._
@@ -24,7 +22,7 @@ object SourceOps extends QueryPack {
       .filter($"o_orderstatus" === "F") // prunes to the F directory
       .groupBy($"o_orderpriority")
       .agg(count(lit(1)).as("n"),
-        sum(dec($"o_totalprice")).cast("double").as("total"))
+        sum(money($"o_totalprice")).cast("double").as("total"))
       .orderBy($"o_orderpriority")
   }
 
@@ -47,7 +45,7 @@ object SourceOps extends QueryPack {
       .filter($"load_batch" === "b1") // prunes to the loaded partition
       .groupBy($"c_mktsegment")
       .agg(count(lit(1)).as("n"),
-        sum(dec($"c_acctbal")).cast("double").as("total_bal"))
+        sum(money($"c_acctbal")).cast("double").as("total_bal"))
       .orderBy($"c_mktsegment")
   }
 
@@ -74,7 +72,7 @@ object SourceOps extends QueryPack {
     spark.read.parquet(tmp)
       .groupBy($"o_orderstatus")
       .agg(count(lit(1)).as("n"),
-        sum(dec($"o_totalprice")).cast("double").as("total"))
+        sum(money($"o_totalprice")).cast("double").as("total"))
       .orderBy($"o_orderstatus")
   }
 

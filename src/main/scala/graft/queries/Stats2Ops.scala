@@ -1,18 +1,16 @@
 package graft.queries
 
+import graft.Decimals._
 import graft.Tables
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.DecimalType
 
 /** Statistics/experimentation additions (r15): a goodness-of-fit audit
   * of the repo's own determinism primitive, and the power side of the
   * q_mde experiment-sizing pair.
   */
 object Stats2Ops extends QueryPack {
-
-  private val dec12 = DecimalType(28, 12)
 
   // ---- q_cvm_uniform -------------------------------------------------------
   /** Cramér–von Mises uniformity audit of the HOUSE md5-uniform
@@ -45,8 +43,8 @@ object Stats2Ops extends QueryPack {
     val agg = ranked.select(
         round(($"u" - ((lit(2) * $"rn" - 1).cast("double") / (2 * n)))
           * ($"u" - ((lit(2) * $"rn" - 1).cast("double") / (2 * n))), 12)
-          .cast(dec12).as("sq"),
-        round($"u", 12).cast(dec12).as("ud"))
+          .cast(dec28_12).as("sq"),
+        round($"u", 12).cast(dec28_12).as("ud"))
       .agg(sum($"sq").as("ssq"), sum($"ud").as("su"))
     agg.select(lit(n.toLong).as("n"),
         round(lit(1.0 / (12 * n)) + $"ssq".cast("double"), 6).as("w2"),
@@ -141,26 +139,23 @@ object Stats2Ops extends QueryPack {
   /** The (d, n, sx, sx2) day-subgroup relation behind [[qSpcXbar]]. */
   private def spcDays(spark: SparkSession, sfDir: String): DataFrame = {
     import spark.implicits._
-    val dec2 = DecimalType(18, 2)
-    val dec4 = DecimalType(38, 4)
     Tables.df(spark, sfDir, "orders")
       .select($"o_orderdate".as("d"),
-        round($"o_totalprice", 2).cast(dec2).as("x"))
+        round($"o_totalprice", 2).cast(dec18_2).as("x"))
       .groupBy($"d")
       .agg(count(lit(1)).as("n"), sum($"x").as("sx"),
-        sum(round($"x".cast("double") * $"x", 4).cast(dec4)).as("sx2"))
+        sum(round($"x".cast("double") * $"x", 4).cast(dec38_4)).as("sx2"))
   }
 
   private def spcGrandPooled(days: DataFrame)
       : (DataFrame, DataFrame) = {
     import days.sparkSession.implicits._
-    val dec9 = DecimalType(28, 9)
     val grand = days.agg(sum($"n").as("tn"), sum($"sx").as("tsx"))
     val pooled = days.filter($"n" > 1)
       .select(($"n" - 1).as("df"),
         round($"sx2".cast("double")
           - $"sx".cast("double") * $"sx".cast("double") / $"n", 9)
-          .cast(dec9).as("ss"))
+          .cast(dec28_9).as("ss"))
       .agg(sum($"df").as("dfs"), sum($"ss").as("sss"))
     (grand, pooled)
   }
@@ -238,8 +233,6 @@ object Stats2Ops extends QueryPack {
     * oracle. Scale: day-thin relations throughout. */
   def qEffectiveN(spark: SparkSession, sfDir: String): DataFrame = {
     import spark.implicits._
-    val dec9 = DecimalType(28, 9)
-    val dec6 = DecimalType(18, 6)
     val days = SeriesOps.dailySeries(spark, sfDir)
       .localCheckpoint() // moment pass + both lag-join sides
     val mom = days.agg(count(lit(1)).as("nd"), sum($"y").as("sy"))
@@ -247,17 +240,17 @@ object Stats2Ops extends QueryPack {
       .select($"t",
         ($"y".cast("double") - $"sy".cast("double") / $"nd").as("e"))
       .localCheckpoint()
-    val den = dev.select(round($"e" * $"e", 9).cast(dec9).as("tm"))
+    val den = dev.select(round($"e" * $"e", 9).cast(dec28_9).as("tm"))
       .agg(sum($"tm").as("den"))
     val acf = dev
       .join(dev.select($"t".as("t2"), $"e".as("e2")),
         ($"t" - $"t2").between(1, 7))
       .select(($"t" - $"t2").cast("int").as("lag"),
-        round($"e" * $"e2", 9).cast(dec9).as("tm"))
+        round($"e" * $"e2", 9).cast(dec28_9).as("tm"))
       .groupBy($"lag").agg(sum($"tm").as("num"))
       .crossJoin(broadcast(den))
       .select(round($"num".cast("double") / $"den".cast("double"), 6)
-        .cast(dec6).as("r"))
+        .cast(dec18_6).as("r"))
     val ssum = acf.agg(sum($"r").as("sr"))
     mom.crossJoin(broadcast(ssum))
       .withColumn("vif", lit(1.0) + lit(2.0) * $"sr".cast("double"))

@@ -1,10 +1,10 @@
 package graft.queries
 
+import graft.Decimals._
 import graft.Tables
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.DecimalType
 
 /** Statistics additions (r16): variance-structure and regression
   * diagnostics the experimentation pack was still missing — equal-
@@ -13,8 +13,6 @@ import org.apache.spark.sql.types.DecimalType
   * gates every trend/forecast op on the daily series.
   */
 object Stats3Ops extends QueryPack {
-
-  private val dec9 = DecimalType(28, 9)
 
   // ---- q_bartlett ----------------------------------------------------------
   /** Bartlett's test of equal variances across the order-priority
@@ -31,27 +29,25 @@ object Stats3Ops extends QueryPack {
     * priorities); everything after is group-thin. */
   def qBartlett(spark: SparkSession, sfDir: String): DataFrame = {
     import spark.implicits._
-    val dec2 = DecimalType(18, 2)
-    val dec4 = DecimalType(38, 4)
     val g = Tables.df(spark, sfDir, "orders")
       .select($"o_orderpriority".as("grp"),
-        round($"o_totalprice", 2).cast(dec2).as("x"))
+        round($"o_totalprice", 2).cast(dec18_2).as("x"))
       .groupBy($"grp")
       .agg(count(lit(1)).as("n"), sum($"x").as("sx"),
-        sum(round($"x".cast("double") * $"x", 4).cast(dec4)).as("sx2"))
+        sum(round($"x".cast("double") * $"x", 4).cast(dec38_4)).as("sx2"))
       .filter($"n" > 1)
       .select($"n", ($"n" - 1).as("df"),
         round($"sx2".cast("double")
           - $"sx".cast("double") * $"sx".cast("double") / $"n", 9)
-          .cast(dec9).as("ss"))
+          .cast(dec28_9).as("ss"))
       // a zero-variance group would make the ln term log(0): Spark NULLs
       // it (silently dropping the group) while DuckDB returns -inf —
       // exclude the degenerate group identically in both engines
       .filter($"ss" > 0)
     val terms = g.select($"n", $"df", $"ss",
-        round($"df" * log($"ss".cast("double") / $"df"), 9).cast(dec9)
+        round($"df" * log($"ss".cast("double") / $"df"), 9).cast(dec28_9)
           .as("lt"),
-        round(lit(1.0) / $"df", 9).cast(dec9).as("rd"))
+        round(lit(1.0) / $"df", 9).cast(dec28_9).as("rd"))
       .agg(count(lit(1)).as("k"), sum($"n").as("nn"), sum($"df").as("dfs"),
         sum($"ss").as("sss"), sum($"lt").as("lts"), sum($"rd").as("rds"))
     terms
@@ -150,7 +146,7 @@ object Stats3Ops extends QueryPack {
       .withColumn("e", $"y".cast("double") - $"a" - $"b" * $"t")
       .localCheckpoint() // SSE + the per-day output
     val sse = res
-      .select(round($"e" * $"e", 9).cast(dec9).as("tm"))
+      .select(round($"e" * $"e", 9).cast(dec28_9).as("tm"))
       .agg(sum($"tm").as("sse"))
     res.crossJoin(broadcast(sse))
       .withColumn("s2", $"sse".cast("double") / ($"n" - 2))
@@ -236,7 +232,7 @@ object Stats3Ops extends QueryPack {
       .select($"m",
         round(($"dd".cast("double") - $"sd".cast("double") / $"m")
           * ($"dd".cast("double") - $"sd".cast("double") / $"m"), 9)
-          .cast(dec9).as("tm"))
+          .cast(dec28_9).as("tm"))
       .groupBy($"m").agg(sum($"tm").as("ss1"))
     val qs = Seq(2, 4).toDF("q")
     val dq = days.select($"t", $"y")
@@ -250,7 +246,7 @@ object Stats3Ops extends QueryPack {
             - $"q" * $"sd".cast("double") / $"m")
           * ($"dq".cast("double")
             - $"q" * $"sd".cast("double") / $"m"), 9)
-          .cast(dec9).as("tm"))
+          .cast(dec28_9).as("tm"))
       .groupBy($"q", $"m")
       .agg(count(lit(1)).as("mq"), sum($"tm").as("ssq"))
     sq.join(broadcast(s1), Seq("m"))
@@ -281,13 +277,12 @@ object Stats3Ops extends QueryPack {
     * the (day, type) grid immediately; everything after is grid-thin. */
   def qIcc(spark: SparkSession, sfDir: String): DataFrame = {
     import spark.implicits._
-    val dec6 = DecimalType(18, 6)
     val cells = Tables.df(spark, sfDir, "events")
       .select(to_date($"ts").as("day"), $"event_type".as("rater"),
-        round($"value", 6).cast(dec6).as("v"))
+        round($"value", 6).cast(dec18_6).as("v"))
       .groupBy($"day", $"rater")
       .agg(round(sum($"v").cast("double") / count(lit(1)), 6)
-        .cast(dec6).as("x"))
+        .cast(dec18_6).as("x"))
     val k = cells.select($"rater").distinct()
       .agg(count(lit(1)).as("k"))
     val full = cells
@@ -302,11 +297,11 @@ object Stats3Ops extends QueryPack {
       .agg(count(lit(1)).as("kr"), sum($"x").as("sx"))
       .agg(count(lit(1)).as("n_days"),
         sum(round($"sx".cast("double") * $"sx" / $"kr", 9)
-          .cast(dec9)).as("ssr_raw"))
+          .cast(dec28_9)).as("ssr_raw"))
     val cols = full.groupBy($"rater")
       .agg(count(lit(1)).as("nc"), sum($"x").as("sx"))
       .agg(sum(round($"sx".cast("double") * $"sx" / $"nc", 9)
-        .cast(dec9)).as("ssc_raw"))
+        .cast(dec28_9)).as("ssc_raw"))
     tot.crossJoin(broadcast(rows)).crossJoin(broadcast(cols))
       .select($"n_days", $"k",
         ($"tx2".cast("double")
@@ -358,15 +353,15 @@ object Stats3Ops extends QueryPack {
       .select($"x")
       .crossJoin(broadcast(grid))
       .select($"lam",
-        round(log($"x"), 9).cast(dec9).as("lx"),
+        round(log($"x"), 9).cast(dec28_9).as("lx"),
         round(when($"lam" === 0.0, log($"x"))
           .when($"lam" === 1.0, $"x" - 1.0)
           .when($"lam" === 0.5, (sqrt($"x") - 1.0) / 0.5)
           .when($"lam" === -0.5, (lit(1.0) / sqrt($"x") - 1.0) / -0.5)
           .otherwise((lit(1.0) / $"x" - 1.0) / -1.0), 9)
-          .cast(dec9).as("y"))
+          .cast(dec28_9).as("y"))
       .select($"lam", $"lx", $"y",
-        round($"y".cast("double") * $"y", 9).cast(dec9).as("y2"))
+        round($"y".cast("double") * $"y", 9).cast(dec28_9).as("y2"))
       .groupBy($"lam")
       .agg(count(lit(1)).as("n"), sum($"lx").as("slx"),
         sum($"y").as("sy"), sum($"y2").as("sy2"))

@@ -1,11 +1,11 @@
 package graft.queries
 
+import graft.Decimals._
 import graft.Tables
 import graft.functions.TextFunctions
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.DecimalType
 
 /** Dataset statistics / feature-engineering pack: column profiling,
   * per-group z-score anomaly detection, exponentially-decayed rolling
@@ -20,8 +20,6 @@ import org.apache.spark.sql.types.DecimalType
   * the oracle SQL so IEEE evaluation is bit-identical.
   */
 object StatsOps extends QueryPack {
-
-  private val dec6 = DecimalType(18, 6)
 
   // ---- q_profile ---------------------------------------------------------
   // Column profiling of lineitem: per column the non-null count, exact
@@ -132,7 +130,8 @@ object StatsOps extends QueryPack {
   def qZscore(spark: SparkSession, sfDir: String): DataFrame = {
     import spark.implicits._
     val ev = Tables.df(spark, sfDir, "events")
-      .select($"event_id", $"event_type", round($"value", 6).cast(dec6).as("v"))
+      .select($"event_id", $"event_type",
+        round($"value", 6).cast(dec18_6).as("v"))
     val stats = ev.groupBy($"event_type").agg(
       count(lit(1)).as("n"),
       sum($"v").as("sx"),
@@ -161,7 +160,8 @@ object StatsOps extends QueryPack {
     import spark.implicits._
     val w = Window.partitionBy($"user_id").orderBy($"ts", $"event_id")
     val r = Tables.df(spark, sfDir, "events")
-      .select($"user_id", $"event_id", $"ts", round($"value", 6).cast(dec6).as("v"))
+      .select($"user_id", $"event_id", $"ts",
+        round($"value", 6).cast(dec18_6).as("v"))
       .withColumn("rn", row_number().over(w))
     val cur = r.select($"user_id", $"event_id", $"rn")
     val past = r.select($"user_id".as("uid2"), $"rn".as("sn"), $"v")
@@ -169,7 +169,7 @@ object StatsOps extends QueryPack {
         $"user_id" === $"uid2" && $"rn" >= $"sn" && $"rn" - $"sn" <= 19)
       .withColumn("wt",
         round(pow(lit(0.9), ($"rn" - $"sn").cast("double")), 9)
-          .cast(DecimalType(12, 9)))
+          .cast(dec12_9))
       .groupBy($"user_id", $"event_id", $"rn")
       .agg(sum($"wt" * $"v").as("swx"), sum($"wt").as("sw"))
       // round(6): the quotient's operands are exact decimals, but DuckDB's
@@ -199,7 +199,7 @@ object StatsOps extends QueryPack {
       .agg(sum($"cnt").as("n"), count(lit(1)).as("n_types"))
     cnts.join(tot, "doc_id")
       .select($"doc_id", $"n", $"n_types",
-        round(($"cnt" / $"n") * log($"cnt" / $"n"), 6).cast(dec6).as("term"))
+        round(($"cnt" / $"n") * log($"cnt" / $"n"), 6).cast(dec18_6).as("term"))
       .groupBy($"doc_id", $"n", $"n_types")
       .agg((sum($"term").cast("double") * -1).as("entropy"))
       .withColumn("ttr", $"n_types".cast("double") / $"n")
@@ -224,7 +224,7 @@ object StatsOps extends QueryPack {
     // 2^53 — beyond that DuckDB's decimal->double cast stops being
     // correctly rounded (the q_ewma lesson) and the avg would drift
     val li = Tables.df(spark, sfDir, "lineitem")
-      .select(round($"l_extendedprice", 2).cast(DecimalType(18, 2)).as("v"))
+      .select(round($"l_extendedprice", 2).cast(dec18_2).as("v"))
     val mm = li.agg(min($"v".cast("double")).as("mn"),
       max($"v".cast("double")).as("mx"))
     li.crossJoin(broadcast(mm))
@@ -259,7 +259,7 @@ object StatsOps extends QueryPack {
   def qBinQuantile(spark: SparkSession, sfDir: String): DataFrame = {
     import spark.implicits._
     val li = Tables.df(spark, sfDir, "lineitem")
-      .select(round($"l_extendedprice", 2).cast(DecimalType(18, 2))
+      .select(round($"l_extendedprice", 2).cast(dec18_2)
         .cast("double").as("vd"))
     val bounds = graft.operators.Quantiles
       .exactQuantiles(li, $"vd", (1 to 19).map(_ / 20.0))
@@ -332,7 +332,7 @@ object StatsOps extends QueryPack {
     import spark.implicits._
     val ev = Tables.df(spark, sfDir, "events")
       .select($"event_type", unix_micros($"ts".cast("timestamp")).as("t"),
-        round($"value", 6).cast(dec6).cast("double").as("v"))
+        round($"value", 6).cast(dec18_6).cast("double").as("v"))
     val mm = ev.agg(min($"t").as("mn"), max($"t").as("mx"))
     val tagged = ev.crossJoin(broadcast(mm))
       .withColumn("late", $"t" > expr("mn + ((mx - mn) div 2)"))
@@ -360,7 +360,7 @@ object StatsOps extends QueryPack {
       .withColumn("p", ($"ce".cast("double") + 0.5) / ($"ne" + 5))
       .withColumn("q", ($"cl".cast("double") + 0.5) / ($"nl" + 5))
       .withColumn("term",
-        round(($"p" - $"q") * log($"p" / $"q"), 6).cast(dec6))
+        round(($"p" - $"q") * log($"p" / $"q"), 6).cast(dec18_6))
       .groupBy($"event_type")
       .agg(sum($"term").cast("double").as("psi"))
     // a type with NO reference-period rows has no deciles and no PSI —
@@ -388,7 +388,7 @@ object StatsOps extends QueryPack {
   def qWinsorize(spark: SparkSession, sfDir: String): DataFrame = {
     import spark.implicits._
     val li = Tables.df(spark, sfDir, "lineitem")
-      .select(round($"l_extendedprice", 2).cast(DecimalType(18, 2))
+      .select(round($"l_extendedprice", 2).cast(dec18_2)
         .cast("double").as("vd"))
     // a pinned repartition before the decimal projection was MEASURED
     // NEUTRAL here (3.6 s either way at sf0.1): the kernel's passes each
@@ -406,11 +406,11 @@ object StatsOps extends QueryPack {
         sum(when($"vd" < $"lo", 1L).otherwise(0L)).as("n_clipped_low"),
         sum(when($"vd" > $"hi", 1L).otherwise(0L)).as("n_clipped_high"),
         round(min($"lo"), 6).as("p01"), round(min($"hi"), 6).as("p99"),
-        round(sum(round($"vd", 2).cast(DecimalType(18, 2))).cast("double")
+        round(sum(round($"vd", 2).cast(dec18_2)).cast("double")
           / count(lit(1)), 6).as("mean_raw"),
         // round(wv, 6) is an identity (raw values are 2dp, boundaries are
         // already 6dp-rounded) — it only fixes the decimal sum's scale
-        round(sum(round($"wv", 6).cast(dec6)).cast("double")
+        round(sum(round($"wv", 6).cast(dec18_6)).cast("double")
           / count(lit(1)), 6).as("mean_winsorized"))
   }
 
@@ -428,7 +428,7 @@ object StatsOps extends QueryPack {
     import spark.implicits._
     val ev = Tables.df(spark, sfDir, "events")
       .select($"event_type", unix_micros($"ts".cast("timestamp")).as("tu"),
-        round($"value", 6).cast(dec6).as("y"))
+        round($"value", 6).cast(dec18_6).as("y"))
     val mn = ev.agg(min($"tu").as("mn"))
     val m = ev.crossJoin(broadcast(mn))
       .select($"event_type", expr("(tu - mn) div 3600000000").as("t"), $"y")
@@ -476,9 +476,8 @@ object StatsOps extends QueryPack {
     // DECIMAL(18,2), lossless for these 2-decimal measures: scale-6
     // squares overflow DuckDB's INT64 per-row decimal multiply, scale-2
     // squares (DECIMAL(36,4)) stay comfortably inside it
-    val dec2 = DecimalType(18, 2)
     val li = Tables.df(spark, sfDir, "lineitem")
-      .select(corrCols.map(c => round(col(c), 2).cast(dec2).as(c)): _*)
+      .select(corrCols.map(c => round(col(c), 2).cast(dec18_2).as(c)): _*)
     val aggs =
       Seq(count(lit(1)).as("n")) ++
       corrCols.map(c => sum(col(c)).as(s"s_$c")) ++
@@ -507,15 +506,14 @@ object StatsOps extends QueryPack {
     * partial r says whether they still co-move net of that.
     * r_xy·z = (r_xy − r_xz·r_yz)/√((1−r_xz²)(1−r_yz²)); the three
     * Pearsons come from ONE exact-moment pass over the customer-grain
-    * relation (x, z integers; y once-rounded dec2, squares at scale 4
+    * relation (x, z integers; y once-rounded dec18_2, squares at scale 4
     * — the corr-matrix overflow discipline). */
   def qPartialCorr(spark: SparkSession, sfDir: String): DataFrame = {
     import spark.implicits._
-    val dec2 = DecimalType(18, 2)
     val u = Tables.df(spark, sfDir, "orders")
       .groupBy($"o_custkey").agg(
         count(lit(1)).as("x"),
-        sum(round($"o_totalprice", 2).cast(dec2)).cast(dec2).as("y"),
+        sum(round($"o_totalprice", 2).cast(dec18_2)).cast(dec18_2).as("y"),
         datediff(max($"o_orderdate"), min($"o_orderdate")).as("z"))
     val s = u.agg(count(lit(1)).as("n"),
       sum($"x").as("sx"), sum($"y").as("sy"), sum($"z").as("sz"),
@@ -550,14 +548,12 @@ object StatsOps extends QueryPack {
     * calls inside the final rounded forms. */
   def qGumbelFit(spark: SparkSession, sfDir: String): DataFrame = {
     import spark.implicits._
-    val dec2 = DecimalType(18, 2)
-    val dec4 = DecimalType(38, 4)
     val SQRT6_OVER_PI = 0.7796968012336092
     val EULER = 0.5772156649015329
     val mx = Tables.df(spark, sfDir, "events")
       .groupBy(to_date($"ts").as("d"))
-      .agg(max(round($"value", 2).cast(dec2)).as("m"))
-      .select($"m", round($"m".cast("double") * $"m", 4).cast(dec4)
+      .agg(max(round($"value", 2).cast(dec18_2)).as("m"))
+      .select($"m", round($"m".cast("double") * $"m", 4).cast(dec38_4)
         .as("m2"))
     val s = mx.agg(count(lit(1)).as("n"), sum($"m").as("s1"),
       sum($"m2").as("s2"))
@@ -590,13 +586,11 @@ object StatsOps extends QueryPack {
     * recursion sequentially. */
   def qSes(spark: SparkSession, sfDir: String): DataFrame = {
     import spark.implicits._
-    val dec2 = DecimalType(18, 2)
-    val dec9 = DecimalType(28, 9)
     val alpha = 0.3
     val days = Tables.df(spark, sfDir, "events")
       .filter($"event_type" === "purchase")
       .groupBy(to_date($"ts").as("d"))
-      .agg(sum(round($"value", 2).cast(dec2)).cast(dec2).as("y"))
+      .agg(sum(round($"value", 2).cast(dec18_2)).cast(dec18_2).as("y"))
       .withColumn("t", row_number().over(Window.orderBy($"d")))
       .localCheckpoint() // both sides of the band join
     val terms = days.select($"t".as("tt"), $"d")
@@ -604,7 +598,7 @@ object StatsOps extends QueryPack {
       .select($"tt", $"d",
         round(when($"j" === 1, pow(lit(1.0 - alpha), $"tt" - 2))
           .otherwise(lit(alpha) * pow(lit(1.0 - alpha), $"tt" - 1 - $"j"))
-          * $"yj".cast("double"), 9).cast(dec9).as("term"))
+          * $"yj".cast("double"), 9).cast(dec28_9).as("term"))
     val fitted = terms.groupBy($"tt", $"d")
       .agg(sum($"term").cast("double").as("fitted"))
     days.join(fitted.select($"tt".as("t"), $"fitted"), Seq("t"), "left")
@@ -667,15 +661,12 @@ object StatsOps extends QueryPack {
     * decimal sums; the 4-point OLS is exact-moment arithmetic. */
   def qHurst(spark: SparkSession, sfDir: String): DataFrame = {
     import spark.implicits._
-    val dec2 = DecimalType(18, 2)
-    val dec9 = DecimalType(28, 9)
     val days = Tables.df(spark, sfDir, "events")
       .filter($"event_type" === "purchase")
       .groupBy(to_date($"ts").as("d"))
-      .agg(sum(round($"value", 2).cast(dec2)).cast(dec2).as("y"))
+      .agg(sum(round($"value", 2).cast(dec18_2)).cast(dec18_2).as("y"))
       .withColumn("t", row_number().over(Window.orderBy($"d")))
       .localCheckpoint() // ×4 block-size explode reads it
-    val dec4 = DecimalType(38, 4)
     val sized = days
       .select($"t", $"y".as("yd"), $"y".cast("double").as("y"),
         explode(array(lit(5), lit(10), lit(15), lit(30))).as("bn"))
@@ -686,7 +677,7 @@ object StatsOps extends QueryPack {
     val bm = sized.groupBy($"bn", $"blk")
       .agg(count(lit(1)).as("cnt"),
         (sum($"yd").cast("double") / count(lit(1))).as("mu"),
-        (sum(round($"y" * $"y", 4).cast(dec4)).cast("double")
+        (sum(round($"y" * $"y", 4).cast(dec38_4)).cast("double")
           / count(lit(1))).as("m2"))
       .filter($"cnt" === $"bn") // full blocks only
     val dev = sized.join(bm, Seq("bn", "blk"))
@@ -697,16 +688,15 @@ object StatsOps extends QueryPack {
       .agg((max($"cum") - min($"cum")).as("r"),
         sqrt(min($"m2") - min($"mu") * min($"mu")).as("s"))
       .filter($"s" > 0.0)
-      .select($"bn", round($"r" / $"s", 9).cast(dec9).as("rs"))
+      .select($"bn", round($"r" / $"s", 9).cast(dec28_9).as("rs"))
       .groupBy($"bn")
       .agg((sum($"rs").cast("double") / count(lit(1))).as("rs_mean"))
-    // DECIMAL(18,9), NOT the wider dec9(28,9): the OLS needs lx·lx
+    // DECIMAL(18,9), NOT the wider (28,9): the OLS needs lx·lx
     // products, and 28,9 × 28,9 exceeds precision 38 — both engines
     // then degrade (differently). 18,9 × 18,9 stays exact in both.
-    val decLn = DecimalType(18, 9)
     val pts = rs.select(
-      round(log($"bn".cast("double")), 9).cast(decLn).as("lx"),
-      round(log($"rs_mean"), 9).cast(decLn).as("ly"))
+      round(log($"bn".cast("double")), 9).cast(dec18_9).as("lx"),
+      round(log($"rs_mean"), 9).cast(dec18_9).as("ly"))
     val ols = pts.agg(count(lit(1)).as("k"), sum($"lx").as("sx"),
       sum($"ly").as("sy"), sum($"lx" * $"lx").as("sxx"),
       sum($"lx" * $"ly").as("sxy"))
@@ -743,15 +733,13 @@ object StatsOps extends QueryPack {
     * q_logreg/q_kmeans iteration shape). */
   def qMixtureEm(spark: SparkSession, sfDir: String): DataFrame = {
     import spark.implicits._
-    val dec2 = DecimalType(18, 2)
-    val dec4 = DecimalType(38, 4)
     val u = Tables.df(spark, sfDir, "events")
       .filter($"event_type" === "purchase")
       .groupBy($"user_id")
-      .agg(sum(round($"value", 2).cast(dec2)).cast(dec2).as("xd"))
+      .agg(sum(round($"value", 2).cast(dec18_2)).cast(dec18_2).as("xd"))
       .select($"xd", $"xd".cast("double").as("x"))
       .select($"xd", $"x",
-        round($"x" * $"x", 4).cast(dec4).as("x2"))
+        round($"x" * $"x", 4).cast(dec38_4).as("x2"))
       .localCheckpoint() // every E/M pass re-reads it
     val base = u.agg(count(lit(1)).as("n"), sum($"xd").as("s1"),
       sum($"x2").as("s2"),
@@ -770,9 +758,9 @@ object StatsOps extends QueryPack {
           - ($"x" - $"mu2") * ($"x" - $"mu2")) / (lit(2.0) * $"sig2"), 9))
         .withColumn("r", round(lit(1.0) / (lit(1.0)
           + ((lit(1.0) - $"pi") / $"pi") * exp($"uu")), 6)
-          .cast(DecimalType(18, 6)))
+          .cast(dec18_6))
       val m = e.agg(sum($"r").as("sr"),
-          sum(round($"r".cast("double") * $"x", 4).cast(dec4)).as("srx"))
+          sum(round($"r".cast("double") * $"x", 4).cast(dec38_4)).as("srx"))
         .crossJoin(broadcast(params.select($"n", $"s1")))
         .select($"n", $"s1",
           round($"srx".cast("double") / $"sr".cast("double"), 6)
@@ -785,7 +773,7 @@ object StatsOps extends QueryPack {
         .select(round($"r".cast("double")
           * ($"x" - $"mu1n") * ($"x" - $"mu1n")
           + (lit(1.0) - $"r".cast("double"))
-          * ($"x" - $"mu2n") * ($"x" - $"mu2n"), 4).cast(dec4).as("t"))
+          * ($"x" - $"mu2n") * ($"x" - $"mu2n"), 4).cast(dec38_4).as("t"))
         .agg(sum($"t").as("st"))
       params = m.crossJoin(broadcast(sig))
         .select($"n", $"s1", $"mu1n".as("mu1"), $"mu2n".as("mu2"),
@@ -817,12 +805,12 @@ object StatsOps extends QueryPack {
       .select($"x", $"y", $"nxy", $"nx", $"ny", $"n",
         round(($"nxy".cast("double") / $"n")
           * log(($"nxy".cast("double") * $"n") / ($"nx".cast("double") * $"ny")), 6)
-          .cast(dec6).as("mi_term"))
+          .cast(dec18_6).as("mi_term"))
     val mi = terms.agg(sum($"mi_term").cast("double").as("mi"))
     def entropy(m: DataFrame, c: String, out: String) =
       m.crossJoin(broadcast(n))
         .select(round((col(c).cast("double") / $"n")
-          * log(col(c).cast("double") / $"n"), 6).cast(dec6).as("t"))
+          * log(col(c).cast("double") / $"n"), 6).cast(dec18_6).as("t"))
         .agg((sum($"t").cast("double") * -1).as(out))
     mi.crossJoin(entropy(nx, "nx", "hx")).crossJoin(entropy(ny, "ny", "hy"))
       .select($"mi", $"hx", $"hy",
@@ -877,7 +865,7 @@ object StatsOps extends QueryPack {
   def qMad(spark: SparkSession, sfDir: String): DataFrame = {
     import spark.implicits._
     val ev = Tables.df(spark, sfDir, "events")
-      .select($"event_type", round($"value", 6).cast(dec6).as("v"))
+      .select($"event_type", round($"value", 6).cast(dec18_6).as("v"))
       .withColumn("vd", $"v".cast("double"))
     val med = ev.groupBy($"event_type")
       .agg(round(expr("percentile(vd, 0.5)"), 6).as("med"))
@@ -955,7 +943,7 @@ object StatsOps extends QueryPack {
     import spark.implicits._
     val dg = Tables.df(spark, sfDir, "orders")
       .select(substring(regexp_replace(
-        $"o_totalprice".cast(DecimalType(18, 2)).cast("string"),
+        $"o_totalprice".cast(dec18_2).cast("string"),
         "[^1-9]", ""), 1, 1).cast("int").as("digit"))
       .groupBy($"digit").agg(count(lit(1)).as("n"))
     val tot = dg.agg(sum($"n").as("n_all"))
@@ -980,11 +968,10 @@ object StatsOps extends QueryPack {
     * reproducible. */
   def qHillTail(spark: SparkSession, sfDir: String): DataFrame = {
     import spark.implicits._
-    val dec9 = org.apache.spark.sql.types.DecimalType(18, 9)
     val k = 100
     val top = Tables.df(spark, sfDir, "orders")
       .groupBy($"o_custkey")
-      .agg(sum($"o_totalprice".cast(DecimalType(18, 2))).as("s"))
+      .agg(sum($"o_totalprice".cast(dec18_2)).as("s"))
       .orderBy($"s".desc, $"o_custkey".asc)
       .limit(k + 1)
       .localCheckpoint() // feeds the boundary stat + the ln terms
@@ -992,7 +979,7 @@ object StatsOps extends QueryPack {
     top.crossJoin(broadcast(xk))
       .filter($"s" > $"xk")
       .select(round(log($"s".cast("double") / $"xk".cast("double")), 9)
-        .cast(dec9).as("t"), $"xk")
+        .cast(dec18_9).as("t"), $"xk")
       .groupBy($"xk").agg(count(lit(1)).as("k_used"),
         sum($"t").as("slt"))
       .select($"k_used", round($"xk".cast("double"), 2).as("x_kplus1"),
@@ -1012,7 +999,6 @@ object StatsOps extends QueryPack {
     * replicate means (percentile ≡ quantile_cont). */
   def qBootstrapCi(spark: SparkSession, sfDir: String): DataFrame = {
     import spark.implicits._
-    val dec9 = org.apache.spark.sql.types.DecimalType(18, 9)
     val users = Tables.df(spark, sfDir, "events")
       .filter($"event_type".isin("view", "purchase"))
       .groupBy($"user_id")
@@ -1021,7 +1007,7 @@ object StatsOps extends QueryPack {
       .select($"user_id", round($"p".cast("double") / $"n", 6).as("x"))
       .localCheckpoint() // user-thin; feeds the estimate + 32 replicates
     val full = users.agg(count(lit(1)).as("n_users"),
-      round(sum($"x".cast(dec6)).cast("double") / count(lit(1)), 6)
+      round(sum($"x".cast(dec18_6)).cast("double") / count(lit(1)), 6)
         .as("est"))
     val reps = users
       .select($"user_id", $"x", explode(expr("sequence(1, 32)")).as("b"))
@@ -1039,14 +1025,14 @@ object StatsOps extends QueryPack {
           .otherwise(6L))
       .groupBy($"b")
       .agg(sum($"w").as("sw"),
-        sum(round($"w" * $"x", 9).cast(dec9)).as("swx"))
+        sum(round($"w" * $"x", 9).cast(dec18_9)).as("swx"))
       .filter($"sw" > 0)
       .select($"b", round($"swx".cast("double") / $"sw", 6).as("mb"))
     val stats = reps.agg(count(lit(1)).as("n_reps"),
-      round(sum($"mb".cast(dec6)).cast("double") / count(lit(1)), 6)
+      round(sum($"mb".cast(dec18_6)).cast("double") / count(lit(1)), 6)
         .as("boot_mean"),
-      sum(round($"mb" * $"mb", 9).cast(dec9)).as("smb2"),
-      sum($"mb".cast(dec6)).as("smb"),
+      sum(round($"mb" * $"mb", 9).cast(dec18_9)).as("smb2"),
+      sum($"mb".cast(dec18_6)).as("smb"),
       expr("transform(percentile(mb, array(0.05, 0.95))," +
         " x -> round(x, 6))").as("ci"))
     full.crossJoin(broadcast(stats))
@@ -1067,7 +1053,6 @@ object StatsOps extends QueryPack {
     * relation. */
   def qJackknife(spark: SparkSession, sfDir: String): DataFrame = {
     import spark.implicits._
-    val dec9 = org.apache.spark.sql.types.DecimalType(18, 9)
     val src = Tables.df(spark, sfDir, "documents")
       .groupBy($"source")
       .agg(count(lit(1)).as("n_s"), sum($"n_chars").as("s_s"))
@@ -1079,13 +1064,13 @@ object StatsOps extends QueryPack {
         round(($"s" - $"s_s").cast("double") / ($"n" - $"n_s"), 6)
           .as("loo_mean"))
     val m = loo.agg(
-      round(sum($"loo_mean".cast(dec6)).cast("double") / count(lit(1)), 6)
+      round(sum($"loo_mean".cast(dec18_6)).cast("double") / count(lit(1)), 6)
         .as("m_loo"))
     val devs = loo.crossJoin(broadcast(m))
       .select($"source", $"n_s", $"g", $"loo_mean",
         round($"loo_mean" - $"m_loo", 6).as("dev"),
         round(($"loo_mean" - $"m_loo") * ($"loo_mean" - $"m_loo"), 9)
-          .cast(dec9).as("d2"))
+          .cast(dec18_9).as("d2"))
       .localCheckpoint()
     val se = devs.groupBy($"g").agg(sum($"d2").as("s2"))
       .select(round(sqrt(($"g" - 1).cast("double") / $"g"
@@ -1105,11 +1090,10 @@ object StatsOps extends QueryPack {
     * round to 9dp before the median (percentile ≡ quantile_cont). */
   def qTheilSen(spark: SparkSession, sfDir: String): DataFrame = {
     import spark.implicits._
-    val dec9 = org.apache.spark.sql.types.DecimalType(18, 9)
     val daily = Tables.df(spark, sfDir, "events")
       .filter($"event_type" === "purchase")
       .groupBy(to_date($"ts").as("d"))
-      .agg(sum($"value".cast(DecimalType(18, 2))).as("x"))
+      .agg(sum($"value".cast(dec18_2)).as("x"))
       .localCheckpoint() // day-thin; pairs + medians + OLS reuse it
     val d0 = daily.agg(min($"d").as("d0"))
     val idx = daily.crossJoin(broadcast(d0))
@@ -1129,10 +1113,10 @@ object StatsOps extends QueryPack {
         expr("round(percentile(r, 0.5), 6)").as("intercept"))
     // OLS contrast on the same (t, x) relation — exact-sum closed form
     val ols = idx.agg(count(lit(1)).as("n"),
-        sum(round($"t", 6).cast(dec9)).as("st"),
-        sum(round($"x", 6).cast(dec9)).as("sx"),
-        sum(round($"t" * $"x", 9).cast(dec9)).as("stx"),
-        sum(round($"t" * $"t", 9).cast(dec9)).as("stt"))
+        sum(round($"t", 6).cast(dec18_9)).as("st"),
+        sum(round($"x", 6).cast(dec18_9)).as("sx"),
+        sum(round($"t" * $"x", 9).cast(dec18_9)).as("stx"),
+        sum(round($"t" * $"t", 9).cast(dec18_9)).as("stt"))
       .select(round(($"n" * $"stx".cast("double")
         - $"st".cast("double") * $"sx".cast("double"))
         / ($"n" * $"stt".cast("double")
@@ -1154,7 +1138,6 @@ object StatsOps extends QueryPack {
     * one binning pass. */
   def qCovShift(spark: SparkSession, sfDir: String): DataFrame = {
     import spark.implicits._
-    val dec9 = org.apache.spark.sql.types.DecimalType(18, 9)
     val ev = Tables.df(spark, sfDir, "events")
     val mid = ev.agg(expr("(min(unix_micros(cast(ts as timestamp)))"
       + " + max(unix_micros(cast(ts as timestamp)))) div 2")
@@ -1177,8 +1160,8 @@ object StatsOps extends QueryPack {
         round((($"c2" + 0.5) / ($"n2" + 5))
           / (($"c1" + 0.5) / ($"n1" + 5)), 6).as("w"), $"n1")
     val ess = w
-      .select($"n1", round($"c1" * $"w", 9).cast(dec9).as("cw"),
-        round($"c1" * $"w" * $"w", 9).cast(dec9).as("cw2"))
+      .select($"n1", round($"c1" * $"w", 9).cast(dec18_9).as("cw"),
+        round($"c1" * $"w" * $"w", 9).cast(dec18_9).as("cw2"))
       .groupBy($"n1")
       .agg(sum($"cw").as("sw"), sum($"cw2").as("sw2"))
       .select(round($"sw".cast("double") * $"sw".cast("double")
@@ -1240,7 +1223,7 @@ object StatsOps extends QueryPack {
     import spark.implicits._
     val daily = Tables.df(spark, sfDir, "events")
       .groupBy(to_date($"ts").as("d"))
-      .agg(sum($"value".cast(DecimalType(18, 2))).as("x"))
+      .agg(sum($"value".cast(dec18_2)).as("x"))
       .withColumn("dow",
         datediff($"d", lit("1970-01-05").cast("date")) % 7)
       .localCheckpoint() // day-thin; feeds trend + seasonal + output
@@ -1248,7 +1231,7 @@ object StatsOps extends QueryPack {
     val dowMean = daily.groupBy($"dow")
       .agg((sum($"x").cast("double") / count(lit(1))).as("sm"))
     val grand = dowMean.agg(
-      round(sum(round($"sm", 6).cast(dec6)).cast("double")
+      round(sum(round($"sm", 6).cast(dec18_6)).cast("double")
         / count(lit(1)), 6).as("gm"))
     daily
       .withColumn("trend", round(sum($"x").over(wMa).cast("double")
@@ -1306,12 +1289,10 @@ object StatsOps extends QueryPack {
     * events scan → 30-row day relation; all windows run over it. */
   def qForecastEval(spark: SparkSession, sfDir: String): DataFrame = {
     import spark.implicits._
-    val dec2 = DecimalType(18, 2)
-    val dec4 = DecimalType(38, 4)
     val days = Tables.df(spark, sfDir, "events")
       .filter($"event_type" === "purchase")
       .groupBy(to_date($"ts").as("d"))
-      .agg(sum(round($"value", 2).cast(dec2)).as("y"))
+      .agg(sum(round($"value", 2).cast(dec18_2)).as("y"))
     val w = Window.orderBy($"d")
     val lagged = days
       .withColumn("l1", lag($"y", 1).over(w))
@@ -1324,9 +1305,9 @@ object StatsOps extends QueryPack {
       .select(abs($"y" - $"l1").as("e1"), abs($"y" - $"l7").as("e7"))
       .agg(count(lit(1)).as("n_eval"),
         sum($"e1").as("s1"),
-        sum(round($"e1".cast("double") * $"e1", 4).cast(dec4)).as("q1"),
+        sum(round($"e1".cast("double") * $"e1", 4).cast(dec38_4)).as("q1"),
         sum($"e7").as("s7"),
-        sum(round($"e7".cast("double") * $"e7", 4).cast(dec4)).as("q7"))
+        sum(round($"e7".cast("double") * $"e7", 4).cast(dec38_4)).as("q7"))
     val nd = $"n_eval".cast("double")
     ev.crossJoin(broadcast(scale))
       .select($"n_eval", $"scale",

@@ -1,9 +1,9 @@
 package graft.queries
 
+import graft.Decimals._
 import graft.Tables
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.DecimalType
 
 /** Correlated-subquery decorrelation (Hive: calcite subquery transforms →
   * Catalyst RewriteCorrelatedScalarSubquery) and three-valued NULL
@@ -13,8 +13,6 @@ import org.apache.spark.sql.types.DecimalType
   * a nullable key, null-safe equality, and explicit null ordering.
   */
 object SubqueryNulls extends QueryPack {
-
-  private def dec(c: Column): Column = c.cast(DecimalType(18, 2))
 
   /** Correlated scalar subquery per part (decorrelated by Catalyst into a
     * left outer aggregate join). */
@@ -53,7 +51,7 @@ object SubqueryNulls extends QueryPack {
       .agg(
         count(lit(1)).as("n_rows"),
         count($"big_price").as("n_big"),        // skips nulls
-        coalesce(sum(dec($"big_price")).cast("double"), lit(0.0))
+        coalesce(sum(money($"big_price")).cast("double"), lit(0.0))
           .as("sum_big"),                        // sum skips nulls
         count(when($"big_price".isNull, 1)).as("n_null_big"),
         sum(($"st" <=> lit("F")).cast("long")).as("n_nullsafe_f"))

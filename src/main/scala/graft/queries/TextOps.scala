@@ -1,5 +1,6 @@
 package graft.queries
 
+import graft.Decimals._
 import graft.Tables
 import graft.functions.{SortedIntersectSize, TextFunctions}
 import graft.operators.Dedup
@@ -381,7 +382,6 @@ object TextOps extends QueryPack {
     * exact cut q_quality buckets by. */
   def qQualitySweep(spark: SparkSession, sfDir: String): DataFrame = {
     import spark.implicits._
-    val dec6 = org.apache.spark.sql.types.DecimalType(18, 6)
     val scored = Tables.df(spark, sfDir, "documents")
       .select(TextFunctions.qualityScore($"text").as("score"),
         TextFunctions.tokenCount($"text").cast("long").as("n_tok"))
@@ -394,7 +394,7 @@ object TextOps extends QueryPack {
         sum(when($"score" >= $"thr", 1L).otherwise(0L)).as("docs_kept"),
         sum(when($"score" >= $"thr", $"n_tok").otherwise(0L))
           .as("tokens_kept"),
-        sum(when($"score" >= $"thr", $"score".cast(dec6))).as("s_kept"))
+        sum(when($"score" >= $"thr", $"score".cast(dec18_6))).as("s_kept"))
       .select($"thr", $"docs_kept",
         round($"docs_kept".cast("double") / $"n_docs", 6).as("frac_docs"),
         $"tokens_kept",
@@ -507,7 +507,7 @@ object TextOps extends QueryPack {
     val n = toks.agg(count(lit(1)).as("n_total"))
     val lp = counts.crossJoin(broadcast(n))
       .select($"tok", round(log($"cnt" / $"n_total"), 6)
-        .cast(org.apache.spark.sql.types.DecimalType(18, 6)).as("lp"))
+        .cast(dec18_6).as("lp"))
     toks.join(lp, "tok")
       .groupBy($"doc_id")
       .agg(count(lit(1)).as("n_toks"), sum($"lp").as("slp"))
@@ -530,7 +530,6 @@ object TextOps extends QueryPack {
     * the unigram filter; the 3.45 cutoff sits 3e-4 from the nearest doc. */
   def qPerplexityBigram(spark: SparkSession, sfDir: String): DataFrame = {
     import spark.implicits._
-    val dec6 = org.apache.spark.sql.types.DecimalType(18, 6)
     val docs = Tables.df(spark, sfDir, "documents")
     val toks = docs.select($"doc_id",
       explode(TextFunctions.tokens($"text")).as("tok"))
@@ -554,7 +553,7 @@ object TextOps extends QueryPack {
       .crossJoin(broadcast(n))
       .select($"doc_id",
         round(log(lit(0.7) * ($"bcnt" / $"ccnt")
-          + lit(0.3) * ($"cnt" / $"n_total")), 6).cast(dec6).as("lp"))
+          + lit(0.3) * ($"cnt" / $"n_total")), 6).cast(dec18_6).as("lp"))
       .groupBy($"doc_id")
       .agg(count(lit(1)).as("n_scored"), sum($"lp").as("slp"))
       .select($"doc_id", $"n_scored",
@@ -907,7 +906,6 @@ object TextOps extends QueryPack {
     * after the per-doc projection runs on the 5-row fold relation. */
   def qCvMetric(spark: SparkSession, sfDir: String): DataFrame = {
     import spark.implicits._
-    val dec6 = org.apache.spark.sql.types.DecimalType(18, 6)
     val folds = Tables.df(spark, sfDir, "documents")
       .select($"lang", TextFunctions.langId($"text").as("pred"),
         (conv(substring(md5(concat(lit("fold:"),
@@ -919,9 +917,9 @@ object TextOps extends QueryPack {
       .select($"fold", $"n", $"n_correct",
         round($"n_correct".cast("double") / $"n", 6).as("acc"))
     val cv = folds.agg(count(lit(1)).as("k"),
-        sum($"acc".cast(dec6)).as("sa"),
+        sum($"acc".cast(dec18_6)).as("sa"),
         sum(round($"acc" * $"acc", 9)
-          .cast(org.apache.spark.sql.types.DecimalType(18, 9))).as("sa2"))
+          .cast(dec18_9)).as("sa2"))
       .select(round($"sa".cast("double") / $"k", 6).as("cv_mean"),
         round(sqrt(($"sa2".cast("double")
           - $"sa".cast("double") * $"sa".cast("double") / $"k")

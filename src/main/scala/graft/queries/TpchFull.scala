@@ -1,9 +1,9 @@
 package graft.queries
 
+import graft.Decimals._
 import graft.Tables
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.DecimalType
 
 /** The remaining TPC-H query shapes (Q7/Q8/Q9/Q11/Q15/Q16/Q17/Q20/Q21/Q22),
   * adapted to the cut-down fixture schema: no `partsupp` table (the distinct
@@ -28,11 +28,6 @@ import org.apache.spark.sql.types.DecimalType
   */
 object TpchFull extends QueryPack {
 
-  private def dec(c: Column): Column = c.cast(DecimalType(18, 2))
-  private def disc(spark: SparkSession): Column = {
-    import spark.implicits._
-    dec($"l_extendedprice") * (lit(1) - dec($"l_discount"))
-  }
   private val discSql =
     "CAST(l_extendedprice AS DECIMAL(18,2)) * (1 - CAST(l_discount AS DECIMAL(18,2)))"
 
@@ -56,7 +51,7 @@ object TpchFull extends QueryPack {
         || ($"supp_nation" === "NATION_2" && $"cust_nation" === "NATION_1"))
       .groupBy($"supp_nation", $"cust_nation",
         year($"l_shipdate").as("l_year"))
-      .agg(sum(disc(spark)).cast("double").as("revenue"))
+      .agg(sum(TpchMore.disc).cast("double").as("revenue"))
       .orderBy($"supp_nation", $"cust_nation", $"l_year")
   }
 
@@ -84,9 +79,9 @@ object TpchFull extends QueryPack {
       .join(broadcast(suppNation), $"s_nationkey" === $"sk")
       .groupBy(year($"o_orderdate").as("l_year"))
       .agg(round(
-        sum(when($"supp_nation" === "NATION_2", disc(spark))
-          .otherwise(lit(0).cast(DecimalType(18, 2)))).cast("double")
-          / sum(disc(spark)).cast("double"), 6).as("mkt_share"))
+        sum(when($"supp_nation" === "NATION_2", TpchMore.disc)
+          .otherwise(lit(0).cast(dec18_2))).cast("double")
+          / sum(TpchMore.disc).cast("double"), 6).as("mkt_share"))
       .orderBy($"l_year")
   }
 
@@ -103,7 +98,7 @@ object TpchFull extends QueryPack {
       .join(broadcast(Tables.df(spark, sfDir, "nation")),
         $"s_nationkey" === $"n_nationkey")
       .groupBy($"n_name".as("nation"), year($"l_shipdate").as("l_year"))
-      .agg(sum(disc(spark) - dec($"p_retailprice") * dec($"l_quantity"))
+      .agg(sum(TpchMore.disc - money($"p_retailprice") * money($"l_quantity"))
         .cast("double").as("sum_profit"))
       .orderBy($"nation", $"l_year".desc)
   }
@@ -122,7 +117,7 @@ object TpchFull extends QueryPack {
       .join(broadcast(Tables.df(spark, sfDir, "part")),
         $"l_partkey" === $"p_partkey")
       .select($"l_partkey".as("partkey"),
-        (dec($"l_quantity") * dec($"p_retailprice")).as("val"))
+        (money($"l_quantity") * money($"p_retailprice")).as("val"))
     val perPart = supply.groupBy($"partkey")
       .agg(sum($"val").cast("double").as("value"))
     // one-row grand total: broadcast, not collected — the threshold join

@@ -1,11 +1,11 @@
 package graft.queries
 
+import graft.Decimals._
 import graft.Tables
 import graft.functions.GeoMean
 import graft.operators.AsOf
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.DecimalType
 
 /** Deeper analytics suite: more TPC-H-shaped golden queries (Q6/Q10/Q14/Q18
   * analogs adapted to the cut-down fixture columns), crypto/hash functions,
@@ -14,11 +14,10 @@ import org.apache.spark.sql.types.DecimalType
   */
 object TpchMore extends QueryPack {
 
-  private def dec(c: Column): Column = c.cast(DecimalType(18, 2))
-  private def disc(spark: SparkSession): Column = {
-    import spark.implicits._
-    dec($"l_extendedprice") * (lit(1) - dec($"l_discount"))
-  }
+  /** TPC-H's discounted price, l_extendedprice · (1 − l_discount), in
+    * money decimals — shared with [[TpchFull]]. */
+  private[queries] val disc: Column =
+    money(col("l_extendedprice")) * (lit(1) - money(col("l_discount")))
 
   /** TPC-H Q6: forecasting revenue change — tight scan-filter-agg, the
     * purest pushdown benchmark. */
@@ -29,7 +28,7 @@ object TpchMore extends QueryPack {
         && $"l_shipdate" < to_timestamp(lit("1997-01-01"))
         && $"l_discount".between(0.04, 0.06)
         && $"l_quantity" < 24)
-      .agg(sum(dec($"l_extendedprice") * dec($"l_discount"))
+      .agg(sum(money($"l_extendedprice") * money($"l_discount"))
         .cast("double").as("revenue"))
   }
 
@@ -48,7 +47,7 @@ object TpchMore extends QueryPack {
       .join(cust, $"o_custkey" === $"c_custkey")
       .join(broadcast(nation), $"c_nationkey" === $"n_nationkey")
       .groupBy($"c_custkey", $"c_name", $"n_name")
-      .agg(sum(disc(spark)).cast("double").as("revenue"))
+      .agg(sum(disc).cast("double").as("revenue"))
       .orderBy($"revenue".desc, $"c_custkey".asc)
       .limit(20)
   }
@@ -63,9 +62,9 @@ object TpchMore extends QueryPack {
     li.join(part, $"l_partkey" === $"p_partkey")
       .agg(
         round(lit(100.0)
-          * sum(when($"p_type" === "PROMO", disc(spark))
-              .otherwise(lit(0).cast(DecimalType(18, 2)))).cast("double")
-          / sum(disc(spark)).cast("double"), 6).as("promo_pct"))
+          * sum(when($"p_type" === "PROMO", disc)
+              .otherwise(lit(0).cast(dec18_2))).cast("double")
+          / sum(disc).cast("double"), 6).as("promo_pct"))
   }
 
   /** TPC-H Q18: large-volume customers — orders whose total quantity
@@ -74,7 +73,7 @@ object TpchMore extends QueryPack {
     import spark.implicits._
     val li = Tables.df(spark, sfDir, "lineitem")
     val big = li.groupBy($"l_orderkey".as("bok"))
-      .agg(sum(dec($"l_quantity")).cast("double").as("sum_qty"))
+      .agg(sum(money($"l_quantity")).cast("double").as("sum_qty"))
       .filter($"sum_qty" > 300)
     val orders = Tables.df(spark, sfDir, "orders")
     val cust = Tables.df(spark, sfDir, "customer")
@@ -154,7 +153,7 @@ object TpchMore extends QueryPack {
           && $"l_quantity".between(10, 20)) ||
         ($"p_brand" === "Brand#34" && $"p_size".between(1, 35)
           && $"l_quantity".between(20, 30)))
-      .agg(sum(disc(spark)).cast("double").as("revenue"),
+      .agg(sum(disc).cast("double").as("revenue"),
         count(lit(1)).as("n_lines"))
   }
 

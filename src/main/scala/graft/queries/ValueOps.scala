@@ -1,11 +1,11 @@
 package graft.queries
 
+import graft.Decimals._
 import graft.Tables
 import graft.functions.CosineSimilarity
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.DecimalType
 
 /** Valuation / audit / policy-eval additions (r17) — the "is this data,
   * model, or policy any good, and for WHOM" layer a curation pipeline
@@ -17,15 +17,47 @@ import org.apache.spark.sql.types.DecimalType
   */
 object ValueOps extends QueryPack {
 
-  private val dec9 = DecimalType(28, 9)
-  private val dec6 = DecimalType(18, 6)
-
   // ---- q_knn_shapley -------------------------------------------------------
-  /** Per-query KNN-Shapley prefix: (qid, vec_id, label, shap) — the full
-    * exact ranking plus the closed-form recursion, shared by
-    * [[qKnnShapley]] and the efficiency assertion in ValueOpsSpec (the
-    * sum of a query's Shapley values must equal its top-K match rate —
-    * Jia et al. '19 Thm 1's efficiency axiom). */
+  /** The KNN-Shapley recursion (Jia et al. '19, K = 10) over a ranked
+    * relation (qid, vec_id, label, rk, m), m = 1 when the rank-rk vector's
+    * label matches the query's: adds `shap`, the rank's exact Shapley value.
+    * Each rank contributes t_j = (m_j − m_{j+1}) · min(K, j) / (K · j),
+    * with m_{N+1} = 0 at the last rank — that seed,
+    * m_N · min(K, N)/(K · N), keeps the efficiency axiom at every list
+    * length (the values of a query sum to its top-K match rate), and for
+    * N ≥ K it is the textbook m_N / N as the same IEEE quotient. Terms
+    * round once to 9dp into DECIMAL(28,9), so the value is a plain exact
+    * suffix sum. The one home of the recursion: [[knnShapleyPerQuery]]
+    * (exact ranking) and [[ServeOps.knnShapleyAnnPerQuery]] (candidate
+    * ranking) call it. */
+  private[graft] def knnShapley(ranked: DataFrame): DataFrame = {
+    val wOrd = Window.partitionBy(col("qid")).orderBy(col("rk"))
+    ranked
+      .withColumn("m_next", lead(col("m"), 1).over(wOrd))
+      .withColumn("t", round(
+          (when(col("m_next").isNull, col("m"))
+            .otherwise(col("m") - col("m_next")) * least(col("rk"), lit(10L)))
+            .cast("double") / (col("rk") * lit(10.0)),
+          9).cast(dec28_9))
+      // suffix sum AS a rank-descending running sum (r21, guide §4/§7):
+      // a [currentRow, unboundedFollowing) sum frame re-aggregates the
+      // remainder of the partition PER ROW in Spark's
+      // UnboundedFollowingWindowFunctionFrame — O(rows²) per query, and
+      // the measured hot spot of q_knn_shapley (6–7 core-s in ONE task at
+      // sf0.1: 76 queries × ~6k-row rankings re-summed ~6k times each).
+      // rk is unique within qid, so the running sum over rk DESC covers
+      // the identical row set {rk' ≥ rk}; the t terms are DECIMAL(28,9)
+      // and Spark widens the window sum to DECIMAL(38,9) — both exact ⇒
+      // order-independent ⇒ byte-identical shap. O(rows).
+      .withColumn("shap", sum(col("t")).over(
+        Window.partitionBy(col("qid")).orderBy(col("rk").desc)
+          .rowsBetween(Window.unboundedPreceding, Window.currentRow)))
+      .select("qid", "vec_id", "label", "rk", "m", "shap")
+  }
+
+  /** Per-query KNN-Shapley prefix: (qid, vec_id, label, rk, m, shap) —
+    * the full exact ranking through [[knnShapley]], shared by
+    * [[qKnnShapley]] and the efficiency assertion in ValueOpsSpec. */
   private[graft] def knnShapleyPerQuery(spark: SparkSession, sfDir: String)
       : DataFrame = {
     import spark.implicits._
@@ -35,38 +67,12 @@ object ValueOps extends QueryPack {
         $"label".as("truth"))
     val wRank = Window.partitionBy($"qid")
       .orderBy($"sim".desc, $"vec_id".asc)
-    val wOrd = Window.partitionBy($"qid").orderBy($"rk")
-    val ranked = emb.join(broadcast(q), $"vec_id" =!= $"qid")
+    knnShapley(emb.join(broadcast(q), $"vec_id" =!= $"qid")
       .withColumn("sim",
         round(CosineSimilarity.of($"qv", $"embedding"), 6))
       .withColumn("rk", row_number().over(wRank))
       .withColumn("m", ($"label" === $"truth").cast("long"))
-      .select($"qid", $"vec_id", $"label", $"rk", $"m")
-    ranked
-      .withColumn("m_next", lead($"m", 1).over(wOrd))
-      .withColumn("n_train", count(lit(1)).over(Window.partitionBy($"qid")))
-      // t_j: the recursion increment. Last rank seeds s_N = m_N / N; every
-      // other rank contributes (m_j − m_{j+1}) · min(K, j) / (K · j), so
-      // the Shapley value is a plain suffix sum — no sequential pass.
-      .withColumn("t", when($"m_next".isNull,
-          round($"m".cast("double") / $"n_train", 9).cast(dec9))
-        .otherwise(round((($"m" - $"m_next") * least($"rk", lit(10L)))
-          .cast("double") / ($"rk" * lit(10.0)), 9).cast(dec9)))
-      // suffix sum AS a rank-descending running sum (r21, guide §4/§7):
-      // a [currentRow, unboundedFollowing) sum frame re-aggregates the
-      // remainder of the partition PER ROW in Spark's
-      // UnboundedFollowingWindowFunctionFrame — O(rows²) per query, and
-      // the measured hot spot of this query (6–7 core-s in ONE task at
-      // sf0.1: 76 queries × ~6k-row rankings re-summed ~6k times each).
-      // rk is unique within qid, so the running sum over rk DESC covers
-      // the identical row set {rk' ≥ rk}; the t terms are DECIMAL(28,9)
-      // and Spark widens the window sum to DECIMAL(38,9) — both exact ⇒
-      // order-independent ⇒ byte-identical shap. O(rows) now. (ADVICE
-      // r21: the earlier comment claimed the TERMS were (38,9).)
-      .withColumn("shap", sum($"t").over(
-        Window.partitionBy($"qid").orderBy($"rk".desc)
-          .rowsBetween(Window.unboundedPreceding, Window.currentRow)))
-      .select($"qid", $"vec_id", $"label", $"rk", $"m", $"shap")
+      .select($"qid", $"vec_id", $"label", $"rk", $"m"))
   }
 
   /** KNN-Shapley data valuation (Jia et al. '19, exact closed form for
@@ -160,10 +166,10 @@ object ValueOps extends QueryPack {
     val rows = LearnOps.scoredDocs(spark, sfDir)
       .select($"y", $"p",
         least(floor($"p" * 10), lit(9)).cast("int").as("bin"),
-        round(($"p" - $"y") * ($"p" - $"y"), 9).cast(dec9).as("sq"))
+        round(($"p" - $"y") * ($"p" - $"y"), 9).cast(dec28_9).as("sq"))
     val bins = rows.groupBy($"bin")
       .agg(count(lit(1)).as("n"), sum($"y").as("pos"),
-        sum($"p".cast(dec6)).as("psum"))
+        sum($"p".cast(dec18_6)).as("psum"))
     val tot = rows.agg(count(lit(1)).as("nt"), sum($"y").as("post"),
       sum($"sq").as("sqt"))
     bins.crossJoin(broadcast(tot))
@@ -173,9 +179,9 @@ object ValueOps extends QueryPack {
         round($"post".cast("double") / $"nt", 6).as("ybar"))
       .select($"nt", $"sqt", $"ybar",
         round(($"conf" - $"acc") * ($"conf" - $"acc") * $"n", 9)
-          .cast(dec9).as("rel_t"),
+          .cast(dec28_9).as("rel_t"),
         round(($"acc" - $"ybar") * ($"acc" - $"ybar") * $"n", 9)
-          .cast(dec9).as("res_t"))
+          .cast(dec28_9).as("res_t"))
       .groupBy($"nt", $"sqt", $"ybar")
       .agg(sum($"rel_t").as("rels"), sum($"res_t").as("ress"))
       .select($"nt".as("n"),
@@ -207,7 +213,7 @@ object ValueOps extends QueryPack {
     import spark.implicits._
     val da = Tables.df(spark, sfDir, "events")
       .select(to_date($"ts").as("day"), $"event_type".as("arm"),
-        round($"value", 6).cast(dec6).as("v"))
+        round($"value", 6).cast(dec18_6).as("v"))
       .groupBy($"day", $"arm")
       .agg(count(lit(1)).as("n"), sum($"v").as("s"))
     val grid = da.select($"day").distinct()
@@ -215,12 +221,12 @@ object ValueOps extends QueryPack {
       .join(da, Seq("day", "arm"), "left")
       .select($"day", $"arm",
         coalesce($"n", lit(0L)).as("n"),
-        coalesce($"s", lit(0).cast(dec6)).as("s"))
+        coalesce($"s", lit(0).cast(dec18_6)).as("s"))
     val wArm = Window.partitionBy($"arm").orderBy($"day")
       .rowsBetween(Window.unboundedPreceding, -1)
     val cum = grid
       .withColumn("cn", coalesce(sum($"n").over(wArm), lit(0L)))
-      .withColumn("cs", coalesce(sum($"s").over(wArm), lit(0).cast(dec6)))
+      .withColumn("cs", coalesce(sum($"s").over(wArm), lit(0).cast(dec18_6)))
       .withColumn("n_tot", sum($"cn").over(Window.partitionBy($"day")))
       .withColumn("ucb", when($"cn" > 0 && $"n_tot" > 0,
         round(round($"cs".cast("double") / $"cn", 9)
@@ -241,7 +247,7 @@ object ValueOps extends QueryPack {
       .withColumn("regret", when($"realized".isNotNull,
         round($"best_realized" - $"realized", 6)))
       .withColumn("cum_regret", sum(
-        coalesce(round($"regret", 6).cast(dec9), lit(0).cast(dec9)))
+        coalesce(round($"regret", 6).cast(dec28_9), lit(0).cast(dec28_9)))
         .over(wCum).cast("double"))
       .select($"day", $"arm".as("chosen_arm"), $"ucb", $"realized",
         $"best_realized", $"regret", round($"cum_regret", 6).as("cum_regret"))
@@ -267,9 +273,9 @@ object ValueOps extends QueryPack {
         (hour($"ts") * 3600 + minute($"ts") * 60 + second($"ts")).as("sec"))
       .select($"event_type",
         round(cos($"sec".cast("double") * lit(2.0) * lit(3.141592653589793)
-          / lit(86400.0)), 9).cast(dec9).as("ct"),
+          / lit(86400.0)), 9).cast(dec28_9).as("ct"),
         round(sin($"sec".cast("double") * lit(2.0) * lit(3.141592653589793)
-          / lit(86400.0)), 9).cast(dec9).as("st"))
+          / lit(86400.0)), 9).cast(dec28_9).as("st"))
       .groupBy($"event_type")
       .agg(count(lit(1)).as("n"), sum($"ct").as("c"), sum($"st").as("s"))
     terms

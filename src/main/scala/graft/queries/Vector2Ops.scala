@@ -1,10 +1,10 @@
 package graft.queries
 
+import graft.Decimals._
 import graft.Tables
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.DecimalType
 
 /** Vector-store additions (r14): binary quantization with its recall
   * price sheet, a moment-based kernel two-sample test over embedding
@@ -17,8 +17,6 @@ import org.apache.spark.sql.types.DecimalType
   * nothing here calls libm, so every output hash-checks cross-engine.
   */
 object Vector2Ops extends QueryPack {
-
-  private val dec12 = DecimalType(38, 12)
 
   // ---- q_binary_quantize ---------------------------------------------------
   /** Binary (1-bit) embedding quantization + its retrieval price sheet:
@@ -106,14 +104,14 @@ object Vector2Ops extends QueryPack {
           .as(Seq("i", "x")))
       .localCheckpoint() // first-moment pass + the pair-cell pass
     val m1 = dims.groupBy($"label", $"i")
-      .agg((sum(round($"x", 12).cast(dec12)).cast("double")
+      .agg((sum(round($"x", 12).cast(dec38_12)).cast("double")
         / count(lit(1))).as("m"))
     val cells = dims.join(
         dims.select($"vec_id", $"i".as("j"), $"x".as("xj")),
         Seq("vec_id"))
       .filter($"i" <= $"j")
       .groupBy($"label", $"i", $"j")
-      .agg((sum(round($"x" * $"xj", 12).cast(dec12)).cast("double")
+      .agg((sum(round($"x" * $"xj", 12).cast(dec38_12)).cast("double")
         / count(lit(1))).as("m2"))
     def pairs(df: DataFrame, cols: Seq[String], v: String): DataFrame = {
       val a = df.toDF(("la" +: cols :+ (v + "a")): _*)
@@ -122,7 +120,7 @@ object Vector2Ops extends QueryPack {
     }
     val lin = pairs(m1, Seq("i"), "m")
       .select($"la", $"lb",
-        round(($"ma" - $"mb") * ($"ma" - $"mb"), 12).cast(dec12).as("t"))
+        round(($"ma" - $"mb") * ($"ma" - $"mb"), 12).cast(dec38_12).as("t"))
       .groupBy($"la", $"lb")
       .agg(round(sum($"t").cast("double") * 1e6, 6).as("mmd2_lin_e6"))
     // Frobenius ×2 multiplies INSIDE the single rounding (a decimal ×
@@ -131,7 +129,7 @@ object Vector2Ops extends QueryPack {
       .select($"la", $"lb",
         round(($"m2a" - $"m2b") * ($"m2a" - $"m2b")
           * when($"i" === $"j", 1.0).otherwise(2.0), 12)
-          .cast(dec12).as("t"))
+          .cast(dec38_12).as("t"))
       .groupBy($"la", $"lb")
       .agg(round(sum($"t").cast("double") * 1e6, 6).as("mmd2_quad_e6"))
     lin.join(quad, Seq("la", "lb"))
@@ -192,8 +190,6 @@ object Vector2Ops extends QueryPack {
     * corpus scan inside pcaCovSums. */
   def qPcaDeflate(spark: SparkSession, sfDir: String): DataFrame = {
     import spark.implicits._
-    val dec9 = DecimalType(28, 9)
-    val decC = DecimalType(20, 9)
     val (_, cov) = VectorQueries.pcaCovSums(spark, sfDir)
     val v1 = VectorQueries.pcaPowerIters(spark, cov, 16)
       .localCheckpoint() // cv1, covD, lambda, and the report
@@ -213,13 +209,13 @@ object Vector2Ops extends QueryPack {
       .select($"i", $"j",
         round($"c".cast("double") - $"v1i".cast("double")
           * ($"cv1j".cast("double") / $"den".cast("double")), 9)
-          .cast(decC).as("c"))
+          .cast(dec20_9).as("c"))
       .localCheckpoint() // the 3 iterations below
     val w = VectorQueries.pcaPowerIters(spark, covD, 16)
     // Rayleigh λ₁ = v₁ᵀ(Cv₁)/v₁ᵀv₁ from the same cv1 relation
     val lam = v1.join(cv1.select($"i".as("j"), $"cv"), "j")
       .select(round($"v".cast("double") * $"cv".cast("double"), 9)
-        .cast(dec9).as("t"))
+        .cast(dec28_9).as("t"))
       .agg(sum($"t").as("num"))
       .crossJoin(broadcast(den))
       .select(round(round($"num".cast("double")
@@ -346,25 +342,23 @@ object Vector2Ops extends QueryPack {
     * identically in both engines. */
   def qIsotropy(spark: SparkSession, sfDir: String): DataFrame = {
     import spark.implicits._
-    val dec6 = DecimalType(18, 6)
-    val dec9 = DecimalType(18, 9)
     val comps = Tables.df(spark, sfDir, "embeddings")
       .select($"vec_id", posexplode($"embedding".cast("array<double>"))
         .as(Seq("dim", "x")))
-      .select($"vec_id", $"dim", round($"x", 6).cast(dec6).as("xd"))
+      .select($"vec_id", $"dim", round($"x", 6).cast(dec18_6).as("xd"))
     val n2 = comps.groupBy($"vec_id")
       .agg(sum($"xd" * $"xd").as("n2")).filter($"n2" > 0)
     val xhat = comps.join(n2, "vec_id")
       .select($"vec_id", $"dim",
         round($"xd".cast("double") / sqrt($"n2".cast("double")), 9)
-          .cast(dec9).as("xh"))
+          .cast(dec18_9).as("xh"))
       .localCheckpoint() // raw moments + mean + centered pass
     def meanCos(unit: DataFrame): DataFrame = {
       // component sums fit (18,9) by magnitude (|xh| ≤ 1, n ≤ 1e9), and
       // the tightened precision keeps every square inside exact decimal
       // range in BOTH engines (a (28,9)² would overflow precision 38)
       val s = unit.groupBy($"dim")
-        .agg(sum($"xh").cast(dec9).as("sd"))
+        .agg(sum($"xh").cast(dec18_9).as("sd"))
         .agg(sum($"sd" * $"sd").as("ss2"))
       val h = unit.groupBy($"vec_id").agg(sum($"xh" * $"xh").as("h2"))
         .agg(sum($"h2").as("sh"), count(lit(1)).as("nv"))
@@ -378,16 +372,16 @@ object Vector2Ops extends QueryPack {
     val mu = xhat.groupBy($"dim").agg(sum($"xh").as("sd"))
       .crossJoin(broadcast(nvRaw))
       .select($"dim", round($"sd".cast("double") / $"nv0", 9)
-        .cast(dec9).as("mu"))
+        .cast(dec18_9).as("mu"))
     val cen = xhat.join(broadcast(mu), "dim")
       .select($"vec_id", $"dim",
-        ($"xh" - $"mu").cast(dec9).as("yd")) // |yd| ≤ 2 — exact recast
+        ($"xh" - $"mu").cast(dec18_9).as("yd")) // |yd| ≤ 2 — exact recast
     val yn2 = cen.groupBy($"vec_id")
       .agg(sum($"yd" * $"yd").as("yn2")).filter($"yn2" > 0)
     val yhat = cen.join(yn2, "vec_id")
       .select($"vec_id", $"dim",
         round($"yd".cast("double") / sqrt($"yn2".cast("double")), 9)
-          .cast(dec9).as("xh"))
+          .cast(dec18_9).as("xh"))
     val ctr = meanCos(yhat)
     raw.select($"nv".as("n_raw"), $"mean_cos".as("mean_cos_raw"))
       .crossJoin(ctr.select($"nv".as("n_centered"),
@@ -412,27 +406,25 @@ object Vector2Ops extends QueryPack {
     * cells rounded once to 6dp → exact decimal squares. */
   def qCka(spark: SparkSession, sfDir: String): DataFrame = {
     import spark.implicits._
-    val dec6 = DecimalType(18, 6)
-    val dec9 = DecimalType(18, 9)
     val comps = Tables.df(spark, sfDir, "embeddings")
       .select($"vec_id", posexplode($"embedding".cast("array<double>"))
         .as(Seq("dim", "x")))
-      .select($"vec_id", $"dim", round($"x", 6).cast(dec6).as("xd"))
+      .select($"vec_id", $"dim", round($"x", 6).cast(dec18_6).as("xd"))
     val nv = comps.select($"vec_id").distinct()
       .agg(count(lit(1)).as("n"))
     val mu = comps.groupBy($"dim").agg(sum($"xd").as("sx"))
       .crossJoin(broadcast(nv))
       .select($"dim",
-        round($"sx".cast("double") / $"n", 9).cast(dec9).as("mu"))
+        round($"sx".cast("double") / $"n", 9).cast(dec18_9).as("mu"))
     val cen = comps.join(broadcast(mu), "dim")
-      .select($"vec_id", $"dim", ($"xd" - $"mu").cast(dec9).as("c"))
+      .select($"vec_id", $"dim", ($"xd" - $"mu").cast(dec18_9).as("c"))
       .localCheckpoint() // both sides of the Gram self-join
     val gram = cen.select($"vec_id", $"dim".as("da"), $"c".as("ca"))
       .join(cen.select($"vec_id", $"dim".as("db"), $"c".as("cb")),
         "vec_id")
       .groupBy($"da", $"db").agg(sum($"ca" * $"cb").as("g"))
       .select($"da", $"db",
-        round($"g".cast("double"), 6).cast(dec6).as("g6"))
+        round($"g".cast("double"), 6).cast(dec18_6).as("g6"))
     gram.agg(
         sum(when($"da" < 32 && $"db" >= 32, $"g6" * $"g6")).as("nxy"),
         sum(when($"da" < 32 && $"db" < 32, $"g6" * $"g6")).as("nxx"),

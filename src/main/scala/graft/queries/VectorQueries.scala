@@ -1,12 +1,12 @@
 package graft.queries
 
+import graft.Decimals._
 import graft.Tables
 import graft.functions.{CosineSimilarity, Round9Nano}
 import graft.operators.{Multimodal, Similarity}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.DecimalType
 
 /** Embedding similarity search + multimodal column plumbing over the
   * `embeddings` and `documents` fixtures. */
@@ -303,11 +303,10 @@ object VectorQueries extends QueryPack {
     * 64-key agg; no window, no global sort. */
   def qStandardize(spark: SparkSession, sfDir: String): DataFrame = {
     import spark.implicits._
-    val dec6 = org.apache.spark.sql.types.DecimalType(18, 6)
     val dims = Tables.df(spark, sfDir, "embeddings")
       .select($"vec_id", posexplode($"embedding".cast("array<double>"))
         .as(Seq("d", "x")))
-      .select($"d", round($"x", 6).cast(dec6).as("xd"))
+      .select($"d", round($"x", 6).cast(dec18_6).as("xd"))
     val stats = dims.groupBy($"d").agg(
       count(lit(1)).as("n"), sum($"xd").as("sx"), sum($"xd" * $"xd").as("sx2"))
     val z = dims.join(broadcast(stats), "d")
@@ -316,13 +315,13 @@ object VectorQueries extends QueryPack {
         ($"sx2".cast("double") - $"sx".cast("double") * $"sx".cast("double") / $"n")
           / ($"n" - 1)))
       .withColumn("z", round(($"xd".cast("double") - $"mu") / $"sd", 6)
-        .cast(dec6))
+        .cast(dec18_6))
     z.groupBy($"d").agg(
         min($"n").as("n"),
         round(min($"mu"), 6).as("mu"),
         round(min($"sd"), 6).as("sd"),
         sum($"z").cast("double").as("sum_z"),
-        sum(round($"z".cast("double") * $"z".cast("double"), 6).cast(dec6))
+        sum(round($"z".cast("double") * $"z".cast("double"), 6).cast(dec18_6))
           .cast("double").as("sum_z2"))
       .orderBy($"d")
   }
@@ -359,7 +358,6 @@ object VectorQueries extends QueryPack {
   def qQuantizeSq(spark: SparkSession, sfDir: String): DataFrame = {
     import spark.implicits._
     val d = 16
-    val dec9 = org.apache.spark.sql.types.DecimalType(20, 9)
     val x = Tables.df(spark, sfDir, "embeddings")
       .filter(size($"embedding") >= d)
       .select(posexplode(slice($"embedding".cast("array<double>"), 1, d))
@@ -377,7 +375,7 @@ object VectorQueries extends QueryPack {
       .agg(min($"mn").as("mn"), min($"mx").as("mx"),
         min($"scale").as("scale"),
         count(lit(1)).as("n"),
-        sum(round($"err", 9).cast(dec9)).as("serr"),
+        sum(round($"err", 9).cast(dec20_9)).as("serr"),
         max($"err").as("maxerr"))
       .select($"k".cast("int").as("dim"),
         round($"mn", 6).as("mn"), round($"mx", 6).as("mx"),
@@ -396,10 +394,8 @@ object VectorQueries extends QueryPack {
       : (DataFrame, DataFrame) = {
     import spark.implicits._
     val d = 16
-    val dec6 = org.apache.spark.sql.types.DecimalType(18, 6)
-    val decC = org.apache.spark.sql.types.DecimalType(20, 9)
     val xd = transform(slice($"embedding".cast("array<double>"), 1, d),
-      e => round(e, 6).cast(dec6))
+      e => round(e, 6).cast(dec18_6))
     // size >= d filter on BOTH sides (ADVICE r9): a short embedding
     // would emit fewer posexplode rows here while the oracle's fixed
     // range(0,16) still counts the NULL element's row — filtering the
@@ -431,7 +427,7 @@ object VectorQueries extends QueryPack {
       .select($"i", $"j",
         round($"sxy".cast("double") / $"n"
           - ($"sxi".cast("double") / $"n") * ($"sxj".cast("double") / $"n"),
-          9).cast(decC).as("c"))
+          9).cast(dec20_9).as("c"))
       .localCheckpoint()
     (sums, cov)
   }
@@ -442,9 +438,8 @@ object VectorQueries extends QueryPack {
   private[graft] def pcaPowerIters(spark: SparkSession, cov: DataFrame,
       dims: Int): DataFrame = {
     import spark.implicits._
-    val decV = org.apache.spark.sql.types.DecimalType(12, 9)
     var v = spark.range(dims).select($"id".cast("int").as("j"),
-      lit(1).cast(decV).as("v"))
+      lit(1).cast(dec12_9).as("v"))
     for (_ <- 1 to 3) {
       val u = cov.join(broadcast(v), "j")
         .groupBy($"i").agg(sum($"c" * $"v").as("u"))
@@ -452,7 +447,7 @@ object VectorQueries extends QueryPack {
       v = u.crossJoin(broadcast(nrm))
         .select($"i".as("j"),
           round($"u".cast("double") / $"m".cast("double"), 9)
-            .cast(decV).as("v"))
+            .cast(dec12_9).as("v"))
     }
     v
   }
@@ -489,7 +484,6 @@ object VectorQueries extends QueryPack {
     * joins/aggregates, identical in both. */
   def qLof(spark: SparkSession, sfDir: String): DataFrame = {
     import spark.implicits._
-    val dec6 = org.apache.spark.sql.types.DecimalType(18, 6)
     val k = 5
     // pinned keyed repartition before the |sub|² brute-force cosine
     // kernel (r22, the cosinePairsBrute r7 fix applied to this caller):
@@ -502,7 +496,7 @@ object VectorQueries extends QueryPack {
       .repartition(graft.Tables.shufflePartitions(spark), $"vec_id")
     val nn = Similarity.knnBruteForce(sub, sub, k)
       .select($"qid", $"vec_id".as("nid"),
-        (lit(1.0) - $"sim").cast(dec6).as("d"))
+        (lit(1.0) - $"sim").cast(dec18_6).as("d"))
     lofStages(spark, k, nn)
   }
 
@@ -518,13 +512,12 @@ object VectorQueries extends QueryPack {
   def lofAnn(spark: SparkSession, sfDir: String, radius: Double = 1.4,
       numTables: Int = 8): DataFrame = {
     import spark.implicits._
-    val dec6 = org.apache.spark.sql.types.DecimalType(18, 6)
     val k = 5
     val sub = Tables.df(spark, sfDir, "embeddings")
       .filter($"vec_id" % 2 === 0)
     val nn = Similarity.annKnnCosine(sub, sub, k, radius, numTables)
       .select($"qid", $"vec_id".as("nid"),
-        (lit(1.0) - $"sim").cast(dec6).as("d"))
+        (lit(1.0) - $"sim").cast(dec18_6).as("d"))
     lofStages(spark, k, nn)
   }
 
@@ -535,7 +528,6 @@ object VectorQueries extends QueryPack {
   private[graft] def lofStages(spark: SparkSession, k: Int,
       nn: DataFrame): DataFrame = {
     import spark.implicits._
-    val dec6 = org.apache.spark.sql.types.DecimalType(18, 6)
     val kdist = nn.groupBy($"qid".as("p")).agg(max($"d").as("kdist"))
     val reach = nn.join(kdist.withColumnRenamed("p", "nid"), "nid")
       .select($"qid", $"nid", greatest($"kdist", $"d").as("reach"))
@@ -547,7 +539,7 @@ object VectorQueries extends QueryPack {
       .agg(sum($"reach").as("sr"))
       .select($"qid",
         when($"sr" > 0,
-          round(lit(k.toDouble) / $"sr".cast("double"), 6).cast(dec6))
+          round(lit(k.toDouble) / $"sr".cast("double"), 6).cast(dec18_6))
           .as("lrd"))
     val lof = nn.select($"qid", $"nid")
       .join(lrd.select($"qid".as("nid"), $"lrd".as("lrd_n")), "nid")
@@ -866,14 +858,13 @@ object VectorQueries extends QueryPack {
     * the rounded norms are cross-engine exact by construction. */
   def qEmbedHealth(spark: SparkSession, sfDir: String): DataFrame = {
     import spark.implicits._
-    val dec6 = org.apache.spark.sql.types.DecimalType(18, 6)
     val norms = Tables.df(spark, sfDir, "embeddings")
       .select($"vec_id", $"embedding".cast("array<double>").as("v"))
       .select($"vec_id", size($"v").as("dim"),
         posexplode($"v").as(Seq("d", "x")))
       .select($"vec_id", $"dim",
         round($"x" * $"x", 9)
-          .cast(org.apache.spark.sql.types.DecimalType(20, 9)).as("t"))
+          .cast(dec20_9).as("t"))
       .groupBy($"vec_id", $"dim").agg(sum($"t").as("n2"))
       .select($"vec_id", $"dim",
         round(sqrt($"n2".cast("double")), 6).as("norm"))
@@ -882,7 +873,7 @@ object VectorQueries extends QueryPack {
       sum(when($"dim" =!= 64, 1L).otherwise(0L)).as("n_wrong_dim"),
       sum(when($"norm" === 0.0, 1L).otherwise(0L)).as("n_zero"),
       min($"norm").as("min_norm"), max($"norm").as("max_norm"),
-      round(sum($"norm".cast(dec6)).cast("double") / count(lit(1)), 6)
+      round(sum($"norm".cast(dec18_6)).cast("double") / count(lit(1)), 6)
         .as("mean_norm"))
   }
 
@@ -956,31 +947,31 @@ object VectorQueries extends QueryPack {
     * per cell. */
   def qSrpBands(spark: SparkSession, sfDir: String): DataFrame = {
     import spark.implicits._
-    val dec6 = org.apache.spark.sql.types.DecimalType(18, 6)
     val PI = 3.141592653589793
     val grid = Seq((1, 64), (2, 32), (4, 16), (8, 8), (16, 4), (32, 2),
         (64, 1), (2, 16), (4, 8), (8, 4), (16, 2), (2, 8), (4, 4), (8, 2))
       .toDF("b", "r")
     def pcoll(s: org.apache.spark.sql.Column) =
       round(lit(1.0) - acos(s) / PI, 9)
-    def pcand(p: org.apache.spark.sql.Column, b: org.apache.spark.sql.Column,
-        r: org.apache.spark.sql.Column) =
-      lit(1.0) - pow(lit(1.0) - pow(p, r.cast("double")), b.cast("double"))
     val truth = Similarity.cosinePairsBrute(
         Tables.df(spark, sfDir, "embeddings").filter($"vec_id" % 2 === 0),
         0.25)
       .select($"sim")
     val scored = truth.crossJoin(broadcast(grid))
       .select($"b", $"r",
-        round(pcand(pcoll($"sim"), $"b", $"r"), 6).cast(dec6).as("p"))
+        round(Similarity.bandCollision(pcoll($"sim"), $"b", $"r"), 6)
+          .cast(dec18_6).as("p"))
       .groupBy($"b", $"r")
       .agg(round(sum($"p").cast("double") / count(lit(1)), 6)
         .as("exp_recall025"))
     grid.join(scored, Seq("b", "r"), "left")
       .select($"b", $"r", ($"b" * $"r").as("n_planes"),
-        round(pcand(pcoll(lit(0.25)), $"b", $"r"), 6).as("p25"),
-        round(pcand(pcoll(lit(0.5)), $"b", $"r"), 6).as("p50"),
-        round(pcand(pcoll(lit(0.9)), $"b", $"r"), 6).as("p90"),
+        round(Similarity.bandCollision(pcoll(lit(0.25)), $"b", $"r"), 6)
+          .as("p25"),
+        round(Similarity.bandCollision(pcoll(lit(0.5)), $"b", $"r"), 6)
+          .as("p50"),
+        round(Similarity.bandCollision(pcoll(lit(0.9)), $"b", $"r"), 6)
+          .as("p90"),
         $"exp_recall025")
       .orderBy($"n_planes".desc, $"b")
   }
@@ -1005,7 +996,6 @@ object VectorQueries extends QueryPack {
     * reconstructs exactly. */
   def qQuantize(spark: SparkSession, sfDir: String): DataFrame = {
     import spark.implicits._
-    val dec6 = org.apache.spark.sql.types.DecimalType(18, 6)
     val dims = Tables.df(spark, sfDir, "embeddings")
       .select($"vec_id", posexplode($"embedding".cast("array<double>"))
         .as(Seq("d", "x")))
@@ -1022,7 +1012,7 @@ object VectorQueries extends QueryPack {
         round(min($"scale"), 6).as("scale"),
         max($"q").as("max_code"),
         round(max($"err"), 6).as("max_abs_err"),
-        (sum(round($"err", 6).cast(dec6)).cast("double") / count(lit(1)))
+        (sum(round($"err", 6).cast(dec18_6)).cast("double") / count(lit(1)))
           .as("mean_abs_err"))
       .orderBy($"d")
   }
@@ -1202,7 +1192,7 @@ object VectorQueries extends QueryPack {
       inp.join(broadcast(cent), "d")
         .select($"vec_id", $"s", $"cid",
           round(($"x" - $"c") * ($"x" - $"c"), 9)
-            .cast(org.apache.spark.sql.types.DecimalType(20, 9)).as("t"))
+            .cast(dec20_9).as("t"))
         .groupBy($"vec_id", $"s", $"cid").agg(sum($"t").as("dist"))
         .groupBy($"vec_id", $"s").agg(min(struct($"dist", $"cid")).as("m"))
         .select($"vec_id", $"s", $"m.cid".as("cid"))
@@ -1220,7 +1210,7 @@ object VectorQueries extends QueryPack {
     val a1 = assign(dims.filter($"vec_id" % 5 === 0), c0)
     val c1 = dims.join(a1, Seq("vec_id", "s"))
       .select($"cid", $"d",
-        round($"x", 6).cast(org.apache.spark.sql.types.DecimalType(18, 6))
+        round($"x", 6).cast(dec18_6)
           .as("xd"))
       .groupBy($"cid", $"d")
       .agg((sum($"xd").cast("double") / count(lit(1))).as("c"))
@@ -1234,7 +1224,7 @@ object VectorQueries extends QueryPack {
       .join(broadcast(c1), "d")
       .select($"qid", $"s", $"cid",
         round(($"x" - $"c") * ($"x" - $"c"), 9)
-          .cast(org.apache.spark.sql.types.DecimalType(20, 9)).as("t"))
+          .cast(dec20_9).as("t"))
       .groupBy($"qid", $"s", $"cid").agg(sum($"t").as("pdist"))
     val adc = codes.join(broadcast(lut), Seq("s", "cid"))
       .filter($"vec_id" =!= $"qid")
@@ -1250,7 +1240,7 @@ object VectorQueries extends QueryPack {
     val rr = shortlist.join(qd, "qid").join(cd, Seq("cand", "d"))
       .select($"qid", $"cand",
         round(($"qx" - $"cx") * ($"qx" - $"cx"), 9)
-          .cast(org.apache.spark.sql.types.DecimalType(20, 9)).as("t"))
+          .cast(dec20_9).as("t"))
       .groupBy($"qid", $"cand").agg(sum($"t").as("dist"))
     rr.withColumn("rk", row_number().over(
         Window.partitionBy($"qid").orderBy($"dist", $"cand")))
@@ -1275,15 +1265,13 @@ object VectorQueries extends QueryPack {
     * IEEE-exact) rounded once. */
   def qCentroidDrift(spark: SparkSession, sfDir: String): DataFrame = {
     import spark.implicits._
-    val dec6 = org.apache.spark.sql.types.DecimalType(18, 6)
-    val dec9 = org.apache.spark.sql.types.DecimalType(18, 9)
     val comps = Tables.df(spark, sfDir, "embeddings")
       .select($"label", posexplode($"embedding".cast("array<double>"))
         .as(Seq("dim", "x")))
-      .select($"label", $"dim", round($"x", 6).cast(dec6).as("xd"))
+      .select($"label", $"dim", round($"x", 6).cast(dec18_6).as("xd"))
     val cent = comps.groupBy($"label", $"dim")
       .agg(round(sum($"xd").cast("double") / count(lit(1)), 9)
-        .cast(dec9).as("c"))
+        .cast(dec18_9).as("c"))
     val norms = cent.groupBy($"label")
       .agg(sum($"c" * $"c").as("n2"))
     val pairs = cent.select($"label".as("la"), $"dim", $"c".as("ca"))
@@ -1346,7 +1334,6 @@ object VectorQueries extends QueryPack {
     * tie-break. */
   def qEcod(spark: SparkSession, sfDir: String): DataFrame = {
     import spark.implicits._
-    val dec9 = DecimalType(28, 9)
     val emb = Tables.df(spark, sfDir, "embeddings")
     val dims = emb.select($"vec_id",
         explode(array((1 to 8).map(j =>
@@ -1364,7 +1351,7 @@ object VectorQueries extends QueryPack {
       .crossJoin(broadcast(nn))
       .withColumn("term",
         round(-log(least($"cle", $"n" - $"cle" + $"cv").cast("double")
-          / $"n"), 9).cast(dec9))
+          / $"n"), 9).cast(dec28_9))
     scored.groupBy($"vec_id")
       .agg(sum($"term").as("score"))
       .join(emb.select($"vec_id", $"label"), "vec_id")

@@ -1,10 +1,10 @@
 package graft.queries
 
+import graft.Decimals._
 import graft.Tables
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.DecimalType
 
 /** Window functions — Hive 0.11+'s PTF framework (PTFOperator +
   * WindowingTableFunction): ranking, analytic lead/lag/first/last,
@@ -22,8 +22,6 @@ import org.apache.spark.sql.types.DecimalType
   * fixture's per-key cardinalities keep each partition in memory.
   */
 object Windows extends QueryPack {
-
-  private def dec(c: Column): Column = c.cast(DecimalType(18, 2))
 
   /** Ranking family. Sampled to l_orderkey % 100 == 0 to keep the verify
     * output compact while still crossing partitions. */
@@ -83,10 +81,10 @@ object Windows extends QueryPack {
       .select($"l_suppkey", $"l_orderkey", $"l_linenumber", $"l_shipdate",
         $"l_quantity", $"l_extendedprice")
       .withColumn("running_qty",
-        sum(dec($"l_quantity")).over(w.rowsBetween(Window.unboundedPreceding,
+        sum(money($"l_quantity")).over(w.rowsBetween(Window.unboundedPreceding,
           Window.currentRow)).cast("double"))
       .withColumn("moving4_qty",
-        sum(dec($"l_quantity")).over(w.rowsBetween(-3, Window.currentRow))
+        sum(money($"l_quantity")).over(w.rowsBetween(-3, Window.currentRow))
           .cast("double"))
       .orderBy($"l_suppkey", $"l_shipdate", $"l_orderkey", $"l_linenumber",
         $"l_quantity", $"l_extendedprice", $"running_qty")

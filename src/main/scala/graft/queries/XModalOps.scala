@@ -1,11 +1,11 @@
 package graft.queries
 
+import graft.Decimals._
 import graft.Tables
 import graft.functions.DecimalDot9
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.DecimalType
 
 /** Cross-modal curation ops (r16, VERDICT r15 #3): the CLIP-gate family —
   * text↔media alignment scoring, cross-modal retrieval eval, and an
@@ -24,10 +24,6 @@ import org.apache.spark.sql.types.DecimalType
   *    gate, attrition report, retrieval rank) is the production plumbing.
   */
 object XModalOps extends QueryPack {
-
-  private val dec6 = DecimalType(18, 6)
-  private val dec9 = DecimalType(28, 9)
-  private val dec9n = DecimalType(18, 9)
 
   /** MEDIA tower: sparse (doc_id, dim, h) 64-bin histogram over
     * (charcode + position) % 64 — position-mixed so byte REORDERING
@@ -91,7 +87,7 @@ object XModalOps extends QueryPack {
       .select($"vec_id".as("doc_id"),
         posexplode($"embedding").as(Seq("dim", "xe")))
       .select($"doc_id", $"dim",
-        round($"xe".cast("double"), 6).cast(dec6).as("x"))
+        round($"xe".cast("double"), 6).cast(dec18_6).as("x"))
   }
 
   // ---- q_xmodal_align ------------------------------------------------------
@@ -126,7 +122,7 @@ object XModalOps extends QueryPack {
     val txt = txtv.localCheckpoint() // two dot arms + the text-norm arm
     val nt = txt
       .select($"doc_id",
-        round($"x".cast("double") * $"x".cast("double"), 9).cast(dec9)
+        round($"x".cast("double") * $"x".cast("double"), 9).cast(dec28_9)
           .as("tm"))
       .groupBy($"doc_id").agg(sum($"tm").as("n2t"))
     // per-channel cosine against the SAME text vector (both channels bin
@@ -136,7 +132,7 @@ object XModalOps extends QueryPack {
     def chanCos(med: DataFrame, out: String): DataFrame = {
       val dot = txt.join(med, Seq("doc_id", "dim"))
         .select($"doc_id",
-          round($"x".cast("double") * $"h", 9).cast(dec9).as("tm"))
+          round($"x".cast("double") * $"h", 9).cast(dec28_9).as("tm"))
         .groupBy($"doc_id").agg(sum($"tm").as("dot"))
       val nm = med.groupBy($"doc_id").agg(sum($"h" * $"h").as("n2m"))
       dot.join(nt, "doc_id").join(nm, "doc_id")
@@ -158,8 +154,8 @@ object XModalOps extends QueryPack {
         .select($"doc_id", $"source"), "doc_id")
       .groupBy($"source")
       .agg(count(lit(1)).as("n_pairs"),
-        sum($"cs".cast(dec6)).as("csum"),
-        sum(coalesce($"cs2", lit(0.0)).cast(dec6)).as("csum2"),
+        sum($"cs".cast(dec18_6)).as("csum"),
+        sum(coalesce($"cs2", lit(0.0)).cast(dec18_6)).as("csum2"),
         sum(when($"cs" >= 0.0 && $"cs2" >= 0.0, 1L).otherwise(0L))
           .as("n_keep"))
       .select($"source", $"n_pairs",
@@ -266,7 +262,7 @@ object XModalOps extends QueryPack {
       .agg(count(lit(1)).as("n_q"),
         sum(when($"rk" === 1, 1L).otherwise(0L)).as("h1"),
         sum(when($"rk" <= 10, 1L).otherwise(0L)).as("h10"),
-        sum(round(lit(1.0) / $"rk", 9).cast(dec9n)).as("rrsum"))
+        sum(round(lit(1.0) / $"rk", 9).cast(dec18_9)).as("rrsum"))
       .select($"source", $"n_q",
         round($"h1".cast("double") / $"n_q", 6).as("r_at_1"),
         round($"h10".cast("double") / $"n_q", 6).as("r_at_10"),
@@ -312,8 +308,8 @@ object XModalOps extends QueryPack {
         sum(when($"rk".isNotNull, 1L).otherwise(0L)).as("n_found"),
         sum(when($"rk" === 1, 1L).otherwise(0L)).as("h1"),
         sum(when($"rk" <= 10, 1L).otherwise(0L)).as("h10"),
-        sum(when($"rk".isNotNull, round(lit(1.0) / $"rk", 9).cast(dec9n))
-          .otherwise(lit(0).cast(dec9n))).as("rrsum"))
+        sum(when($"rk".isNotNull, round(lit(1.0) / $"rk", 9).cast(dec18_9))
+          .otherwise(lit(0).cast(dec18_9))).as("rrsum"))
       .select($"source", $"n_q", $"n_found",
         round($"h1".cast("double") / $"n_q", 6).as("r_at_1"),
         round($"h10".cast("double") / $"n_q", 6).as("r_at_10"),
@@ -492,7 +488,7 @@ object XModalOps extends QueryPack {
       .withColumn("mm", ($"pa" + $"pb") / 2)
       .withColumn("term",
         round(lit(0.5) * $"pa" * log($"pa" / $"mm")
-          + lit(0.5) * $"pb" * log($"pb" / $"mm"), 9).cast(dec9n))
+          + lit(0.5) * $"pb" * log($"pb" / $"mm"), 9).cast(dec18_9))
       .localCheckpoint() // row output + the total
     val js = terms.agg(sum($"term").as("s"))
     terms.crossJoin(broadcast(js))
@@ -532,7 +528,7 @@ object XModalOps extends QueryPack {
       hist.join(tot, "doc_id")
         .select($"doc_id",
           round(-($"h".cast("double") / $"ht")
-            * log($"h".cast("double") / $"ht"), 9).cast(dec9n).as("term"))
+            * log($"h".cast("double") / $"ht"), 9).cast(dec18_9).as("term"))
         .groupBy($"doc_id")
         .agg(round(sum($"term").cast("double"), 6).as(out))
     }
@@ -553,9 +549,9 @@ object XModalOps extends QueryPack {
         .select($"doc_id", $"source"), "doc_id")
       .groupBy($"source")
       .agg(count(lit(1)).as("n_docs"),
-        round(sum($"entropy".cast(dec6)).cast("double")
+        round(sum($"entropy".cast(dec18_6)).cast("double")
           / count(lit(1)), 6).as("mean_entropy"),
-        round(sum($"entropy2".cast(dec6)).cast("double")
+        round(sum($"entropy2".cast(dec18_6)).cast("double")
           / count(lit(1)), 6).as("mean_entropy2"),
         min($"entropy").as("min_entropy"),
         max($"entropy").as("max_entropy"),
@@ -615,7 +611,7 @@ object XModalOps extends QueryPack {
     val ent = hist.join(tot, "doc_id")
       .select($"doc_id",
         round(-($"h".cast("double") / $"ht")
-          * log($"h".cast("double") / $"ht"), 9).cast(dec9n).as("term"))
+          * log($"h".cast("double") / $"ht"), 9).cast(dec18_9).as("term"))
       .groupBy($"doc_id")
       .agg(round(sum($"term").cast("double"), 6).as("entropy"))
     val nna = bytes.groupBy($"doc_id")
@@ -626,7 +622,7 @@ object XModalOps extends QueryPack {
         sum(length($"payload").cast("long")).as("total_bytes"),
         countDistinct(md5(hex($"payload"))).as("n_distinct_payloads"),
         sum($"nna").as("n_nonascii_bytes"),
-        round(sum($"entropy".cast(dec6)).cast("double") / count(lit(1)), 6)
+        round(sum($"entropy".cast(dec18_6)).cast("double") / count(lit(1)), 6)
           .as("mean_entropy_bytes"),
         sum(when($"entropy" < 2.0, 1L).otherwise(0L)).as("n_degenerate"))
       .orderBy($"source")

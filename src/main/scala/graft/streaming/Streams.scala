@@ -1,9 +1,9 @@
 package graft.streaming
 
+import graft.Decimals._
 import graft.functions.{CosineSimilarity, DecimalDot9}
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.DecimalType
 
 /** Event-time stream processing — the extension surface the reference's
   * Hive 1.2 deployment lacks entirely (Hive has only an ACID ingest API;
@@ -18,8 +18,6 @@ import org.apache.spark.sql.types.DecimalType
   */
 object Streams {
 
-  private def dec(c: Column): Column = c.cast(DecimalType(18, 2))
-
   /** Tumbling event-time windows per event_type. */
   def tumblingCounts(events: DataFrame, width: String): DataFrame = {
     val spark = events.sparkSession
@@ -27,7 +25,7 @@ object Streams {
     events
       .groupBy(window($"ts", width).as("w"), $"event_type")
       .agg(count(lit(1)).as("n"),
-        sum(dec($"value")).cast("double").as("sum_value"))
+        sum(money($"value")).cast("double").as("sum_value"))
       .select($"w.start".as("w_start"), $"event_type", $"n", $"sum_value")
   }
 
@@ -51,7 +49,7 @@ object Streams {
     events
       .groupBy(session_window($"ts", gap).as("w"), $"user_id")
       .agg(count(lit(1)).as("n_events"),
-        sum(dec($"value")).cast("double").as("sum_value"))
+        sum(money($"value")).cast("double").as("sum_value"))
       .select($"user_id", $"w.start".as("s_start"), $"w.end".as("s_end"),
         $"n_events", $"sum_value")
   }
@@ -119,9 +117,9 @@ object Streams {
     import spark.implicits._
     orders.groupBy($"o_orderpriority").agg(
         count(lit(1)).as("n_orders"),
-        sum(dec($"o_totalprice")).as("s"),
-        min(dec($"o_totalprice")).as("mn"),
-        max(dec($"o_totalprice")).as("mx"))
+        sum(money($"o_totalprice")).as("s"),
+        min(money($"o_totalprice")).as("mn"),
+        max(money($"o_totalprice")).as("mx"))
       .select($"o_orderpriority", $"n_orders",
         $"s".cast("double").as("sum_price"),
         $"mn".cast("double").as("min_price"),
@@ -513,7 +511,7 @@ object Streams {
     val hw = lit(3.0) * $"sp" / sqrt($"n".cast("double"))
     stream
       .groupBy(window($"ts", "1 day").as("w"))
-      .agg(count(lit(1)).as("n"), sum(dec(round($"value", 2))).as("sx"))
+      .agg(count(lit(1)).as("n"), sum(money(round($"value", 2))).as("sx"))
       .join(broadcast(limits), lit(true))
       .select($"w", $"n",
         (expr("(cast(sx * 100 as bigint) * 20000 + n) div (2 * n)")
@@ -760,11 +758,10 @@ object Streams {
       : DataFrame = {
     val spark = stream.sparkSession
     import spark.implicits._
-    val dec6 = DecimalType(18, 6)
     val spine = Seq(30, 60, 90).toDF("policy_days")
     stream
       .select($"event_type", to_date($"ts").as("day"),
-        round($"value", 6).cast(dec6).as("v"))
+        round($"value", 6).cast(dec18_6).as("v"))
       .crossJoin(broadcast(anchor))
       .crossJoin(broadcast(spine))
       .withColumn("drop", datediff($"anchor", $"day") >= $"policy_days")

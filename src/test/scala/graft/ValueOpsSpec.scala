@@ -31,6 +31,44 @@ class ValueOpsSpec extends SparkSpec {
     }
   }
 
+  test("knnShapley: every rank's value is Jia '19's closed form, and " +
+      "each query's values sum to its top-10 match rate, at N ≥ K and " +
+      "N < K") {
+    import spark.implicits._
+    val K = 10
+    // qid 1 ranks N = 12 candidates, qid 2 only N = 4 (< K)
+    val lists = Map(1L -> Seq(1, 0, 1, 1, 0, 0, 1, 0, 1, 1, 0, 1),
+      2L -> Seq(0, 1, 0, 1))
+    val ranked = lists.toSeq.flatMap { case (qid, ms) =>
+      ms.zipWithIndex.map { case (m, i) =>
+        (qid, qid * 100 + i, i % 3, i + 1, m.toLong) }
+    }.toDF("qid", "vec_id", "label", "rk", "m")
+    val got = ValueOps.knnShapley(ranked).collect()
+      .map(r => (r.getAs[Long]("qid"), r.getAs[Int]("rk")) ->
+        BigDecimal(r.getAs[java.math.BigDecimal]("shap"))).toMap
+    assert(got.size == lists.values.map(_.size).sum)
+    val mc = new java.math.MathContext(40)
+    for ((qid, ms) <- lists) {
+      val n = ms.size
+      // t_j = (m_j − m_{j+1}) · min(K, j) / (K · j), m_{N+1} = 0
+      def term(j: Int) = BigDecimal(ms(j - 1) - (if (j < n) ms(j) else 0), mc) *
+        math.min(K, j) / (K * j)
+      val exact = (1 to n).map(j => j -> (j to n).map(term).sum).toMap
+      def term9(j: Int) = term(j).setScale(9, BigDecimal.RoundingMode.HALF_UP)
+      val rounded = (1 to n).map(j => j -> (j to n).map(term9).sum).toMap
+      for (j <- 1 to n)
+        assert(got((qid, j)) == rounded(j),
+          s"qid=$qid rank $j: shap ${got((qid, j))} vs ${rounded(j)}")
+      val rate = BigDecimal(ms.take(K).sum) / K
+      assert((exact.values.sum - rate).abs < BigDecimal("1e-30"),
+        s"qid=$qid: closed form sums to ${exact.values.sum}, not $rate")
+      val total = (1 to n).map(j => got((qid, j))).sum
+      // 9dp terms: each value is off by at most n · 5e-10
+      assert((total - rate).abs <= BigDecimal(n * n) * BigDecimal("5e-10"),
+        s"qid=$qid: sum(shap)=$total vs top-10 match rate $rate")
+    }
+  }
+
   test("q_knn_shapley: top-20 by mean value, sorted, and the valuation " +
       "join broadcasts the bounded query side (no all-pairs shuffle)") {
     import spark.implicits._
