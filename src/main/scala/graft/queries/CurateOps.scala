@@ -250,22 +250,21 @@ object CurateOps extends QueryPack {
     * production pipeline computes the dedup manifest ONCE, writes it,
     * and every consumer reads the artifact; this mirrors that shape —
     * the first use per (application, fixture, mod) — the
-    * [[ServeOps.buildOnce]] memo — writes a parquet manifest under
-    * java.io.tmpdir (PID-scoped, so no cross-process staleness or
-    * clashes), later uses read it. Parquet-backed, so it survives
+    * [[ServeOps.buildOnce]] memo — writes a parquet manifest to its
+    * [[ServeOps.scratchDir]] (per JVM, so no cross-process staleness or
+    * clashes; the exit sweep reclaims it), later uses read it.
+    * Parquet-backed, so it survives
     * `spark.catalog.clearCache()` and the bench's between-query
     * unpersist sweep, unlike a cached/localCheckpointed plan. Row
     * order is NOT part of the artifact's contract — consumers apply
     * their own final sort. */
   private def sharedManifest(spark: SparkSession, sfDir: String,
       mod: Int): DataFrame = {
-    val p = s"${System.getProperty("java.io.tmpdir")}/graft_manifest_" +
-      s"${ProcessHandle.current().pid()}_${mod}_" +
-      sfDir.replaceAll("[^A-Za-z0-9.]", "_")
-    ServeOps.buildOnce(spark, sfDir, s"graft_manifest_$mod") { _ =>
-      canonicalManifest(spark, sfDir, mod).write.mode("overwrite").parquet(p)
+    val pre = ServeOps.buildOnce(spark, sfDir, s"graft_manifest_$mod") { pre =>
+      canonicalManifest(spark, sfDir, mod).write.mode("overwrite")
+        .parquet(ServeOps.scratchDir(pre))
     }
-    spark.read.parquet(p)
+    spark.read.parquet(ServeOps.scratchDir(pre))
   }
 
   /** The survivorship manifest over the doc_id%`mod` subset — the plan
@@ -796,21 +795,18 @@ object CurateOps extends QueryPack {
     * compute-once/read-many shape as the survivorship manifest
     * ([[sharedManifest]]): the first use per (application, fixture)
     * writes the n×k point×centroid distance relation (vec_id, cid, dist
-    * DECIMAL(30,9)) to a PID-scoped parquet under java.io.tmpdir; later
-    * uses read the
-    * artifact. Parquet-backed so it survives `clearCache()` and the
-    * bench's between-query unpersist sweep. The relation is n×k rows —
+    * DECIMAL(30,9)) to a per-JVM [[ServeOps.scratchDir]] parquet; later
+    * uses read the artifact. Parquet-backed so it survives
+    * `clearCache()` and the bench's between-query unpersist sweep. The relation is n×k rows —
     * thin at any corpus scale — and fully deterministic, so every
     * consumer's oracle hash is unchanged. */
   private def kmeansFinalDistsShared(spark: SparkSession, sfDir: String)
       : DataFrame = {
-    val p = s"${System.getProperty("java.io.tmpdir")}/graft_kmdist_" +
-      s"${ProcessHandle.current().pid()}_" +
-      sfDir.replaceAll("[^A-Za-z0-9.]", "_")
-    ServeOps.buildOnce(spark, sfDir, "graft_kmdist") { _ =>
-      kmeansFinalDists(spark, sfDir).write.mode("overwrite").parquet(p)
+    val pre = ServeOps.buildOnce(spark, sfDir, "graft_kmdist") { pre =>
+      kmeansFinalDists(spark, sfDir).write.mode("overwrite")
+        .parquet(ServeOps.scratchDir(pre))
     }
-    spark.read.parquet(p)
+    spark.read.parquet(ServeOps.scratchDir(pre))
   }
 
   private def kmeansAssign(spark: SparkSession, sfDir: String): DataFrame = {

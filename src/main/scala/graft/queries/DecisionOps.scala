@@ -267,19 +267,11 @@ object DecisionOps extends QueryPack {
 
   // ---- q_tukey_hsd --------------------------------------------------------
   /** Studentized-range critical values q_{0.05}(k, ∞) by group count —
-    * one Scala home rendered into both engines (the chi2Crit05
-    * discipline); out-of-table k → NULL significance, surfaced by the
-    * hash gate rather than a silently wrong threshold. */
+    * one Scala home rendered into both engines through [[CritValues]];
+    * out-of-table k → NULL significance, surfaced by the hash gate
+    * rather than a silently wrong threshold. */
   private[graft] val tukeyQCrit05 = Map(2 -> 2.772, 3 -> 3.314,
     4 -> 3.633, 5 -> 3.858, 6 -> 4.030, 7 -> 4.170, 8 -> 4.286)
-  private def tukeyCritCol(k: Column): Column =
-    tukeyQCrit05.foldLeft(lit(null).cast("double")) { case (acc, (g, c)) =>
-      when(k === g, c).otherwise(acc)
-    }
-  private[graft] def tukeyCritSql(kExpr: String): String =
-    tukeyQCrit05.toSeq.sorted
-      .map { case (g, c) => s"WHEN $g THEN $c" }
-      .mkString(s"CASE $kExpr ", " ", " END")
 
   /** Tukey–Kramer honestly-significant-difference post-hoc (Tukey '49;
     * Kramer '56 for unequal n) on the q_anova design: after the
@@ -315,7 +307,7 @@ object DecisionOps extends QueryPack {
     pairs.select($"type_a", $"type_b", $"na", $"nb",
       round(d, 6).as("diff"), round(se, 6).as("se"),
       round(q, 6).as("q_stat"),
-      (q > tukeyCritCol($"k")).as("significant"))
+      (q > CritValues.column(tukeyQCrit05, $"k")).as("significant"))
       .orderBy($"type_a", $"type_b")
   }
 
@@ -1406,7 +1398,7 @@ object DecisionOps extends QueryPack {
         |  round(CASE WHEN se > 0.0 THEN abs(d) / se END, 6) AS q_stat,
         |  CASE WHEN se > 0.0 THEN abs(d) / se END
         |""".stripMargin +
-      s"      > ${tukeyCritSql("k")} AS significant\n" +
+      s"      > ${CritValues.sql(tukeyQCrit05, "k")} AS significant\n" +
       """|FROM f ORDER BY type_a, type_b""".stripMargin),
 
     "q_meta_analysis" ->

@@ -494,10 +494,7 @@ object InferOps extends QueryPack {
     // the gate multiplies instead of dividing by df: crit/df would be a
     // DECIMAL division in DuckDB but a double one here — f·df > crit is
     // the same IEEE multiply in both engines
-    val crit = NonparamOps.chi2Crit05
-      .foldLeft(lit(null).cast("double")) { case (acc, (d, c)) =>
-        when(dfab === d, lit(c)).otherwise(acc)
-      }
+    val crit = CritValues.column(NonparamOps.chi2Crit05, dfab)
     // SS magnitudes (~1e11-1e15) sit where double ulp exceeds the 9dp
     // rounding grid, so each engine's decimal<->double conversions leave
     // cents-level noise in the exact-decimal SS; reporting in MILLIONS
@@ -642,7 +639,7 @@ object InferOps extends QueryPack {
         |    (CAST(ssab AS DOUBLE) / CAST((ka - 1) * (kb - 1) AS DOUBLE))
         |    / (CAST(ssw AS DOUBLE) / CAST(dfw AS DOUBLE)) END, 6)
         |    * CAST((ka - 1) * (kb - 1) AS DOUBLE)
-        |    > ${NonparamOps.chi2CritSql("(ka - 1) * (kb - 1)")}
+        |    > ${CritValues.sql(NonparamOps.chi2Crit05, "(ka - 1) * (kb - 1)")}
         |    AS interaction_sig
         |FROM g""".stripMargin),
 

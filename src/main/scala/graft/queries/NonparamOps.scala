@@ -38,23 +38,13 @@ object NonparamOps extends QueryPack {
     * fixture-cardinality change can never silently test the wrong
     * threshold (ADVICE r12 — qFriedman hard-coded the df=4 value while
     * reporting a data-derived df). Out-of-table df → NULL significance,
-    * which the oracle mirrors (same CASE) and the hash check surfaces. */
+    * which the oracle mirrors (the same [[CritValues]] table rendered as
+    * a CASE) and the hash check surfaces. */
   private[graft] val chi2Crit05 = Map(1 -> 3.841, 2 -> 5.991, 3 -> 7.815,
     4 -> 9.488, 5 -> 11.070, 6 -> 12.592, 7 -> 14.067, 8 -> 15.507,
     9 -> 16.919, 10 -> 18.307, 11 -> 19.675, 12 -> 21.026, 13 -> 22.362,
     14 -> 23.685, 15 -> 24.996, 16 -> 26.296, 17 -> 27.587, 18 -> 28.869,
     19 -> 30.144, 20 -> 31.410)
-  private def chi2CritCol(df: org.apache.spark.sql.Column) =
-    chi2Crit05.foldLeft(lit(null).cast("double")) { case (acc, (d, c)) =>
-      when(df === d, c).otherwise(acc)
-    }
-  /** The identical lookup as a SQL CASE over a df expression, for the
-    * oracle side — ONE Scala home for the table so the engines can't
-    * drift. */
-  private[graft] def chi2CritSql(dfExpr: String): String =
-    chi2Crit05.toSeq.sorted
-      .map { case (d, c) => s"WHEN $d THEN $c" }
-      .mkString(s"CASE $dfExpr ", " ", " END")
 
   /** The three-rater (doc, category) assignment relation shared by
     * [[qFleissKappa]] and [[qKrippendorff]] — one source of truth for
@@ -188,7 +178,7 @@ object NonparamOps extends QueryPack {
       (($"k" - lit(1L)) * $"num").cast("double") / den.cast("double"))
     j.select($"n".as("n_blocks"), $"k",
       round(chi2, 6).as("chi2_f"), ($"k" - lit(1L)).as("df"),
-      (chi2 > chi2CritCol($"k" - lit(1L))).as("significant"))
+      (chi2 > CritValues.column(chi2Crit05, $"k" - lit(1L))).as("significant"))
   }
 
   // ---- q_cochran_q ---------------------------------------------------------
@@ -484,7 +474,7 @@ object NonparamOps extends QueryPack {
         |""".stripMargin +
       // the df-keyed critical-value CASE comes from the ONE Scala table
       // (chi2Crit05) both engines share, so the thresholds cannot drift
-      s"      > ${chi2CritSql("k - 1")}\n" +
+      s"      > ${CritValues.sql(chi2Crit05, "k - 1")}\n" +
       """|    END AS significant
         |FROM f""".stripMargin),
 

@@ -64,9 +64,7 @@ object Series2Ops extends QueryPack {
     // bounded single-partition window: 7 lag rows, never data-scale
     val w7 = Window.orderBy($"lag")
       .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    val crit = NonparamOps.chi2Crit05.foldLeft(lit(null).cast("double")) {
-      case (acc, (d, c)) => when($"lag" === d, lit(c)).otherwise(acc)
-    }
+    val crit = CritValues.column(NonparamOps.chi2Crit05, $"lag")
     terms.withColumn("cum", sum($"term").over(w7))
       .select($"lag", $"r",
         round(($"nd" * ($"nd" + 2)).cast("double")
@@ -778,7 +776,7 @@ object Series2Ops extends QueryPack {
         |    CAST(lag AS BIGINT) AS df
         |  FROM cums)
         |SELECT lag, r, q_lb, df,
-        |  q_lb > ${NonparamOps.chi2CritSql("lag")} AS significant
+        |  q_lb > ${CritValues.sql(NonparamOps.chi2Crit05, "lag")} AS significant
         |FROM ql ORDER BY lag""".stripMargin),
 
     // same 9dp central-moment terms into DECIMAL(38,9); shared closed

@@ -80,10 +80,15 @@ object ServeOps extends QueryPack {
   // with a closed suffix set — so a name can only match when the
   // 8-hex-char tag segment sits exactly where this JVM's tag goes
   // (ADVICE r19: a bare contains() could delete a concurrent run's
-  // directories if its sfDir hash happened to equal this tag).
+  // directories if its sfDir hash happened to equal this tag). The second
+  // alternative is a [[scratchDir]]: graft_<base>_<sfhash>_<tag>, the tag
+  // last.
   private val sweepName = java.util.regex.Pattern.compile(
     "^graft_graft_[a-z0-9_]+_" + jvmTag +
-      "_(c_)?(postings|vectors|cells|centers|vocab|traj|tot|delta)$")
+      "_(c_)?(postings|vectors|cells|centers|vocab|traj|tot|delta)$" +
+      "|^graft_[a-z0-9_]+_[0-9a-f]{8}_" + jvmTag + "$")
+  private[graft] def swept(name: String): Boolean =
+    sweepName.matcher(name).matches()
   locally {
     def del(f: java.io.File): Unit = {
       // never FOLLOW a symlink (ADVICE r19): a link inside a swept dir
@@ -97,8 +102,7 @@ object ServeOps extends QueryPack {
     }
     Runtime.getRuntime.addShutdownHook(new Thread(() => {
       val tmp = new java.io.File(System.getProperty("java.io.tmpdir"))
-      val mine = tmp.listFiles(
-        (_, n) => sweepName.matcher(n).matches())
+      val mine = tmp.listFiles((_, n) => swept(n))
       if (mine != null) mine.foreach(del)
     }, "graft-index-tmp-sweep"))
   }
@@ -113,6 +117,13 @@ object ServeOps extends QueryPack {
   // weak mixing in practice; test-suite fixture tags ride the same digest.
   private[graft] def sfPrefix(base: String, sfDir: String): String =
     base + "_" + md5Hex(sfDir).take(8) + "_" + jvmTag
+
+  /** The scratch directory `java.io.tmpdir/<pre>` of an [[sfPrefix]]
+    * `pre` — per fixture and per JVM, so two processes never share one,
+    * and reclaimed by the exit sweep. Never `graft_graft_*`: that name
+    * space is the serving tables'. */
+  private[graft] def scratchDir(pre: String): String =
+    s"${System.getProperty("java.io.tmpdir")}/$pre"
 
   private def md5Hex(s: String): String =
     java.security.MessageDigest.getInstance("MD5")
@@ -312,7 +323,7 @@ object ServeOps extends QueryPack {
     }
 
   /** The %100 query-decile relation (qid, qv). */
-  private def queryDecile(spark: SparkSession, sfDir: String): DataFrame = {
+  private[graft] def queryDecile(spark: SparkSession, sfDir: String): DataFrame = {
     import spark.implicits._
     Tables.df(spark, sfDir, "embeddings")
       .filter($"vec_id" % 100 === 0)
@@ -472,17 +483,18 @@ object ServeOps extends QueryPack {
     * sweep's hit count, the bucket-keyed hit count, and the miss delta —
     * the inference-cost price of the index-shaped lookup (every
     * LSH-missed hit is an inference call the exact cache would have
-    * absorbed). The %50 query stream keeps both arms inside the indexed
-    * %2 corpus so the two decisions read the SAME key chain
-    * (annMd5Keys — one hyperplane home). Scale: the exact arm is the
-    * bounded broadcast window (eval-only); the LSH arm is a bucket
+    * absorbed). The stream is keyed once through the srpKeys home and
+    * its keys are both the probes and the one in-plan postings part of
+    * [[semcacheBest]] — the served arm's chain. Scale: the exact arm is
+    * the bounded broadcast window (eval-only); the LSH arm is a bucket
     * equi-join — the arm that ships. */
   /** The exact-sweep arm: per query the max round-6 cosine over ALL
     * strictly-earlier queries (pid < qid — the arrival-order contract)
     * via the bounded broadcast self-join. ONE home (ADVICE r19) shared
     * by [[qSemcacheLsh]] and [[qSemcacheServed]], so a tweak to the
-    * eval arm cannot silently drift the two per-τ reports apart. */
-  private def semcacheBestExact(q: DataFrame): DataFrame = {
+    * eval arm cannot silently drift the two per-τ reports apart; the
+    * hit-rate sweep [[VectorQueries.qSemcache]] reads it too. */
+  private[graft] def semcacheBestExact(q: DataFrame): DataFrame = {
     val spark = q.sparkSession
     import spark.implicits._
     q.join(broadcast(q.select($"qid".as("pid"), $"qv".as("pv"))),
@@ -492,27 +504,11 @@ object ServeOps extends QueryPack {
   }
 
   def qSemcacheLsh(spark: SparkSession, sfDir: String): DataFrame = {
-    import spark.implicits._
-    val q = Tables.df(spark, sfDir, "embeddings")
-      .filter($"vec_id" % 50 === 0)
-      .select($"vec_id".as("qid"), $"embedding".as("qv"))
-      .localCheckpoint() // exact arm, lsh verify arm, and the spine
-    val bestExact = semcacheBestExact(q)
-    val keys = VectorQueries.annMd5Keys(spark, sfDir)
-      .filter($"vec_id" % 50 === 0)
-      .localCheckpoint() // probe arm + build arm
-    val probes = VectorQueries.srpProbes(keys)
-      .select($"vec_id".as("qid"), $"tbl", $"bk")
-    val cand = probes
-      .join(keys.select($"vec_id".as("pid"), $"tbl", $"bk"), Seq("tbl", "bk"))
-      .filter($"pid" < $"qid")
-      .select($"qid", $"pid").distinct()
-    val bestLsh = cand
-      .join(q, "qid")
-      .join(q.select($"qid".as("pid"), $"qv".as("pv")), "pid")
-      .select($"qid", round(CosineSimilarity.of($"qv", $"pv"), 6).as("cs"))
-      .groupBy($"qid").agg(max($"cs").as("best_lsh"))
-    semcacheReport(q, bestExact, bestLsh)
+    val q = semcacheStreamQ(spark, sfDir)
+    val keys = SrpIndex.keys(q).localCheckpoint() // probe arm + build arm
+    val parts = (Seq(keys.select(SrpIndex.bkey, col("vec_id"))),
+      Seq(q.select(col("qid").as("vec_id"), col("qv").as("embedding"))))
+    semcacheReport(q, semcacheBestExact(q), semcacheBest(q, parts, Some(keys)))
   }
 
   /** The per-τ hit/miss-delta report off the two best-cosine arms —
@@ -568,11 +564,14 @@ object ServeOps extends QueryPack {
   /** The cache's LSH arm against any index `parts`: the one
     * [[SrpIndex.probe]] chain with the earlier-only candidate filter
     * (pid < qid), best verified cosine per query. Shared by
+    * [[qSemcacheLsh]] (the stream's own keys as an in-plan index),
     * [[qSemcacheServed]] (tables), [[qSemcacheDelta]] (base ∪ delta),
     * and [[qSemcacheCompact]] (compacted tables). */
-  private def semcacheBest(q: DataFrame, parts: SrpIndex.Parts): DataFrame =
+  private def semcacheBest(q: DataFrame, parts: SrpIndex.Parts,
+      qkeys: Option[DataFrame] = None): DataFrame =
     SrpIndex.probe(q, parts, keep = col("vec_id") < col("qid"), as = "pid",
-        vcols = Seq(col("vec_id").as("pid"), col("embedding").as("pv")))
+        vcols = Seq(col("vec_id").as("pid"), col("embedding").as("pv")),
+        qkeys = qkeys)
       .select(col("qid"),
         round(CosineSimilarity.of(col("qv"), col("pv")), 6).as("cs"))
       .groupBy(col("qid")).agg(max(col("cs")).as("best_lsh"))

@@ -13,9 +13,14 @@ import org.apache.spark.sql.functions._
   * write→prune→read path is lossless. */
 object SourceOps extends QueryPack {
 
+  /** This JVM's scratch directory for `base` over `sfDir` — never shared
+    * with a concurrent run, reclaimed at exit ([[ServeOps.scratchDir]]). */
+  private def scratch(base: String, sfDir: String): String =
+    ServeOps.scratchDir(ServeOps.sfPrefix(base, sfDir))
+
   def qPartitionedRoundtrip(spark: SparkSession, sfDir: String): DataFrame = {
     import spark.implicits._
-    val tmp = System.getProperty("java.io.tmpdir") + "/graft_part_orders"
+    val tmp = scratch("graft_part_orders", sfDir)
     Sources.writePartitioned(
       Tables.df(spark, sfDir, "orders"), tmp, "o_orderstatus")
     Sources.readPartitioned(spark, tmp)
@@ -33,9 +38,8 @@ object SourceOps extends QueryPack {
     * file-move load path is lossless. */
   def qLoadRoundtrip(spark: SparkSession, sfDir: String): DataFrame = {
     import spark.implicits._
-    val tmp = System.getProperty("java.io.tmpdir")
-    val staging = s"$tmp/graft_load_staging"
-    val table = s"$tmp/graft_load_table"
+    val staging = scratch("graft_load_staging", sfDir)
+    val table = scratch("graft_load_table", sfDir)
     Tables.df(spark, sfDir, "customer")
       .filter($"c_custkey" % 3 === 0)
       .write.mode("overwrite").parquet(staging)
@@ -57,7 +61,7 @@ object SourceOps extends QueryPack {
     * update/insert/keep semantics, not just the plumbing. */
   def qMergeRoundtrip(spark: SparkSession, sfDir: String): DataFrame = {
     import spark.implicits._
-    val tmp = System.getProperty("java.io.tmpdir") + "/graft_merge_orders"
+    val tmp = scratch("graft_merge_orders", sfDir)
     val orders = Tables.df(spark, sfDir, "orders")
     orders.filter($"o_orderkey" % 11 === 0)
       .write.mode("overwrite").parquet(tmp)

@@ -5,14 +5,19 @@ import graft.sources.Sources
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-/** The persisted sign-random-projection (SRP) serving index — ONE home
-  * for the three families that serve from it: the radius search
-  * (`q_ann_*`, [[ServeOps]]), the semantic cache (`q_semcache_*`,
-  * [[ServeOps]]) and the media tower (`q_xmodal_*`, [[XModalOps]]).
+/** The sign-random-projection (SRP) index — ONE home for every SRP
+  * candidate search, persisted or in-plan. Three families serve from
+  * it: the radius search (`q_ann_*`, [[ServeOps]]), the semantic cache
+  * (`q_semcache_*`, [[ServeOps]]) and the media tower (`q_xmodal_*`,
+  * [[XModalOps]]); their in-plan twins (q_ann_lsh, q_semcache_lsh,
+  * q_xmodal_retrieval_ann) probe an in-plan index ([[inPlan]], or their
+  * own keys as the one postings part) through the same [[probe]], and
+  * the self-join pair lists ([[VectorQueries.annMd5Pairs]], both
+  * [[VectorQueries.qAnnMultiprobe]] arms) run its [[candidates]] step.
   * The families differ only in their input relation (an id column and a
   * vector column) and in how they score the candidates this chain
-  * returns. The index is a pair of BUCKETED TABLES, the way Hive stores
-  * a `CLUSTERED BY … INTO n BUCKETS` table:
+  * returns. The persisted index is a pair of BUCKETED TABLES, the way
+  * Hive stores a `CLUSTERED BY … INTO n BUCKETS` table:
   *
   *  - `<pre>_postings(bkey, id)`, bucketed by the combined probe key
   *    [[bkey]] — the scan itself exposes HashPartitioning(bkey), so the
@@ -41,12 +46,17 @@ private[graft] object SrpIndex {
     * the merge-law specs). */
   def bkey: Column = (col("tbl") * 256 + col("bk")).as("bkey")
 
+  /** The srpKeys (vec_id, tbl, bk) of an (`id`, `vec`, …) relation —
+    * by default of fresh (qid, qv, …) queries. */
+  def keys(rel: DataFrame, id: String = "qid", vec: String = "qv")
+      : DataFrame =
+    VectorQueries.srpKeys(
+      rel.select(col(id).as("vec_id"), col(vec).as("embedding")))
+
   /** (bkey, `id`) postings of an (`id`, `vec`, …) relation. */
   def postings(rel: DataFrame, id: String = "vec_id",
       vec: String = "embedding"): DataFrame =
-    VectorQueries.srpKeys(
-        rel.select(col(id).as("vec_id"), col(vec).as("embedding")))
-      .select(bkey, col("vec_id").as(id))
+    keys(rel, id, vec).select(bkey, col("vec_id").as(id))
 
   /** Write `<pre>_postings` and `<pre>_vectors` from `rel`; with a
     * `split`, only the rows it keeps form the bucketed base and the rest
@@ -90,11 +100,36 @@ private[graft] object SrpIndex {
     stored(spark, s"${pre}_c")
   }
 
-  /** The ONE probe chain: key the fresh (qid, qv, …) queries through the
-    * srpKeys home, fan out the Hamming-1 probes, join each postings part
-    * on bkey, keep the candidates the family's `keep` admits, dedup
-    * (qid, `id` AS `as`), join each vectors part (projected to `vcols`;
-    * all columns when empty) on `as`, then `broadcast(q)` on qid.
+  /** An in-plan index over `rel`: its postings, keyed in the plan, and
+    * `rel` itself as the one vectors part. */
+  def inPlan(rel: DataFrame, id: String = "vec_id",
+      vec: String = "embedding"): Parts =
+    (Seq(postings(rel, id, vec)), Seq(rel))
+
+  /** The Hamming-1 probes (qid, bkey) of srpKeys-shaped keys. */
+  def probes(keys: DataFrame): DataFrame =
+    VectorQueries.srpProbes(keys).select(col("vec_id").as("qid"), bkey)
+
+  /** The ONE candidate step: join the (qid, bkey) `probes` with each
+    * postings part on bkey, keep the candidates the family's `keep`
+    * admits, dedup (qid, `id` AS `as`). bkey is injective on (tbl, bk),
+    * so this is the (tbl, bk) bucket equi-join. */
+  def candidates(probes: DataFrame, postingsParts: Seq[DataFrame],
+      keep: Column = lit(true), id: String = "vec_id",
+      as: String = "vec_id"): DataFrame = {
+    val p = if (postingsParts.size > 1) probes.localCheckpoint() else probes
+    postingsParts.map(p.join(_, "bkey"))
+      .reduce(_ unionAll _)
+      .filter(keep)
+      .select(col("qid"), col(id).as(as)).distinct()
+  }
+
+  /** The ONE probe chain: the queries' Hamming-1 [[probes]] (from
+    * `qkeys`, or keyed fresh through the srpKeys home — a self-join
+    * caller passes the keys it already built its postings from, so it
+    * keys its relation once), the [[candidates]] step, then the verify
+    * join: each vectors part (projected to `vcols`; all columns when
+    * empty) on `as`, then `broadcast(q)` on qid.
     *
     * Join-distributed (r20): a lambda read must probe base ∪ delta, but
     * a union BELOW the join destroys the bucketed layout's output
@@ -109,17 +144,11 @@ private[graft] object SrpIndex {
     * one part; single-part plans stay untouched. */
   def probe(q: DataFrame, parts: Parts, keep: Column = lit(true),
       id: String = "vec_id", as: String = "vec_id",
-      vcols: Seq[Column] = Nil): DataFrame = {
+      vcols: Seq[Column] = Nil, qkeys: Option[DataFrame] = None)
+      : DataFrame = {
     val (postingsParts, vectorParts) = parts
-    val probes0 = VectorQueries.srpProbes(VectorQueries.srpKeys(
-        q.select(col("qid").as("vec_id"), col("qv").as("embedding"))))
-      .select(col("vec_id").as("qid"), bkey)
-    val probes =
-      if (postingsParts.size > 1) probes0.localCheckpoint() else probes0
-    val cand0 = postingsParts.map(p => probes.join(p, "bkey"))
-      .reduce(_ unionAll _)
-      .filter(keep)
-      .select(col("qid"), col(id).as(as)).distinct()
+    val cand0 = candidates(probes(qkeys.getOrElse(keys(q))), postingsParts,
+      keep, id, as)
     val cand =
       if (vectorParts.size > 1) cand0.localCheckpoint() else cand0
     vectorParts.map(v =>

@@ -37,19 +37,14 @@ object VectorQueries extends QueryPack {
     val q = Tables.df(spark, sfDir, "embeddings")
       .filter($"vec_id" % 25 === 0)
       .select($"vec_id".as("qid"), $"embedding".as("qv"))
-    val best = q.join(
-        broadcast(q.select($"qid".as("pid"), $"qv".as("pv"))),
-        $"pid" < $"qid")
-      .select($"qid",
-        round(CosineSimilarity.of($"qv", $"pv"), 6).as("cs"))
-      .groupBy($"qid").agg(max($"cs").as("best"))
+    val best = ServeOps.semcacheBestExact(q)
     val taus = Seq("0.70", "0.80", "0.90", "0.95").toDF("tau_s")
       .select($"tau_s".cast("double").as("tau"))
     q.select($"qid").join(best, Seq("qid"), "left")
       .crossJoin(broadcast(taus))
       .groupBy($"tau")
       .agg(count(lit(1)).as("n_queries"),
-        sum(when($"best" >= $"tau", 1L).otherwise(0L)).as("hits"))
+        sum(when($"best_exact" >= $"tau", 1L).otherwise(0L)).as("hits"))
       .select($"tau", $"n_queries", $"hits",
         round($"hits".cast("double") / $"n_queries", 6).as("hit_rate"))
       .orderBy($"tau")
@@ -98,50 +93,22 @@ object VectorQueries extends QueryPack {
       .orderBy($"qid")
   }
 
-  /** LSH-bucketed approximate neighbors (rows-only: bucket boundaries are
-    * seed-dependent; recall vs brute force is unit-tested). */
-  /** Radius search on the serving index: the %100 query decile against
+  /** Radius search on an in-plan index: the %100 query decile against
     * the indexed %2 subset, candidates from the md5-SRP Hamming-1
     * multiprobe bucket join, verified by EXACT euclidean distance
-    * ≤ 1.5. GRADUATED from the rows-only allowlist in r14 (VERDICT r13
-    * #7): hyperplanes, probe rule, and the distance are all engine-
+    * ≤ 1.5 — [[ServeOps.annRadius]] over [[SrpIndex.inPlan]], the
+    * cold-query shape q_ann_served runs against the stored tables.
+    * GRADUATED from the rows-only allowlist in r14 (VERDICT r13 #7):
+    * hyperplanes, probe rule, and the distance are all engine-
     * portable — each squared-difference term rounds once to 9dp and
     * sums as DECIMAL(20,9) (the q_embed_health norm discipline), so
     * dist = round(sqrt(double), 6) is bit-identical cross-engine. The
     * JVM-seeded [[Similarity.annLshCandidates]] stays the library path
     * (AnnConsumersSpec). Scale: probing fans out only the 20-row query
     * side; candidates meet in the bucket equi-join — never all-pairs. */
-  def qAnnLsh(spark: SparkSession, sfDir: String): DataFrame = {
-    import spark.implicits._
-    val emb = Tables.df(spark, sfDir, "embeddings")
-      .filter($"vec_id" % 2 === 0)
-    val keys = annMd5Keys(spark, sfDir).localCheckpoint()
-    val probes = keys.filter($"vec_id" % 100 === 0)
-      .select($"vec_id".as("qid"), $"tbl",
-        explode(sequence(lit(-1), lit(7))).as("j"), $"bk")
-      .select($"qid", $"tbl",
-        when($"j" === -1, $"bk")
-          .otherwise(expr("bk ^ shiftleft(CAST(1 AS BIGINT), j)"))
-          .as("bk"))
-    val cand = probes
-      .join(keys.select($"vec_id", $"tbl", $"bk"), Seq("tbl", "bk"))
-      .filter($"qid" =!= $"vec_id")
-      .select($"qid", $"vec_id").distinct()
-    cand
-      .join(emb.select($"vec_id".as("qid"), $"embedding".as("qv")), "qid")
-      .join(emb.select($"vec_id", $"embedding".as("ev")), "vec_id")
-      .select($"qid", $"vec_id",
-        expr("""round(sqrt(CAST(aggregate(
-          zip_with(qv, ev, (a, b) ->
-            CAST(round((CAST(a AS DOUBLE) - CAST(b AS DOUBLE)) *
-                       (CAST(a AS DOUBLE) - CAST(b AS DOUBLE)), 9)
-              AS DECIMAL(20,9))),
-          CAST(0 AS DECIMAL(28,9)),
-          (acc, t) -> CAST(acc + t AS DECIMAL(28,9))) AS DOUBLE)), 6)""")
-          .as("dist"))
-      .filter($"dist" <= 1.5)
-      .orderBy($"qid", $"vec_id")
-  }
+  def qAnnLsh(spark: SparkSession, sfDir: String): DataFrame =
+    ServeOps.annRadius(ServeOps.queryDecile(spark, sfDir),
+      SrpIndex.inPlan(ServeOps.annCorpus(spark, sfDir)))
 
   /** Multimodal pipeline: binary payload + metadata → partition-parallel
     * decode (stubbed codec) → typed features. Metadata/byte features are
@@ -716,16 +683,14 @@ object VectorQueries extends QueryPack {
 
   /** The Hamming-1 multiprobe fan-out over an [[srpKeys]]-shaped
     * (vec_id, tbl, bk) relation: each key row expands to itself plus
-    * the 8 one-bit flips — (vec_id, tbl, bk) × 9. ONE probe-rule home
-    * (r19, review finding): this rule previously lived in four in-plan
-    * copies (annMd5Pairs, the served radius search, the cross-modal
-    * pair, the semcache), where a fix to the fan-out in one place would
-    * have left the others' candidate sets silently different. Call
-    * sites rename vec_id / derive the combined bkey
-    * ([[SrpIndex.bkey]]) as their join needs.
-    * ([[graft.streaming.Streams.annServeStream]] keeps its per-row
-    * expression twin by design — a streaming plan gets one stateful
-    * operator — and its merge-law spec pins it to this rule.) */
+    * the 8 one-bit flips — (vec_id, tbl, bk) × 9. The ONE probe rule of
+    * the batch chain: its only caller is [[SrpIndex.probes]], which every
+    * SRP candidate search reads — the served and in-plan radius search,
+    * semantic cache and media tower, and the [[annMd5Pairs]] /
+    * [[qAnnMultiprobe]] self-joins. ([[graft.streaming.Streams]]'
+    * `srpProbeRows` keeps its per-row expression twin by design — a
+    * streaming plan gets one stateful operator — and its merge-law spec
+    * pins it to this rule.) */
   private[graft] def srpProbes(keys: DataFrame): DataFrame = {
     val spark = keys.sparkSession
     import spark.implicits._
@@ -765,19 +730,23 @@ object VectorQueries extends QueryPack {
       .filter($"vec_id" % 2 === 0)
     val keys = annMd5Keys(spark, sfDir)
       .localCheckpoint() // probe arm + build arm read the same keys
-    val probes = srpProbes(keys)
-      .select($"vec_id".as("id1"), $"tbl", $"bk")
-    val cand = probes
-      .join(keys.select($"vec_id".as("id2"), $"tbl", $"bk"),
-        Seq("tbl", "bk"))
-      .filter($"id1" < $"id2")
-      .select($"id1", $"id2").distinct()
-    cand.join(emb.select($"vec_id".as("id1"), $"embedding".as("e1")), "id1")
+    selfPairs(keys, SrpIndex.probes(keys))
+      .join(emb.select($"vec_id".as("id1"), $"embedding".as("e1")), "id1")
       .join(emb.select($"vec_id".as("id2"), $"embedding".as("e2")), "id2")
       .select($"id1", $"id2",
         round(CosineSimilarity.of($"e1", $"e2"), 6).as("sim"))
       .filter($"sim" >= 0.25)
   }
+
+  /** The (id1 < id2) candidate pairs of a keyed relation probed by its own
+    * (qid, bkey) `probes` — the self-join [[annMd5Pairs]] and both
+    * [[qAnnMultiprobe]] arms run: `keys` is the one postings part, so the
+    * relation is keyed once. */
+  private def selfPairs(keys: DataFrame, probes: DataFrame): DataFrame =
+    SrpIndex.candidates(probes,
+        Seq(keys.select(SrpIndex.bkey, col("vec_id"))),
+        keep = col("qid") < col("vec_id"))
+      .toDF("id1", "id2")
 
   // ---- q_ann_multiprobe --------------------------------------------------
   /** Multi-probe SRP candidate stage, priced by the q_ann_eval
@@ -804,25 +773,10 @@ object VectorQueries extends QueryPack {
       .filter($"vec_id" % 2 === 0)
     val keys = annMd5Keys(spark, sfDir)
       .localCheckpoint() // probe side, build side, and single-probe arm
-    val cand1 = keys.select($"vec_id".as("id1"), $"tbl", $"bk")
-      .join(keys.select($"vec_id".as("id2"), $"tbl", $"bk"),
-        Seq("tbl", "bk"))
-      .filter($"id1" < $"id2")
-      .select($"id1", $"id2").distinct()
-      .localCheckpoint() // truth join + the cost count
-    val probes = keys
-      .select($"vec_id".as("id1"), $"tbl",
-        explode(sequence(lit(-1), lit(7))).as("j"), $"bk")
-      .select($"id1", $"tbl",
-        when($"j" === -1, $"bk")
-          .otherwise(expr("bk ^ shiftleft(CAST(1 AS BIGINT), j)"))
-          .as("bk"))
-    val candMp = probes
-      .join(keys.select($"vec_id".as("id2"), $"tbl", $"bk"),
-        Seq("tbl", "bk"))
-      .filter($"id1" < $"id2")
-      .select($"id1", $"id2").distinct()
-      .localCheckpoint() // truth join + the cost count
+    // each candidate set feeds the truth join + the cost count
+    val cand1 = selfPairs(keys, keys.select($"vec_id".as("qid"),
+      SrpIndex.bkey)).localCheckpoint()
+    val candMp = selfPairs(keys, SrpIndex.probes(keys)).localCheckpoint()
     val costs = cand1.agg(count(lit(1)).as("n_cand_1p"))
       .crossJoin(candMp.agg(count(lit(1)).as("n_cand_mp")))
     val truth = Similarity.cosinePairsBrute(sub, 0.25)

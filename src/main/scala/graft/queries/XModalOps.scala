@@ -283,8 +283,9 @@ object XModalOps extends QueryPack {
     * as a miss — `n_found` prices the recall attrition against the
     * brute eval twin, the q_ann_eval methodology. Scale: the pair
     * kernel touches bucket-collision candidates only (never query ×
-    * corpus); the media keys are the persistable index (the
-    * q_ann_served layout applies verbatim). */
+    * corpus). It is [[xmodalRetrieve]] over an in-plan index of
+    * [[mediaCorpus]] ([[SrpIndex.inPlan]]) — the served chain with the
+    * media keys built in the plan instead of read from tables. */
   /** The candidate-fed retrieval report tail (rank the true pair inside
     * each query's candidate cosines, price the misses per source) —
     * shared verbatim by [[qXmodalRetrievalAnn]] and [[qXmodalServed]],
@@ -317,27 +318,9 @@ object XModalOps extends QueryPack {
       .orderBy($"source")
   }
 
-  def qXmodalRetrievalAnn(spark: SparkSession, sfDir: String): DataFrame = {
-    import spark.implicits._
-    val docsrc = Tables.df(spark, sfDir, "documents")
-      .select($"doc_id", $"source")
-    val dense = mediaDense(spark, sfDir)
-      .localCheckpoint() // key arm + verify arm
-    val mkeys = VectorQueries.srpKeys(
-      dense.select($"doc_id".as("vec_id"), $"mv".as("embedding")))
-    val q = retrievalQueries(spark, sfDir)
-      .localCheckpoint() // key arm + verify arm + the miss spine
-    val qkeys = VectorQueries.srpKeys(
-      q.select($"qid".as("vec_id"), $"qv".as("embedding")))
-    val probes = VectorQueries.srpProbes(qkeys)
-      .select($"vec_id".as("qid"), $"tbl", $"bk")
-    val cand = probes
-      .join(mkeys.select($"vec_id".as("doc_id"), $"tbl", $"bk"),
-        Seq("tbl", "bk"))
-      .select($"qid", $"doc_id").distinct()
-    val pairs = xmodalCs(cand.join(dense, "doc_id").join(broadcast(q), "qid"))
-    annRetrievalReport(q, pairs, docsrc)
-  }
+  def qXmodalRetrievalAnn(spark: SparkSession, sfDir: String): DataFrame =
+    xmodalServe(spark, sfDir,
+      SrpIndex.inPlan(mediaCorpus(spark, sfDir), "doc_id", "mv"))
 
   // ---- q_xmodal_served -------------------------------------------------------
   /** The media tower's [[SrpIndex]] input: the dense (doc_id, mv, mn)
@@ -382,9 +365,7 @@ object XModalOps extends QueryPack {
     * [[qXmodalRetrievalAnn]] by construction (same hyperplanes, same
     * probe rule, same candidate cosine/rank), so it shares that oracle
     * verbatim: the persisted layout is pure physical design, invisible
-    * in the answer. Combined-bkey probe vs the in-plan (tbl, bk) join
-    * is injective (bk ∈ [0,256), tbl ∈ [0,8)), so the candidate sets
-    * cannot differ. */
+    * in the answer. */
   def qXmodalServed(spark: SparkSession, sfDir: String): DataFrame = {
     // build once per (application, fixture) — see ServeOps.buildOnce
     val pre = ServeOps.buildOnce(spark, sfDir, "graft_xm_q")(

@@ -35,7 +35,9 @@ class R13PlanAuditSpec extends SparkSpec {
     assert(!p.contains("CartesianProduct") &&
       !p.contains("BroadcastNestedLoopJoin"),
       "candidate generation must never nested-loop: " + p.take(400))
-    assert("""(SortMergeJoin|ShuffledHashJoin|BroadcastHashJoin) \[tbl#"""
+    // the (tbl, bk) key is joined as its injective encoding
+    // bkey = tbl·256 + bk (SrpIndex.bkey)
+    assert("""(SortMergeJoin|ShuffledHashJoin|BroadcastHashJoin) \[bkey#"""
       .r.findFirstIn(p).isDefined,
       "candidates must meet in a (tbl, bk) equi-join: " + p.take(400))
     // the Hamming-1 fan-out (explode of the 9-element probe sequence)
