@@ -18,6 +18,9 @@ object TextFunctions {
   def tokens(text: Column): Column =
     filter(split(lower(text), " "), t => t =!= "")
 
+  /** DuckDB twin of [[tokens]] over a `text` column, for oracle SQL. */
+  val tokensSql = "list_filter(string_split(lower(text), ' '), x -> x != '')"
+
   /** Distinct token set (for Jaccard / set-overlap work). */
   def tokenSet(text: Column): Column = array_distinct(tokens(text))
 

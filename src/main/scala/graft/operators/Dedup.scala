@@ -1,5 +1,6 @@
 package graft.operators
 
+import graft.functions.Md5Hash.h60
 import graft.functions.{SimHash64, SortedIntersectSize, TextFunctions}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
@@ -184,8 +185,7 @@ object Dedup {
         explode(sequence(lit(0), size($"T") - k)).as("p"), $"T")
       .select($"doc_id", $"p",
         array_join(slice($"T", $"p" + 1, lit(k)), " ").as("g"))
-      .select($"doc_id", $"p",
-        conv(substring(md5($"g"), 1, 15), 16, 10).cast("long").as("h"))
+      .select($"doc_id", $"p", h60($"g").as("h"))
       // windows are FULL w-windows only (positions 0..n_grams-w): a
       // truncated trailing frame could select a hash no full window
       // selects, breaking the w+k-1 guarantee's converse — two docs

@@ -2,18 +2,13 @@ package graft.queries
 
 import graft.Decimals._
 import graft.Tables
+import graft.functions.TextFunctions.tokensSql
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 /** Corpus-health additions (r14–r15). */
 object Corpus2Ops extends QueryPack {
-
-  /** DuckDB twin of [[graft.functions.TextFunctions.tokens]] — declared
-    * BEFORE the oracle map (a later val would still be null during
-    * object init when the oracle strings interpolate it). */
-  private val toksSql =
-    "list_filter(string_split(lower(text), ' '), x -> x != '')"
 
   /** The (source, tok, c) count relation + per-source totals shared by
     * the r15 distributional ops — one tokenization home, the
@@ -693,7 +688,7 @@ object Corpus2Ops extends QueryPack {
   private lazy val bpeApplyOracleSql: String =
     s"""WITH tc AS (
       |  SELECT tok, count(*) AS cnt
-      |  FROM (SELECT unnest($toksSql) AS tok FROM documents)
+      |  FROM (SELECT unnest($tokensSql) AS tok FROM documents)
       |  GROUP BY tok),
       |s0a AS (
       |  SELECT tok, cnt, unnest(range(1, length(tok) + 1)) AS p FROM tc),
@@ -705,7 +700,7 @@ object Corpus2Ops extends QueryPack {
       |  FROM s6 GROUP BY tok),
       |stc AS (
       |  SELECT source, tok, count(*) AS c
-      |  FROM (SELECT source, unnest($toksSql) AS tok FROM documents)
+      |  FROM (SELECT source, unnest($tokensSql) AS tok FROM documents)
       |  GROUP BY 1, 2)
       |SELECT source, CAST(sum(c) AS BIGINT) AS n_tokens,
       |  CAST(sum(c * length(tok)) AS BIGINT) AS n_chars,
@@ -736,7 +731,7 @@ object Corpus2Ops extends QueryPack {
     "q_bpe_train" ->
       (s"""WITH tc AS (
         |  SELECT tok, count(*) AS cnt
-        |  FROM (SELECT unnest($toksSql) AS tok FROM documents)
+        |  FROM (SELECT unnest($tokensSql) AS tok FROM documents)
         |  GROUP BY tok),
         |nt AS (SELECT CAST(SUM(cnt) AS BIGINT) AS n_tokens FROM tc),
         |s0a AS (
@@ -757,7 +752,7 @@ object Corpus2Ops extends QueryPack {
     "q_bpe_advisor" ->
       (s"""WITH tc AS (
         |  SELECT tok, count(*) AS cnt
-        |  FROM (SELECT unnest($toksSql) AS tok FROM documents)
+        |  FROM (SELECT unnest($tokensSql) AS tok FROM documents)
         |  GROUP BY tok),
         |nt AS (SELECT CAST(SUM(cnt) AS BIGINT) AS n_tokens FROM tc),
         |chars0 AS (
@@ -801,7 +796,7 @@ object Corpus2Ops extends QueryPack {
     // same first-8-token buckets, exact integer token accounting
     "q_prefix_cache" ->
       s"""WITH d0 AS (
-        |  SELECT source, $toksSql AS T FROM documents),
+        |  SELECT source, $tokensSql AS T FROM documents),
         |docs_ AS (
         |  SELECT source, len(T) AS n_tok,
         |    array_to_string(T[1:8], ' ') AS prefix,
@@ -827,7 +822,7 @@ object Corpus2Ops extends QueryPack {
     // integers, the identical 9dp P/R/F rounds into decimal means
     "q_rouge_lite" ->
       s"""WITH d0 AS (
-        |  SELECT doc_id, source, $toksSql AS T FROM documents),
+        |  SELECT doc_id, source, $tokensSql AS T FROM documents),
         |uni AS (
         |  SELECT doc_id, 1 AS n, unnest(T) AS g FROM d0),
         |big AS (
@@ -923,7 +918,7 @@ object Corpus2Ops extends QueryPack {
     // once-rounded JS terms, upper triangle only
     "q_js_sources" ->
       s"""WITH t AS (
-        |  SELECT source, unnest($toksSql) AS tok FROM documents),
+        |  SELECT source, unnest($tokensSql) AS tok FROM documents),
         |counts AS (
         |  SELECT source, tok, count(*) AS c FROM t GROUP BY 1, 2),
         |totals AS (
@@ -953,7 +948,7 @@ object Corpus2Ops extends QueryPack {
     // shared mean/std double formula, 6dp z and |dz| decimal mean
     "q_burrows_delta" ->
       s"""WITH t AS (
-        |  SELECT source, unnest($toksSql) AS tok FROM documents),
+        |  SELECT source, unnest($tokensSql) AS tok FROM documents),
         |counts AS (
         |  SELECT source, tok, count(*) AS c FROM t GROUP BY 1, 2),
         |totals AS (
@@ -993,7 +988,7 @@ object Corpus2Ops extends QueryPack {
     // exact-integer abundance histogram, one shared double formula
     "q_chao1" ->
       s"""WITH t AS (
-        |  SELECT source, unnest($toksSql) AS tok FROM documents),
+        |  SELECT source, unnest($tokensSql) AS tok FROM documents),
         |counts AS (
         |  SELECT source, tok, count(*) AS c FROM t GROUP BY 1, 2),
         |a AS (
@@ -1016,7 +1011,7 @@ object Corpus2Ops extends QueryPack {
     "q_rbo_drift" ->
       s"""WITH t AS (
         |  SELECT CAST(doc_id % 2 AS INT) AS half,
-        |    unnest($toksSql) AS tok
+        |    unnest($tokensSql) AS tok
         |  FROM documents),
         |counts AS (
         |  SELECT half, tok, count(*) AS c FROM t GROUP BY 1, 2),

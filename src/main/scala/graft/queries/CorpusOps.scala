@@ -2,7 +2,9 @@ package graft.queries
 
 import graft.Decimals._
 import graft.Tables
+import graft.functions.Md5Hash.unitLeftOpen
 import graft.functions.TextFunctions
+import graft.functions.TextFunctions.tokensSql
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -551,10 +553,8 @@ object CorpusOps extends QueryPack {
       .select($"center", $"context",
         explode(array(lit(1), lit(2))).as("j"))
       .crossJoin(broadcast(z))
-      .withColumn("u",
-        (conv(substring(md5(concat(lit("neg:"), $"center", lit(":"),
-          $"context", lit(":"), $"j".cast("string"))), 1, 15), 16, 10)
-          .cast("long") + 1) / lit(1152921504606846976.0))
+      .withColumn("u", unitLeftOpen(lit("neg:"), $"center", lit(":"),
+        $"context", lit(":"), $"j".cast("string")))
       .withColumn("x", $"u" * $"z".cast("double"))
     draws
       .join(broadcast(cum),
@@ -1119,7 +1119,7 @@ object CorpusOps extends QueryPack {
     * parametric in (k1, b). */
   private def bm25BaseCtesSql: String =
     s"""toks AS (
-      |  SELECT doc_id, unnest($toksSql) AS tok FROM documents),
+      |  SELECT doc_id, unnest($tokensSql) AS tok FROM documents),
       |tf AS (SELECT doc_id, tok, count(*) AS tf FROM toks GROUP BY 1, 2),
       |dl AS (SELECT doc_id, count(*) AS dl FROM toks GROUP BY 1),
       |dfreq AS (SELECT tok, count(*) AS df FROM tf GROUP BY 1),
@@ -1151,16 +1151,13 @@ object CorpusOps extends QueryPack {
       |       CROSS JOIN stats),
       |ag AS (SELECT qid, doc_id, sum(s) AS score FROM sc GROUP BY 1, 2)""".stripMargin
 
-  private val toksSql =
-    "list_filter(string_split(lower(text), ' '), x -> x != '')"
-
   /** The per-source lift-ranked top-3 topic-term chain (→ relation `tt`:
     * source, rk, tok, nst, lift) — shared by the q_topic_terms and
     * q_topic_coherence oracles so the term selection can't drift from
     * its own coherence gate (the Scala side reuses [[qTopicTerms]]). */
   private lazy val topicTermsCtesSql: String =
     s"""WITH toks AS (
-      |  SELECT source, unnest($toksSql) AS tok FROM documents),
+      |  SELECT source, unnest($tokensSql) AS tok FROM documents),
       |st AS (SELECT source, tok, count(*) AS nst
       |       FROM toks GROUP BY 1, 2),
       |s AS (SELECT source, count(*) AS ns FROM toks GROUP BY 1),
@@ -1194,7 +1191,7 @@ object CorpusOps extends QueryPack {
       |  SELECT doc_id, s.pos AS pos, s.tok AS tok FROM (
       |    SELECT doc_id, unnest(list_transform(range(1, len(arr) + 1),
       |      i -> struct_pack(pos := i, tok := arr[i]))) AS s
-      |    FROM (SELECT doc_id, $toksSql AS arr FROM documents))),
+      |    FROM (SELECT doc_id, $tokensSql AS arr FROM documents))),
       |leads AS (
       |  SELECT tok AS center,
       |    lead(tok, 1) OVER win AS c1, lead(tok, 2) OVER win AS c2
@@ -1276,7 +1273,7 @@ object CorpusOps extends QueryPack {
     "q_readability" ->
       s"""WITH d AS (
         |  SELECT source,
-        |    CAST(len($toksSql) AS BIGINT) AS w,
+        |    CAST(len($tokensSql) AS BIGINT) AS w,
         |    CAST(len(regexp_extract_all(text, '[.!?]+')) AS BIGINT) AS s,
         |    CAST(len(regexp_extract_all(lower(text), '[aeiouy]+'))
         |      AS BIGINT) AS y
@@ -1300,7 +1297,7 @@ object CorpusOps extends QueryPack {
     // same frequency-of-frequencies ladder, same NULL on N_{r+1} gaps,
     // same left-to-right double chain
     "q_good_turing" ->
-      s"""WITH t AS (SELECT $toksSql AS toks FROM documents),
+      s"""WITH t AS (SELECT $tokensSql AS toks FROM documents),
         |g AS (
         |  SELECT toks[i] || ' ' || toks[i+1] || ' ' || toks[i+2] AS s
         |  FROM (SELECT toks, unnest(range(1, len(toks) - 1)) AS i
@@ -1331,7 +1328,7 @@ object CorpusOps extends QueryPack {
       s"""WITH bg AS (
         |  SELECT toks[i] AS a, toks[i+1] AS b
         |  FROM (SELECT toks, unnest(range(1, len(toks))) AS i
-        |        FROM (SELECT $toksSql AS toks FROM documents)
+        |        FROM (SELECT $tokensSql AS toks FROM documents)
         |        WHERE len(toks) >= 2)),
         |cb AS (SELECT a, b, count(*) AS k11 FROM bg GROUP BY 1, 2),
         |ra AS (SELECT a, CAST(sum(k11) AS BIGINT) AS r1
@@ -1368,7 +1365,7 @@ object CorpusOps extends QueryPack {
       s"""WITH t AS (
         |  SELECT doc_id, source, toks, unnest(range(1, len(toks) + 1))
         |    AS i
-        |  FROM (SELECT doc_id, source, $toksSql AS toks
+        |  FROM (SELECT doc_id, source, $tokensSql AS toks
         |        FROM documents)),
         |wt AS (
         |  SELECT doc_id, source,
@@ -1384,7 +1381,7 @@ object CorpusOps extends QueryPack {
         |  SELECT doc_id, source,
         |    round(CAST(len(list_distinct(toks)) AS DOUBLE)
         |      / len(toks), 6) AS raw_ttr
-        |  FROM (SELECT doc_id, source, $toksSql AS toks FROM documents)
+        |  FROM (SELECT doc_id, source, $tokensSql AS toks FROM documents)
         |  WHERE len(toks) > 0),
         |j AS (
         |  SELECT raw.doc_id, raw.source,
@@ -1401,7 +1398,7 @@ object CorpusOps extends QueryPack {
     // double formula with D = 0.75 and DECIMAL(18,6) pre-sum log-probs
     "q_kneser_ney" ->
       s"""WITH t AS (
-        |  SELECT doc_id, source, $toksSql AS toks FROM documents),
+        |  SELECT doc_id, source, $tokensSql AS toks FROM documents),
         |bg AS (
         |  SELECT doc_id, source, toks[i] AS u, toks[i+1] AS w2
         |  FROM (SELECT doc_id, source, toks,
@@ -1434,7 +1431,7 @@ object CorpusOps extends QueryPack {
     "q_burstiness" ->
       s"""WITH dc AS (
         |  SELECT tok, doc_id, count(*) AS c FROM (
-        |    SELECT doc_id, unnest($toksSql) AS tok FROM documents)
+        |    SELECT doc_id, unnest($tokensSql) AS tok FROM documents)
         |  GROUP BY 1, 2),
         |term AS (
         |  SELECT tok, count(*) AS n_docs,
@@ -1456,7 +1453,7 @@ object CorpusOps extends QueryPack {
     "q_chisq_terms" ->
       s"""WITH tl AS (
         |  SELECT lang, tok, count(*) AS o11 FROM (
-        |    SELECT lang, unnest($toksSql) AS tok FROM documents)
+        |    SELECT lang, unnest($tokensSql) AS tok FROM documents)
         |  GROUP BY 1, 2),
         |nt AS (SELECT tok, CAST(sum(o11) AS BIGINT) AS n_t
         |       FROM tl GROUP BY 1),
@@ -1485,7 +1482,7 @@ object CorpusOps extends QueryPack {
     // same decimal-rounded ln(rank)/ln(freq) pairs over the identically
     // tie-broken top-1000, same IEEE closed-form regression rounded once
     "q_zipf_fit" ->
-      s"""WITH toks AS (SELECT unnest($toksSql) AS tok FROM documents),
+      s"""WITH toks AS (SELECT unnest($tokensSql) AS tok FROM documents),
         |cnt AS (SELECT tok, count(*) AS cnt FROM toks GROUP BY 1),
         |r AS (SELECT cnt, row_number() OVER (ORDER BY cnt DESC, tok ASC)
         |        AS rk FROM cnt),
@@ -1510,7 +1507,7 @@ object CorpusOps extends QueryPack {
     // cumulative window and ln-ratio local exponent rounded once
     "q_heaps_growth" ->
       s"""WITH $bucketCtesSql,
-        |toks AS (SELECT bucket, unnest($toksSql) AS tok FROM b),
+        |toks AS (SELECT bucket, unnest($tokensSql) AS tok FROM b),
         |perb AS (SELECT bucket, count(*) AS n_toks FROM toks GROUP BY 1),
         |newt AS (SELECT bucket, count(*) AS new_types FROM (
         |    SELECT tok, min(bucket) AS bucket FROM toks GROUP BY 1)
@@ -1539,7 +1536,7 @@ object CorpusOps extends QueryPack {
         |      list_transform(range(0, greatest(len(T) - 2, 1)),
         |        i -> array_to_string(T[(i+1):(i+3)], ' ')),
         |      s -> s != ''))) AS g
-        |  FROM (SELECT bucket, $toksSql AS T FROM b))),
+        |  FROM (SELECT bucket, $tokensSql AS T FROM b))),
         |perb AS (SELECT bucket, count(*) AS types FROM types GROUP BY 1),
         |newg AS (SELECT bucket, count(*) AS new_types FROM (
         |    SELECT g, min(bucket) AS bucket FROM types GROUP BY 1)
@@ -1555,7 +1552,7 @@ object CorpusOps extends QueryPack {
     // TakeOrderedAndProject with the identical tie-break; coverage is
     // the same exact-integer quotient rounded once
     "q_vocab_coverage" ->
-      s"""WITH toks AS (SELECT unnest($toksSql) AS tok FROM documents),
+      s"""WITH toks AS (SELECT unnest($tokensSql) AS tok FROM documents),
         |cnt AS (SELECT tok, count(*) AS cnt FROM toks GROUP BY 1),
         |tot AS (SELECT CAST(SUM(cnt) AS BIGINT) AS n_total,
         |  count(*) AS n_vocab FROM cnt),
@@ -1586,7 +1583,7 @@ object CorpusOps extends QueryPack {
         |dt AS (
         |  SELECT DISTINCT d.doc_id, d.tok
         |  FROM (SELECT doc_id, unnest(""".stripMargin
-        + toksSql + """) AS tok FROM documents) d
+        + tokensSql + """) AS tok FROM documents) d
         |  JOIN sel ON sel.tok = d.tok),
         |dtc AS (SELECT tok, CAST(count(*) AS BIGINT) AS dl
         |        FROM dt GROUP BY 1),
@@ -1623,7 +1620,7 @@ object CorpusOps extends QueryPack {
     // the vocabulary, md5 inverse-CDF interval lookup
     "q_w2v_negatives" ->
       (s"WITH $skipgramCtes" + s""",
-        |vt AS (SELECT unnest($toksSql) AS tok FROM documents),
+        |vt AS (SELECT unnest($tokensSql) AS tok FROM documents),
         |v AS (SELECT tok, count(*) AS cnt FROM vt GROUP BY 1),
         |w AS (
         |  SELECT tok,
@@ -1655,7 +1652,7 @@ object CorpusOps extends QueryPack {
         |  SELECT doc_id, s.pos AS pos, s.tok AS tok FROM (
         |    SELECT doc_id, unnest(list_transform(range(1, len(arr) + 1),
         |      i -> struct_pack(pos := i, tok := arr[i]))) AS s
-        |    FROM (SELECT doc_id, $toksSql AS arr FROM documents))),
+        |    FROM (SELECT doc_id, $tokensSql AS arr FROM documents))),
         |pr AS (
         |  SELECT tok AS x, lead(tok, 1) OVER (
         |    PARTITION BY doc_id ORDER BY pos) AS y
@@ -1682,7 +1679,7 @@ object CorpusOps extends QueryPack {
     "q_dataset_card" ->
       s"""WITH toks AS (
         |  SELECT source, count(*) AS total_toks FROM (
-        |    SELECT source, unnest($toksSql) AS tok FROM documents)
+        |    SELECT source, unnest($tokensSql) AS tok FROM documents)
         |  GROUP BY 1),
         |base AS (
         |  SELECT source, count(*) AS n_docs,
@@ -1713,7 +1710,7 @@ object CorpusOps extends QueryPack {
     // the identical exact-int quotient
     "q_oov_rate" ->
       s"""WITH toks AS (
-        |  SELECT doc_id, unnest($toksSql) AS tok FROM documents),
+        |  SELECT doc_id, unnest($tokensSql) AS tok FROM documents),
         |v AS (
         |  SELECT tok FROM (
         |    SELECT tok, count(*) AS cnt FROM toks GROUP BY 1)
@@ -1786,7 +1783,7 @@ object CorpusOps extends QueryPack {
     "q_bpe_merges" ->
       s"""WITH tc AS (
         |  SELECT tok, count(*) AS cnt
-        |  FROM (SELECT unnest($toksSql) AS tok FROM documents)
+        |  FROM (SELECT unnest($tokensSql) AS tok FROM documents)
         |  GROUP BY tok),
         |p AS (
         |  SELECT cnt, unnest(list_transform(range(1, length(tok)),

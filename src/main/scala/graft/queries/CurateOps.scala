@@ -2,6 +2,8 @@ package graft.queries
 
 import graft.Decimals._
 import graft.Tables
+import graft.functions.Md5Hash.h60
+import graft.functions.TextFunctions.tokensSql
 import graft.functions.{CosineSimilarity, SortedIntersectSize, TextFunctions}
 import graft.operators.Similarity
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
@@ -380,6 +382,12 @@ object CurateOps extends QueryPack {
   }
 
   // ---- q_split_leakproof -------------------------------------------------
+  /** The leak-proof split bucket: the first 4 md5 hex digits of
+    * "split:" || cluster_id, mod 10 (0-7 train, 8 val, 9 test). */
+  private def splitBucket(clusterId: Column): Column =
+    conv(substring(md5(concat(lit("split:"), clusterId.cast("string"))),
+      1, 4), 16, 10).cast("long") % 10
+
   /** Near-dup-aware train/val/test split: the split is a deterministic
     * md5 bucket of the near-duplicate CLUSTER id, not the document id, so
     * two near-duplicate documents can never land in different splits —
@@ -396,9 +404,7 @@ object CurateOps extends QueryPack {
     // shared manifest artifact instead of re-running the fixpoint
     sharedManifest(spark, sfDir, mod = 10)
       .select($"doc_id", $"cluster_id")
-      .withColumn("bkt",
-        conv(substring(md5(concat(lit("split:"),
-          $"cluster_id".cast("string"))), 1, 4), 16, 10).cast("long") % 10)
+      .withColumn("bkt", splitBucket($"cluster_id"))
       .select($"doc_id", $"cluster_id",
         when($"bkt" <= 7, "train").when($"bkt" === 8, "val")
           .otherwise("test").as("split"))
@@ -680,8 +686,7 @@ object CurateOps extends QueryPack {
       .join(broadcast(bench), Seq("s"), "left_semi")
       .select($"doc_id").distinct()
       .withColumn("__hit", lit(true))
-    val bkt = conv(substring(md5(concat(lit("split:"),
-      $"cluster_id".cast("string"))), 1, 4), 16, 10).cast("long") % 10
+    val bkt = splitBucket($"cluster_id")
     val flags = scored
       .join(man, "doc_id")
       .join(contam, Seq("doc_id"), "left")
@@ -1127,9 +1132,7 @@ object CurateOps extends QueryPack {
         posexplode(TextFunctions.tokens($"text")).as(Seq("pos", "tok")))
       .withColumn("prev", lag($"tok", 1).over(w))
       .filter($"prev".isNotNull)
-      .withColumn("green",
-        conv(substring(md5(concat($"prev", lit("|"), $"tok")), 1, 15),
-          16, 10).cast("long") % 2 === 0)
+      .withColumn("green", h60($"prev", lit("|"), $"tok") % 2 === 0)
     val perDoc = scored.groupBy($"doc_id", $"source")
       .agg(count(lit(1)).as("t"),
         sum($"green".cast("long")).as("g"))
@@ -1277,10 +1280,7 @@ object CurateOps extends QueryPack {
     "q_capture_recapture" -> qCaptureRecapture
   )
 
-  private val toksDdb =
-    "list_filter(string_split(lower(text), ' '), x -> x != '')"
-  private val tokSetSql =
-    "list_distinct(list_filter(string_split(lower(text), ' '), x -> x != ''))"
+  private val tokSetSql = s"list_distinct($tokensSql)"
 
   /** Brute-force oracle pair CTEs (the oracle may be O(n^2); the Spark
     * side must not be): `sh` = (doc_id, distinct token list), `p` = pairs
@@ -1336,8 +1336,8 @@ object CurateOps extends QueryPack {
     * Spark side; the p index aligns because the only filtered element
     * ('' from an empty token list) implies an empty stream. */
   private def winnowCtes(mod: Int): String =
-    s"""wt AS (SELECT doc_id, $toksDdb AS T FROM documents
-      |  WHERE doc_id % $mod = 0 AND len($toksDdb) >= 4),
+    s"""wt AS (SELECT doc_id, $tokensSql AS T FROM documents
+      |  WHERE doc_id % $mod = 0 AND len($tokensSql) >= 4),
       |sh0 AS (
       |  SELECT doc_id, unnest(list_transform(
       |    range(0, len(T) - 3),
@@ -1580,7 +1580,7 @@ object CurateOps extends QueryPack {
         |      list_transform(range(0, greatest(len(T) - 2, 1)),
         |        i -> array_to_string(T[(i+1):(i+3)], ' ')),
         |      s -> s != '')) AS s
-        |  FROM (SELECT doc_id, $toksDdb AS T FROM documents)),
+        |  FROM (SELECT doc_id, $tokensSql AS T FROM documents)),
         |sh3 AS (
         |  SELECT doc_id, s FROM sh0
         |  WHERE len(string_split(s, ' ')) = 3),
@@ -1615,7 +1615,7 @@ object CurateOps extends QueryPack {
         |      list_transform(range(0, greatest(len(T) - 2, 1)),
         |        i -> array_to_string(T[(i+1):(i+3)], ' ')),
         |      s -> s != '')) AS s
-        |  FROM (SELECT source, $toksDdb AS T FROM documents)),
+        |  FROM (SELECT source, $tokensSql AS T FROM documents)),
         |sh3 AS (
         |  SELECT source, s FROM sh0
         |  WHERE len(string_split(s, ' ')) = 3),
@@ -1646,7 +1646,7 @@ object CurateOps extends QueryPack {
     // walk, same z formula and DECIMAL(18,6) pre-sum mean
     "q_watermark" ->
       s"""WITH t AS (
-        |  SELECT doc_id, source, $toksDdb AS toks FROM documents),
+        |  SELECT doc_id, source, $tokensSql AS toks FROM documents),
         |u AS (
         |  SELECT doc_id, source, toks, unnest(range(1, len(toks))) AS i
         |  FROM t WHERE len(toks) >= 2),
@@ -1672,7 +1672,7 @@ object CurateOps extends QueryPack {
 
     "q_boilerplate" ->
       s"""WITH ls AS (
-        |  SELECT doc_id, source, $toksDdb AS arr FROM documents),
+        |  SELECT doc_id, source, $tokensSql AS arr FROM documents),
         |t AS (
         |  SELECT doc_id, source,
         |    unnest(list_transform(range(1, len(arr) + 1),
@@ -1695,7 +1695,7 @@ object CurateOps extends QueryPack {
         |    string_agg(tok, ' ' ORDER BY pos) AS cleaned
         |  FROM kept GROUP BY doc_id)
         |SELECT d.doc_id,
-        |  CAST(len($toksDdb) AS BIGINT) AS n_toks,
+        |  CAST(len($tokensSql) AS BIGINT) AS n_toks,
         |  COALESCE(re.n_kept, 0) AS n_kept,
         |  length(COALESCE(re.cleaned, '')) AS cleaned_len,
         |  substr(COALESCE(re.cleaned, ''), 1, 60) AS cleaned_head
@@ -1706,7 +1706,7 @@ object CurateOps extends QueryPack {
     // identical collision-free); unnest(range) generates the same
     // 1..len-7 window starts the Spark lead() pass produces
     "q_dup_spans" ->
-      s"""WITH t AS (SELECT doc_id, $toksDdb AS toks FROM documents),
+      s"""WITH t AS (SELECT doc_id, $tokensSql AS toks FROM documents),
         |u AS (
         |  SELECT doc_id, toks, unnest(range(1, len(toks) - 6)) AS i
         |  FROM t WHERE len(toks) >= 8),
@@ -1918,7 +1918,7 @@ object CurateOps extends QueryPack {
         |sc AS (
         |  SELECT doc_id,
         |    ${TextOps.qualityScoreSql} AS score,
-        |    CAST(len($toksDdb) AS BIGINT) AS n_tok
+        |    CAST(len($tokensSql) AS BIGINT) AS n_tok
         |  FROM documents WHERE doc_id % 10 = 0),
         |shing AS (
         |  ${TextOps.shingleSql("doc_id % 97 = 0 OR doc_id % 10 = 0")}),

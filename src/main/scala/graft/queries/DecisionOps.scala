@@ -2,6 +2,7 @@ package graft.queries
 
 import graft.Decimals._
 import graft.Tables
+import graft.functions.Md5Hash.h60
 import graft.functions.TextFunctions
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
@@ -99,9 +100,8 @@ object DecisionOps extends QueryPack {
     import spark.implicits._
     val u = Tables.df(spark, sfDir, "events")
       .groupBy($"user_id").agg(count(lit(1)).as("y"))
-      .select(pmod(conv(substring(md5(concat(lit("rdd:"),
-          $"user_id".cast("string"))), 1, 15), 16, 10).cast("long"),
-        lit(101L)).as("r"), $"y")
+      .select(pmod(h60(lit("rdd:"), $"user_id".cast("string")), lit(101L))
+        .as("r"), $"y")
       .filter($"r" >= 25 && $"r" < 75)
       .select(($"r" >= 50).as("right"), ($"r" - 50).as("x"), $"y")
     def side(right: Boolean) = {

@@ -2,6 +2,7 @@ package graft.queries
 
 import graft.Decimals._
 import graft.Tables
+import graft.functions.Md5Hash.h60
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -20,11 +21,6 @@ import org.apache.spark.sql.functions._
   * already ships. Splits and permutations are md5-keyed — the portable
   * 60-bit hash rank both engines share — never RAND(). */
 object EvalOps extends QueryPack {
-
-  /** Portable 60-bit md5 hash of a salted key (SURVEY §7.4). */
-  private def h60(salt: String, key: Column): Column =
-    conv(substring(md5(concat(lit(salt), key.cast("string"))), 1, 15),
-      16, 10).cast("long")
 
   /** The q_ridge per-order feature relation: x1 = line count, x2 =
     * floored quantity sum, yv = total price as exact decimal. */
@@ -129,7 +125,8 @@ object EvalOps extends QueryPack {
   def qConformal(spark: SparkSession, sfDir: String): DataFrame = {
     import spark.implicits._
     val per = ridgePer(spark, sfDir)
-      .withColumn("part", pmod(h60("cf:", $"l_orderkey"), lit(4)))
+      .withColumn("part",
+        pmod(h60(lit("cf:"), $"l_orderkey".cast("string")), lit(4)))
       .localCheckpoint() // feeds fit, calibration, and test
     val w = ridgeFit(per.filter($"part" <= 1))
     val scored = per.crossJoin(broadcast(w))
@@ -180,10 +177,12 @@ object EvalOps extends QueryPack {
       : DataFrame = {
     import spark.implicits._
     ridgePer(spark, sfDir)
-      .withColumn("bkt", pmod(h60("pib:", $"l_orderkey"), lit(64)))
+      .withColumn("bkt",
+        pmod(h60(lit("pib:"), $"l_orderkey".cast("string")), lit(64)))
       .withColumn("rn", row_number().over(
         Window.partitionBy($"bkt")
-          .orderBy(h60("pi:", $"l_orderkey"), $"l_orderkey")))
+          .orderBy(h60(lit("pi:"), $"l_orderkey".cast("string")),
+            $"l_orderkey")))
   }
 
   def qPermImportance(spark: SparkSession, sfDir: String): DataFrame = {
@@ -238,7 +237,8 @@ object EvalOps extends QueryPack {
     val ev = Tables.df(spark, sfDir, "events")
       .select($"event_id", $"event_type", round($"value", 2).cast(dec18_2)
         .as("v"))
-      .withColumn("masked", pmod(h60("imp:", $"event_id"), lit(5)) === 0)
+      .withColumn("masked",
+        pmod(h60(lit("imp:"), $"event_id".cast("string")), lit(5)) === 0)
       .localCheckpoint() // median pass + scoring pass
     val surv = ev.filter(!$"masked")
       .withColumn("rn", row_number().over(
@@ -292,10 +292,12 @@ object EvalOps extends QueryPack {
       .groupBy($"l_orderkey").agg(count(lit(1)).as("x1"),
         sum(floor($"l_quantity").cast("long")).as("x2"),
         sum(round($"l_extendedprice", 2).cast(dec18_2)).as("yv"))
-      .withColumn("bkt", pmod(h60("ysb:", $"l_orderkey"), lit(64)))
+      .withColumn("bkt",
+        pmod(h60(lit("ysb:"), $"l_orderkey".cast("string")), lit(64)))
       .withColumn("rn", row_number().over(
         Window.partitionBy($"bkt")
-          .orderBy(h60("ys:", $"l_orderkey"), $"l_orderkey")))
+          .orderBy(h60(lit("ys:"), $"l_orderkey".cast("string")),
+            $"l_orderkey")))
       .localCheckpoint() // donor side + the joined relation
     val bc = per.groupBy($"bkt").agg(count(lit(1)).as("nb"))
     val donor = per.select($"bkt".as("dbkt"), $"rn".as("dn"),

@@ -2,7 +2,9 @@ package graft.queries
 
 import graft.Decimals._
 import graft.Tables
+import graft.functions.Md5Hash.{h60, unitOpen}
 import graft.functions.TextFunctions
+import graft.functions.TextFunctions.tokensSql
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -137,8 +139,7 @@ object GovernOps extends QueryPack {
     }
     val sig = sh
       .select($"source",
-        conv(substring(md5(concat(lit("mh:"), $"s")), 1, 15), 16, 10)
-          .cast("long").as("h"))
+        h60(lit("mh:"), $"s").as("h"))
       .groupBy($"source").agg(mins.head, mins.tail: _*)
       .selectExpr("source",
         s"stack(16, ${permConsts.map { case (i, _) => s"$i, m$i" }
@@ -270,8 +271,7 @@ object GovernOps extends QueryPack {
     val docs = Tables.df(spark, sfDir, "documents")
       .select($"doc_id",
         md5(concat(lit("doc:"), $"doc_id".cast("string"))).as("p"),
-        conv(substring(md5(concat(lit("doc:"), $"doc_id".cast("string"))),
-          1, 15), 16, 10).cast("long").as("h"))
+        h60(lit("doc:"), $"doc_id".cast("string")).as("h"))
       .repartition(Tables.shufflePartitions(spark), $"doc_id")
     def consistent(n: Int): DataFrame = {
       val ring = ringPoints(n)
@@ -442,8 +442,7 @@ object GovernOps extends QueryPack {
       .select(explode(graft.functions.TextFunctions.tokens($"text"))
         .as("tok"))
       .groupBy($"tok").agg(count(lit(1)).as("cnt"))
-    val u = (conv(substring(md5(concat(lit("dptk:"), $"tok")), 1, 15),
-      16, 10).cast("double") + 0.5) / lit(1152921504606846976.0)
+    val u = unitOpen(lit("dptk:"), $"tok")
     val noisy = cnt
       .withColumn("g", round(-log(-log(u)), 6))
       .withColumn("noisy",
@@ -744,9 +743,7 @@ object GovernOps extends QueryPack {
     import spark.implicits._
     val bySrc = Tables.df(spark, sfDir, "documents")
       .groupBy($"source").agg(count(lit(1)).as("n_docs"))
-    val u = (conv(substring(md5(concat(lit("dp:"), $"source", lit(":"),
-        $"tag")), 1, 15), 16, 10).cast("double") + 0.5) /
-      lit(1152921504606846976.0)
+    val u = unitOpen(lit("dp:"), $"source", lit(":"), $"tag")
     bySrc
       .select($"source", $"n_docs",
         explode(array(lit("0.5"), lit("1.0"), lit("4.0"))).as("tag"))
@@ -883,9 +880,7 @@ object GovernOps extends QueryPack {
         sum(least($"n_chars".cast("double"), lit(cap)).cast(dec18_2))
           .as("s"))
     def lap(tag: String, scale: Double): Column = {
-      val u = (conv(substring(md5(concat(lit(s"dpm:$tag:"), $"source")),
-        1, 15), 16, 10).cast("double") + 0.5) /
-        lit(1152921504606846976.0)
+      val u = unitOpen(lit(s"dpm:$tag:"), $"source")
       round(lit(-scale)
         * when(u >= 0.5, 1.0).otherwise(-1.0)
         * log(lit(2.0) * least(u, lit(1.0) - u)), 6)
@@ -919,9 +914,7 @@ object GovernOps extends QueryPack {
     val bins = Tables.df(spark, sfDir, "customer")
       .groupBy(floor($"c_acctbal" / 1000).as("bin"))
       .agg(count(lit(1)).as("n"))
-    val u = (conv(substring(md5(concat(lit("dph:"),
-      $"bin".cast("string"))), 1, 15), 16, 10).cast("double") + 0.5) /
-      lit(1152921504606846976.0)
+    val u = unitOpen(lit("dph:"), $"bin".cast("string"))
     val noisy = bins
       .withColumn("lap", round(lit(-1.0 / eps)
         * when(u >= 0.5, 1.0).otherwise(-1.0)
@@ -1021,10 +1014,8 @@ object GovernOps extends QueryPack {
       .withColumn("cum", sum($"c").over(wCum))
       .crossJoin(broadcast(tot))
       .withColumn("u2", -abs(lit(2L) * $"cum" - $"n"))
-      .withColumn("g", round(-log(-log(
-        (conv(substring(md5(concat(lit("dpq:"), $"b".cast("string"))),
-          1, 15), 16, 10).cast("long") + 0.5) /
-          lit(1152921504606846976.0))), 9))
+      .withColumn("g",
+        round(-log(-log(unitOpen(lit("dpq:"), $"b".cast("string")))), 9))
       .withColumn("score",
         lit(eps / 4.0) * $"u2".cast("double") + $"g")
       .localCheckpoint() // feeds the released argmax + the true argmax
@@ -1068,8 +1059,6 @@ object GovernOps extends QueryPack {
   private def ringValuesSql(n: Int): String =
     ringPoints(n).map { case (s, pt) => s"($s, '$pt')" }.mkString(",\n  ")
 
-  private val toksSql =
-    "list_filter(string_split(lower(text), ' '), x -> x != '')"
   private val shinglesSql =
     s"""list_filter(
        |  list_transform(range(0, greatest(len(T) - 2, 1)),
@@ -1078,7 +1067,7 @@ object GovernOps extends QueryPack {
   private val shCte =
     s"""sh AS (
        |  SELECT DISTINCT source, unnest($shinglesSql) AS s
-       |  FROM (SELECT source, $toksSql AS T FROM documents))""".stripMargin
+       |  FROM (SELECT source, $tokensSql AS T FROM documents))""".stripMargin
 
   /** The q_ks_matrix CTE chain (through relation `l`: s1, s2, n1,
     * n2, d_stat, lambda) — shared with the q_holm oracle so the
@@ -1369,7 +1358,7 @@ object GovernOps extends QueryPack {
     "q_dp_topk" ->
       s"""WITH cnt AS (
         |  SELECT tok, count(*) AS cnt FROM (
-        |    SELECT unnest($toksSql) AS tok FROM documents)
+        |    SELECT unnest($tokensSql) AS tok FROM documents)
         |  GROUP BY tok),
         |noisy AS (
         |  SELECT tok, cnt,
@@ -1394,7 +1383,7 @@ object GovernOps extends QueryPack {
     "q_mia_audit" ->
       s"""WITH toks AS (
         |  SELECT doc_id, doc_id % 2 = 0 AS member,
-        |    unnest($toksSql) AS tok
+        |    unnest($tokensSql) AS tok
         |  FROM documents),
         |mc AS (SELECT tok, count(*) AS cnt FROM toks
         |       WHERE member GROUP BY tok),
@@ -1627,7 +1616,7 @@ object GovernOps extends QueryPack {
     // DECIMAL(18,9) p·ln(p/q) terms (Spark log == DuckDB ln), exact sums
     "q_kl_sources" ->
       s"""WITH t AS (
-        |  SELECT source, unnest($toksSql) AS tok FROM documents),
+        |  SELECT source, unnest($tokensSql) AS tok FROM documents),
         |counts AS (
         |  SELECT source, tok, count(*) AS c FROM t GROUP BY 1, 2),
         |totals AS (
@@ -1691,7 +1680,7 @@ object GovernOps extends QueryPack {
     // 4-row VALUES join — the oracle's stack()
     "q_filter_funnel" ->
       s"""WITH tk AS (
-        |  SELECT doc_id, unnest($toksSql) AS tok FROM documents),
+        |  SELECT doc_id, unnest($tokensSql) AS tok FROM documents),
         |ts AS (
         |  SELECT doc_id, CAST(count(*) AS BIGINT) AS n_tok,
         |    CAST(count(DISTINCT tok) AS BIGINT) AS n_distinct,

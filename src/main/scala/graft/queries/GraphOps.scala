@@ -2,6 +2,7 @@ package graft.queries
 
 import graft.Decimals._
 import graft.Tables
+import graft.functions.Md5Hash.h60
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -106,11 +107,14 @@ object GraphOps extends QueryPack {
     * round — at 3 iterations the write may or may not amortize (PERF.md
     * records the delta); on a cluster the table is written once and
     * EVERY downstream run reuses the layout, so the break-even only
-    * improves with reuse. */
+    * improves with reuse. The table name is per fixture and per JVM
+    * ([[ServeOps.sfPrefix]]), so concurrent runs never overwrite each
+    * other's edges, and the exit sweep reclaims it. */
   def qPagerankBucketed(spark: SparkSession, sfDir: String): DataFrame = {
+    val edges = ServeOps.sfPrefix("graft_pr", sfDir) + "_edges"
     graft.sources.Sources.writeBucketed(coPurchaseEdgesLong(spark, sfDir),
-      "graft_pr_edges_q", Tables.shufflePartitions(spark), "u")
-    pagerankTop(pagerankBucketed(spark, "graft_pr_edges_q", 3))
+      edges, Tables.shufflePartitions(spark), "u")
+    pagerankTop(pagerankBucketed(spark, edges, 3))
   }
 
   /** The unrolled damped-iteration loop over a prepared (edges, deg)
@@ -729,8 +733,7 @@ object GraphOps extends QueryPack {
       shiftright($"node", 1).cast("string"))
     val lm = edges.select($"u".as("node")).distinct()
       .select($"node", decoded.as("ns"))
-      .withColumn("h",
-        conv(substring(md5($"ns"), 1, 15), 16, 10).cast("long"))
+      .withColumn("h", h60($"ns"))
       .orderBy($"h", $"ns").limit(10)
       .select($"node".as("lm"))
     var dist = lm.select($"lm", $"lm".as("node"), lit(0).as("d"))

@@ -3,6 +3,7 @@ package graft.queries
 import graft.Decimals._
 import graft.Tables
 import graft.functions.TextFunctions
+import graft.functions.TextFunctions.tokensSql
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -567,7 +568,6 @@ object LearnOps extends QueryPack {
     * operator (9-digit rounds on gradient terms, max() weight
     * carry-through, sign-of-margin accuracy). */
   private def logregOracle: String = {
-    val toksS = "list_filter(string_split(lower(text), ' '), x -> x != '')"
     def std(xc: String, sc: String, ssc: String) =
       s"""(CAST($xc AS DOUBLE) - CAST($sc AS DOUBLE) / CAST(n AS DOUBLE))
          |      / sqrt(CAST($ssc AS DOUBLE) / CAST(n AS DOUBLE)
@@ -599,7 +599,7 @@ object LearnOps extends QueryPack {
        |    CAST(round(CAST(len(list_filter(T, x -> list_contains(
        |      ['the','a','is','and','of','to','in','that','it'], x)))
        |      AS DOUBLE) / greatest(len(T), 1), 6) AS DECIMAL(18,6)) AS x2
-       |  FROM (SELECT lang, $toksS AS T FROM documents)),
+       |  FROM (SELECT lang, $tokensSql AS T FROM documents)),
        |stats AS (
        |  SELECT count(*) AS n, CAST(sum(x1) AS BIGINT) AS s1,
        |    CAST(sum(x1 * x1) AS BIGINT) AS s11, sum(x2) AS s2,

@@ -2,7 +2,9 @@ package graft.queries
 
 import graft.Decimals._
 import graft.Tables
+import graft.functions.Md5Hash.unitOpen
 import graft.functions.TextFunctions
+import graft.functions.TextFunctions.tokensSql
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -28,11 +30,6 @@ import org.apache.spark.sql.functions._
   * discipline) so the "random" draws replay bit-for-bit on both engines.
   */
 object NonparamOps extends QueryPack {
-
-  // shared md5 60-bit uniform: (hash60(md5(s)) + 0.5) / 2^60 ∈ (0,1)
-  private def u01(tag: org.apache.spark.sql.Column): org.apache.spark.sql.Column =
-    (conv(substring(md5(tag), 1, 15), 16, 10).cast("long") + 0.5) /
-      lit(1152921504606846976.0)
 
   /** 5% χ² critical values by df, derived from the data's df column so a
     * fixture-cardinality change can never silently test the wrong
@@ -331,8 +328,8 @@ object NonparamOps extends QueryPack {
         diffCol($"n1", $"s1", $"n2", $"s2").as("d_obs"))
     val reps = users
       .select($"user_id", $"x", explode(expr("sequence(1, 200)")).as("r"))
-      .withColumn("pa", u01(concat(lit("perm:"), $"r".cast("string"),
-        lit(":"), $"user_id".cast("string"))) < 0.5)
+      .withColumn("pa", unitOpen(lit("perm:"), $"r".cast("string"),
+        lit(":"), $"user_id".cast("string")) < 0.5)
       .groupBy($"r").agg(
         sum(when($"pa", 1L).otherwise(0L)).as("n1"),
         sum(when($"pa", $"x")).as("s1"),
@@ -361,15 +358,12 @@ object NonparamOps extends QueryPack {
     "q_permutation_test" -> qPermutationTest
   )
 
-  private val toksDdb =
-    "list_filter(string_split(lower(text), ' '), x -> x != '')"
-
   /** The shared rater/count/marginal CTE chain (→ relations `nij`, `s`,
     * `cj`) used by BOTH agreement oracles, mirroring [[ratedDocs]]. */
   private val ratersCtes: String =
     s"""d0 AS (
-      |  SELECT doc_id, n_chars, len($toksDdb) AS ntok FROM documents
-      |  WHERE len($toksDdb) >= 1),
+      |  SELECT doc_id, n_chars, len($tokensSql) AS ntok FROM documents
+      |  WHERE len($tokensSql) >= 1),
       |cats AS (
       |  SELECT doc_id,
       |    CASE WHEN n_chars < 220 THEN 0

@@ -2,6 +2,7 @@ package graft.queries
 
 import graft.Decimals._
 import graft.Tables
+import graft.functions.Md5Hash.{h60, unitLeftOpen, unitOpen}
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -135,9 +136,7 @@ object PipelineOps extends QueryPack {
       .filter($"n_chars" > 0)
       .select($"doc_id", $"n_chars",
         // u ∈ (0, 1]: 60-bit md5 value + 1 over 2^60
-        ((conv(substring(md5(concat(lit("res:"), $"doc_id".cast("string"))),
-          1, 15), 16, 10).cast("long") + 1) / lit(1152921504606846976.0))
-          .as("u"))
+        unitLeftOpen(lit("res:"), $"doc_id".cast("string")).as("u"))
       .select($"doc_id", $"n_chars",
         round(log($"u") / $"n_chars", 9).as("key"))
       .orderBy($"key".desc, $"doc_id")
@@ -167,9 +166,7 @@ object PipelineOps extends QueryPack {
         least(lit(1.0), ($"n_total".cast("double") / $"k") / $"n_lang")
           .as("rate"))
     docs.select($"doc_id", $"lang",
-        ((conv(substring(md5(concat(lit("rb:"), $"doc_id".cast("string"))),
-          1, 15), 16, 10).cast("long") + 1) / lit(1152921504606846976.0))
-          .as("u"))
+        unitLeftOpen(lit("rb:"), $"doc_id".cast("string")).as("u"))
       .join(broadcast(rates), "lang")
       .withColumn("keep", $"u" < $"rate")
       .groupBy($"lang")
@@ -347,7 +344,8 @@ object PipelineOps extends QueryPack {
     import spark.implicits._
     val docs = Tables.df(spark, sfDir, "documents")
     val rates = tempRates(docs)
-    docs.select($"doc_id", $"source", tempUniform($"doc_id").as("u"))
+    docs.select($"doc_id", $"source",
+        unitLeftOpen(lit("ts:"), $"doc_id".cast("string")).as("u"))
       .join(broadcast(rates), "source")
       .groupBy($"source")
       .agg(min($"n_src").as("n_src"),
@@ -425,13 +423,6 @@ object PipelineOps extends QueryPack {
         least(lit(1.0),
           round($"share" * $"n_total" / 5.0 / $"n_src", 6)).as("rate"))
   }
-
-  /** The family's deterministic uniform in (0, 1] for the temperature
-    * sampler: (first-15-hex-digits of md5("ts:" || doc_id) + 1) / 2^60 —
-    * a pure per-row projection, identical in batch and per micro-batch. */
-  private[graft] def tempUniform(docId: Column): Column =
-    (conv(substring(md5(concat(lit("ts:"), docId.cast("string"))),
-      1, 15), 16, 10).cast("long") + 1) / lit(1152921504606846976.0)
 
   // ---- q_truncation_loss -------------------------------------------------
   /** Context-length truncation report — what a fixed max-sequence-length
@@ -612,9 +603,8 @@ object PipelineOps extends QueryPack {
     import spark.implicits._
     val cells = Tables.df(spark, sfDir, "documents")
       .select($"lang",
-        (conv(substring(md5(concat(lit("fold:"),
-          $"doc_id".cast("string"))), 1, 15), 16, 10).cast("long") % 5)
-          .cast("int").as("fold"))
+        (h60(lit("fold:"), $"doc_id".cast("string")) % 5).cast("int")
+          .as("fold"))
       .groupBy($"fold", $"lang").agg(count(lit(1)).as("n"))
       .localCheckpoint() // 5×|langs| rows; feeds three re-aggregations
     val perFold = cells.groupBy($"fold").agg(sum($"n").as("n_fold"))
@@ -699,10 +689,7 @@ object PipelineOps extends QueryPack {
     val drawn = o.crossJoin(broadcast(tot))
       .withColumn("pi", least(lit(1.0),
         lit(k) * $"p".cast("double") / $"ptot".cast("double")))
-      .withColumn("u",
-        (conv(substring(md5(concat(lit("pps:"),
-          $"o_orderkey".cast("string"))), 1, 15), 16, 10).cast("long")
-          + 0.5) / lit(1152921504606846976.0))
+      .withColumn("u", unitOpen(lit("pps:"), $"o_orderkey".cast("string")))
       .filter($"u" < $"pi")
     drawn.agg(
         min($"n_pop").as("n_pop"),

@@ -2,6 +2,7 @@ package graft.queries
 
 import graft.Decimals._
 import graft.Tables
+import graft.functions.Md5Hash.unitLeftOpen
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -327,10 +328,8 @@ object Series2Ops extends QueryPack {
       .crossJoin(broadcast(n))
       .select($"pos", $"n", explode(expr("sequence(1, 16)")).as("b"))
       .withColumn("k", expr(s"(pos - 1) div $L"))
-      .withColumn("u",
-        (conv(substring(md5(concat(lit("blk:"), $"b".cast("string"),
-          lit(":"), $"k".cast("string"))), 1, 15), 16, 10)
-          .cast("long") + 1) / lit(1152921504606846976.0))
+      .withColumn("u", unitLeftOpen(lit("blk:"), $"b".cast("string"),
+        lit(":"), $"k".cast("string")))
       .withColumn("s",
         least(floor($"u" * ($"n" - lit(L) + 1)).cast("long"),
           $"n" - lit(L)) + 1)

@@ -85,7 +85,7 @@ object ServeOps extends QueryPack {
   // last.
   private val sweepName = java.util.regex.Pattern.compile(
     "^graft_graft_[a-z0-9_]+_" + jvmTag +
-      "_(c_)?(postings|vectors|cells|centers|vocab|traj|tot|delta)$" +
+      "_(c_)?(postings|vectors|cells|centers|vocab|traj|tot|delta|edges)$" +
       "|^graft_[a-z0-9_]+_[0-9a-f]{8}_" + jvmTag + "$")
   private[graft] def swept(name: String): Boolean =
     sweepName.matcher(name).matches()

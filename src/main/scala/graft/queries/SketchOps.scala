@@ -2,6 +2,7 @@ package graft.queries
 
 import graft.Decimals._
 import graft.Tables
+import graft.functions.Md5Hash.h60
 import graft.functions.TextFunctions
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
@@ -56,8 +57,7 @@ object SketchOps extends QueryPack {
     * (Streams.cmsStream) so the batch and stream sketches are the SAME
     * sketch (merge law spec-replayed in R12OpsSpec). */
   private[graft] def cmsRowHash(r: Column, item: Column): Column =
-    pmod(conv(substring(md5(concat(r.cast("string"), lit(":"), item)),
-      1, 15), 16, 10).cast("long"), lit(1024L))
+    pmod(h60(r.cast("string"), lit(":"), item), lit(1024L))
 
   /** Count-Min sketch (Cormode & Muthukrishnan 2005) frequency estimates
     * for the corpus's top-20 tokens, beside exact counts. d=4 rows ×
@@ -115,15 +115,17 @@ object SketchOps extends QueryPack {
   private[graft] val bloomM = 65536
   private[graft] val bloomK = 4
 
-  /** The k md5 bit positions of every `key` row (other columns kept) —
-    * the shared hashing rule of the batch build and the stream probe. */
+  /** The i-th md5 bit position of `key` — the shared hashing rule of the
+    * batch build and the stream probe. */
+  private[graft] def bloomPos(i: Column, key: Column): Column =
+    h60(lit("bf"), i.cast("string"), lit(":"), key) % bloomM
+
+  /** The k bit positions of every `key` row (other columns kept). */
   private[graft] def bloomPositions(keys: DataFrame): DataFrame = {
     val spark = keys.sparkSession
     import spark.implicits._
     keys.crossJoin(broadcast(spark.range(0, bloomK).toDF("i")))
-      .withColumn("pos",
-        conv(substring(md5(concat(lit("bf"), $"i".cast("string"),
-          lit(":"), $"key")), 1, 15), 16, 10).cast("long") % bloomM)
+      .withColumn("pos", bloomPos($"i", $"key"))
       .drop("i")
   }
 
@@ -281,10 +283,8 @@ object SketchOps extends QueryPack {
     import spark.implicits._
     def bucketed(keyed: DataFrame): DataFrame =
       keyed.select(
-        pmod(conv(substring(md5(concat(lit("jc:"), $"k".cast("string"))),
-          1, 15), 16, 10).cast("long"), lit(1024L)).as("b"),
-        (($"cnt" * (pmod(conv(substring(md5(concat(lit("sg:"),
-          $"k".cast("string"))), 1, 15), 16, 10).cast("long"), lit(2L))
+        pmod(h60(lit("jc:"), $"k".cast("string")), lit(1024L)).as("b"),
+        (($"cnt" * (pmod(h60(lit("sg:"), $"k".cast("string")), lit(2L))
           * 2L - 1L))).as("sc"))
         .groupBy($"b").agg(sum($"sc").as("c"))
     val li = Tables.df(spark, sfDir, "lineitem")
@@ -415,7 +415,7 @@ object SketchOps extends QueryPack {
     * sketch (the cmsRowHash precedent; merge law spec-replayed in
     * R13OpsSpec). */
   private[graft] def hllReg(tok: Column): Column = {
-    val h = conv(substring(md5(tok), 1, 15), 16, 10).cast("long")
+    val h = h60(tok)
     val rest = h.bitwiseAND(lit((1L << 52) - 1))
     struct(
       shiftrightunsigned(h, 52).as("bucket"),

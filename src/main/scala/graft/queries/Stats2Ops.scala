@@ -2,6 +2,7 @@ package graft.queries
 
 import graft.Decimals._
 import graft.Tables
+import graft.functions.Md5Hash.unitLeftOpen
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -34,10 +35,7 @@ object Stats2Ops extends QueryPack {
     val n = 512
     val u = spark.range(1, n + 1)
       .select($"id".cast("int").as("k"))
-      .withColumn("u",
-        (conv(substring(md5(concat(lit("cvm:"), $"k".cast("string"))),
-          1, 15), 16, 10).cast("long") + 1)
-          / lit(1152921504606846976.0))
+      .withColumn("u", unitLeftOpen(lit("cvm:"), $"k".cast("string")))
     val ranked = u.withColumn("rn",
       row_number().over(Window.orderBy($"u", $"k")))
     val agg = ranked.select(
@@ -287,10 +285,8 @@ object Stats2Ops extends QueryPack {
       .select($"lo".as("blo"), $"hi".as("bhi"))
     val iidReps = days.select($"t", $"y",
         explode(expr("sequence(1, 16)")).as("b"))
-      .withColumn("u",
-        (conv(substring(md5(concat(lit("bootd:"), $"b".cast("string"),
-          lit(":"), $"t".cast("string"))), 1, 15), 16, 10)
-          .cast("long") + 1) / lit(1152921504606846976.0))
+      .withColumn("u", unitLeftOpen(lit("bootd:"), $"b".cast("string"),
+        lit(":"), $"t".cast("string")))
       .withColumn("w",
         when($"u" <= 0.3678794412, 0L)
           .when($"u" <= 0.7357588823, 1L)

@@ -2,7 +2,9 @@ package graft.queries
 
 import graft.Decimals._
 import graft.Tables
+import graft.functions.Md5Hash.unitLeftOpen
 import graft.functions.TextFunctions
+import graft.functions.TextFunctions.tokensSql
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -1011,10 +1013,8 @@ object StatsOps extends QueryPack {
         .as("est"))
     val reps = users
       .select($"user_id", $"x", explode(expr("sequence(1, 32)")).as("b"))
-      .withColumn("u",
-        (conv(substring(md5(concat(lit("boot:"), $"b".cast("string"),
-          lit(":"), $"user_id".cast("string"))), 1, 15), 16, 10)
-          .cast("long") + 1) / lit(1152921504606846976.0))
+      .withColumn("u", unitLeftOpen(lit("boot:"), $"b".cast("string"),
+        lit(":"), $"user_id".cast("string")))
       .withColumn("w",
         when($"u" <= 0.3678794412, 0L)
           .when($"u" <= 0.7357588823, 1L)
@@ -1358,9 +1358,6 @@ object StatsOps extends QueryPack {
     "q_fk_audit" -> qFkAudit,
     "q_mad" -> qMad
   )
-
-  private val toksSql =
-    "list_filter(string_split(lower(text), ' '), x -> x != '')"
 
   private def corrOracle: String = {
     val pairs = for {
@@ -2365,7 +2362,7 @@ object StatsOps extends QueryPack {
 
     "q_entropy" ->
       s"""WITH t AS (
-        |  SELECT doc_id, unnest($toksSql) AS tok FROM documents),
+        |  SELECT doc_id, unnest($tokensSql) AS tok FROM documents),
         |c AS (SELECT doc_id, tok, count(*) AS cnt FROM t GROUP BY 1, 2),
         |n AS (SELECT doc_id, CAST(SUM(cnt) AS BIGINT) AS n,
         |        count(*) AS n_types

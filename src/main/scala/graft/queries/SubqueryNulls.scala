@@ -2,6 +2,7 @@ package graft.queries
 
 import graft.Decimals._
 import graft.Tables
+import graft.functions.Md5Hash.unitOpen
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -94,11 +95,8 @@ object SubqueryNulls extends QueryPack {
   def qTablesample(spark: SparkSession, sfDir: String): DataFrame = {
     import spark.implicits._
     Tables.df(spark, sfDir, "lineitem")
-      .withColumn("u",
-        (conv(substring(md5(concat(lit("ts1:"),
-          $"l_orderkey".cast("string"), lit(":"),
-          $"l_linenumber".cast("string"))), 1, 15), 16, 10)
-          .cast("long") + 0.5) / lit(1152921504606846976.0))
+      .withColumn("u", unitOpen(lit("ts1:"), $"l_orderkey".cast("string"),
+        lit(":"), $"l_linenumber".cast("string")))
       .filter($"u" < 0.1)
       .groupBy($"l_returnflag")
       .agg(count(lit(1)).as("n"))

@@ -2,6 +2,8 @@ package graft.queries
 
 import graft.Decimals._
 import graft.Tables
+import graft.functions.Md5Hash.h60
+import graft.functions.TextFunctions.tokensSql
 import graft.functions.{SortedIntersectSize, TextFunctions}
 import graft.operators.Dedup
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
@@ -154,8 +156,7 @@ object TextOps extends QueryPack {
     val m = s.select($"doc_id", explode($"ts").as("tok"))
       .select($"doc_id", explode(sequence(lit(0), lit(7))).as("i"), $"tok")
       .select($"doc_id", $"i",
-        conv(substring(md5(concat($"i".cast("string"), lit(":"), $"tok")),
-          1, 15), 16, 10).cast("long").as("h"))
+        h60($"i".cast("string"), lit(":"), $"tok").as("h"))
       .groupBy($"doc_id", $"i").agg(min($"h").as("mh"))
     val b = m.groupBy($"doc_id", expr("i div 2").as("band"))
       .agg(min(when($"i" % 2 === 0, $"mh")).as("m0"),
@@ -908,9 +909,8 @@ object TextOps extends QueryPack {
     import spark.implicits._
     val folds = Tables.df(spark, sfDir, "documents")
       .select($"lang", TextFunctions.langId($"text").as("pred"),
-        (conv(substring(md5(concat(lit("fold:"),
-          $"doc_id".cast("string"))), 1, 15), 16, 10).cast("long") % 5)
-          .cast("int").as("fold"))
+        (h60(lit("fold:"), $"doc_id".cast("string")) % 5).cast("int")
+          .as("fold"))
       .groupBy($"fold")
       .agg(count(lit(1)).as("n"),
         sum(when($"pred" === $"lang", 1L).otherwise(0L)).as("n_correct"))
@@ -962,9 +962,7 @@ object TextOps extends QueryPack {
     "q_tfidf" -> qTfIdf
   )
 
-  private val toksSql =
-    "list_filter(string_split(lower(text), ' '), x -> x != '')"
-  private val tokSetSql = s"list_distinct($toksSql)"
+  private val tokSetSql = s"list_distinct($tokensSql)"
 
   /** The q_quality composite score as one SQL expression over a `text`
     * column — shared by the q_quality_sweep oracle and CurateOps's
@@ -972,11 +970,11 @@ object TextOps extends QueryPack {
     * from the standalone op (TextFunctions.qualityScore is the Spark
     * home; this is its oracle twin). */
   private[queries] def qualityScoreSql: String =
-    s"""round(0.5 * least(CAST(len($toksSql) AS INT) / 20.0, 1.0)
-       |        + 0.3 * least((CAST(len(list_filter($toksSql,
+    s"""round(0.5 * least(CAST(len($tokensSql) AS INT) / 20.0, 1.0)
+       |        + 0.3 * least((CAST(len(list_filter($tokensSql,
        |            x -> list_contains(['the','a','is','and','of','to',
        |              'in','that','it'], x))) AS DOUBLE)
-       |            / greatest(len($toksSql), 1)) * 5.0, 1.0)
+       |            / greatest(len($tokensSql), 1)) * 5.0, 1.0)
        |        + 0.2 * (1.0 - least(
        |            CAST(len(regexp_extract_all(lower(text),
        |              '[^a-z0-9 ]')) AS INT)
@@ -991,7 +989,7 @@ object TextOps extends QueryPack {
        |    list_transform(range(0, greatest(len(T) - 4, 1)),
        |      i -> array_to_string(T[(i+1):(i+5)], ' ')),
        |    s -> s != '')) AS s
-       |  FROM (SELECT doc_id, $toksSql AS T FROM documents
+       |  FROM (SELECT doc_id, $tokensSql AS T FROM documents
        |        WHERE $pred)""".stripMargin
 
   /** The language-ID prediction CTE (→ relation `pr`: doc_id, lang,
@@ -1165,7 +1163,7 @@ object TextOps extends QueryPack {
       s"""WITH lex(tok, score) AS (VALUES
         |  ('fast', 2.0), ('small', 1.0), ('big', 0.5),
         |  ('slow', -2.0), ('dup', -1.0), ('filter', 0.5)),
-        |t AS (SELECT doc_id, unnest($toksSql) AS tok FROM documents),
+        |t AS (SELECT doc_id, unnest($tokensSql) AS tok FROM documents),
         |h AS (SELECT doc_id, CAST(SUM(score) AS DOUBLE) AS sentiment,
         |        CAST(COUNT(*) AS BIGINT) AS n_hits
         |      FROM t JOIN lex USING (tok) GROUP BY doc_id)
@@ -1181,7 +1179,7 @@ object TextOps extends QueryPack {
 
     "q_chunk" ->
       s"""WITH d AS (
-        |  SELECT doc_id, $toksSql AS T
+        |  SELECT doc_id, $tokensSql AS T
         |  FROM documents WHERE doc_id % 20 = 0),
         |c AS (
         |  SELECT doc_id, T, unnest(range(0, len(T), 20)) AS st
@@ -1222,7 +1220,7 @@ object TextOps extends QueryPack {
     "q_repetition" ->
       s"""WITH t AS (
         |  SELECT doc_id, unnest(T) AS tok
-        |  FROM (SELECT doc_id, $toksSql AS T FROM documents)),
+        |  FROM (SELECT doc_id, $tokensSql AS T FROM documents)),
         |c AS (SELECT doc_id, tok, COUNT(*) AS c FROM t GROUP BY 1, 2),
         |s AS (SELECT doc_id, CAST(SUM(c) AS BIGINT) AS n_tok,
         |        COUNT(*) AS n_distinct, MAX(c) AS top_c
@@ -1245,7 +1243,7 @@ object TextOps extends QueryPack {
         |    list_transform(range(0, greatest(len(T) - 1, 1)),
         |      i -> array_to_string(T[(i+1):(i+2)], ' ')),
         |    s -> s != '')) AS t
-        |  FROM (SELECT doc_id, $toksSql AS T
+        |  FROM (SELECT doc_id, $tokensSql AS T
         |        FROM documents WHERE doc_id % 10 = 0)),
         |p AS (
         |  SELECT a.doc_id AS id1, b.doc_id AS id2,
@@ -1260,9 +1258,9 @@ object TextOps extends QueryPack {
     // lateral-join on a column, but the scalar list form can); same
     // decimal pre-sum rounding as q_perplexity
     "q_perplexity_bigram" ->
-      s"""WITH s0 AS (SELECT doc_id, $toksSql AS T FROM documents
-        |            WHERE len($toksSql) >= 2),
-        |t AS (SELECT doc_id, unnest($toksSql) AS tok FROM documents),
+      s"""WITH s0 AS (SELECT doc_id, $tokensSql AS T FROM documents
+        |            WHERE len($tokensSql) >= 2),
+        |t AS (SELECT doc_id, unnest($tokensSql) AS tok FROM documents),
         |uni AS (SELECT tok, count(*) AS cnt FROM t GROUP BY tok),
         |n AS (SELECT count(*) AS n_total FROM t),
         |bi AS (SELECT doc_id, p[1] AS prev, p[2] AS cur FROM (
@@ -1374,7 +1372,7 @@ object TextOps extends QueryPack {
     // so the summation is exact and order-independent in both engines;
     // ln() 1-ulp libm drift is absorbed by the 6-decimal round
     "q_perplexity" ->
-      s"""WITH t AS (SELECT doc_id, unnest($toksSql) AS tok FROM documents),
+      s"""WITH t AS (SELECT doc_id, unnest($tokensSql) AS tok FROM documents),
         |c AS (SELECT tok, count(*) AS cnt FROM t GROUP BY tok),
         |n AS (SELECT count(*) AS n_total FROM t),
         |lp AS (SELECT tok, CAST(round(ln(cnt / n_total), 6)
@@ -1391,7 +1389,7 @@ object TextOps extends QueryPack {
     // component and MIN over it is exactly the star root Spark converges to
     "q_dedup_cluster" ->
       s"""WITH RECURSIVE s0 AS (
-        |  SELECT doc_id, $toksSql AS T
+        |  SELECT doc_id, $tokensSql AS T
         |  FROM documents WHERE doc_id % 10 = 0),
         |s AS (
         |  SELECT doc_id, list_distinct(list_filter(
@@ -1533,7 +1531,7 @@ object TextOps extends QueryPack {
         |  SELECT
         |    $qualityScoreSql
         |      AS score,
-        |    CAST(len($toksSql) AS BIGINT) AS n_tok
+        |    CAST(len($tokensSql) AS BIGINT) AS n_tok
         |  FROM documents),
         |x AS (
         |  SELECT score, n_tok, unnest([0.3, 0.5, 0.7]) AS thr FROM sc),
@@ -1571,12 +1569,12 @@ object TextOps extends QueryPack {
         |      AS score
         |  FROM (
         |    SELECT doc_id,
-        |      CAST(len($toksSql) AS INT) AS n_tok,
+        |      CAST(len($tokensSql) AS INT) AS n_tok,
         |      round(CAST(length(replace(text, ' ', '')) AS DOUBLE)
-        |            / greatest(len($toksSql), 1), 6) AS avg_len,
-        |      CAST(len(list_filter($toksSql,
+        |            / greatest(len($tokensSql), 1), 6) AS avg_len,
+        |      CAST(len(list_filter($tokensSql,
         |          x -> list_contains(['the','a','is','and','of','to','in','that','it'], x))) AS DOUBLE)
-        |            / greatest(len($toksSql), 1) AS stop_raw,
+        |            / greatest(len($tokensSql), 1) AS stop_raw,
         |      CAST(len(regexp_extract_all(lower(text), '[^a-z0-9 ]')) AS INT)
         |        AS punct_cnt,
         |      CAST(length(text) AS INT) AS n_chars
@@ -1585,7 +1583,7 @@ object TextOps extends QueryPack {
 
     "q_token_count" ->
       s"""SELECT doc_id,
-        |  CAST(len($toksSql) AS INT) AS ws_tokens,
+        |  CAST(len($tokensSql) AS INT) AS ws_tokens,
         |  CAST(len(regexp_extract_all(lower(text),
         |    '[a-z]+|[0-9]+|[^a-z0-9\\s]')) AS INT) AS bpe_tokens,
         |  CAST(length(text) AS INT) AS n_chars
@@ -1593,13 +1591,13 @@ object TextOps extends QueryPack {
 
     "q_tok_fertility" ->
       s"""SELECT lang, count(*) AS docs,
-        |  CAST(SUM(len($toksSql)) AS BIGINT) AS ws_tokens,
+        |  CAST(SUM(len($tokensSql)) AS BIGINT) AS ws_tokens,
         |  CAST(SUM(len(regexp_extract_all(lower(text),
         |    '[a-z]+|[0-9]+|[^a-z0-9\\s]'))) AS BIGINT) AS bpe_tokens,
         |  CAST(SUM(length(text)) AS BIGINT) AS n_chars,
         |  round(CAST(SUM(len(regexp_extract_all(lower(text),
         |      '[a-z]+|[0-9]+|[^a-z0-9\\s]'))) AS DOUBLE)
-        |    / SUM(len($toksSql)), 6) AS fertility,
+        |    / SUM(len($tokensSql)), 6) AS fertility,
         |  round(CAST(SUM(length(text)) AS DOUBLE)
         |    / SUM(len(regexp_extract_all(lower(text),
         |      '[a-z]+|[0-9]+|[^a-z0-9\\s]'))), 6) AS chars_per_tok
@@ -1616,7 +1614,7 @@ object TextOps extends QueryPack {
 
     "q_tfidf" ->
       s"""WITH toks AS (
-        |  SELECT doc_id, unnest($toksSql) AS tok FROM documents),
+        |  SELECT doc_id, unnest($tokensSql) AS tok FROM documents),
         |tf AS (SELECT doc_id, tok, COUNT(*) AS tf FROM toks GROUP BY 1, 2),
         |dfreq AS (SELECT tok, COUNT(DISTINCT doc_id) AS df FROM toks GROUP BY 1),
         |n AS (SELECT COUNT(*) AS n_docs FROM documents)

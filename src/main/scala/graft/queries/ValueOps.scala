@@ -3,6 +3,7 @@ package graft.queries
 import graft.Decimals._
 import graft.Tables
 import graft.functions.CosineSimilarity
+import graft.functions.TextFunctions.tokensSql
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -340,11 +341,6 @@ object ValueOps extends QueryPack {
     "q_yule_k" -> qYuleK
   )
 
-  /** DuckDB twin of [[graft.functions.TextFunctions.tokens]] (the
-    * Corpus2Ops declaration-order discipline). */
-  private val toksSql =
-    "list_filter(string_split(lower(text), ' '), x -> x != '')"
-
   val oracle: Map[String, String] = Map(
     // same 6dp-rounded cosine ranking as q_knn_classify's oracle, then the
     // identical 9dp once-rounded recursion terms suffix-summed as decimals
@@ -552,7 +548,7 @@ object ValueOps extends QueryPack {
     // divides once as the same double expression and rounds once
     "q_yule_k" ->
       s"""WITH toks AS (
-        |  SELECT source, unnest($toksSql) AS tok FROM documents),
+        |  SELECT source, unnest($tokensSql) AS tok FROM documents),
         |cnt AS (
         |  SELECT source, tok, count(*) AS c FROM toks GROUP BY 1, 2),
         |g AS (

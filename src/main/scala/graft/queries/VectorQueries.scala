@@ -2,6 +2,7 @@ package graft.queries
 
 import graft.Decimals._
 import graft.Tables
+import graft.functions.Md5Hash.signedUnit
 import graft.functions.{CosineSimilarity, Round9Nano}
 import graft.operators.{Multimodal, Similarity}
 import org.apache.spark.sql.{DataFrame, SparkSession}
@@ -656,9 +657,8 @@ object VectorQueries extends QueryPack {
     val planes = spark.range(0, 64).toDF("i")
       .select($"i", explode(sequence(lit(0), lit(63))).as("d"))
       .select($"i", $"d",
-        (conv(substring(md5(concat($"i".cast("string"), lit(":"),
-          $"d".cast("string"))), 1, 15), 16, 10).cast("long")
-          / lit(576460752303423488L) - 1.0).as("r"))
+        signedUnit($"i".cast("string"), lit(":"), $"d".cast("string"))
+          .as("r"))
     // integer nano-units instead of DECIMAL(18,9): round(x·r, 9) is the
     // engine-portable quantity (established round-6/9 discipline); the
     // second round snaps its ×1e9 image onto the exact integer, so the

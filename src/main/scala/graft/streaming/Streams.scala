@@ -1,6 +1,7 @@
 package graft.streaming
 
 import graft.Decimals._
+import graft.functions.Md5Hash.{h60, unitLeftOpen}
 import graft.functions.{CosineSimilarity, DecimalDot9}
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
@@ -89,9 +90,6 @@ object Streams {
   def bloomProbeStream(stream: DataFrame, bitsArr: DataFrame): DataFrame = {
     val spark = stream.sparkSession
     import spark.implicits._
-    def posC(i: Int, key: Column): Column =
-      conv(substring(md5(concat(lit("bf"), lit(i.toString), lit(":"),
-        key)), 1, 15), 16, 10).cast("long") % graft.queries.SketchOps.bloomM
     stream
       .select($"doc_id",
         explode(graft.functions.TextFunctions.shingles($"text", 3))
@@ -99,7 +97,8 @@ object Streams {
       .crossJoin(broadcast(bitsArr))
       .select($"doc_id", $"key",
         (0 until graft.queries.SketchOps.bloomK)
-          .map(i => array_contains($"barr", posC(i, $"key")))
+          .map(i => array_contains($"barr",
+            graft.queries.SketchOps.bloomPos(lit(i), $"key")))
           .reduce(_ && _).as("member"))
   }
 
@@ -131,7 +130,7 @@ object Streams {
     val spark = stream.sparkSession
     import spark.implicits._
     stream
-      .withColumn("u", graft.queries.PipelineOps.tempUniform($"doc_id"))
+      .withColumn("u", unitLeftOpen(lit("ts:"), $"doc_id".cast("string")))
       .join(org.apache.spark.sql.functions.broadcast(
         rates.select($"source", $"rate")), "source")
       .filter($"u" < $"rate")
@@ -157,9 +156,7 @@ object Streams {
       .filter($"t" >= 1)
       .withColumn("g", size(filter(
         transform(sequence(lit(1), size(toks) - 1), i =>
-          conv(substring(md5(concat(element_at(toks, i), lit("|"),
-            element_at(toks, i + 1))), 1, 15), 16, 10)
-            .cast("long") % 2),
+          h60(element_at(toks, i), lit("|"), element_at(toks, i + 1)) % 2),
         x => x === 0)).cast("long"))
       .select($"doc_id", $"source",
         round((lit(2.0) * $"g" - $"t") / sqrt($"t"), 6).as("z"))

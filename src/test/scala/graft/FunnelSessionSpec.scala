@@ -1,5 +1,6 @@
 package graft
 
+import graft.functions.Md5Hash
 import graft.queries.{EventOps, PipelineOps}
 import graft.streaming.Streams
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
@@ -71,7 +72,8 @@ class FunnelSessionSpec extends SparkSpec {
       Tables.df(spark, sf, "documents")).localCheckpoint()
     // the batch decision on the same snapshot + rates
     val expected = docs
-      .withColumn("u", PipelineOps.tempUniform($"doc_id"))
+      .withColumn("u",
+        Md5Hash.unitLeftOpen(lit("ts:"), $"doc_id".cast("string")))
       .join(rates.select($"source", $"rate"), "source")
       .filter($"u" < $"rate")
       .select($"doc_id").as[Long].collect().toSet

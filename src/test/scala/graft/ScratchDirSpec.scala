@@ -27,6 +27,14 @@ class ScratchDirSpec extends SparkSpec {
     }
   }
 
+  test("q_pagerank_bucketed writes its edge table under this JVM's tag") {
+    assert(SparkEntry.queries("q_pagerank_bucketed")(spark, sf)
+      .collect().nonEmpty)
+    val dir = "graft_" + ServeOps.sfPrefix("graft_pr", sf) + "_edges"
+    assert(new File(tmp, dir).isDirectory, s"$dir was not written")
+    assert(ServeOps.swept(dir), s"$dir escapes the exit sweep")
+  }
+
   test("the sweep takes this JVM's serving tables, never another JVM's") {
     val pre = ServeOps.sfPrefix("graft_ann_q", sf)
     val tag = pre.takeRight(8)
