@@ -5,6 +5,8 @@ import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression}
 import org.apache.spark.sql.catalyst.util.ArrayData
+import org.apache.spark.sql.functions.{array_distinct, sort_array, transform,
+  xxhash64}
 import org.apache.spark.sql.graftbridge.GraftSqlBridge.{column, expression}
 import org.apache.spark.sql.types._
 
@@ -16,8 +18,8 @@ import org.apache.spark.sql.types._
   * sets are hashed to sorted long arrays ONCE per document (map side), and
   * each candidate pair then costs a primitive-long merge instead of a
   * string-array hash-set build. Inputs MUST be sorted ascending and
-  * duplicate-free (callers do `sort_array(array_distinct(transform(...,
-  * xxhash64)))`); output on unsorted input is unspecified.
+  * duplicate-free, as [[SortedIntersectSize.hashedSet]] builds them;
+  * output on unsorted input is unspecified.
   *
   * Null handling: null if either side is null (BinaryExpression default);
   * null ELEMENTS are not expected (hash outputs) and are skipped by the
@@ -86,4 +88,14 @@ object SortedIntersectSize {
   /** `sorted_intersect_size(a, b) -> int` as a typed column. */
   def of(a: Column, b: Column): Column =
     column(SortedIntersectSize(expression(a), expression(b)))
+
+  /** The kernel's input: the elements of `elems` hashed with xxhash64 to
+    * a sorted, duplicate-free `array<bigint>`. `array_distinct` runs
+    * AFTER hashing, so the set stays duplicate-free even when two
+    * distinct elements collide; sizes and intersections are then counted
+    * over hashes, and equal the element-set values collision-free
+    * (~2^-64 per pair of distinct elements — the standing assumption of
+    * every raw-string oracle over these sets). */
+  def hashedSet(elems: Column): Column =
+    sort_array(array_distinct(transform(elems, e => xxhash64(e))))
 }

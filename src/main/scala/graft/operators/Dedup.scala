@@ -1,8 +1,9 @@
 package graft.operators
 
 import graft.functions.Md5Hash.h60
+import graft.functions.SortedIntersectSize.hashedSet
 import graft.functions.{SimHash64, SortedIntersectSize, TextFunctions}
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -36,41 +37,68 @@ object Dedup {
   def jaccardPairs(docs: DataFrame, threshold: Double): DataFrame = {
     val spark = docs.sparkSession
     import spark.implicits._
-    // EXPLICIT-count repartition materializes the token-set chain before
-    // the non-equi self-join (else it recomputes per PAIR, SURVEY
-    // §7.4.10) AND spreads the single-row-group scan across cores — AQE
-    // would coalesce an unpinned keyed repartition of the small doc rows
-    // back to one partition, single-threading the whole pair loop.
-    val toks = docs.select($"doc_id",
-        TextFunctions.tokenSet($"text").as("ts"))
-      .withColumn("t",
-        sort_array(array_distinct(transform($"ts", x => xxhash64(x)))))
-      .withColumn("sz", size($"t"))
-      .drop("ts")
-      .repartition(graft.Tables.shufflePartitions(spark), $"doc_id")
-    val a = toks.select($"doc_id".as("id1"), $"t".as("t1"), $"sz".as("s1"))
-    val b = toks.select($"doc_id".as("id2"), $"t".as("t2"), $"sz".as("s2"))
-    // length-ratio block in the JOIN condition (same bound as the ngram
-    // path): J ≥ t forces t·max(|A|,|B|) ≤ min(|A|,|B|), so over-ratio
-    // pairs are pruned before the intersect ever runs. The bound holds in
-    // exact arithmetic; fl(n·t) can round just above an integer size for
-    // an arbitrary caller threshold, so a 1e-9 slack keeps a boundary pair
-    // (J exactly = t) in the candidate set — the exact j filter below
-    // still removes every false candidate.
-    a.join(b, $"id1" < $"id2" &&
-        $"s1" * threshold <= $"s2" + 1e-9 &&
-        $"s2" * threshold <= $"s1" + 1e-9)
-      // per-pair kernel: the codegen'd O(a+b) merge walk over sorted
-      // xxhash64'd token sets (the q_prefix_join / q_minhash_md5 idiom),
-      // NOT array_intersect over string arrays — the interpreted string
-      // intersect measured 8.9 s vs ~1 s for this shape once the noop-sink
-      // bench stopped letting count() skip the pair join. Hash-set Jaccard
-      // equals string-set Jaccard collision-free (~2^-64, documented).
-      .withColumn("li",
-        SortedIntersectSize.of($"t1", $"t2").cast("double"))
-      .withColumn("j", $"li" / ($"s1" + $"s2" - $"li"))
-      .filter($"j" >= threshold)
+    bandedPairs(docs.select($"doc_id",
+        hashedSet(TextFunctions.tokenSet($"text")).as("t"))
+      .withColumn("sz", size($"t")), threshold)
       .select($"id1", $"id2", round($"j", 6).as("j"))
+  }
+
+  /** J = li / (s1 + s2 − li): the Jaccard of two hashed sets of sizes s1,
+    * s2 whose intersection size is li. */
+  private[graft] val jaccard: Column =
+    col("li") / (col("s1") + col("s2") - col("li"))
+
+  /** One side of a pair: the (doc_id, t, sz) set relation renamed to
+    * (id`i`, t`i`, s`i`). */
+  private def side(sets: DataFrame, i: Int): DataFrame =
+    sets.select(col("doc_id").as(s"id$i"), col("t").as(s"t$i"),
+      col("sz").as(s"s$i"))
+
+  /** Adds `li` (the codegen'd O(a+b) merge walk over the sorted hashed
+    * sets t1, t2, [[SortedIntersectSize]]) and the exact [[jaccard]] `j`
+    * to a relation of pairs that carries t1, s1, t2, s2. The merge walk,
+    * NOT array_intersect over string arrays: the interpreted string
+    * intersect measured 8.9 s vs ~1 s for the jaccardPairs shape once the
+    * noop-sink bench stopped letting count() skip the pair join. */
+  private def withJaccard(pairs: DataFrame): DataFrame =
+    pairs
+      .withColumn("li",
+        SortedIntersectSize.of(col("t1"), col("t2")).cast("double"))
+      .withColumn("j", jaccard)
+
+  /** The verify step of a filter-then-verify set-similarity join: joins
+    * the (doc_id, t, sz) hashed sets (t from
+    * [[SortedIntersectSize.hashedSet]], sz = size(t)) onto the candidate
+    * pairs' id1, then onto their id2, and adds `li` and `j`. Callers keep
+    * their own threshold and final projection. */
+  private[graft] def verify(pairs: DataFrame, sets: DataFrame): DataFrame =
+    withJaccard(pairs.join(side(sets, 1), Seq("id1"))
+      .join(side(sets, 2), Seq("id2")))
+
+  /** Every pair id1 < id2 of the (doc_id, t, sz) hashed sets with
+    * j ≥ `threshold`, as the length-banded non-equi self-join — O(n²) in
+    * the set relation, so callers pass a blocked or sampled one.
+    *
+    * The EXPLICIT-count repartition materializes the caller's set
+    * projection before the self-join (else the non-equi join recomputes
+    * it per PAIR, SURVEY §7.4.10) AND spreads a single-row-group scan
+    * across cores — AQE would coalesce an unpinned keyed repartition of
+    * the small set rows back to one partition, single-threading the whole
+    * pair loop. The length-ratio band sits in the JOIN condition: J ≥ t
+    * forces t·max(|A|,|B|) ≤ min(|A|,|B|), so over-ratio pairs are pruned
+    * before the intersect ever runs. The bound holds in exact arithmetic;
+    * fl(n·t) can round just above an integer size for an arbitrary
+    * threshold, so a 1e-9 slack keeps a boundary pair (J exactly = t) in
+    * the candidate set — the exact j filter still removes every false
+    * candidate. */
+  private[graft] def bandedPairs(sets: DataFrame, threshold: Double)
+      : DataFrame = {
+    val sh = sets.repartition(
+      graft.Tables.shufflePartitions(sets.sparkSession), col("doc_id"))
+    withJaccard(side(sh, 1).join(side(sh, 2), col("id1") < col("id2")
+        && col("s1") * threshold <= col("s2") + 1e-9
+        && col("s2") * threshold <= col("s1") + 1e-9))
+      .filter(col("j") >= threshold)
   }
 
   /** SimHash near-dup grouping: fingerprint every doc, group identical
@@ -114,10 +142,7 @@ object Dedup {
     // which would otherwise recompute it four times (SURVEY §7.4.10)
     val base = docs.select($"doc_id", TextFunctions.tokenSet($"text").as("tk"))
       .filter(size($"tk") > 0)
-      // array_distinct AFTER hashing establishes SortedIntersectSize's
-      // duplicate-free contract even under a 64-bit collision
-      .withColumn("t",
-        sort_array(array_distinct(transform($"tk", s => xxhash64(s)))))
+      .withColumn("t", hashedSet($"tk"))
       .withColumn("sz", size($"t"))
       // explicit count (ADVICE r7): a keyless keyed repartition is an AQE
       // coalesce target — at small SF it collapses to ~1 partition right
@@ -142,15 +167,8 @@ object Dedup {
       .filter($"id1" < $"id2")
       .select($"id1", $"id2")
       .distinct()
-    val toks = base.select($"doc_id", $"t", $"sz")
-    candidates
-      .join(toks.select($"doc_id".as("id1"), $"t".as("t1"), $"sz".as("s1")),
-        Seq("id1"))
-      .join(toks.select($"doc_id".as("id2"), $"t".as("t2"), $"sz".as("s2")),
-        Seq("id2"))
-      .withColumn("li", SortedIntersectSize.of($"t1", $"t2").cast("double"))
-      .withColumn("jaccard_dist",
-        round(lit(1.0) - $"li" / ($"s1" + $"s2" - $"li"), 6))
+    verify(candidates, base)
+      .withColumn("jaccard_dist", round(lit(1.0) - $"j", 6))
       .filter($"jaccard_dist" <= maxDistance)
       .select($"id1", $"id2", $"jaccard_dist")
   }

@@ -3,9 +3,10 @@ package graft.queries
 import graft.Decimals._
 import graft.Tables
 import graft.functions.Md5Hash.h60
+import graft.functions.SortedIntersectSize.hashedSet
 import graft.functions.TextFunctions.tokensSql
 import graft.functions.{CosineSimilarity, SortedIntersectSize, TextFunctions}
-import graft.operators.Similarity
+import graft.operators.{Dedup, Similarity}
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -36,23 +37,14 @@ object CurateOps extends QueryPack {
     * equi-joining on the prefix token is candidate-complete. The length
     * band (t*s1 <= s2 <= s1/t) is applied in exact integer arithmetic
     * (s2*den >= s1*num) so no boundary pair is lost to float rounding.
-    * Verification reuses the codegen merge-walk kernel over the full
-    * sorted-hash arrays.
+    * Verification is [[Dedup.verify]] over the full hashed sets.
     */
   private[queries] def prefixPairs(spark: SparkSession, sfDir: String,
       subsetMod: Int, num: Int, den: Int): DataFrame = {
     import spark.implicits._
-    // tokenSet is the shared dedup-family tokenizer; the outer
-    // array_distinct guards the (~2^-64 per token pair) case of two
-    // DISTINCT tokens colliding under xxhash64 — sizes and intersections
-    // are computed over hashes, so the raw-string oracle only matches
-    // collision-free (same standing assumption as q_dedup_ngram)
     val sh = Tables.df(spark, sfDir, "documents")
       .filter($"doc_id" % subsetMod === 0)
-      .select($"doc_id",
-        sort_array(array_distinct(transform(
-          TextFunctions.tokenSet($"text"),
-          t => xxhash64(t)))).as("t"))
+      .select($"doc_id", hashedSet(TextFunctions.tokenSet($"text")).as("t"))
       .withColumn("sz", size($"t"))
       .filter($"sz" > 0)
     // prefix length = sz - ceil(t*sz) + 1, all-integer: ceil(num*sz/den)
@@ -68,11 +60,7 @@ object CurateOps extends QueryPack {
         && $"s2" * den >= $"s1" * num
         && $"s1" * den >= $"s2" * num)
       .select($"id1", $"id2").distinct()
-    cand
-      .join(sh.select($"doc_id".as("id1"), $"t".as("t1"), $"sz".as("s1")), "id1")
-      .join(sh.select($"doc_id".as("id2"), $"t".as("t2"), $"sz".as("s2")), "id2")
-      .withColumn("li", SortedIntersectSize.of($"t1", $"t2").cast("double"))
-      .withColumn("j", $"li" / ($"s1" + $"s2" - $"li"))
+    Dedup.verify(cand, sh)
       .filter($"j" >= lit(num.toDouble / den))
       .select($"id1", $"id2", $"j",
         ($"li" / least($"s1", $"s2")).as("containment"))
@@ -580,8 +568,7 @@ object CurateOps extends QueryPack {
         substring($"text", 1, 12).as("head12"),
         array_min(transform(TextFunctions.tokenSet($"text"),
           t => md5(t))).as("mh"),
-        sort_array(array_distinct(transform(
-          TextFunctions.tokenSet($"text"), t => xxhash64(t)))).as("t"))
+        hashedSet(TextFunctions.tokenSet($"text")).as("t"))
       .withColumn("sz", size($"t"))
       .withColumn("blk",
         concat($"lang", lit(":"), expr("n_chars div 40")))
@@ -599,8 +586,9 @@ object CurateOps extends QueryPack {
         (abs($"nc1" - $"nc2") <= 10).as("f2"),
         ($"h1" === $"h2").as("f3"),
         ($"mh1" === $"mh2").as("f4"),
+        // a block can pair two empty sets, so J is guarded
         coalesce(when($"s1" + $"s2" - $"li" > 0,
-          $"li" / ($"s1" + $"s2" - $"li") >= 0.7), lit(false)).as("mt"))
+          Dedup.jaccard >= 0.7), lit(false)).as("mt"))
       .localCheckpoint() // feeds the m/u aggregate AND the scoring pass
     val mu = p.agg(
       sum(when($"mt", 1L).otherwise(0L)).as("nm"),
@@ -1167,7 +1155,7 @@ object CurateOps extends QueryPack {
   private def winnowPairSet(spark: SparkSession, sfDir: String,
       subsetMod: Int): DataFrame = {
     import spark.implicits._
-    val fps = graft.operators.Dedup.winnowFingerprints(
+    val fps = Dedup.winnowFingerprints(
       Tables.df(spark, sfDir, "documents")
         .filter($"doc_id" % subsetMod === 0)
         .select($"doc_id", $"text"),

@@ -37,19 +37,17 @@ object ServeOps extends QueryPack {
     * [[SrpIndex.probe]] chain — the cold-query shape: a serving process
     * never has precomputed keys for arriving queries, only the stored
     * postings. The bounded query set broadcasts into the distance
-    * kernel. */
+    * kernel. The candidate rows are few bytes, so AQE coalesces their
+    * shuffle read to one partition; the explicit-count repartition
+    * spreads the distance projection and the sort's range sample, which
+    * both evaluate the interpreted decimal L2² per row, over every core. */
   private[graft] def annRadius(queries: DataFrame, parts: SrpIndex.Parts)
       : DataFrame =
     SrpIndex.probe(queries, parts, keep = col("qid") =!= col("vec_id"),
         vcols = Seq(col("vec_id"), col("embedding").as("ev")))
+      .repartition(Tables.shufflePartitions(queries.sparkSession), col("qid"))
       .select(col("qid"), col("vec_id"),
-        expr("""round(sqrt(CAST(aggregate(
-          zip_with(qv, ev, (a, b) ->
-            CAST(round((CAST(a AS DOUBLE) - CAST(b AS DOUBLE)) *
-                       (CAST(a AS DOUBLE) - CAST(b AS DOUBLE)), 9)
-              AS DECIMAL(20,9))),
-          CAST(0 AS DECIMAL(28,9)),
-          (acc, t) -> CAST(acc + t AS DECIMAL(28,9))) AS DOUBLE)), 6)""")
+        round(sqrt(VectorQueries.decL2Sq("qv", "ev").cast("double")), 6)
           .as("dist"))
       .filter(col("dist") <= 1.5)
       .orderBy(col("qid"), col("vec_id"))

@@ -3,8 +3,9 @@ package graft.queries
 import graft.Decimals._
 import graft.Tables
 import graft.functions.Md5Hash.h60
+import graft.functions.SortedIntersectSize.hashedSet
+import graft.functions.TextFunctions
 import graft.functions.TextFunctions.tokensSql
-import graft.functions.{SortedIntersectSize, TextFunctions}
 import graft.operators.Dedup
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
@@ -180,16 +181,10 @@ object TextOps extends QueryPack {
     import spark.implicits._
     val docs = Tables.df(spark, sfDir, "documents")
       .filter($"doc_id" % 5 === 0)
-    val s = docs.select($"doc_id", TextFunctions.tokenSet($"text").as("ts"))
-      .withColumn("th",
-        sort_array(array_distinct(transform($"ts", t => xxhash64(t)))))
-      .withColumn("sz", size($"th"))
-    c.join(s.select($"doc_id".as("id1"), $"th".as("t1"), $"sz".as("s1")),
-        "id1")
-      .join(s.select($"doc_id".as("id2"), $"th".as("t2"), $"sz".as("s2")),
-        "id2")
-      .withColumn("li", SortedIntersectSize.of($"t1", $"t2").cast("double"))
-      .withColumn("j", $"li" / ($"s1" + $"s2" - $"li"))
+    val s = docs.select($"doc_id",
+        hashedSet(TextFunctions.tokenSet($"text")).as("t"))
+      .withColumn("sz", size($"t"))
+    Dedup.verify(c, s)
       .filter($"j" >= 0.2)
       .select($"id1", $"id2", round($"j", 6).as("j"))
       .orderBy($"id1", $"id2")
@@ -565,45 +560,18 @@ object TextOps extends QueryPack {
 
   /** Word-bigram hashed-shingle Jaccard pairs at `threshold` over the %10
     * doc sample — shared pair generator for the n-gram near-dup query and
-    * the connected-components clustering query.
-    *
-    * Per-pair cost engineering (the pair count is quadratic, so the per-
-    * pair kernel is everything):
-    *  1. hash each distinct shingle to a long ONCE per doc and sort, so a
-    *     pair costs a primitive merge-walk (sorted_intersect_size) instead
-    *     of a string hash-set build — Jaccard over hashed distinct
-    *     shingles equals Jaccard over the shingles themselves (64-bit
-    *     collisions are negligible);
-    *  2. repartition materializes that projection BEFORE the self-join —
-    *     otherwise the non-equi join recomputes the chain per pair;
-    *  3. length-ratio block in the JOIN condition: J ≥ t forces
-    *     max(|A|,|B|) ≤ min(|A|,|B|)/t, so over-ratio pairs are pruned
-    *     before the intersect ever runs (content-based blocking — the same
-    *     bound drives band-bucketing at cluster scale). The +1e-9 slack
-    *     keeps the block safe for thresholds where size·t rounds above the
-    *     integer bound (same guard as [[graft.operators.Dedup]]).
-    */
+    * the connected-components clustering query. Each doc's distinct
+    * shingles hash ONCE to a sorted long set, and the pairs come from
+    * [[Dedup.bandedPairs]], the length-banded self-join whose per-pair
+    * kernel is the sorted_intersect_size merge walk. */
   private def bigramPairs(spark: SparkSession, sfDir: String,
       threshold: Double): DataFrame = {
     import spark.implicits._
     val docs = Tables.df(spark, sfDir, "documents")
       .filter($"doc_id" % 10 === 0)
-    val sh = docs.select($"doc_id",
-      sort_array(array_distinct(
-        transform(array_distinct(TextFunctions.shingles($"text", 2)),
-          s => xxhash64(s)))).as("t"))
-      .withColumn("sz", size($"t"))
-      // explicit count (ADVICE r7): keyless keyed repartition is an AQE
-      // coalesce target right before the pair join
-      .repartition(Tables.shufflePartitions(spark), col("doc_id"))
-    val a = sh.select($"doc_id".as("id1"), $"t".as("t1"), $"sz".as("s1"))
-    val b = sh.select($"doc_id".as("id2"), $"t".as("t2"), $"sz".as("s2"))
-    a.join(b, $"id1" < $"id2"
-        && $"s1" * threshold <= $"s2" + 1e-9
-        && $"s2" * threshold <= $"s1" + 1e-9)
-      .withColumn("li", SortedIntersectSize.of($"t1", $"t2").cast("double"))
-      .withColumn("j", $"li" / ($"s1" + $"s2" - $"li"))
-      .filter($"j" >= threshold)
+    Dedup.bandedPairs(docs.select($"doc_id",
+        hashedSet(array_distinct(TextFunctions.shingles($"text", 2))).as("t"))
+      .withColumn("sz", size($"t")), threshold)
       .select($"id1", $"id2", $"j")
   }
 

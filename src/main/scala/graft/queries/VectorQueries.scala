@@ -142,16 +142,21 @@ object VectorQueries extends QueryPack {
     * differences round once to 9dp into a DECIMAL(28,9) sum — no float
     * summation order anywhere near an argmin, so cell assignments and
     * probe ranks are bit-identical cross-engine. Shared by [[qAnnIvf]]
-    * and [[Vector2Ops.qIvfAdvisor]] (one home for the IVF distance). */
+    * and [[Vector2Ops.qIvfAdvisor]], the radius searches and both
+    * streaming serve twins (one home for the decimal L2²). */
   private[graft] def decL2Sq(a: String, b: String)
-      : org.apache.spark.sql.Column = expr(
+      : org.apache.spark.sql.Column = expr(decL2SqSql(a, b))
+
+  /** [[decL2Sq]] as SQL text over the SQL expressions `a` and `b`, for
+    * callers that embed it in a larger SQL expression. */
+  private[graft] def decL2SqSql(a: String, b: String): String =
     s"""CAST(aggregate(
         zip_with($a, $b, (x, y) ->
           CAST(round((CAST(x AS DOUBLE) - CAST(y AS DOUBLE)) *
                      (CAST(x AS DOUBLE) - CAST(y AS DOUBLE)), 9)
             AS DECIMAL(20,9))),
         CAST(0 AS DECIMAL(28,9)),
-        (acc, t) -> CAST(acc + t AS DECIMAL(28,9))) AS DECIMAL(28,9))""")
+        (acc, t) -> CAST(acc + t AS DECIMAL(28,9))) AS DECIMAL(28,9))"""
 
   def qAnnIvf(spark: SparkSession, sfDir: String): DataFrame = {
     import spark.implicits._

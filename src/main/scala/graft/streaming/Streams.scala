@@ -3,6 +3,7 @@ package graft.streaming
 import graft.Decimals._
 import graft.functions.Md5Hash.{h60, unitLeftOpen}
 import graft.functions.{CosineSimilarity, DecimalDot9}
+import graft.queries.VectorQueries
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
@@ -616,13 +617,7 @@ object Streams {
       .filter($"qid" =!= $"vec_id")
       .join(vectors.select($"vec_id", $"embedding".as("ev")), "vec_id")
       .select($"qid", $"vec_id",
-        expr("""round(sqrt(CAST(aggregate(
-          zip_with(qv, ev, (a, b) ->
-            CAST(round((CAST(a AS DOUBLE) - CAST(b AS DOUBLE)) *
-                       (CAST(a AS DOUBLE) - CAST(b AS DOUBLE)), 9)
-              AS DECIMAL(20,9))),
-          CAST(0 AS DECIMAL(28,9)),
-          (acc, t) -> CAST(acc + t AS DECIMAL(28,9))) AS DOUBLE)), 6)""")
+        round(sqrt(VectorQueries.decL2Sq("qv", "ev").cast("double")), 6)
           .as("d0"))
       .filter($"d0" <= 1.5)
       .groupBy($"qid", $"vec_id").agg(min($"d0").as("dist"))
@@ -717,15 +712,9 @@ object Streams {
       .agg(collect_list(struct($"cell", $"center")).as("cs"))
     val probes = stream
       .crossJoin(broadcast(carr))
-      .select($"qid", $"qv", explode(expr("""
+      .select($"qid", $"qv", explode(expr(s"""
         slice(array_sort(transform(cs, c -> named_struct(
-          'd2', CAST(aggregate(
-            zip_with(qv, c.center, (x, y) ->
-              CAST(round((CAST(x AS DOUBLE) - CAST(y AS DOUBLE)) *
-                         (CAST(x AS DOUBLE) - CAST(y AS DOUBLE)), 9)
-                AS DECIMAL(20,9))),
-            CAST(0 AS DECIMAL(28,9)),
-            (acc, t) -> CAST(acc + t AS DECIMAL(28,9))) AS DECIMAL(28,9)),
+          'd2', ${VectorQueries.decL2SqSql("qv", "c.center")},
           'cell', c.cell))), 1, 2)""")).as("pc"))
       .select($"qid", $"qv", $"pc.cell".as("cell"))
     probes

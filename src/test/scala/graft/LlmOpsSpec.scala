@@ -48,6 +48,19 @@ class LlmOpsSpec extends SparkSpec {
     assert(recall >= 0.8, s"LSH recall $recall over ${exact.size} pairs")
   }
 
+  test("the length band keeps a pair whose Jaccard equals the threshold") {
+    import spark.implicits._
+    // B is 55 of A's 100 distinct tokens, so J = 0.55 exactly, but
+    // fl(100 · 0.55) > 55: without the band's slack the pair never meets
+    assert(100 * 0.55 > 55)
+    val a = (1 to 100).map(i => s"w$i")
+    val docs = Seq(1L -> a.mkString(" "), 2L -> a.take(55).mkString(" "))
+      .toDF("doc_id", "text")
+    val pairs = Dedup.jaccardPairs(docs, 0.55).collect()
+      .map(r => (r.getLong(0), r.getLong(1), r.getDouble(2)))
+    assert(pairs.toSeq == Seq((1L, 2L, 0.55)))
+  }
+
   test("simhash band retrieval is EXACTLY brute force at hamming <= 3") {
     import spark.implicits._
     // pigeonhole: 3 flipped bits touch at most 3 of the 4 16-bit bands,

@@ -2,35 +2,13 @@ package graft
 
 import graft.functions.Md5Hash
 import java.nio.charset.StandardCharsets.UTF_8
-import java.nio.file.{Files, Path, Paths}
 import java.security.MessageDigest
 import org.apache.spark.sql.functions.{col, lit}
-import scala.jdk.CollectionConverters._
 
 /** The portable 60-bit md5 hash has one home: query, operator and
   * streaming code takes every md5-keyed draw, split and sketch bucket
   * from [[Md5Hash]], and the builder agrees with a JVM md5. */
 class Md5HashSpec extends SparkSpec {
-
-  /** (file name, line number, enclosing member, line) of every main line
-    * outside Md5Hash.scala; the member is the last 2-space-indented
-    * `def` or `val` above the line. */
-  private def mainLines: Seq[(String, Int, String, String)] = {
-    val root = Paths.get("src/main/scala/graft")
-    assert(Files.isDirectory(root), s"$root not found")
-    val member =
-      """^  (?:private(?:\[\w+\])? )?(?:lazy )?(?:def|val)\s+(\w+)""".r
-    Files.walk(root).iterator.asScala
-      .filter((p: Path) => p.toString.endsWith(".scala")
-        && p.getFileName.toString != "Md5Hash.scala")
-      .flatMap { p =>
-        var enclosing = ""
-        Files.readAllLines(p).asScala.zipWithIndex.map { case (l, i) =>
-          member.findFirstMatchIn(l).foreach(m => enclosing = m.group(1))
-          (p.getFileName.toString, i + 1, enclosing, l)
-        }
-      }.toSeq
-  }
 
   test("no hand-typed md5 hash or 2^60 scale outside Md5Hash") {
     // other widths and SQL text, on purpose: the 64-bit SimHash from two
@@ -40,11 +18,11 @@ class Md5HashSpec extends SparkSpec {
       "Streams.scala" -> "srpKeyRowExpr", "CurateOps.scala" -> "splitBucket")
     val needles = Seq("conv(substring(md5(", "lit(1152921504606846976",
       "lit(576460752303423488")
-    val hits = mainLines.filter { case (f, _, d, l) =>
-      needles.exists(l.contains) && !allowed((f, d))
+    val hits = MainSources.lines.filter { h =>
+      h.file != "Md5Hash.scala" && needles.exists(h.text.contains) &&
+        !allowed((h.file, h.member))
     }
-    assert(hits.isEmpty, "md5 hash copies: " +
-      hits.map { case (f, i, d, _) => s"$f:$i ($d)" }.mkString(", "))
+    assert(hits.isEmpty, "md5 hash copies: " + hits.map(_.at).mkString(", "))
   }
 
   private def refH60(s: String): Long = {
